@@ -18,6 +18,11 @@ Storage is plain Parquet tables under a base dir (Iceberg-shaped: the
 same writes become Iceberg ``MERGE``/appends on a cluster with the
 runtime jar — see sources/iceberg_shape.py).
 
+Every row of these tables is built on the driver with
+``session.local_df`` (an Arrow table shipped to the JVM), never
+``createDataFrame(list)``, which starts Python workers on every
+default partition for each few-row write.
+
 Design for scale: the checkpoint unit is a *bucket of the output key
 space* (e.g. ``cell_id % n_buckets``), not a Spark partition id —
 bucket membership is a pure function of the data, so resume is
@@ -35,23 +40,47 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .session import local_df
+
+CHECKPOINTS = (
+    "job_id string, stage string, part_key int, status string, "
+    "rows_out bigint, wall_sec double, finished_at string"
+)
+LINEAGE = (
+    "job_id string, stage string, input_snapshot string, code_hash string, "
+    "params_json string"
+)
+METRICS = "job_id string, stage string, name string, value double"
+
 
 def _table_path(base: str, name: str) -> str:
     return os.path.join(base, name)
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` on any Hadoop-compatible FS."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def _append(spark: SparkSession, base: str, name: str, rows: list, schema: str):
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(
+    local_df(spark, rows, schema).coalesce(1).write.mode("append").parquet(
         _table_path(base, name)
     )
 
 
-def _read(spark: SparkSession, base: str, name: str) -> DataFrame | None:
+def _read(
+    spark: SparkSession, base: str, name: str, schema: str
+) -> DataFrame | None:
+    """The table, or None if it was never written. Read errors raise:
+    a corrupt table must not read as an empty one. The schema is given
+    so a first write killed before its commit (a bare directory) reads
+    as empty."""
     path = _table_path(base, name)
-    try:
-        return spark.read.parquet(path)
-    except Exception:
+    fs, p = _hadoop_path(spark, path)
+    if not fs.exists(p):
         return None
+    return spark.read.schema(schema).parquet(path)
 
 
 def code_hash(fn: Callable) -> str:
@@ -69,24 +98,32 @@ def write_lineage(
     _append(
         spark, base, "lineage",
         [(job_id, stage, input_snapshot, code_hash(fn), json.dumps(params, sort_keys=True))],
-        "job_id string, stage string, input_snapshot string, code_hash string, params_json string",
+        LINEAGE,
     )
 
 
 def write_metric(
     spark: SparkSession, base: str, job_id: str, stage: str, name: str, value: float
 ) -> None:
+    write_metrics(spark, base, job_id, stage, {name: value})
+
+
+def write_metrics(
+    spark: SparkSession, base: str, job_id: str, stage: str,
+    values: dict[str, float],
+) -> None:
+    """One ``metrics`` row per entry of ``values``, in one write."""
     _append(
         spark, base, "metrics",
-        [(job_id, stage, name, float(value))],
-        "job_id string, stage string, name string, value double",
+        [(job_id, stage, name, float(v)) for name, v in values.items()],
+        METRICS,
     )
 
 
 def completed_buckets(
     spark: SparkSession, base: str, job_id: str, stage: str
 ) -> set[int]:
-    cp = _read(spark, base, "checkpoints")
+    cp = _read(spark, base, "checkpoints", CHECKPOINTS)
     if cp is None:
         return set()
     rows = (
@@ -130,11 +167,8 @@ def checkpointed_stage(
         # buckets with no marker. Recomputing those buckets would then
         # APPEND duplicates. Purge any unmarked part= dirs first (works
         # on any Hadoop-compatible FS, not just local disk).
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
         for b in todo:
-            p = jvm.org.apache.hadoop.fs.Path(f"{output_path}/part={b}")
-            fs = p.getFileSystem(hconf)
+            fs, p = _hadoop_path(spark, f"{output_path}/part={b}")
             if fs.exists(p):
                 fs.delete(p, True)
         df = df_builder().withColumn(
@@ -158,19 +192,19 @@ def checkpointed_stage(
                  float(wall / max(len(todo), 1)), now)
                 for b in todo
             ],
-            "job_id string, stage string, part_key int, status string, "
-            "rows_out bigint, wall_sec double, finished_at string",
+            CHECKPOINTS,
         )
-        write_metric(spark, base, job_id, stage, "rows_out",
-                     sum(per_part.get(b, 0) for b in todo))
-        write_metric(spark, base, job_id, stage, "wall_sec", wall)
-        write_metric(spark, base, job_id, stage, "buckets_run", len(todo))
+        metrics = {
+            "rows_out": sum(per_part.get(b, 0) for b in todo),
+            "wall_sec": wall,
+            "buckets_run": len(todo),
+        }
         # skew evidence: largest bucket / mean bucket
         if per_part:
             vals = list(per_part.values())
-            write_metric(spark, base, job_id, stage, "bucket_rows_max", max(vals))
-            write_metric(spark, base, job_id, stage, "bucket_rows_mean",
-                         sum(vals) / len(vals))
+            metrics["bucket_rows_max"] = max(vals)
+            metrics["bucket_rows_mean"] = sum(vals) / len(vals)
+        write_metrics(spark, base, job_id, stage, metrics)
     else:
         write_metric(spark, base, job_id, stage, "buckets_run", 0)
     return spark.read.parquet(output_path)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..functions.exprs import LAT_MULT, LON_MULT, M32
+from ..session import local_df
 
 DIM = 64
 N_PLANES = 4
@@ -748,6 +749,11 @@ def kmeans_milli(
 
     spark = emb.sparkSession
     ids, C, cc = _cent_matrix(cents)
+    if not len(ids) and emb.head() is not None:  # an empty corpus is fine
+        raise ValueError(
+            f"kmeans_milli: no {id_col} is a multiple of stride={stride}, "
+            "so the init sample has no centroid"
+        )
     q2 = q.select("qv", "qq")
     part_schema = "_ci long, _n long, " + ", ".join(
         f"_s{i} double" for i in range(dim)
@@ -798,9 +804,7 @@ def kmeans_milli(
         (int(ids[j]), [float(x) for x in C[j]], float(cc[j]))
         for j in range(len(ids))
     ]
-    return spark.createDataFrame(
-        out, "cent_id long, cv array<double>, cc double"
-    )
+    return local_df(spark, out, "cent_id long, cv array<double>, cc double")
 
 
 def ivf_kmeans_topk(

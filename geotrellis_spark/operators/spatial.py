@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 from ..core import geom as G
 from ..core import sfc
 from ..functions import exprs
+from ..session import local_df
 
 _KEY_STRUCT = StructType(
     [
@@ -402,8 +403,8 @@ def s2_knn_join(
         types = {f.name: f.dataType.simpleString()
                  for f in points.schema.fields}
         fields = ", ".join(f"`{c}` {types[c]}" for c in point_cols)
-        return spark.createDataFrame(
-            [], f"q_id {qid_type}, {fields}, dist double, rank int"
+        return local_df(
+            spark, [], f"q_id {qid_type}, {fields}, dist double, rank int"
         )
     return results.select("q_id", *point_cols, "dist", "rank")
 
@@ -1019,8 +1020,8 @@ def write_s2_store(
         .partitionBy("s2_part")
         .parquet(f"{base}/rows")
     )
-    df.sparkSession.createDataFrame(
-        [(level, coarse_level)], "level int, coarse_level int"
+    local_df(
+        df.sparkSession, [(level, coarse_level)], "level int, coarse_level int"
     ).write.mode("overwrite").parquet(f"{base}/_store_meta")
 
 
@@ -1088,8 +1089,8 @@ def write_vector_index(
         .partitionBy("cbucket")
         .parquet(f"{base}/cells")
     )
-    polys.sparkSession.createDataFrame(
-        [(zoom, n_buckets)], "zoom int, n_buckets int"
+    local_df(
+        polys.sparkSession, [(zoom, n_buckets)], "zoom int, n_buckets int"
     ).write.mode("overwrite").parquet(f"{base}/_index_meta")
 
 

@@ -31,6 +31,7 @@ from ..operators import (
     dedup, similarity, spatial, temporal, text, tiling, tokenize,
 )
 from .. import synth
+from ..session import local_df
 
 CENTS = "cast(floor(value * 100 + 0.5) as bigint)"
 
@@ -268,7 +269,7 @@ def _grid_polys(spark) -> DataFrame:
                 ]
             )
             rows.append((gy * 32 + gx, bytearray(G.wkb_write_polygon([ring]))))
-    return spark.createDataFrame(rows, "geom_id long, wkb binary")
+    return local_df(spark, rows, "geom_id long, wkb binary")
 
 
 def q_pip_grid(spark, sf_dir) -> DataFrame:
@@ -309,7 +310,7 @@ def q_pip_diamond(spark, sf_dir) -> DataFrame:
             ]
         )
         rows.append((int(r["n_nationkey"]), bytearray(G.wkb_write_polygon([ring]))))
-    polys = spark.createDataFrame(rows, "n_nationkey long, wkb binary")
+    polys = local_df(spark, rows, "n_nationkey long, wkb binary")
     out = spatial.pip_join(pts, polys, zoom=5)
     return out.select("event_id", "n_nationkey").withColumn(
         "n_nationkey", F.col("n_nationkey").cast("long")
@@ -2071,7 +2072,7 @@ def _star_polys(spark, n: int = 400) -> DataFrame:
         rows.append(
             (pid, bytearray(G.wkb_write_polygon([np.array(ring, float)])))
         )
-    return spark.createDataFrame(rows, "geom_id long, wkb binary")
+    return local_df(spark, rows, "geom_id long, wkb binary")
 
 
 def q_poly_stats(spark, sf_dir) -> DataFrame:

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -110,3 +110,26 @@ def pin_session(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     return spark
+
+
+def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in the column order
+    of the DDL ``schema``), shipped to the JVM as an Arrow table.
+
+    ``spark.createDataFrame(list, schema)`` goes through
+    ``sc.parallelize`` and an identity ``map``, so even one row starts
+    Python-worker tasks on every default partition (~1 CPU s per call
+    on local[4]). The Arrow-table path is JVM-only whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says; rows and schema
+    come out the same as the list path's."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)

@@ -29,6 +29,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_df
+
 N_CELL_BUCKETS = 16
 
 
@@ -108,7 +110,8 @@ def _write_snapshot(
     cat.write(manifest.coalesce(1), os.path.join("_meta", "manifests"),
               (), "append")
     loc = cat.location(table) if hasattr(cat, "location") else table
-    snap = spark.createDataFrame(
+    snap = local_df(
+        spark,
         [(snap_id, table, time.strftime("%Y-%m-%dT%H:%M:%S"), loc)],
         "snapshot_id string, table_name string, committed_at string, path string",
     )
@@ -138,7 +141,8 @@ def write_layer_metadata(
     crs: str = "latlng", extra: dict | None = None,
 ) -> None:
     """D13 TileLayerMetadata row (one per layer@zoom)."""
-    spark.createDataFrame(
+    local_df(
+        spark,
         [(
             layer, zoom, cell_type, crs, tile_cols, tile_rows,
             layout_cols, layout_rows,

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..core import shapefile as shp
+from ..session import local_df
 
 MAX_RECORDS_DEFAULT = 200_000
 
@@ -58,7 +59,7 @@ def read_shapefile(
         )
         for i, (wkb, attrs) in enumerate(feats)
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_df(spark, rows, schema)
 
 
 def write_shapefile(

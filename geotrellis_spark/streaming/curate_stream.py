@@ -47,6 +47,7 @@ from ..operators.dedup import (
     incremental_pairs,
     minhash_signatures,
 )
+from ..session import local_df
 
 
 def recurate(
@@ -124,7 +125,7 @@ def recurate(
             # a batch whose regeneration produced ZERO pairs writes no
             # parquet files (dynamic partition overwrite of an empty
             # frame) — schema inference then fails on the bare dir
-            pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+            pairs = local_df(spark, [], "doc_a long, doc_b long")
         curated, stats = curate(
             spark, docs, per_stratum, salt, pairs=pairs,
             bench=bench, min_shared=min_shared, contaminated=contaminated,

@@ -1,5 +1,9 @@
 """Checkpoint/resume (FIXTURES.md §F5) + Iceberg-shaped table tests."""
 
+import os
+
+import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from geotrellis_spark import synth
@@ -70,6 +74,47 @@ def test_checkpoint_resume_zero_recompute(spark, tmp_path):
     assert any(r["value"] == 0.0 for r in runs)
     lineage = spark.read.parquet(f"{base}/lineage").collect()
     assert all(len(r["code_hash"]) == 16 for r in lineage)
+
+
+def test_checkpointed_stage_writes_each_table_once(spark, tmp_path, monkeypatch):
+    """A fresh stage appends one lineage, one checkpoints and one
+    metrics write (all five stage metrics in one)."""
+    from geotrellis_spark import checkpoint
+
+    base = str(tmp_path / "ckpt")
+    calls = []
+    real = checkpoint._append
+    monkeypatch.setattr(
+        checkpoint, "_append",
+        lambda spark, base, name, rows, schema: (
+            calls.append(name), real(spark, base, name, rows, schema)
+        ),
+    )
+    checkpointed_stage(
+        _make_builder(spark, n=20), spark=spark, base=base, job_id="j",
+        stage="tile", bucket_col="cell_id", n_buckets=4,
+        output_path=str(tmp_path / "out"),
+    )
+    assert sorted(calls) == ["checkpoints", "lineage", "metrics"]
+    names = [r["name"] for r in spark.read.parquet(f"{base}/metrics").collect()]
+    assert sorted(names) == sorted([
+        "rows_out", "wall_sec", "buckets_run", "bucket_rows_max",
+        "bucket_rows_mean",
+    ])
+
+
+def test_completed_buckets_missing_empty_and_corrupt(spark, tmp_path):
+    base = str(tmp_path / "ckpt")
+    # never written: nothing done
+    assert completed_buckets(spark, base, "j", "s") == set()
+    # a first write killed before its commit leaves a bare directory
+    os.makedirs(f"{base}/checkpoints/_temporary")
+    assert completed_buckets(spark, base, "j", "s") == set()
+    # an unreadable table must raise, not read as "no bucket done"
+    with open(f"{base}/checkpoints/part-00000.parquet", "wb") as f:
+        f.write(b"not parquet")
+    with pytest.raises(Py4JJavaError):
+        completed_buckets(spark, base, "j", "s")
 
 
 def test_iceberg_shape_roundtrip(spark, tmp_path):

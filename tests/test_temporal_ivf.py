@@ -174,6 +174,18 @@ def test_kmeans_milli_partition_invariant(spark, emb):
     assert ra == rb
 
 
+def test_kmeans_milli_no_centroid_raises(spark):
+    # ids 1..60 hold no multiple of 61: the init sample is empty, which
+    # must fail on the driver, not later inside semdedup's Arrow UDF
+    emb = spark.range(1, 61).selectExpr(
+        "id as vec_id", "array(cast(id as float), 1.0f) as embedding"
+    )
+    with pytest.raises(ValueError, match=r"vec_id.*stride=61"):
+        similarity.kmeans_milli(emb, stride=61, iters=1, dim=2)
+    with pytest.raises(ValueError, match=r"stride=61"):
+        similarity.semdedup(emb, threshold_milli=990, stride=61, dim=2)
+
+
 def test_kmeans_lowers_inertia(spark, emb):
     # Lloyd iterations never increase total within-cluster d2
     from pyspark.sql import functions as F
