@@ -8,7 +8,8 @@ layout, SURVEY.md §0):
   over numpy kernels (north_rule: no per-row Python).
 - ``cell_range_filter`` — T13+Q1 (``KeyIndex.indexRanges`` +
   ``LayerQuery``): extent -> exact Z-range list -> ``cell_id BETWEEN``
-  predicates that Parquet/Iceberg min-max stats prune on.
+  predicates that Parquet/Iceberg min-max stats prune on (stored
+  layers), plus ``key_rect_filter``, the exact key-rectangle refine.
 - ``pip_join``          — J3/J5 (``ClipToGrid`` + per-cell predicate,
   ``VectorJoin``): cover-cell explode + broadcast equi-join + vectorized
   ray-cast refine. Replaces the reference's partition-wise nested loop
@@ -58,7 +59,6 @@ def assign_cells(
     index: str = "zorder",
     out_prefix: str = "",
     impl: str = "udf",
-    udf_once: bool = False,
 ) -> DataFrame:
     """Add key_col/key_row/cell_id for the LatLng ZoomedLayoutScheme at
     ``zoom``. Two implementations with identical output:
@@ -68,18 +68,7 @@ def assign_cells(
     - ``impl="expr"``: pure JVM expressions (the same SQL the oracles
       use) — whole-stage-codegen'd, no python workers; the production
       hot path when key assignment is plumbing rather than the op
-      under test (zorder only).
-
-    ``udf_once`` (guide §4.4): mark the keying UDF nondeterministic so
-    a downstream filter on its output (cell_range_filter's BETWEEN
-    prune) cannot be pushed below the projection and DUPLICATE the
-    evaluation — two ArrowEvalPython nodes, every row keyed twice
-    (plans/r06/range_query_before.txt; sf1.0 range_query 12.5 -> 3.5s).
-    Opt-in, not default: the nondeterminism flag also BLOCKS the
-    optimizer from pruning an unused UDF (a filterless consumer that
-    only counts keys would start paying the full evaluation), so turn
-    it on exactly where a filter consumes the keys. The function is in
-    fact deterministic; the flag only forbids cloning/reordering."""
+      under test (zorder only)."""
     if impl == "expr" and index == "zorder":
         kc = exprs.key_col_sql(lon_col, zoom)
         kr = exprs.key_row_sql(lat_col, zoom)
@@ -108,8 +97,6 @@ def assign_cells(
             raise ValueError(index)
         return pd.DataFrame({"key_col": col, "key_row": row, "cell_id": cell})
 
-    if udf_once:
-        keys_udf = keys_udf.asNondeterministic()
     k = f"{out_prefix}_k" if out_prefix else "_k"
     out = df.withColumn(k, keys_udf(F.col(lon_col), F.col(lat_col)))
     for f in ("key_col", "key_row", "cell_id"):
@@ -409,6 +396,37 @@ def s2_knn_join(
     return results.select("q_id", *point_cols, "dist", "rank")
 
 
+def _key_rect(
+    zoom: int, lon_min: float, lat_min: float, lon_max: float, lat_max: float
+) -> tuple[int, int, int, int]:
+    """Inclusive key rectangle (c0, c1, r0, r1) covering an extent."""
+    n = 1 << zoom
+    c0 = int(np.clip(np.floor((lon_min + 180.0) / 360.0 * n), 0, n - 1))
+    c1 = int(np.clip(np.floor((lon_max + 180.0) / 360.0 * n), 0, n - 1))
+    r0 = int(np.clip(np.floor((90.0 - lat_max) / 180.0 * n), 0, n - 1))
+    r1 = int(np.clip(np.floor((90.0 - lat_min) / 180.0 * n), 0, n - 1))
+    return c0, c1, r0, r1
+
+
+def key_rect_filter(
+    df: DataFrame,
+    zoom: int,
+    lon_min: float,
+    lat_min: float,
+    lon_max: float,
+    lat_max: float,
+    key_col: str = "key_col",
+    key_row: str = "key_row",
+) -> DataFrame:
+    """Exact refine (Q1/T13): keep the rows whose key lies in the
+    extent's key rectangle. Valid on any keyed layer; on expression-
+    computed keys it is the whole query (four cheap comparisons)."""
+    c0, c1, r0, r1 = _key_rect(zoom, lon_min, lat_min, lon_max, lat_max)
+    return df.where(
+        F.col(key_col).between(c0, c1) & F.col(key_row).between(r0, r1)
+    )
+
+
 def cell_range_filter(
     df: DataFrame,
     zoom: int,
@@ -421,24 +439,24 @@ def cell_range_filter(
     key_col: str = "key_col",
     key_row: str = "key_row",
 ) -> DataFrame:
-    """Prune-then-refine (Q1/T13): coarse Z-range BETWEEN predicates
-    (what Parquet/Iceberg min-max stats skip on; capped at
-    ``max_ranges`` so wide rectangles coalesce with false positives)
-    plus the exact key-rectangle refine predicate — both ordinary
-    Catalyst predicates, both pushed to the scan."""
-    n = 1 << zoom
-    c0 = int(np.clip(np.floor((lon_min + 180.0) / 360.0 * n), 0, n - 1))
-    c1 = int(np.clip(np.floor((lon_max + 180.0) / 360.0 * n), 0, n - 1))
-    r0 = int(np.clip(np.floor((90.0 - lat_max) / 180.0 * n), 0, n - 1))
-    r1 = int(np.clip(np.floor((90.0 - lat_min) / 180.0 * n), 0, n - 1))
-    ranges = sfc.zorder_ranges(c0, c1, r0, r1, max_ranges=max_ranges)
+    """Prune-then-refine (Q1/T13) for a STORED layer: coarse Z-range
+    ``cell_id BETWEEN`` predicates (capped at ``max_ranges`` so wide
+    rectangles coalesce with false positives) that Parquet/Iceberg
+    min-max stats skip row groups on, plus ``key_rect_filter``'s exact
+    refine. On a layer whose ``cell_id`` is an expression, use
+    ``key_rect_filter`` alone: nothing is skipped there, and Catalyst
+    inlines the whole Z-order expression into every BETWEEN."""
+    ranges = sfc.zorder_ranges(
+        *_key_rect(zoom, lon_min, lat_min, lon_max, lat_max),
+        max_ranges=max_ranges,
+    )
     pred: Column = F.lit(False)
     for lo, hi in ranges:
         pred = pred | F.col(cell_col).between(lo, hi)
-    refine = (
-        F.col(key_col).between(c0, c1) & F.col(key_row).between(r0, r1)
+    return key_rect_filter(
+        df.where(pred), zoom, lon_min, lat_min, lon_max, lat_max,
+        key_col=key_col, key_row=key_row,
     )
-    return df.where(pred & refine)
 
 
 def cover_cells(
@@ -846,6 +864,29 @@ def spacetime_join(
     return ka.join(kb, ["cell_id", "t_ord"])
 
 
+def ring_cells(df: DataFrame, lo: int, hi: int, zoom: int) -> DataFrame:
+    """JVM explode: each (q_id, q_lon, q_lat, qc, qr) row -> its ring
+    lo..hi cells (Chebyshev distance lo..hi from the query's key,
+    clipped to the grid; rings are disjoint, so no duplicates) as
+    (q_id, q_lon, q_lat, cell_id). ``sfc.ring_k`` is the numpy twin."""
+    n = 1 << zoom
+    d = F.sequence(F.lit(-hi), F.lit(hi))
+    offs = df.select(
+        "q_id", "q_lon", "q_lat", "qc", "qr", F.explode(d).alias("dc")
+    ).select("*", F.explode(d).alias("dr"))
+    cells = offs.where(
+        F.greatest(F.abs("dc"), F.abs("dr")).between(lo, hi)
+    ).select(
+        "q_id", "q_lon", "q_lat",
+        (F.col("qc") + F.col("dc")).alias("nc"),
+        (F.col("qr") + F.col("dr")).alias("nr"),
+    ).where(F.col("nc").between(0, n - 1) & F.col("nr").between(0, n - 1))
+    return cells.select(
+        "q_id", "q_lon", "q_lat",
+        F.expr(exprs.zorder_sql("nc", "nr", zoom)).alias("cell_id"),
+    )
+
+
 def knn_join(
     points: DataFrame,
     queries: DataFrame,
@@ -865,7 +906,7 @@ def knn_join(
 
     Strategy (J4 re-expressed, fully batched): per round, ALL pending
     queries' ring-r candidate cells are generated by ONE distributed
-    explode (vectorized ring_k), joined to the points in ONE broadcast
+    JVM explode (``ring_cells``), joined to the points in ONE broadcast
     equi-join, ranked by ONE window, and the stopping rule (kth
     candidate distance covered by the searched-radius guarantee
     ring*tile_height) is ONE distributed aggregate. The queries side is
@@ -907,8 +948,6 @@ def knn_join(
         "q_id", "q_lon", "q_lat",
         F.col("key_col").alias("qc"), F.col("key_row").alias("qr"),
     )
-    qid_type = qk.schema["q_id"].dataType.simpleString()
-    ring_schema = f"q_id {qid_type}, q_lon double, q_lat double, cell_id long"
     pending = qk.localCheckpoint(eager=False)
 
     # plain products, not pow(): x*x is one exactly-rounded multiply in
@@ -918,26 +957,6 @@ def knn_join(
     dist = F.sqrt(dx * dx + dy * dy)
     win = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col(tie_col).asc())
 
-    def ring_cells(df: DataFrame, lo: int, hi: int) -> DataFrame:
-        """Vectorized explode: each pending query -> its ring lo..hi
-        cells (rings are disjoint, so the union has no duplicates)."""
-
-        def gen(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                qc = pdf["qc"].to_numpy(np.int64)
-                qr = pdf["qr"].to_numpy(np.int64)
-                for ring in range(lo, hi + 1):
-                    idx, nc, nr = sfc.ring_k(qc, qr, ring, n, n)
-                    out = pdf.iloc[idx].reset_index(drop=True)[
-                        ["q_id", "q_lon", "q_lat"]
-                    ]
-                    out["cell_id"] = sfc.zorder(nc, nr)
-                    yield out
-
-        return df.mapInPandas(gen, ring_schema)
-
     results = None
     n_pending = pending.count()
     ring = 0
@@ -946,7 +965,7 @@ def knn_join(
             break
         hi = min(ring + max(rings_per_round, 1) - 1, max_rings - 1)
         cand = points.join(
-            F.broadcast(ring_cells(pending, ring, hi)), "cell_id"
+            F.broadcast(ring_cells(pending, ring, hi, zoom)), "cell_id"
         )
         batch = cand.select(
             "q_id", "q_lon", "q_lat", *point_cols, dist.alias("dist")

@@ -183,18 +183,14 @@ _RANGE_RECT = (-60.0, -30.0, 70.0, 55.0)  # lon_min, lat_min, lon_max, lat_max
 
 
 def q_range_query(spark, sf_dir) -> DataFrame:
-    # NOTE: deliberately the UDF path, not impl="expr" — the 64 BETWEEN
-    # predicates each inline a projected cell_id expression (Catalyst
-    # predicate pushdown substitutes aliases), exploding codegen ~10x.
-    # The UDF output is opaque to Catalyst, so predicates reference the
-    # column. On a STORED layer (the production case) cell_id is a
-    # parquet column and the BETWEENs prune row groups either way.
-    pts = _events_pts(spark, sf_dir, spread=True)
-    keyed = spatial.assign_cells(pts, "lon", "lat", 6, udf_once=True)
-    lon_min, lat_min, lon_max, lat_max = _RANGE_RECT
-    return spatial.cell_range_filter(
-        keyed, 6, lon_min, lat_min, lon_max, lat_max
-    ).select("event_id", "cell_id")
+    # computed keys: the exact key-rectangle refine alone decides the
+    # answer (the cell_id BETWEEN prune only skips row groups of a
+    # stored cell_id column; see cell_range_filter)
+    pts = _events_pts(spark, sf_dir)
+    keyed = spatial.assign_cells(pts, "lon", "lat", 6, impl="expr")
+    return spatial.key_rect_filter(keyed, 6, *_RANGE_RECT).select(
+        "event_id", "cell_id"
+    )
 
 
 def sql_range_query() -> str:
@@ -489,7 +485,7 @@ def sql_s2_knn() -> str:
 
 def q_zonal_stats(spark, sf_dir) -> DataFrame:
     pts = _events_pts(spark, sf_dir)
-    keyed = spatial.assign_cells(pts, "lon", "lat", 5)
+    keyed = spatial.assign_cells(pts, "lon", "lat", 5, impl="expr")
     return keyed.groupBy("cell_id").agg(
         F.count("*").alias("n"),
         F.expr(f"cast(sum({CENTS}) as bigint)").alias("sum_cents"),

@@ -151,8 +151,9 @@ def test_curate_pipeline_e2e(spark, tmp_path):
     """4-stage curation composition: counts only shrink, stratum caps
     hold, and the whole pipeline is deterministic (rerun-identical)."""
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from jobs.curate import curate
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

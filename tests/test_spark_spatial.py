@@ -6,8 +6,10 @@ import numpy as np
 import pytest
 
 from geotrellis_spark.core import geom as G
+from geotrellis_spark.core import sfc
 from geotrellis_spark.functions import exprs
 from geotrellis_spark.operators import spatial
+from geotrellis_spark.session import local_df
 
 N_POINTS = 2000
 
@@ -39,9 +41,15 @@ def test_assign_cells_matches_sql_formula(spark, points_df):
 
 
 def test_cell_range_filter_equals_rectangle(points_df):
-    df = spatial.assign_cells(points_df, "lon", "lat", 6)
-    pruned = spatial.cell_range_filter(df, 6, -60.0, -30.0, 70.0, 55.0)
-    got = sorted(r["id"] for r in pruned.collect())
+    rect = (-60.0, -30.0, 70.0, 55.0)
+    # stored-style layer (cell_id opaque to Catalyst): prune + refine;
+    # JVM-keyed layer (cell_id an expression): the refine alone
+    udf_keyed = spatial.assign_cells(points_df, "lon", "lat", 6)
+    expr_keyed = spatial.assign_cells(points_df, "lon", "lat", 6, impl="expr")
+    inputs = {
+        "cell_range_filter": spatial.cell_range_filter(udf_keyed, 6, *rect),
+        "key_rect_filter": spatial.key_rect_filter(expr_keyed, 6, *rect),
+    }
     lon, lat = _oracle_lonlat()
     col, row = exprs.key_np(lon, lat, 6)
     c0, _ = exprs.key_np(np.array([-60.0]), np.array([0.0]), 6)
@@ -49,7 +57,83 @@ def test_cell_range_filter_equals_rectangle(points_df):
     _, r0 = exprs.key_np(np.array([0.0]), np.array([55.0]), 6)
     _, r1 = exprs.key_np(np.array([0.0]), np.array([-30.0]), 6)
     keep = (col >= c0[0]) & (col <= c1[0]) & (row >= r0[0]) & (row <= r1[0])
-    assert got == sorted(np.arange(N_POINTS)[keep].tolist())
+    want = sorted(np.arange(N_POINTS)[keep].tolist())
+    for name, pruned in inputs.items():
+        assert sorted(r["id"] for r in pruned.collect()) == want, name
+
+
+@pytest.mark.parametrize("lo,hi", [(0, 0), (0, 2), (3, 5)])
+def test_ring_cells_equal_ring_k_union(spark, lo, hi):
+    # n=8 grid; queries at a corner, on an edge and in the interior
+    zoom, n = 3, 8
+    qc = np.array([0, 7, 3], dtype=np.int64)
+    qr = np.array([0, 4, 5], dtype=np.int64)
+    df = local_df(
+        spark,
+        [(i, 0.0, 0.0, int(c), int(r)) for i, (c, r) in enumerate(zip(qc, qr))],
+        "q_id bigint, q_lon double, q_lat double, qc bigint, qr bigint",
+    )
+    got = [
+        (r["q_id"], r["cell_id"])
+        for r in spatial.ring_cells(df, lo, hi, zoom).collect()
+    ]
+    want = []
+    for ring in range(lo, hi + 1):
+        idx, nc, nr = sfc.ring_k(qc, qr, ring, n, n)
+        want += zip(idx.tolist(), sfc.zorder(nc, nr).tolist())
+    assert sorted(got) == sorted(want)
+
+
+_PY_NODES = (
+    "ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow",
+    "FlatMapGroupsInPandas",
+)
+
+
+@pytest.fixture(scope="module")
+def sf_tiny(tmp_path_factory):
+    """The events and nation columns the read-path queries use, at the
+    sf0.001 row counts (1000 events, 25 nations)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("sf_tiny")
+    ids = np.arange(1000, dtype=np.int64)
+    pq.write_table(pa.table({
+        "event_id": ids, "user_id": ids * 7 % 389, "value": ids % 97 * 1.25,
+    }), d / "events.parquet")
+    pq.write_table(
+        pa.table({"n_nationkey": np.arange(25, dtype=np.int32)}),
+        d / "nation.parquet",
+    )
+    return str(d)
+
+
+@pytest.mark.parametrize("name", ["range_query", "zonal_stats", "knn"])
+def test_read_path_queries_run_without_python_nodes(spark, sf_tiny, name):
+    """Every plan a query executes (including the lazy local
+    checkpoints knn's rounds run as separate SQL executions) is
+    JVM-only: a Python node costs a fixed ~0.2 CPU s per task even
+    when no rows reach it."""
+    from geotrellis_spark.plans import driver_queries as dq
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        seq = store.executionsList()
+        return {
+            e.executionId(): e.physicalPlanDescription()
+            for e in (seq.apply(i) for i in range(seq.size()))
+        }
+
+    before = executions()
+    dq.QUERIES[name][0](spark, sf_tiny).collect()
+    plans = [p for i, p in executions().items() if i not in before]
+    assert plans
+    for plan in plans:
+        assert not [n for n in _PY_NODES if n in plan], plan
 
 
 def _diamond(cx, cy, rx, ry):
