@@ -1,6 +1,7 @@
 """Benchmark harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the cores this process may run on)
+and prints ONE JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Also reports the two north-rule throughputs (tiles/sec for the image
@@ -18,7 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from geotrellis_spark.session import get_spark  # noqa: E402
+from geotrellis_spark.session import default_cores, get_spark  # noqa: E402
 from geotrellis_spark.plans import driver_queries as dq  # noqa: E402
 
 BENCH_IMAGES = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "8000"))
@@ -85,7 +86,7 @@ def _gc_barrier(spark) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     spark = get_spark("bench", cores=cpus, shuffle_partitions=cpus)
 

@@ -24,7 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from geotrellis_spark.session import get_spark  # noqa: E402
+from geotrellis_spark.session import default_cores, get_spark  # noqa: E402
 from geotrellis_spark.plans import driver_queries as dq  # noqa: E402
 
 
@@ -35,8 +35,7 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--plans", default=None,
                     help="write plans/r06/<q>_<SUFFIX>.txt explain dumps")
-    ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=default_cores())
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 

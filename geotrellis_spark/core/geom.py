@@ -29,6 +29,7 @@ __all__ = [
     "wkb_write_point",
     "wkb_read",
     "points_in_polygon",
+    "points_in_coded_polygons",
     "points_in_rings",
     "clip_polygon_to_rect",
     "polygon_bbox",
@@ -177,21 +178,44 @@ def points_in_rings(px, py, rings: list[np.ndarray]) -> np.ndarray:
     return inside
 
 
-def points_in_own_polygon(px, py, rings_closed: np.ndarray) -> np.ndarray:
-    """Fully vectorized even-odd PIP where EACH point has its own
-    single-ring polygon: ``rings_closed`` is (n, V+1, 2) (rings closed,
-    same vertex count). Same (ymin, ymax] crossing rule as
-    points_in_rings. Used by the pip_join refine fast path (no
-    per-group python loop — the hot path at 100 TB)."""
-    # one-point-per-ring special case of the (k, p)-batch kernel — a
-    # single implementation of the crossing rule, no drifting copies
-    px = np.asarray(px, dtype=np.float64)[:, None]
-    py = np.asarray(py, dtype=np.float64)[:, None]
-    return _pts_in_own_rings_multi(px, py, rings_closed)[:, 0]
+def points_in_coded_polygons(px, py, codes, wkbs) -> np.ndarray:
+    """Even-odd PIP where point i is tested against ``wkbs[codes[i]]``
+    (the pip_join refine kernel). Each polygon a batch references is
+    parsed once. Single-ring polygons are grouped by closed vertex
+    count, and each group is decided in ONE numpy pass, each row
+    against its own ring (no per-polygon python loop). Holes and
+    multipolygons fall back to points_in_polygon per polygon."""
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    codes = np.asarray(codes, dtype=np.int64)
+    out = np.zeros(px.shape, dtype=bool)
+    by_nv: dict[int, list[tuple[int, np.ndarray]]] = {}
+    for u in np.unique(codes).tolist():
+        kind, payload = wkb_read(wkbs[u])
+        if kind == "polygon" and len(payload) == 1:
+            ring = _close(payload[0])
+            by_nv.setdefault(ring.shape[0], []).append((u, ring))
+        else:
+            m = codes == u
+            out[m] = _points_in_parsed(px[m], py[m], kind, payload)
+    for group in by_nv.values():
+        lut = np.full(int(codes.max()) + 1, -1, dtype=np.int64)
+        lut[[u for u, _ in group]] = np.arange(len(group))
+        pos = lut[codes]
+        m = pos >= 0
+        rings = np.stack([ring for _, ring in group])
+        # one point per ring: the (k, p)-batch kernel with p = 1
+        out[m] = _pts_in_own_rings_multi(
+            px[m, None], py[m, None], rings[pos[m]]
+        )[:, 0]
+    return out
 
 
 def points_in_polygon(px, py, wkb: bytes) -> np.ndarray:
-    kind, payload = wkb_read(wkb)
+    return _points_in_parsed(px, py, *wkb_read(wkb))
+
+
+def _points_in_parsed(px, py, kind: str, payload) -> np.ndarray:
     if kind == "polygon":
         return points_in_rings(px, py, payload)
     if kind == "multipolygon":
@@ -645,7 +669,7 @@ def wkt_read(wkt: str) -> bytes:
         import struct as _st
 
         polys = [
-            [parse_ring(r) for r in _split_groups(g)]
+            [parse_ring(r) for r in _split_groups(f"({g})")]
             for g in _split_groups(body)
         ]
         out = [_st.pack("<BII", 1, _GEOM_MULTIPOLYGON, len(polys))]

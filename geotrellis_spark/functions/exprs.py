@@ -4,9 +4,12 @@ Single source of truth for the integer math that BOTH the Spark engine
 and the DuckDB oracles evaluate (FIXTURES.md §F1: the test tables carry
 no geometry, so spatial queries derive coordinates deterministically
 from integer keys). Every builder returns an ANSI-SQL string valid in
-both Spark SQL and DuckDB; the Spark side uses ``F.expr(...)`` or the
-equivalent numpy kernel (``geotrellis_spark.core``) inside a pandas UDF
-— the driver's oracle check then proves kernel == SQL semantics.
+both Spark SQL and DuckDB. The engine evaluates the same strings with
+``F.expr(...)`` (cell keying, Z-order and Z3 ids: JVM expressions, no
+Python worker), so engine and oracle share one definition. The numpy
+twins (``key_np``, ``lonlat_np``) serve the Python-side kernels that
+have no SQL form — the Hilbert index, cover-cell enumeration — and the
+tests.
 
 All arithmetic stays exact: intermediate values < 2^53 so float64 math
 is integer-exact, and multiplications stay < 2^63 in int64 engines.

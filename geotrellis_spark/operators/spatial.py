@@ -4,15 +4,18 @@ Spark-first re-expression of GeoTrellis join machinery (upstream 3.x
 layout, SURVEY.md §0):
 
 - ``assign_cells``      — T1+T12 (``ZoomedLayoutScheme`` keying +
-  ``ZSpatialKeyIndex``): key/cell-id columns via a vectorized pandas UDF
-  over numpy kernels (north_rule: no per-row Python).
+  ``ZSpatialKeyIndex``): key/cell-id columns as JVM expressions, the
+  same SQL the oracles run (``functions/exprs.py``); only the Hilbert
+  index maps keys to cells in a numpy pandas UDF.
 - ``cell_range_filter`` — T13+Q1 (``KeyIndex.indexRanges`` +
   ``LayerQuery``): extent -> exact Z-range list -> ``cell_id BETWEEN``
   predicates that Parquet/Iceberg min-max stats prune on (stored
   layers), plus ``key_rect_filter``, the exact key-rectangle refine.
 - ``pip_join``          — J3/J5 (``ClipToGrid`` + per-cell predicate,
-  ``VectorJoin``): cover-cell explode + broadcast equi-join + vectorized
-  ray-cast refine. Replaces the reference's partition-wise nested loop
+  ``VectorJoin``): cover-cell explode (``_cover``, one numpy
+  enumeration for every path) + broadcast equi-join + vectorized
+  ray-cast refine (``core.geom.points_in_coded_polygons``). Replaces
+  the reference's partition-wise nested loop
   (``spark/.../join/VectorJoin.scala``) with an equi-join Catalyst can
   plan — the engine's flagship improvement.
 - ``knn_join``          — J4 (``KNearestRDD``): H3-style ring expansion
@@ -42,13 +45,10 @@ from ..core import sfc
 from ..functions import exprs
 from ..session import local_df
 
-_KEY_STRUCT = StructType(
-    [
-        StructField("key_col", LongType()),
-        StructField("key_row", LongType()),
-        StructField("cell_id", LongType()),
-    ]
-)
+# Size guards of pip_join's broadcast path: beyond either, the polygons
+# stay distributed (nothing unbounded ever sits on the driver).
+MAX_BROADCAST_POLYS = 100_000
+MAX_BROADCAST_CELLS = 4_000_000
 
 
 def assign_cells(
@@ -57,51 +57,31 @@ def assign_cells(
     lat_col: str,
     zoom: int,
     index: str = "zorder",
-    out_prefix: str = "",
-    impl: str = "udf",
 ) -> DataFrame:
     """Add key_col/key_row/cell_id for the LatLng ZoomedLayoutScheme at
-    ``zoom``. Two implementations with identical output:
-
-    - ``impl="udf"`` (default): vectorized pandas UDF (Arrow batches ->
-      numpy) — the kernel path the driver oracle proves equal to SQL.
-    - ``impl="expr"``: pure JVM expressions (the same SQL the oracles
-      use) — whole-stage-codegen'd, no python workers; the production
-      hot path when key assignment is plumbing rather than the op
-      under test (zorder only)."""
-    if impl == "expr" and index == "zorder":
-        kc = exprs.key_col_sql(lon_col, zoom)
-        kr = exprs.key_row_sql(lat_col, zoom)
-        out = df.withColumn(
-            f"{out_prefix}key_col", F.expr(kc)
-        ).withColumn(f"{out_prefix}key_row", F.expr(kr))
+    ``zoom``. The key and the Z-order cell id are JVM expressions, the
+    same SQL the oracles run (whole-stage codegen, no Python worker).
+    ``index="hilbert"`` maps the key to its Hilbert distance in a numpy
+    pandas UDF, the one index with no SQL form here."""
+    out = df.withColumn(
+        "key_col", F.expr(exprs.key_col_sql(lon_col, zoom))
+    ).withColumn("key_row", F.expr(exprs.key_row_sql(lat_col, zoom)))
+    if index == "zorder":
         return out.withColumn(
-            f"{out_prefix}cell_id",
-            F.expr(
-                exprs.zorder_sql(
-                    f"{out_prefix}key_col", f"{out_prefix}key_row", zoom
-                )
-            ),
+            "cell_id", F.expr(exprs.zorder_sql("key_col", "key_row", zoom))
         )
+    if index != "hilbert":
+        raise ValueError(index)
 
-    @F.pandas_udf(_KEY_STRUCT)
-    def keys_udf(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        col, row = exprs.key_np(
-            lon.astype("float64").to_numpy(), lat.astype("float64").to_numpy(), zoom
-        )
-        if index == "zorder":
-            cell = sfc.zorder(col, row)
-        elif index == "hilbert":
-            cell = sfc.hilbert_xy2d(max(zoom, 1), col, row)
-        else:  # pragma: no cover
-            raise ValueError(index)
-        return pd.DataFrame({"key_col": col, "key_row": row, "cell_id": cell})
+    @F.pandas_udf(LongType())
+    def hilbert_udf(col: pd.Series, row: pd.Series) -> pd.Series:
+        return pd.Series(sfc.hilbert_xy2d(
+            max(zoom, 1), col.to_numpy(np.int64), row.to_numpy(np.int64)
+        ))
 
-    k = f"{out_prefix}_k" if out_prefix else "_k"
-    out = df.withColumn(k, keys_udf(F.col(lon_col), F.col(lat_col)))
-    for f in ("key_col", "key_row", "cell_id"):
-        out = out.withColumn(f"{out_prefix}{f}", F.col(f"{k}.{f}"))
-    return out.drop(k)
+    return out.withColumn(
+        "cell_id", hilbert_udf(F.col("key_col"), F.col("key_row"))
+    )
 
 
 def s2_assign(
@@ -396,16 +376,29 @@ def s2_knn_join(
     return results.select("q_id", *point_cols, "dist", "rank")
 
 
-def _key_rect(
-    zoom: int, lon_min: float, lat_min: float, lon_max: float, lat_max: float
-) -> tuple[int, int, int, int]:
-    """Inclusive key rectangle (c0, c1, r0, r1) covering an extent."""
-    n = 1 << zoom
-    c0 = int(np.clip(np.floor((lon_min + 180.0) / 360.0 * n), 0, n - 1))
-    c1 = int(np.clip(np.floor((lon_max + 180.0) / 360.0 * n), 0, n - 1))
-    r0 = int(np.clip(np.floor((90.0 - lat_max) / 180.0 * n), 0, n - 1))
-    r1 = int(np.clip(np.floor((90.0 - lat_min) / 180.0 * n), 0, n - 1))
+def _key_rect(zoom: int, bb) -> tuple[np.ndarray, ...]:
+    """Inclusive key rectangles (c0, c1, r0, r1), one per extent row
+    (xmin, ymin, xmax, ymax) of ``bb``: the keys of the extent's
+    corners (row 0 = north, so the top edge gives r0)."""
+    bb = np.asarray(bb, dtype=np.float64).reshape(-1, 4)
+    c0, r1 = exprs.key_np(bb[:, 0], bb[:, 1], zoom)
+    c1, r0 = exprs.key_np(bb[:, 2], bb[:, 3], zoom)
     return c0, c1, r0, r1
+
+
+def _cover(zoom: int, bb, max_cells: int | None = None):
+    """Bbox cover cells at ``zoom`` (ClipToGrid's cell enumeration):
+    (ordinal, col, row) arrays, one entry per cell of each extent's key
+    rectangle, grouped by ordinal. Fully vectorized (repeat/cumsum, no
+    per-polygon loop). None when there are more than ``max_cells``."""
+    c0, c1, r0, r1 = _key_rect(zoom, bb)
+    nrows = r1 - r0 + 1
+    ncell = (c1 - c0 + 1) * nrows
+    if max_cells is not None and int(ncell.sum()) > max_cells:
+        return None
+    idx = np.repeat(np.arange(len(c0)), ncell)
+    j = np.arange(idx.size) - np.repeat(np.cumsum(ncell) - ncell, ncell)
+    return idx, c0[idx] + j // nrows[idx], r0[idx] + j % nrows[idx]
 
 
 def key_rect_filter(
@@ -421,7 +414,9 @@ def key_rect_filter(
     """Exact refine (Q1/T13): keep the rows whose key lies in the
     extent's key rectangle. Valid on any keyed layer; on expression-
     computed keys it is the whole query (four cheap comparisons)."""
-    c0, c1, r0, r1 = _key_rect(zoom, lon_min, lat_min, lon_max, lat_max)
+    c0, c1, r0, r1 = (
+        int(v[0]) for v in _key_rect(zoom, (lon_min, lat_min, lon_max, lat_max))
+    )
     return df.where(
         F.col(key_col).between(c0, c1) & F.col(key_row).between(r0, r1)
     )
@@ -447,7 +442,9 @@ def cell_range_filter(
     ``key_rect_filter`` alone: nothing is skipped there, and Catalyst
     inlines the whole Z-order expression into every BETWEEN."""
     ranges = sfc.zorder_ranges(
-        *_key_rect(zoom, lon_min, lat_min, lon_max, lat_max),
+        *(int(v[0]) for v in _key_rect(
+            zoom, (lon_min, lat_min, lon_max, lat_max)
+        )),
         max_ranges=max_ranges,
     )
     pred: Column = F.lit(False)
@@ -505,18 +502,7 @@ def cover_cells(
                 continue
             wkbs = [bytes(b) for b in pdf[wkb_col]]
             bb = np.array([G.polygon_bbox(b) for b in wkbs], dtype=np.float64)
-            c0 = np.clip(np.floor((bb[:, 0] + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-            c1 = np.clip(np.floor((bb[:, 2] + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-            r0 = np.clip(np.floor((90.0 - bb[:, 3]) / 180.0 * n), 0, n - 1).astype(np.int64)
-            r1 = np.clip(np.floor((90.0 - bb[:, 1]) / 180.0 * n), 0, n - 1).astype(np.int64)
-            nrows = r1 - r0 + 1
-            ncell = (c1 - c0 + 1) * nrows
-            total = int(ncell.sum())
-            idx = np.repeat(np.arange(len(pdf)), ncell)
-            offs = np.concatenate(([0], np.cumsum(ncell)[:-1]))
-            j = np.arange(total) - np.repeat(offs, ncell)  # local cell ordinal
-            cols = c0[idx] + j // nrows[idx]
-            rows = r0[idx] + j % nrows[idx]
+            idx, cols, rows = _cover(zoom, bb)
             out = pdf.iloc[idx].reset_index(drop=True)
             out["key_col"] = cols
             out["key_row"] = rows
@@ -536,10 +522,10 @@ def cover_cells(
                 xmax_a = -180.0 + (cols + 1) * 360.0 / n
                 ymax_a = 90.0 - rows * 180.0 / n
                 ymin_a = 90.0 - (rows + 1) * 180.0 / n
-                clipped: list = [None] * total
+                clipped: list = [None] * idx.size
+                bounds = np.searchsorted(idx, np.arange(len(pdf) + 1))
                 for ri in range(len(pdf)):
-                    lo = int(offs[ri])
-                    hi = lo + int(ncell[ri])
+                    lo, hi = int(bounds[ri]), int(bounds[ri + 1])
                     if hi == lo:
                         continue
                     kind, payload = G.wkb_read(wkbs[ri])
@@ -569,90 +555,24 @@ def cover_cells(
 
 @F.pandas_udf(BooleanType())
 def _pip_udf(lon: pd.Series, lat: pd.Series, wkb: pd.Series) -> pd.Series:
-    """Vectorized ray-cast PIP refine.
-
-    Fast path: when the batch's distinct geometries are all single-ring
-    polygons with a common vertex count (the overwhelmingly common
-    shape after cover-cell clipping), the whole batch is evaluated in
-    ONE numpy pass — each row against its own ring, no per-group python
-    loop (which was steal/GIL-sensitive and 2-3x noisier). Other
-    geometries fall back to per-group ray casting."""
-    out = np.zeros(len(lon), dtype=bool)
-    px = lon.to_numpy(dtype=np.float64)
-    py = lat.to_numpy(dtype=np.float64)
+    """Ray-cast PIP refine for rows that carry their polygon's WKB."""
     codes, uniques = pd.factorize(wkb)
-    parsed = [G.wkb_read(bytes(w)) for w in uniques]
-    simple = [
-        i for i, (kind, payload) in enumerate(parsed)
-        if kind == "polygon" and len(payload) == 1
-    ]
-    by_nv: dict[int, list[int]] = {}
-    for i in simple:
-        ring = parsed[i][1][0]
-        closed = np.array_equal(ring[0], ring[-1])
-        by_nv.setdefault((ring.shape[0], closed), []).append(i)
-    handled = np.zeros(len(uniques), dtype=bool)
-    for (nv, closed), idxs in by_nv.items():
-        rings = np.stack(
-            [
-                parsed[i][1][0] if closed
-                else np.vstack([parsed[i][1][0], parsed[i][1][0][:1]])
-                for i in idxs
-            ]
-        )
-        lut = np.full(len(uniques), -1, dtype=np.int64)
-        lut[idxs] = np.arange(len(idxs))
-        m = lut[codes] >= 0
-        if m.any():
-            out[m] = G.points_in_own_polygon(px[m], py[m], rings[lut[codes[m]]])
-        handled[idxs] = True
-    for gi in np.nonzero(~handled)[0]:
-        m = codes == gi
-        out[m] = G.points_in_polygon(px[m], py[m], bytes(uniques[gi]))
-    return pd.Series(out)
+    return pd.Series(G.points_in_coded_polygons(
+        lon.to_numpy(np.float64), lat.to_numpy(np.float64), codes,
+        [bytes(w) for w in uniques],
+    ))
 
 
 def _pip_by_ord(bc):
-    """Refine UDF for the broadcast path: rows carry only the polygon
-    ordinal; geometry comes from the broadcast variable. Same fast
-    path as _pip_udf (whole-batch vectorized single-ring PIP)."""
+    """Ray-cast PIP refine for the broadcast path: rows carry only the
+    polygon ordinal; the geometry comes from the broadcast variable."""
 
     @F.pandas_udf(BooleanType())
     def refine(lon: pd.Series, lat: pd.Series, ordn: pd.Series) -> pd.Series:
-        out = np.zeros(len(lon), dtype=bool)
-        px = lon.to_numpy(dtype=np.float64)
-        py = lat.to_numpy(dtype=np.float64)
-        codes = ordn.to_numpy(dtype=np.int64)
-        wkbs = bc.value
-        uniq = np.unique(codes)
-        parsed = {int(u): G.wkb_read(wkbs[int(u)]) for u in uniq}
-        by_nv: dict[tuple, list[int]] = {}
-        other: list[int] = []
-        for u, (kind, payload) in parsed.items():
-            if kind == "polygon" and len(payload) == 1:
-                ring = payload[0]
-                closed = bool(np.array_equal(ring[0], ring[-1]))
-                by_nv.setdefault((ring.shape[0], closed), []).append(u)
-            else:
-                other.append(u)
-        for (nv, closed), us in by_nv.items():
-            rings = np.stack(
-                [
-                    parsed[u][1][0] if closed
-                    else np.vstack([parsed[u][1][0], parsed[u][1][0][:1]])
-                    for u in us
-                ]
-            )
-            lut = np.full(int(codes.max()) + 1, -1, dtype=np.int64)
-            lut[np.asarray(us)] = np.arange(len(us))
-            pos = lut[codes]
-            m = pos >= 0
-            if m.any():
-                out[m] = G.points_in_own_polygon(px[m], py[m], rings[pos[m]])
-        for u in other:
-            m = codes == u
-            out[m] = G.points_in_polygon(px[m], py[m], wkbs[u])
-        return pd.Series(out)
+        return pd.Series(G.points_in_coded_polygons(
+            lon.to_numpy(np.float64), lat.to_numpy(np.float64),
+            ordn.to_numpy(np.int64), bc.value,
+        ))
 
     return refine
 
@@ -664,10 +584,6 @@ def pip_join(
     lon_col: str = "lon",
     lat_col: str = "lat",
     wkb_col: str = "wkb",
-    broadcast_polys: bool = True,
-    points_have_cells: bool = False,
-    max_broadcast_polys: int = 100_000,
-    max_broadcast_cells: int = 4_000_000,
 ) -> DataFrame:
     """Point-in-polygon join: equi-join on covering cell_id, a pushed
     JVM-side bbox prefilter (kills the ~4x bbox-cover false-positive
@@ -679,95 +595,64 @@ def pip_join(
     collected geometry pattern): geometries travel ONCE as a Spark
     broadcast variable; the refine UDF receives only an int polygon
     ordinal per row, so per-row Arrow traffic is 8 bytes instead of the
-    whole WKB (measured ~3x on complex polygons). The path is SIZE-
-    GUARDED: more than ``max_broadcast_polys`` polygons, or a cover-cell
-    enumeration exceeding ``max_broadcast_cells`` (e.g. a continent-
-    sized polygon at high zoom), automatically falls back to the
-    distributed path — nothing unbounded ever sits on the driver. The
-    distributed path (broadcast_polys=False) keeps WKB columns
+    whole WKB (measured ~3x on complex polygons). The path is chosen
+    from the observed sizes: more than ``MAX_BROADCAST_POLYS`` polygons,
+    or a cover-cell enumeration beyond ``MAX_BROADCAST_CELLS`` (e.g. a
+    continent-sized polygon at high zoom), takes the distributed path,
+    which explodes cover cells on the executors and keeps WKB columns
     end-to-end."""
-    if not points_have_cells:
-        points = assign_cells(points, lon_col, lat_col, zoom, impl="expr")
-    rows = None
-    if broadcast_polys:
-        # one driver action guards AND fetches: collect limit+1 rows —
-        # a separate count() would evaluate the polys plan twice
-        rows = polys.limit(max_broadcast_polys + 1).collect()
-        if len(rows) > max_broadcast_polys:
-            broadcast_polys = False  # too many polygons for the driver
-            rows = None
-    if broadcast_polys:
-        spark = points.sparkSession
-        other_cols = [c for c in polys.columns if c != wkb_col]
+    points = assign_cells(points, lon_col, lat_col, zoom)
+    # one driver action guards AND fetches: collect limit+1 rows —
+    # a separate count() would evaluate the polys plan twice
+    rows = polys.limit(MAX_BROADCAST_POLYS + 1).collect()
+    cover = None
+    if len(rows) <= MAX_BROADCAST_POLYS:
         wkbs = [bytes(r[wkb_col]) for r in rows]
-        n = 1 << zoom
         bb = np.array(
             [G.polygon_bbox(w) for w in wkbs], dtype=np.float64
         ).reshape(-1, 4)
-        c0 = np.clip(np.floor((bb[:, 0] + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-        c1 = np.clip(np.floor((bb[:, 2] + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-        r0 = np.clip(np.floor((90.0 - bb[:, 3]) / 180.0 * n), 0, n - 1).astype(np.int64)
-        r1 = np.clip(np.floor((90.0 - bb[:, 1]) / 180.0 * n), 0, n - 1).astype(np.int64)
-        nrows = r1 - r0 + 1
-        ncell = (c1 - c0 + 1) * nrows
-        total = int(ncell.sum())
-        if total > max_broadcast_cells:
-            broadcast_polys = False  # enumeration too big for the driver
-        else:
-            bc = spark.sparkContext.broadcast(wkbs)
-            # vectorized cell enumeration (repeat/cumsum — the
-            # cover_cells trick, no driver-side double for loop)
-            idx = np.repeat(np.arange(len(rows)), ncell)
-            offs = np.concatenate(([0], np.cumsum(ncell)[:-1]))
-            j = np.arange(total) - np.repeat(offs, ncell)
-            cols = c0[idx] + j // nrows[idx]
-            rws = r0[idx] + j % nrows[idx]
-            # explicit index: with zero other_cols a bare dict frame
-            # has 0 rows and .iloc[idx] would raise out-of-bounds
-            base = pd.DataFrame(
-                {c: [r[c] for r in rows] for c in other_cols},
-                index=range(len(rows)),
-            )
-            cell_pdf = base.iloc[idx].reset_index(drop=True)
-            cell_pdf["cell_id"] = sfc.zorder(cols, rws)
-            cell_pdf["_poly_ord"] = idx.astype(np.int32)
-            cell_pdf["bbox_xmin"] = bb[idx, 0]
-            cell_pdf["bbox_ymin"] = bb[idx, 1]
-            cell_pdf["bbox_xmax"] = bb[idx, 2]
-            cell_pdf["bbox_ymax"] = bb[idx, 3]
-    if broadcast_polys:
+        cover = _cover(zoom, bb, MAX_BROADCAST_CELLS)
+    bbox = ["bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax"]
+    if cover is None:
+        cells = cover_cells(polys, zoom, wkb_col, bbox=True).drop(
+            "key_col", "key_row"
+        )
+        refine = _pip_udf(F.col(lon_col), F.col(lat_col), F.col(wkb_col))
+        extra = wkb_col
+    else:
+        spark = points.sparkSession
+        idx, cols, rws = cover
+        other_cols = [c for c in polys.columns if c != wkb_col]
+        # explicit index: with zero other_cols a bare dict frame
+        # has 0 rows and .iloc[idx] would raise out-of-bounds
+        base = pd.DataFrame(
+            {c: [r[c] for r in rows] for c in other_cols},
+            index=range(len(rows)),
+        )
+        cell_pdf = base.iloc[idx].reset_index(drop=True)
+        cell_pdf["cell_id"] = sfc.zorder(cols, rws)
+        cell_pdf["_poly_ord"] = idx.astype(np.int32)
+        for k, name in enumerate(bbox):
+            cell_pdf[name] = bb[idx, k]
         cells_schema = ", ".join(
             [
                 f"{c} {polys.schema[c].dataType.simpleString()}"
                 for c in other_cols
             ]
-            + [
-                "cell_id long", "_poly_ord int", "bbox_xmin double",
-                "bbox_ymin double", "bbox_xmax double", "bbox_ymax double",
-            ]
+            + ["cell_id long", "_poly_ord int"]
+            + [f"{name} double" for name in bbox]
         )
         cells = F.broadcast(spark.createDataFrame(cell_pdf, cells_schema))
-        joined = points.join(cells, "cell_id", "inner").where(
-            F.col(lon_col).between(F.col("bbox_xmin"), F.col("bbox_xmax"))
-            & F.col(lat_col).between(F.col("bbox_ymin"), F.col("bbox_ymax"))
+        bc = spark.sparkContext.broadcast(wkbs)
+        refine = _pip_by_ord(bc)(
+            F.col(lon_col), F.col(lat_col), F.col("_poly_ord")
         )
-        refined = joined.where(
-            _pip_by_ord(bc)(F.col(lon_col), F.col(lat_col), F.col("_poly_ord"))
-        )
-        return refined.drop(
-            "_poly_ord", "bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax"
-        )
-    cells = cover_cells(polys, zoom, wkb_col, bbox=True).drop(
-        "key_col", "key_row"
-    )
+        extra = "_poly_ord"
     joined = points.join(cells, "cell_id", "inner").where(
         F.col(lon_col).between(F.col("bbox_xmin"), F.col("bbox_xmax"))
         & F.col(lat_col).between(F.col("bbox_ymin"), F.col("bbox_ymax"))
     )
-    refined = joined.where(_pip_udf(F.col(lon_col), F.col(lat_col), F.col(wkb_col)))
-    return refined.drop(
-        wkb_col, "bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax"
-    )
+    return joined.where(refine).drop(extra, *bbox)
 
 
 def vector_join(
@@ -778,7 +663,6 @@ def vector_join(
     b_id: str = "b_id",
     a_wkb: str = "wkb",
     b_wkb: str = "wkb",
-    broadcast_b: bool = True,
 ) -> DataFrame:
     """General vector x vector intersects join (J2, the reference's
     ``spark/.../join/VectorJoin.scala`` partition-wise nested loop
@@ -793,12 +677,8 @@ def vector_join(
     Output: a_id, b_id."""
     ca = cover_cells(a.select(a_id, a_wkb), zoom, a_wkb).select(a_id, "cell_id")
     cb = cover_cells(b.select(b_id, b_wkb), zoom, b_wkb).select(b_id, "cell_id")
-    if broadcast_b:
-        cb = F.broadcast(cb)
-    cand = ca.join(cb, "cell_id").dropDuplicates([a_id, b_id])
-    b_geom = b.select(b_id, F.col(b_wkb).alias("_wkb_b"))
-    if broadcast_b:
-        b_geom = F.broadcast(b_geom)
+    cand = ca.join(F.broadcast(cb), "cell_id").dropDuplicates([a_id, b_id])
+    b_geom = F.broadcast(b.select(b_id, F.col(b_wkb).alias("_wkb_b")))
     cand = cand.join(
         a.select(a_id, F.col(a_wkb).alias("_wkb_a")), a_id
     ).join(b_geom, b_id)
@@ -828,7 +708,6 @@ def spacetime_join(
     t_b: str = "ts",
     t_unit: str = "day",
     epoch: str = "2024-01-01",
-    broadcast_b: bool = False,
 ) -> DataFrame:
     """J7 dedicated temporal-slice join (reference role ``spark/.../
     join`` over SpaceTimeKey layers): key both sides with the spatial
@@ -853,14 +732,12 @@ def spacetime_join(
         )
     else:  # pragma: no cover
         raise ValueError(t_unit)
-    ka = assign_cells(a, lon_a, lat_a, zoom, impl="expr").withColumn(
+    ka = assign_cells(a, lon_a, lat_a, zoom).withColumn(
         "t_ord", bucket(t_a).cast("long")
     ).drop("key_col", "key_row")
-    kb = assign_cells(b, lon_b, lat_b, zoom, impl="expr").withColumn(
+    kb = assign_cells(b, lon_b, lat_b, zoom).withColumn(
         "t_ord", bucket(t_b).cast("long")
     ).drop("key_col", "key_row")
-    if broadcast_b:
-        kb = F.broadcast(kb)
     return ka.join(kb, ["cell_id", "t_ord"])
 
 
@@ -930,7 +807,7 @@ def knn_join(
     n = 1 << zoom
     th = 180.0 / n  # tile height in degrees == min cell dimension
 
-    points = assign_cells(points, lon_col, lat_col, zoom, impl="expr").cache()
+    points = assign_cells(points, lon_col, lat_col, zoom).cache()
     if point_cols is None:
         point_cols = tuple(
             c for c in points.columns if c not in ("key_col", "key_row", "cell_id")
@@ -943,7 +820,7 @@ def knn_join(
             F.col(q_lon_col).alias("q_lon"),
             F.col(q_lat_col).alias("q_lat"),
         ),
-        "q_lon", "q_lat", zoom, impl="expr",
+        "q_lon", "q_lat", zoom,
     ).select(
         "q_id", "q_lon", "q_lat",
         F.col("key_col").alias("qc"), F.col("key_row").alias("qr"),
@@ -1129,7 +1006,7 @@ def pip_join_indexed(
     polygons (tested); no geometry ever visits the driver."""
     meta = spark.read.parquet(f"{base}/_index_meta").collect()[0]
     zoom, n_buckets = int(meta["zoom"]), int(meta["n_buckets"])
-    keyed = assign_cells(points, lon_col, lat_col, zoom, impl="expr").drop(
+    keyed = assign_cells(points, lon_col, lat_col, zoom).drop(
         "key_col", "key_row"
     ).withColumn(
         "cbucket", F.pmod(F.col("cell_id"), F.lit(n_buckets)).cast("int")

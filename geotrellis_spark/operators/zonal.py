@@ -290,7 +290,7 @@ def kernel_density(
     if kernel not in ("pyramid", "gaussian"):
         raise ValueError(f"unknown kernel {kernel!r}")
     n = 1 << zoom
-    keyed = spatial.assign_cells(pts, lon_col, lat_col, zoom, impl="expr")
+    keyed = spatial.assign_cells(pts, lon_col, lat_col, zoom)
     r = radius
     if kernel == "pyramid":
         w_cast = f"cast({weight_expr} as bigint) as _w"

@@ -5,8 +5,9 @@ parquet tables (see ``__spark_entry__.py``).
 The test tables carry no geometry, so spatial queries derive
 deterministic lon/lat from integer ids (FIXTURES.md §F1) — the oracle
 reproduces the derivation in pure SQL while the Spark side runs the
-real engine path (vectorized pandas-UDF kernels / DataFrame operators),
-proving kernel semantics == SQL semantics.
+real engine path (DataFrame operators, JVM expressions built from the
+same ``functions/exprs.py`` SQL, and vectorized pandas-UDF kernels
+where no SQL form exists), proving engine semantics == SQL semantics.
 
 Exactness rules used throughout (so order-insensitive value hashes
 match bit-for-bit):
@@ -187,7 +188,7 @@ def q_range_query(spark, sf_dir) -> DataFrame:
     # answer (the cell_id BETWEEN prune only skips row groups of a
     # stored cell_id column; see cell_range_filter)
     pts = _events_pts(spark, sf_dir)
-    keyed = spatial.assign_cells(pts, "lon", "lat", 6, impl="expr")
+    keyed = spatial.assign_cells(pts, "lon", "lat", 6)
     return spatial.key_rect_filter(keyed, 6, *_RANGE_RECT).select(
         "event_id", "cell_id"
     )
@@ -218,17 +219,10 @@ def q_spacetime_cell(spark, sf_dir) -> DataFrame:
     keyed = keyed.withColumn(
         "day_ord", F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
     )
-
-    @F.pandas_udf("long")
-    def z3_udf(c: pd.Series, r: pd.Series, t: pd.Series) -> pd.Series:
-        return pd.Series(
-            sfc.z3(c.to_numpy(np.int64), r.to_numpy(np.int64), t.to_numpy(np.int64))
-        )
-
     return keyed.select(
         "event_id",
         "day_ord",
-        z3_udf(F.col("key_col"), F.col("key_row"), F.col("day_ord")).alias("cell3"),
+        F.expr(exprs.z3_sql("key_col", "key_row", "day_ord", 5, 12)).alias("cell3"),
     )
 
 
@@ -485,7 +479,7 @@ def sql_s2_knn() -> str:
 
 def q_zonal_stats(spark, sf_dir) -> DataFrame:
     pts = _events_pts(spark, sf_dir)
-    keyed = spatial.assign_cells(pts, "lon", "lat", 5, impl="expr")
+    keyed = spatial.assign_cells(pts, "lon", "lat", 5)
     return keyed.groupBy("cell_id").agg(
         F.count("*").alias("n"),
         F.expr(f"cast(sum({CENTS}) as bigint)").alias("sum_cents"),
@@ -509,17 +503,15 @@ def sql_zonal_stats() -> str:
 
 
 def q_layer_join(spark, sf_dir) -> DataFrame:
-    # keying is plumbing here (the op under test is the layer join):
-    # codegen expr path, measured 2-3x over the pandas-UDF path
     ev = spatial.assign_cells(
-        _events_pts(spark, sf_dir, spread=True), "lon", "lat", 6, impl="expr"
+        _events_pts(spark, sf_dir, spread=True), "lon", "lat", 6
     )
     orders = _t(spark, sf_dir, "orders", spread=True).selectExpr(
         "o_orderkey",
         f"{exprs.lon_sql('o_orderkey * 17')} as lon",
         f"{exprs.lat_sql('o_orderkey * 23')} as lat",
     )
-    od = spatial.assign_cells(orders, "lon", "lat", 6, impl="expr")
+    od = spatial.assign_cells(orders, "lon", "lat", 6)
     return (
         ev.select("event_id", "cell_id")
         .join(od.select("o_orderkey", "cell_id"), "cell_id")

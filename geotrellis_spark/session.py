@@ -26,6 +26,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
+def default_cores() -> int:
+    """``SPARK_GRAFT_CPUS`` when set, else the cores this process may
+    run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app: str = "geotrellis_spark",
     cores: int | None = None,
@@ -58,9 +65,7 @@ def get_spark(
     # so the same heap-reuse applies to them
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
     if cores is None:
-        # the cores this process may run on
-        env = os.environ.get("SPARK_GRAFT_CPUS")
-        cores = int(env) if env else len(os.sched_getaffinity(0))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     driver_mem = (extra_conf or {}).get(

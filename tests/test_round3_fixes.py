@@ -2,6 +2,8 @@
 intersection in polygons_intersect, MVT ring winding, viewshed NoData
 NaN poisoning on grid-line samples."""
 
+import struct
+
 import numpy as np
 import pytest
 
@@ -155,7 +157,7 @@ def test_clip_ring_to_rects_batch_matches_scalar():
 
 # -------------------------------------- pip_join broadcast size guard
 
-def test_pip_join_world_polygon_falls_back(spark):
+def test_pip_join_world_polygon_falls_back(spark, monkeypatch):
     """A world-spanning polygon whose cover-cell enumeration exceeds the
     broadcast cap must fall back to the distributed path and still be
     exact (VERDICT r2 'what's wrong' #2)."""
@@ -176,10 +178,11 @@ def test_pip_join_world_polygon_falls_back(spark):
         [(1, bytearray(world)), (2, bytearray(small))],
         "geom_id long, wkb binary",
     )
-    out = spatial.pip_join(
-        pts, polys, zoom=6, max_broadcast_cells=1000
-    )  # world at zoom 6 = 4096 cells > cap -> distributed path
-    got = sorted((r["id"], r["geom_id"]) for r in out.collect())
+    with monkeypatch.context() as m:
+        # world at zoom 6 = 4096 cells > cap -> distributed path
+        m.setattr(spatial, "MAX_BROADCAST_CELLS", 1000)
+        out = spatial.pip_join(pts, polys, zoom=6)
+        got = sorted((r["id"], r["geom_id"]) for r in out.collect())
     lon, lat = exprs.lonlat_np(np.arange(300) * 13, np.arange(300) * 29)
     expect = []
     for gid, wkb in ((1, world), (2, small)):
@@ -189,6 +192,64 @@ def test_pip_join_world_polygon_falls_back(spark):
     # same query under the default caps (broadcast path) is identical
     out2 = spatial.pip_join(pts, polys, zoom=6)
     assert sorted((r["id"], r["geom_id"]) for r in out2.collect()) == got
+
+
+def _open_ring_wkb(ring):
+    """Single-ring polygon WKB whose ring is NOT closed (the last
+    vertex differs from the first); wkb_write_polygon always closes."""
+    ring = np.asarray(ring, dtype="<f8")
+    return (
+        struct.pack("<BIII", 1, 3, 1, ring.shape[0]) + ring.tobytes()
+    )
+
+
+@pytest.mark.parametrize("path", ["broadcast", "distributed", "indexed"])
+def test_pip_mixed_geometries_every_refine_path(spark, monkeypatch,
+                                                tmp_path, path):
+    """Closed and unclosed single rings of different vertex counts, a
+    concave hole and a two-part multipolygon, through every PIP refine
+    entry point: each must equal points_in_polygon per polygon."""
+    polys = [
+        (1, geom.wkb_write_polygon([np.array(
+            [[20.0, 0.0], [30.0, 0.0], [30.0, 10.0], [20.0, 10.0]]
+        )])),
+        (2, _open_ring_wkb(
+            [[-10.0, 0.0], [-2.0, 1.0], [-1.0, 8.0], [-6.0, 11.0], [-9.5, 6.0]]
+        )),
+        (3, _c_hole()),
+        (4, geom.wkt_read(
+            "MULTIPOLYGON (((0 -12, 9 -12, 4 -3, 0 -12)), "
+            "((14 -12, 26 -12, 26 -2, 14 -2, 14 -12), "
+            "(17 -9, 23 -9, 23 -5, 17 -5, 17 -9)))"
+        )),
+    ]
+    gx, gy = np.meshgrid(np.arange(-12.0, 32.0, 0.25),
+                         np.arange(-14.0, 13.0, 0.25))
+    lon, lat = gx.ravel(), gy.ravel()
+    pts = spark.createDataFrame(
+        list(zip(range(lon.size), lon.tolist(), lat.tolist())),
+        "id long, lon double, lat double",
+    )
+    polys_df = spark.createDataFrame(
+        [(g, bytearray(w)) for g, w in polys], "geom_id long, wkb binary"
+    )
+    if path == "indexed":
+        base = str(tmp_path / "vindex")
+        spatial.write_vector_index(polys_df, base, zoom=6)
+        out = spatial.pip_join_indexed(spark, base, pts)
+    else:
+        if path == "distributed":
+            monkeypatch.setattr(spatial, "MAX_BROADCAST_CELLS", 0)
+        out = spatial.pip_join(pts, polys_df, zoom=6)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert ("MapInPandas" in plan) == (path == "distributed")
+    got = sorted((r["id"], r["geom_id"]) for r in out.collect())
+    want = sorted(
+        (int(i), g) for g, w in polys
+        for i in np.nonzero(geom.points_in_polygon(lon, lat, w))[0]
+    )
+    assert got == want
+    assert {g for _, g in got} == {1, 2, 3, 4}
 
 
 def test_vector_join_with_holes(spark):

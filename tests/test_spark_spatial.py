@@ -40,15 +40,16 @@ def test_assign_cells_matches_sql_formula(spark, points_df):
         assert got[r["id"]] == (r["kc"], r["kr"], r["cell"]), r["id"]
 
 
-def test_cell_range_filter_equals_rectangle(points_df):
+def test_cell_range_filter_equals_rectangle(spark, points_df, tmp_path):
     rect = (-60.0, -30.0, 70.0, 55.0)
-    # stored-style layer (cell_id opaque to Catalyst): prune + refine;
+    # stored layer (cell_id a parquet column): prune + refine;
     # JVM-keyed layer (cell_id an expression): the refine alone
-    udf_keyed = spatial.assign_cells(points_df, "lon", "lat", 6)
-    expr_keyed = spatial.assign_cells(points_df, "lon", "lat", 6, impl="expr")
+    keyed = spatial.assign_cells(points_df, "lon", "lat", 6)
+    keyed.write.parquet(str(tmp_path / "layer"))
+    stored = spark.read.parquet(str(tmp_path / "layer"))
     inputs = {
-        "cell_range_filter": spatial.cell_range_filter(udf_keyed, 6, *rect),
-        "key_rect_filter": spatial.key_rect_filter(expr_keyed, 6, *rect),
+        "cell_range_filter": spatial.cell_range_filter(stored, 6, *rect),
+        "key_rect_filter": spatial.key_rect_filter(keyed, 6, *rect),
     }
     lon, lat = _oracle_lonlat()
     col, row = exprs.key_np(lon, lat, 6)
@@ -99,8 +100,10 @@ def sf_tiny(tmp_path_factory):
 
     d = tmp_path_factory.mktemp("sf_tiny")
     ids = np.arange(1000, dtype=np.int64)
+    ts = np.datetime64("2024-01-01") + ids * np.timedelta64(2591, "s")
     pq.write_table(pa.table({
-        "event_id": ids, "user_id": ids * 7 % 389, "value": ids % 97 * 1.25,
+        "event_id": ids, "ts": ts.astype("datetime64[us]"),
+        "user_id": ids * 7 % 389, "value": ids % 97 * 1.25,
     }), d / "events.parquet")
     pq.write_table(
         pa.table({"n_nationkey": np.arange(25, dtype=np.int32)}),
@@ -109,7 +112,10 @@ def sf_tiny(tmp_path_factory):
     return str(d)
 
 
-@pytest.mark.parametrize("name", ["range_query", "zonal_stats", "knn"])
+@pytest.mark.parametrize("name", [
+    "range_query", "zonal_stats", "knn",
+    "tile_assign", "cell_agg", "cell_extent", "spacetime_cell",
+])
 def test_read_path_queries_run_without_python_nodes(spark, sf_tiny, name):
     """Every plan a query executes (including the lazy local
     checkpoints knn's rounds run as separate SQL executions) is
@@ -230,32 +236,38 @@ def test_cover_cells_clipped(spark):
     assert area == pytest.approx(abs(G.shoelace_area(ring)), rel=1e-9)
 
 
-def test_assign_cells_expr_equals_udf(spark):
-    # the codegen expr path must be bit-identical to the pandas-UDF
-    # kernel path (both are oracle-proven against the same SQL)
-    pts = spark.range(2000).selectExpr(
-        "id",
-        "cast(((id * 2654435761) % 4294967296) / 4294967296.0 * 360.0 - 180.0"
-        " as double) as lon",
-        "cast(((id * 40503) % 65536) / 65536.0 * 180.0 - 90.0 as double) as lat",
+def test_assign_cells_equals_numpy_kernel(spark):
+    # the JVM keys must be bit-identical to the numpy kernels
+    # (exprs.key_np + sfc.zorder), clamp edges included
+    ids = np.arange(2000, dtype=np.int64)
+    lon = ((ids * 2654435761) % 4294967296) / 4294967296 * 360.0 - 180.0
+    lat = ((ids * 40503) % 65536) / 65536 * 180.0 - 90.0
+    lon = np.concatenate([lon, [180.0, 180.0, -180.0]])
+    lat = np.concatenate([lat, [90.0, -90.0, -90.0]])
+    pts = local_df(
+        spark, list(zip(range(len(lon)), lon.tolist(), lat.tolist())),
+        "id bigint, lon double, lat double",
     )
-    a = spatial.assign_cells(pts, "lon", "lat", 7).select(
-        "id", "key_col", "key_row", "cell_id"
+    got = sorted(
+        tuple(r) for r in spatial.assign_cells(pts, "lon", "lat", 7)
+        .select("id", "key_col", "key_row", "cell_id").collect()
     )
-    b = spatial.assign_cells(pts, "lon", "lat", 7, impl="expr").select(
-        "id", "key_col", "key_row", "cell_id"
-    )
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    col, row = exprs.key_np(lon, lat, 7)
+    want = list(zip(
+        range(len(lon)), col.tolist(), row.tolist(),
+        sfc.zorder(col, row).tolist(),
+    ))
+    assert got == want
 
 
-def test_pip_join_indexed_matches_pip_join(spark, tmp_path):
+def test_pip_join_indexed_matches_pip_join(spark, sf_tiny, tmp_path):
     """Persisted vector index (write once, query many, broadcast-free):
     pip_join_indexed over the stored cover-cell table must equal
     pip_join on the same polygons and points."""
     from geotrellis_spark.operators import spatial
     from geotrellis_spark.plans import driver_queries as dq
 
-    pts = dq._events_pts(spark, "/root/testdata/sf0.001")
+    pts = dq._events_pts(spark, sf_tiny)
     polys = dq._grid_polys(spark)
     base = str(tmp_path / "vindex")
     spatial.write_vector_index(polys, base, zoom=5)
