@@ -9,7 +9,7 @@ wrapper) — SURVEY §2 S8 declared shapefile out of scope; this closes
 it with a dependency-free reader/writer. Geometries cross as the
 engine's WKB; polygon ring winding follows the spec (exterior
 clockwise in y-up coordinates, holes counter-clockwise) and decode
-regroups rings into polygons by winding, mirroring core/mvt.py.
+regroups rings into polygons by winding.
 """
 
 from __future__ import annotations

@@ -12,6 +12,13 @@ Reference re-expressions (upstream 3.x layout, SURVEY.md §0):
 - ``rasterize_features`` — RV2 ``spark/.../rasterize/RasterizeRDD.scala``:
   features explode to covering cells (ClipToGrid), groupBy cell, burn
   in z-index priority order (higher zindex wins overlaps).
+- ``band_math``, ``euclidean_distance_layer``, ``temporal_stack_stats``
+  — per-tile numpy kernels over one or more layers.
+
+No entry point (query registry, jobs, benchmark) runs this module; it
+is kept as the named GeoTrellis map-algebra and rasterize capability,
+and kept tests build tile layers with it (``tests/test_entry_reach.py``
+lists the modules kept without an entry point).
 """
 
 from __future__ import annotations
@@ -22,7 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..core import codecs, geom as G, grouped, kernels, raster_ops
+from ..core import codecs, geom as G, grouped, kernels
 from ..core.layout import LayoutDefinition
 from .spatial import cover_cells
 from .tiling import TILE_SCHEMA
@@ -207,50 +214,6 @@ def temporal_stack_stats(
     return local_stats_layers([f.drop(t_col)], stat)
 
 
-def vectorize_layer(
-    tiles: DataFrame, layout: LayoutDefinition, connectivity: int = 4
-) -> DataFrame:
-    """RV3 vectorize: per-tile boundary tracing of connected equal-value
-    regions to world-coordinate polygons (exterior + holes) — narrow
-    map, no shuffle. Output: (cell_id, key_col, key_row, value, wkb).
-    Cross-tile region stitching is the caller's dissolve step (a
-    groupBy(value) + union in vector space); per-tile polygons already
-    rasterize back to the exact region masks (pytest property)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "cell_id": [], "key_col": [], "key_row": [],
-                "value": [], "wkb": [],
-            }
-            for i in range(len(pdf)):
-                t = _decode(pdf, i, "tile", "fmt")
-                h, w = t.shape
-                kc = int(pdf["key_col"].iloc[i])
-                kr = int(pdf["key_row"].iloc[i])
-                xmin, ymin, xmax, ymax = layout.key_to_extent(kc, kr)
-                cw = (xmax - xmin) / w
-                ch = (ymax - ymin) / h
-                for val, rings in raster_ops.vectorize_tile(t, connectivity):
-                    world = [
-                        np.column_stack(
-                            [xmin + r[:, 0] * cw, ymax - r[:, 1] * ch]
-                        )
-                        for r in rings
-                    ]
-                    out["cell_id"].append(int(pdf["cell_id"].iloc[i]))
-                    out["key_col"].append(kc)
-                    out["key_row"].append(kr)
-                    out["value"].append(float(val))
-                    out["wkb"].append(G.wkb_write_polygon(world))
-            yield pd.DataFrame(out)
-
-    return tiles.mapInPandas(
-        gen,
-        "cell_id long, key_col long, key_row long, value double, wkb binary",
-    )
-
-
 def rasterize_features(
     feats: DataFrame, layout: LayoutDefinition, zoom: int,
     value_col: str = "burn_value", zindex_col: str | None = None,
@@ -286,116 +249,3 @@ def rasterize_features(
         }
 
     return grouped.grouped_rows(cells, "cell_id", burn, TILE_SCHEMA)
-
-
-def contour_layer(
-    tiles: DataFrame,
-    layout: LayoutDefinition,
-    level: float,
-    tile_size: int = 256,
-) -> DataFrame:
-    """Iso-contours of a tile layer at ``level`` (marching squares,
-    raster_ops.contours) in WORLD coordinates (vertices at pixel
-    centers). Each tile owns the cells whose top-left pixel it holds,
-    so it gathers a 1-pixel halo — the E neighbor's first column, S
-    neighbor's first row, SE corner pixel — and every cell is computed
-    exactly ONCE: lines from adjacent tiles meet bit-exactly at
-    borders (polylines are per-tile; cross-tile chaining is the
-    caller's concatenation, the vectorize_layer convention). Missing
-    neighbors / NoData pixels become NaN cells (skipped). One strip
-    shuffle, no driver work. Output: (cell_id, key_col, key_row, wkb
-    linestring)."""
-    T = tile_size
-    from ..core import sfc
-
-    strip_schema = (
-        "cell_id long, key_col long, key_row long, zoom int, "
-        "pos string, part binary"
-    )
-
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "cell_id": [], "key_col": [], "key_row": [],
-                "zoom": [], "pos": [], "part": [],
-            }
-            for i in range(len(pdf)):
-                t = _decode(pdf, i, "tile", "fmt").astype(np.float64)
-                t[t == kernels.NODATA_U16] = np.nan
-                kc = int(pdf["key_col"].iloc[i])
-                kr = int(pdf["key_row"].iloc[i])
-                zoom = int(pdf["zoom"].iloc[i])
-
-                def emit(tc, tr, pos, arr):
-                    out["cell_id"].append(int(sfc.zorder(tc, tr)))
-                    out["key_col"].append(tc)
-                    out["key_row"].append(tr)
-                    out["zoom"].append(zoom)
-                    out["pos"].append(pos)
-                    out["part"].append(
-                        np.ascontiguousarray(arr).tobytes()
-                    )
-
-                emit(kc, kr, "c", t)
-                if kc > 0:
-                    emit(kc - 1, kr, "e", t[:, :1])      # my first col
-                if kr > 0:
-                    emit(kc, kr - 1, "s", t[:1, :])      # my first row
-                if kc > 0 and kr > 0:
-                    emit(kc - 1, kr - 1, "se", t[:1, :1])
-            yield pd.DataFrame(out)
-
-    def assemble(cell: int, pdf: pd.DataFrame) -> dict | None:
-        canvas = np.full((T + 1, T + 1), np.nan)
-        kc = kr = None
-        for i in range(len(pdf)):
-            pos = pdf["pos"].iloc[i]
-            buf = np.frombuffer(bytes(pdf["part"].iloc[i]))
-            if pos == "c":
-                canvas[:T, :T] = buf.reshape(T, T)
-                kc = int(pdf["key_col"].iloc[i])
-                kr = int(pdf["key_row"].iloc[i])
-            elif pos == "e":
-                canvas[:T, T] = buf.reshape(T)
-            elif pos == "s":
-                canvas[T, :T] = buf.reshape(T)
-            elif pos == "se":
-                canvas[T, T] = buf[0]
-        if kc is None:
-            return None
-        lines = raster_ops.contours(canvas, level)
-        if not lines:
-            return None
-        xmin, ymin, xmax, ymax = layout.key_to_extent(kc, kr)
-        cw = (xmax - xmin) / T
-        ch = (ymax - ymin) / T
-        wkbs = []
-        for line in lines:
-            world = np.column_stack([
-                xmin + (line[:, 0] + 0.5) * cw,
-                ymax - (line[:, 1] + 0.5) * ch,
-            ])
-            wkbs.append(G.wkb_write_linestring(world))
-        return {
-            "cell_id": cell, "key_col": kc, "key_row": kr,
-            "wkbs": wkbs,
-        }
-
-    from pyspark.sql.types import (
-        ArrayType, BinaryType, LongType, StructField, StructType,
-    )
-
-    strips = tiles.mapInPandas(explode, strip_schema)
-    per_tile = grouped.grouped_rows(
-        strips, "cell_id", assemble,
-        StructType([
-            StructField("cell_id", LongType()),
-            StructField("key_col", LongType()),
-            StructField("key_row", LongType()),
-            StructField("wkbs", ArrayType(BinaryType())),
-        ]),
-    )
-    return per_tile.select(
-        "cell_id", "key_col", "key_row",
-        F.explode("wkbs").alias("wkb"),
-    )

@@ -1,14 +1,12 @@
-"""4-stage training-data curation core (shared by the batch
-``jobs/curate.py`` entrypoint and the streaming ``foreachBatch``
-wrapper in ``streaming/curate_stream.py``).
+"""4-stage training-data curation core (run by the batch
+``jobs/curate.py`` entrypoint).
 
 documents -> quality gate -> exact dedup -> near-dup cluster collapse
 -> stratified sample, with per-stage metrics. Stage order matters and
 IS the product: the cheap codegen filter runs first and cuts
 everything after; every global stage is deterministic and
 repartition-invariant, so the same input multiset always yields the
-same curated output — which is what lets the streaming snapshot be
-compared 1:1 against the batch job.
+same curated output.
 """
 
 from __future__ import annotations
@@ -21,10 +19,7 @@ from . import dedup, sampling, text
 
 def gate_ids(docs, rep_gate: bool = False):
     """Per-doc-pure stage-1 eligibility: quality gate, optionally AND
-    NOT rep_filter-flagged. ONE definition shared by the batch core
-    and every streaming site that mirrors the gate (band-store
-    membership, coverage guards) — drift here silently strands capped
-    tail pairs."""
+    NOT rep_filter-flagged."""
     ids = text.quality_score(docs).where("is_quality").select("doc_id")
     if rep_gate:
         ok = text.rep_filter(docs).where("NOT flagged").select("doc_id")
@@ -33,82 +28,39 @@ def gate_ids(docs, rep_gate: bool = False):
 
 
 def curate(spark, docs, per_stratum: int, salt: int = 42,
-           metrics=None, signatures=None, pairs=None,
-           bench=None, min_shared: int = 25,
-           contaminated=None, scrub_pii: bool = False,
+           metrics=None, bench=None, min_shared: int = 25,
+           scrub_pii: bool = False,
            rep_gate: bool = False,
            surprisal_band: "tuple | None" = None,
            dup_span_milli: "int | None" = None,
            domain_share_milli: "int | None" = None) -> "tuple":
     """Run the 4-stage curation over a documents DataFrame. Returns
     (curated_df, stats dict). ``metrics``: optional (base, job_id)
-    tuple to persist per-stage counts. ``signatures``: optional
-    precomputed minhash signature rows (doc_id, mh0..mh7) — the
-    streaming path stores these per arriving doc so recuration skips
-    re-shingling the corpus text; the pair/cluster result is identical
-    because signatures are a pure function of each doc's text.
-    ``pairs``: optional precomputed candidate-pair rows (doc_a, doc_b)
-    over ANY superset of the corpus (the incrementally-maintained pair
-    store): they are filtered to pairs whose BOTH endpoints survive
-    the exact-dedup stage — bucket membership is per-doc deterministic,
-    so the filtered set has exactly the batch enumeration's connected
-    components (caps only ever truncate pairs, never components), and
-    the curated output is identical.
+    tuple to persist per-stage counts.
 
     ``bench``: optional benchmark/eval documents DataFrame — adds a
     DECONTAMINATION stage after the quality gate: docs sharing >=
     ``min_shared`` distinct shingles with any benchmark doc are
     dropped as train/eval leakage (``dedup.contamination`` — the
     benchmark shingle set broadcasts, the corpus never shuffles).
-    ``contaminated``: optional PRECOMPUTED flagged doc_ids (the
-    streaming path's contamination store — flags are a pure per-doc
-    function of (text, static bench), so the stream computes them
-    once per arriving doc and recuration skips re-shingling the
-    corpus); when given, ``bench`` is not re-evaluated.
 
     Optional r5 gates:
 
     - ``scrub_pii``: stage 0 — text is REPLACED by its pii_scrub
-      redaction before anything hashes it. Incompatible with
-      precomputed stores (signatures/pairs/contaminated derive from
-      the raw text): scrub at ingest instead (curate_stream does).
+      redaction before anything hashes it.
     - ``rep_gate``: stage 1 also drops rep_filter-flagged docs
-      (per-doc pure — streaming-compatible, threaded through the
-      band store via ``gate_ids``).
+      (per-doc pure, via ``gate_ids``).
     - ``surprisal_band=(low, high)`` / ``dup_span_milli``:
       CORPUS-GLOBAL gates after decontamination — unigram-surprisal
       milli-bits outside the band, or cross-doc duplicated-span
-      fraction >= the threshold, drop the doc. Incompatible with a
-      precomputed ``pairs`` store: under a cap these gates can drop
-      a bucket representative whose tail pairs are already stored,
-      stranding the tails (pass ``signatures`` instead — banding
-      then re-runs over survivors).
+      fraction >= the threshold, drop the doc.
     - ``domain_share_milli``: stage 3.5 — corpus-relative domain
       balancing (sampling.domain_cap): after near-dup collapse no
       domain may hold more than this per-mille of the survivors'
       total tokens. Runs AFTER dedup on purpose (duplicates must not
       count toward a domain's share) and BEFORE the stratified
       sample (the sample draws from the balanced corpus). Pure
-      function of the survivor multiset — store-compatible and
-      streaming-safe."""
-    if scrub_pii and (
-        signatures is not None or pairs is not None
-        or contaminated is not None
-    ):
-        raise ValueError(
-            "scrub_pii rewrites text but signatures/pairs/contaminated"
-            " stores derive from the raw text — scrub at ingest"
-            " (curate_stream(scrub_pii=True)) so the stores see"
-            " scrubbed text"
-        )
-    if pairs is not None and (
-        surprisal_band is not None or dup_span_milli is not None
-    ):
-        raise ValueError(
-            "corpus-global gates (surprisal_band/dup_span_milli) can"
-            " drop a stored bucket representative and strand its"
-            " capped tail pairs — use signatures=, not pairs="
-        )
+      function of the survivor multiset."""
     if scrub_pii:
         docs = docs.drop("text").join(
             text.pii_scrub(docs).selectExpr("doc_id", "redacted as text"),
@@ -130,13 +82,10 @@ def curate(spark, docs, per_stratum: int, salt: int = 42,
     # 1.5 (optional): train/eval decontamination — leakage drops here,
     # BEFORE dedup, so a contaminated doc can't become the kept
     # representative of an otherwise-clean duplicate cluster
-    if bench is not None or contaminated is not None:
-        if contaminated is not None:
-            flagged = contaminated.select("doc_id").distinct()
-        else:
-            flagged = dedup.contamination(
-                gated, bench, min_shared=min_shared
-            ).select("doc_id").distinct()
+    if bench is not None:
+        flagged = dedup.contamination(
+            gated, bench, min_shared=min_shared
+        ).select("doc_id").distinct()
         gated = gated.join(flagged, "doc_id", "left_anti").localCheckpoint()
         metric("decontaminate", "kept", gated.count())
 
@@ -168,13 +117,7 @@ def curate(spark, docs, per_stratum: int, salt: int = 42,
 
     # 3. near-dup collapse: production (capped) candidate pairs ->
     # connected components -> drop everything but cluster minima
-    if pairs is not None:
-        ids = exact.select("doc_id")
-        pairs = pairs.join(
-            ids.withColumnRenamed("doc_id", "doc_a"), "doc_a"
-        ).join(ids.withColumnRenamed("doc_id", "doc_b"), "doc_b")
-    else:
-        pairs = dedup.minhash_dedup(exact, signatures=signatures)
+    pairs = dedup.minhash_dedup(exact)
     clusters = dedup.dedup_clusters(pairs)
     drop = clusters.where("doc_id <> cluster").select("doc_id")
     neardup = exact.join(drop, "doc_id", "left_anti").localCheckpoint()

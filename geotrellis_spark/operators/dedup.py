@@ -90,7 +90,6 @@ def minhash_signatures(
 def minhash_candidates(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     bands: int = 4, max_bucket: int | None = None,
-    signatures: DataFrame | None = None,
 ) -> DataFrame:
     """LSH banding (4 bands x 2 rows): docs sharing any band value are
     candidate near-duplicates. Returns (doc_a, doc_b), doc_a < doc_b.
@@ -101,33 +100,8 @@ def minhash_candidates(
     ``max_bucket`` smallest ids per (band, bval) — every kept doc still
     pairs with the bucket's representative, so transitive-duplicate
     CLUSTERS are preserved even though the full pair list is truncated.
-    Default None = exact pair enumeration (the oracle-checked path).
-
-    ``signatures``: optional precomputed ``minhash_signatures`` rows
-    (id_col, mh0..mh7) — the incremental-ingest path: signatures are a
-    pure per-doc function of the text, so a streaming pipeline computes
-    them ONCE per arriving doc and re-banding/pairing over the stored
-    signature table costs one narrow shuffle instead of re-shingling
-    the full corpus' text every recuration."""
-    if signatures is not None:
-        ids = docs.select(id_col)
-        sig = signatures.join(ids, id_col)
-        # a doc with no signature row would silently skip near-dup
-        # detection (its duplicates survive) — fail loudly instead.
-        # Two 1-row aggregates; runs once per recuration, not per row.
-        # (duplicate signature rows are harmless — the final pair
-        # distinct() absorbs them; only MISSING rows corrupt results)
-        n_docs, n_sig = ids.count(), sig.select(id_col).distinct().count()
-        if n_sig < n_docs:
-            raise ValueError(
-                f"signatures table is missing {n_docs - n_sig} of "
-                f"{n_docs} docs — stale or partially-written signature "
-                "store; recompute signatures for the missing docs"
-            )
-    else:
-        sig = minhash_signatures(docs, id_col, text_col)
-    # ONE banding definition: the incremental pair store's exactness
-    # depends on batch and streaming computing identical (band, bval)
+    Default None = exact pair enumeration (the oracle-checked path)."""
+    sig = minhash_signatures(docs, id_col, text_col)
     banded = band_rows(sig, id_col, bands)
     tail_pairs = None
     if max_bucket is not None:
@@ -211,7 +185,6 @@ MAX_BUCKET_DEFAULT = 256
 def minhash_dedup(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     bands: int = 4, max_bucket: int | None = MAX_BUCKET_DEFAULT,
-    signatures: DataFrame | None = None,
 ) -> DataFrame:
     """PRODUCTION MinHash-LSH entry point: ``max_bucket`` defaults ON
     (256 ids per (band, bval) bucket), so a degenerate hot bucket —
@@ -220,9 +193,7 @@ def minhash_dedup(
     the bucket's smallest-id representative, preserving duplicate
     CLUSTERS. The exact enumeration (``minhash_candidates`` with
     max_bucket=None) stays the oracle-checked path."""
-    return minhash_candidates(
-        docs, id_col, text_col, bands, max_bucket, signatures
-    )
+    return minhash_candidates(docs, id_col, text_col, bands, max_bucket)
 
 
 def _fp_bit_expr_spark(i: int) -> str:
@@ -442,9 +413,8 @@ def dedup_clusters(
     O(log diameter) rounds, not O(diameter); the fixpoint (component
     minimum id) is identical either way, and labels stay monotone
     decreasing, so the checksum convergence test is unchanged. LSH
-    pair graphs are unions of bucket cliques (diameter 2-4); the
-    region-dissolve border graphs this is reused for can be long
-    chains, where the jump matters. All labels are exact integers —
+    pair graphs are unions of bucket cliques (diameter 2-4); the jump
+    only matters on long chains. All labels are exact integers —
     bit-identical to the DuckDB recursive-CTE transitive-closure
     oracle. Raises if ``max_iters`` rounds don't converge rather than
     return a wrong partition."""
@@ -787,11 +757,9 @@ def crossmodal_dedup_sql(
 def band_rows(
     signatures: DataFrame, id_col: str = "doc_id", bands: int = 4
 ) -> DataFrame:
-    """LSH band rows (doc_id, band, bval) from signature rows — the
-    same banding expression minhash_candidates uses, exposed so a
-    streaming pipeline can PERSIST band membership per doc and
-    generate new pairs incrementally (new docs x their buckets) instead
-    of re-running the full self-join every recuration."""
+    """LSH band rows (doc_id, band, bval) from signature rows: band
+    ``bi`` packs its ``8 // bands`` minhash values into one bigint
+    bucket value (the banding ``minhash_candidates`` self-joins on)."""
     rows_per = len(MINHASH_A) // bands
     band_exprs = []
     for bi in range(bands):
@@ -803,94 +771,6 @@ def band_rows(
     return signatures.selectExpr(
         id_col, f"explode(array({', '.join(band_exprs)})) as bk"
     ).select(id_col, "bk.band", "bk.bval")
-
-
-PAIR_STORE_PARTS = 64
-PB_EXPR = f"pmod(hash(band, bval), {PAIR_STORE_PARTS})"
-
-
-def capped_bucket_pairs(
-    bands: DataFrame, id_col: str = "doc_id",
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Candidate pairs PER BUCKET with ``minhash_candidates``' cap
-    semantics, keyed by the pair store's hash partition ``pb`` =
-    pmod(hash(band, bval), PAIR_STORE_PARTS): the ``max_bucket``
-    smallest ids per (band, bval) pair fully, overflow docs pair with
-    the bucket's smallest-id representative. ``SELECT DISTINCT doc_a,
-    doc_b`` over the output equals ``minhash_candidates(...,
-    max_bucket=...)`` exactly — which is what lets a streaming store
-    REGENERATE the partitions its batch touched (bucket-delta
-    replacement) instead of appending monotonically: under a cap the
-    pair set is NOT monotone (a new small-id doc displaces a
-    representative), so touched partitions are rewritten from current
-    bucket membership via dynamic partition overwrite.
-
-    Input must be DISTINCT (id, band, bval) rows — replayed duplicate
-    band rows would consume cap slots twice. Returns
-    (pb, doc_a, doc_b) rows, doc_a < doc_b, distinct per partition."""
-    banded = bands.selectExpr(id_col, "band", "bval", f"{PB_EXPR} as pb")
-    tail_pairs = None
-    if max_bucket is not None:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("band", "bval").orderBy(F.col(id_col).asc())
-        ranked = banded.withColumn("_rk", F.row_number().over(w))
-        rep = ranked.where("_rk = 1").select(
-            "band", "bval", F.col(id_col).alias("_rep")
-        )
-        tail_pairs = (
-            ranked.where(F.col("_rk") > max_bucket)
-            .join(rep, ["band", "bval"])
-            .select(
-                "pb",
-                F.col("_rep").alias("doc_a"),
-                F.col(id_col).alias("doc_b"),
-            )
-        )
-        banded = ranked.where(F.col("_rk") <= max_bucket).drop("_rk")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bval") == F.col("b.bval"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col("a.pb").alias("pb"),
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
-    )
-    if tail_pairs is not None:
-        pairs = pairs.unionByName(tail_pairs)
-    return pairs.distinct()
-
-
-def incremental_pairs(
-    new_bands: DataFrame, all_bands: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Pairs ADDED by a batch of new docs: new x (everything sharing a
-    bucket with them). For an append-only corpus the bucket pair set is
-    MONOTONE — appending docs only ever adds pairs — so
-    (old pairs) UNION (this) == the full enumeration, exactly. The
-    join is proportional to the TOUCHED buckets' membership, not the
-    corpus. Returns normalized (doc_a < doc_b) distinct pairs."""
-    a = new_bands.select(
-        F.col(id_col).alias("_na"), "band", "bval"
-    )
-    b = all_bands.select(F.col(id_col).alias("_ab"), "band", "bval")
-    return (
-        a.join(b, ["band", "bval"])
-        .where(F.col("_na") != F.col("_ab"))
-        .select(
-            F.least("_na", "_ab").alias("doc_a"),
-            F.greatest("_na", "_ab").alias("doc_b"),
-        )
-        .distinct()
-    )
 
 
 def simhash_neardup(

@@ -2287,8 +2287,8 @@ QUERIES = {
     # are key-construction variants of tile_assign's machinery (and
     # pytest-gated for bijectivity); rollup_cube/zonal_stats/
     # temporal_rollup are the two-phase hash-agg shape cell_agg
-    # anchors; asof_join is anchored by interval_join + the streaming
-    # e2e; group_percentiles/funnel/hll_sketch share retention/
+    # anchors; asof_join is anchored by interval_join;
+    # group_percentiles/funnel/hll_sketch share retention/
     # countmin's cohort/sketch agg shapes; poly_stats' WKB path is
     # exercised by vector_join; simhash_neardup's band machinery by
     # phash_neardup/crossmodal_dedup; s2_knn's doubling-cover rounds

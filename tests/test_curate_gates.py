@@ -1,21 +1,18 @@
 """Round-5 curation gate wiring: scrub_pii / rep_gate /
-surprisal_band / dup_span_milli in the batch core, and the
-scrub-at-ingest + rep_gate paths of the streaming wrapper.
+surprisal_band / dup_span_milli in the batch core.
 
 Reference parity anchor: the reference's curation pipelines chain
 quality filters ahead of dedup (SURVEY.md §2 parity-plus, LLM-data
-table); the batch/stream-equality contract is this repo's own
-(streaming/curate_stream.py module docstring).
+table).
 """
 
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 
 from pyspark.sql import functions as F
 
-from geotrellis_spark.operators import dedup, text
+from geotrellis_spark.operators import text
 from geotrellis_spark.operators.curation import curate, gate_ids
 
 
@@ -56,25 +53,6 @@ def test_curate_scrub_pii_redacts_before_hashing(spark):
     kept = set(out["doc_id"])
     assert not (900001 in kept and 900002 in kept)
     assert stats["quality.kept"] >= stats["exact_dedup.kept"]
-
-
-def test_curate_scrub_pii_refuses_precomputed_stores(spark):
-    docs = _docs(spark)
-    sigs = dedup.minhash_signatures(docs)
-    with pytest.raises(ValueError, match="scrub at ingest"):
-        curate(spark, docs, per_stratum=10, scrub_pii=True,
-               signatures=sigs)
-
-
-def test_curate_global_gates_refuse_pair_store(spark):
-    docs = _docs(spark)
-    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
-    with pytest.raises(ValueError, match="strand"):
-        curate(spark, docs, per_stratum=10, pairs=pairs,
-               surprisal_band=(4000, 14000))
-    with pytest.raises(ValueError, match="strand"):
-        curate(spark, docs, per_stratum=10, pairs=pairs,
-               dup_span_milli=500)
 
 
 def test_curate_rep_gate_drops_flagged_docs(spark):
@@ -136,66 +114,6 @@ def test_curate_surprisal_and_dup_span_gates(spark):
         "decontaminate.kept", stats["quality.kept"]
     )
     assert stats["dup_spans.kept"] <= stats["surprisal.kept"]
-
-
-def test_streaming_scrub_and_rep_gate_equals_batch(spark, tmp_path):
-    """e2e: stream 3 micro-batches with scrub_pii=True + rep_gate=True
-    (signature-store path); the snapshot equals the batch
-    curate(scrub_pii=True, rep_gate=True) job over the same rows —
-    proving the ingest-time scrub feeds every store the same text the
-    batch job hashes."""
-    from geotrellis_spark.streaming.curate_stream import curate_stream
-
-    docs = _docs(spark)
-    pdf = docs.toPandas().sort_values("doc_id").reset_index(drop=True)
-    # plant PII in a handful of rows so the scrub is actually load-
-    # bearing for the signature store
-    for i in range(0, len(pdf), 7):
-        pdf.loc[i, "text"] += f" mail-me-at user{i}@example.com 10.0.0.{i % 255}"
-    parts = [pdf.iloc[0::3], pdf.iloc[1::3], pdf.iloc[2::3]]
-
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, p in enumerate(parts):
-        p.to_parquet(src / f"batch_{i}.parquet", index=False)
-
-    full = spark.createDataFrame(pdf)
-    stream = (
-        spark.readStream.schema(full.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-        .selectExpr(
-            "*",
-            "timestamp'2026-01-01' + make_interval(0,0,0,0,0,0,doc_id) as ts",
-        )
-    )
-    q = curate_stream(
-        stream,
-        out_dir=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        per_stratum=20,
-        scrub_pii=True,
-        rep_gate=True,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got_df = spark.read.parquet(str(tmp_path / "out" / "docs"))
-    got = got_df.select("doc_id").toPandas()["doc_id"].sort_values().tolist()
-    want_df, _ = curate(spark, full, per_stratum=20, scrub_pii=True,
-                        rep_gate=True)
-    want = (
-        want_df.select("doc_id").toPandas()["doc_id"].sort_values().tolist()
-    )
-    assert got == want and len(got) > 0
-    # staging (and therefore every derived store) holds scrubbed text
-    staged = " ".join(
-        spark.read.parquet(str(tmp_path / "out" / "staging"))
-        .select("text").toPandas()["text"]
-    )
-    assert "@example.com" not in staged and "<EMAIL>" in staged
 
 
 def test_curate_domain_share_stage(spark):

@@ -11,8 +11,6 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from pyspark.sql import functions as F
-
 from geotrellis_spark.operators import temporal
 
 T0 = dt.datetime(2024, 1, 1)
@@ -181,35 +179,3 @@ def test_group_percentiles_matches_sorted_index(spark, values, p):
     idx = (len(cents) - 1) * p // 100
     assert out[f"p{p}_cents"] == cents[idx]
     assert out["n"] == len(values)
-
-
-def test_incremental_pairs_match_full_banding_random_splits(spark):
-    """Pair-store invariant: streaming the corpus in ANY batch order,
-    the union of incremental pairs equals the full banding self-join's
-    pairs (monotone pair sets under append-only corpora)."""
-    from geotrellis_spark.operators import dedup
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).limit(150)
-    sigs = dedup.minhash_signatures(docs).localCheckpoint()
-    bands = dedup.band_rows(sigs).localCheckpoint()
-    full = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.minhash_candidates(docs, signatures=sigs).collect()
-    }
-    rng = np.random.default_rng(7)
-    ids = [r["doc_id"] for r in docs.select("doc_id").collect()]
-    rng.shuffle(ids)
-    splits = np.array_split(np.array(ids), 4)
-    seen_ids: list[int] = []
-    got = set()
-    for part in splits:
-        seen_ids.extend(int(x) for x in part)
-        new_b = bands.where(F.col("doc_id").isin([int(x) for x in part]))
-        all_b = bands.where(F.col("doc_id").isin(seen_ids))
-        got |= {
-            (r["doc_a"], r["doc_b"])
-            for r in dedup.incremental_pairs(new_b, all_b).collect()
-        }
-    assert got == full and full

@@ -326,62 +326,6 @@ def test_vectorize_tile_roundtrip_random():
         np.testing.assert_array_equal(rebuilt, labels)
 
 
-def test_vectorize_layer_world_coords(spark):
-    from geotrellis_spark.core import codecs
-    from geotrellis_spark.core.layout import Extent, LayoutDefinition, TileLayout
-    from geotrellis_spark.operators import algebra
-    import pandas as pd
-
-    px = np.zeros((8, 8), dtype=np.uint16)
-    px[2:5, 3:7] = 9  # one rectangular region
-    ld = LayoutDefinition(Extent(0, 0, 16, 16), TileLayout(2, 2, 8, 8))
-    pdf = pd.DataFrame([{
-        "layer": "v", "zoom": 1, "key_col": 1, "key_row": 0,
-        "cell_id": 1, "tile": codecs.encode_tile(px, "raw16"),
-        "fmt": "raw16", "w": 8, "h": 8, "cell_type": "uint16ud0",
-    }])
-    out = algebra.vectorize_layer(spark.createDataFrame(pdf), ld).collect()
-    assert len(out) == 1
-    kind, rings = G.wkb_read(bytes(out[0]["wkb"]))
-    assert kind == "polygon" and out[0]["value"] == 9.0
-    # tile (1,0) extent is x in [8,16], y in [8,16]; region cols 3..6,
-    # rows 2..4 -> world x in [11,15], y in [11,14]
-    ext = rings[0]
-    assert ext[:, 0].min() == 11.0 and ext[:, 0].max() == 15.0
-    assert ext[:, 1].min() == 11.0 and ext[:, 1].max() == 14.0
-
-
-def test_iterative_cost_distance_matches_global(spark):
-    from geotrellis_spark.core import codecs
-    from geotrellis_spark.operators import iterative
-    from geotrellis_spark.core import sfc
-    import pandas as pd
-
-    T = 16
-    rng = np.random.default_rng(2)
-    world = rng.integers(1, 5, size=(2 * T, 2 * T)).astype(np.uint16)
-    world[5:20, 11] = 0  # a NoData wall the path must route around
-    rows = []
-    for kr in range(2):
-        for kc in range(2):
-            tile = world[kr * T : (kr + 1) * T, kc * T : (kc + 1) * T]
-            rows.append({
-                "layer": "f", "zoom": 1, "key_col": kc, "key_row": kr,
-                "cell_id": int(sfc.zorder(kc, kr)),
-                "tile": codecs.encode_tile(tile, "raw16"),
-                "fmt": "raw16", "w": T, "h": T, "cell_type": "uint16ud0",
-            })
-    fdf = spark.createDataFrame(pd.DataFrame(rows))
-    out = iterative.iterative_cost_distance(fdf, [(3, 3)], tile_size=T)
-    got = np.full((2 * T, 2 * T), np.nan)
-    for r in out.collect():
-        c = np.frombuffer(bytes(r["cost"])).reshape(T, T)
-        got[r["key_row"] * T : (r["key_row"] + 1) * T,
-            r["key_col"] * T : (r["key_col"] + 1) * T] = c
-    want = R.cost_distance(world, [(3, 3)])
-    np.testing.assert_allclose(got, want)
-
-
 def test_viewshed_wall_shadow():
     flat = np.full((12, 12), 100, dtype=np.uint16)
     assert R.viewshed(flat, 5, 5).all()
@@ -505,88 +449,6 @@ def test_time_series_polygonal(spark):
         assert out[(7, t)] == pytest.approx(10 * (t + 1))  # west tiles kc=0
 
 
-def test_delaunay_empty_circumcircle():
-    from geotrellis_spark.core import triangulate as T
-
-    rng = np.random.default_rng(3)
-    pts = rng.random((40, 2)) * 100
-    tris = T.delaunay(pts)
-    assert len(tris) >= 40  # ~2n triangles for random points
-    # the defining property: no point strictly inside any circumcircle
-    for a, b, c in tris:
-        cc = T._circumcircle(pts, a, b, c)
-        assert cc is not None
-        ux, uy, r2 = cc
-        d2 = (pts[:, 0] - ux) ** 2 + (pts[:, 1] - uy) ** 2
-        inside = d2 < r2 - 1e-7
-        inside[[a, b, c]] = False
-        assert not inside.any(), (a, b, c)
-    # triangles tile the convex hull: areas sum to hull area
-    hull = G.convex_hull(pts)
-    tri_area = sum(
-        abs(G.shoelace_area(np.array([pts[a], pts[b], pts[c]])))
-        for a, b, c in tris
-    )
-    assert tri_area == pytest.approx(abs(G.shoelace_area(hull)), rel=1e-9)
-
-
-def test_voronoi_partition_and_nearest():
-    from geotrellis_spark.core import triangulate as T
-
-    rng = np.random.default_rng(8)
-    sites = rng.random((15, 2)) * 10
-    cells = T.voronoi_cells(sites, (0.0, 0.0, 10.0, 10.0))
-    # cells partition the bbox
-    area = sum(abs(G.shoelace_area(c)) for c in cells if c is not None)
-    assert area == pytest.approx(100.0, rel=1e-9)
-    # membership == nearest site for random probes
-    probes = rng.random((300, 2)) * 10
-    d = np.hypot(
-        probes[:, 0:1] - sites[None, :, 0], probes[:, 1:2] - sites[None, :, 1]
-    )
-    nearest = d.argmin(axis=1)
-    for i, c in enumerate(cells):
-        if c is None:
-            continue
-        inside = G.points_in_rings(probes[:, 0], probes[:, 1], [c])
-        assert (nearest[inside] == i).all()
-
-
-def test_mvt_roundtrip():
-    from geotrellis_spark.core import mvt
-
-    ring = np.array([[0.0, 0.0], [40.0, 0.0], [40.0, 30.0], [0.0, 30.0]])
-    hole = np.array([[10.0, 10.0], [20.0, 10.0], [20.0, 20.0], [10.0, 20.0]])
-    poly = G.wkb_write_polygon([ring, hole])
-    line = G.wkb_write_linestring(np.array([[1.0, 1.0], [35.0, 25.0]]))
-    pt = G.wkb_write_point(12.5, 7.25)
-    tile = mvt.encode_mvt("roads", [
-        {"wkb": poly, "id": 7, "props": {"name": "p", "area": 1200.0, "rank": 3}},
-        {"wkb": line, "id": 8, "props": {"ok": True}},
-        {"wkb": pt, "id": 9, "props": {}},
-    ], (0.0, 0.0, 40.0, 30.0))
-    dec = mvt.decode_mvt(tile)["roads"]
-    assert dec["extent"] == mvt.EXTENT
-    f0, f1, f2 = dec["features"]
-    assert (f0["id"], f0["type"]) == (7, 3)
-    assert f0["props"] == {"name": "p", "area": 1200.0, "rank": 3}
-    assert f1["props"] == {"ok": True}
-    assert len(f0["parts"]) == 2  # exterior + hole
-    # quantization round-trip within half a grid cell
-    sx, sy = mvt.EXTENT / 40.0, mvt.EXTENT / 30.0
-    gr = f0["parts"][0].astype(float)
-    back = np.column_stack([gr[:, 0] / sx, 30.0 - gr[:, 1] / sy])
-    want = np.vstack([ring, ring[:1]])
-    # encoder normalizes winding per MVT 2.1 (exterior positive in
-    # y-down grid coords), so the ring may come back reversed
-    err = min(
-        np.max(np.abs(back - want)), np.max(np.abs(back - want[::-1]))
-    )
-    assert err <= 0.5 / min(sx, sy) + 1e-9
-    assert f0["ring_roles"] == ["exterior", "hole"]
-    assert (f2["parts"][0] == [[1280, 3106]]).all()
-
-
 def test_simple_kriging_exact_and_mean_reverting():
     px = np.array([2.5, 8.5])
     py = np.array([2.5, 7.5])
@@ -622,142 +484,3 @@ def test_minhash_bucket_cap(spark):
     pairs = {(r["doc_a"], r["doc_b"]) for r in capped.collect()}
     reachable = {a for a, b in pairs if b <= 4} | {b for a, b in pairs if a <= 4}
     assert len(reachable) >= 4
-
-
-def test_iterative_flow_accumulation_matches_global(spark):
-    import pandas as pd
-
-    from geotrellis_spark.core import kernels as K
-    from geotrellis_spark.core import sfc
-    from geotrellis_spark.operators import iterative
-
-    T = 8
-    # DEM: tilted plane + V-valley draining south-east across all 4
-    # tiles -> long flow paths that cross tile borders repeatedly
-    rng = np.random.default_rng(5)
-    y, x = np.indices((2 * T, 2 * T))
-    world = (
-        (2 * T - y) * 2.0                    # south-dipping plane
-        + np.abs(x - T) * 0.7                # valley along x = T
-        + rng.random((2 * T, 2 * T)) * 0.01  # tie-breaking noise
-    )
-    fdir_global = K.flow_direction(world)
-    want = K.flow_accumulation(fdir_global)
-
-    rows = []
-    for kr in range(2):
-        for kc in range(2):
-            fd = fdir_global[kr * T : (kr + 1) * T, kc * T : (kc + 1) * T]
-            rows.append({
-                "cell_id": int(sfc.zorder(kc, kr)), "key_col": kc,
-                "key_row": kr, "zoom": 1,
-                "fdir": np.ascontiguousarray(fd).astype(np.int32).tobytes(),
-            })
-    fdf = spark.createDataFrame(pd.DataFrame(rows))
-    out = iterative.iterative_flow_accumulation(fdf, tile_size=T)
-    got = np.full((2 * T, 2 * T), -1, dtype=np.int64)
-    for r in out.collect():
-        a = np.frombuffer(bytes(r["acc"]), np.int64).reshape(T, T)
-        got[r["key_row"] * T : (r["key_row"] + 1) * T,
-            r["key_col"] * T : (r["key_col"] + 1) * T] = a
-    np.testing.assert_array_equal(got, want)
-
-
-def test_dem_flow_accumulation_layer_chain(spark):
-    """Full hydrology chain on a layer: DEM tiles -> focal flowdir ->
-    cross-tile accumulation == whole-array composition, exactly."""
-    import pandas as pd
-
-    from geotrellis_spark.core import codecs, sfc
-    from geotrellis_spark.core import kernels as K
-    from geotrellis_spark.operators import iterative
-
-    T = 8
-    rng = np.random.default_rng(11)
-    y, x = np.indices((2 * T, 2 * T))
-    world = (
-        10.0 + (2 * T - y) * 2.0 + np.abs(x - T) * 0.7
-        + rng.integers(0, 2, (2 * T, 2 * T))  # integer-valued: survives
-    ).astype(np.uint16)                        # the uint16 tile codec
-    want = K.flow_accumulation(K.flow_direction(world.astype(float)))
-
-    rows = []
-    for kr in range(2):
-        for kc in range(2):
-            tile = world[kr * T : (kr + 1) * T, kc * T : (kc + 1) * T]
-            rows.append({
-                "layer": "dem", "zoom": 1, "key_col": kc, "key_row": kr,
-                "cell_id": int(sfc.zorder(kc, kr)),
-                "tile": codecs.encode_tile(tile, "raw16"),
-                "fmt": "raw16", "w": T, "h": T, "cell_type": "uint16ud0",
-            })
-    dem_df = spark.createDataFrame(pd.DataFrame(rows))
-    out = iterative.dem_flow_accumulation(dem_df, tile_size=T)
-    got = np.full((2 * T, 2 * T), -1, dtype=np.int64)
-    for r in out.collect():
-        a = np.frombuffer(bytes(r["acc"]), np.int64).reshape(T, T)
-        got[r["key_row"] * T : (r["key_row"] + 1) * T,
-            r["key_col"] * T : (r["key_col"] + 1) * T] = a
-    np.testing.assert_array_equal(got, want)
-
-
-def test_contour_layer_segments_match_whole_array(spark):
-    """Layer contours over a 2x2-tile DEM: the SET of world-coordinate
-    segments equals the whole-array extraction (each marching-squares
-    cell is computed exactly once via the 1-px halo; per-tile
-    polylines just chain them differently)."""
-    import pandas as pd
-
-    from geotrellis_spark.core import codecs, geom as G, raster_ops, sfc
-    from geotrellis_spark.core.layout import (
-        Extent, LayoutDefinition, TileLayout,
-    )
-    from geotrellis_spark.operators import algebra
-
-    T = 8
-    y, x = np.indices((2 * T, 2 * T)).astype(float)
-    world = (20.0 + 10.0 * np.cos(x / 3.0) + 8.0 * np.sin(y / 2.5)).round()
-    world = world.astype(np.uint16)
-    level = 22.0
-
-    layout = LayoutDefinition(
-        Extent(-16.0, -16.0, 16.0, 16.0), TileLayout(2, 2, T, T)
-    )
-    rows = []
-    for kr in range(2):
-        for kc in range(2):
-            tile = world[kr * T : (kr + 1) * T, kc * T : (kc + 1) * T]
-            rows.append({
-                "layer": "dem", "zoom": 1, "key_col": kc, "key_row": kr,
-                "cell_id": int(sfc.zorder(kc, kr)),
-                "tile": codecs.encode_tile(tile, "raw16"),
-                "fmt": "raw16", "w": T, "h": T, "cell_type": "uint16ud0",
-            })
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    out = algebra.contour_layer(df, layout, level, tile_size=T).collect()
-
-    def segset(polylines):
-        segs = set()
-        for l in polylines:
-            for p, q in zip(l[:-1], l[1:]):
-                a = (round(p[0], 6), round(p[1], 6))
-                b = (round(q[0], 6), round(q[1], 6))
-                segs.add((a, b) if a <= b else (b, a))
-        return segs
-
-    got_lines = []
-    for r in out:
-        kind, pts = G.wkb_read(bytes(r["wkb"]))
-        assert kind == "linestring"
-        got_lines.append(pts)
-    got = segset(got_lines)
-
-    # whole-array golden in the same world frame: pixel (x, y) center
-    # maps to (-16 + (x+0.5)*2, 16 - (y+0.5)*2) with cw = ch = 2.0
-    want_lines = []
-    for l in raster_ops.contours(world.astype(float), level):
-        want_lines.append(np.column_stack([
-            -16.0 + (l[:, 0] + 0.5) * 2.0, 16.0 - (l[:, 1] + 0.5) * 2.0,
-        ]))
-    want = segset(want_lines)
-    assert got and got == want

@@ -1,13 +1,13 @@
 """Round-3 regression tests for the ADVICE findings: hole-ring
-intersection in polygons_intersect, MVT ring winding, viewshed NoData
-NaN poisoning on grid-line samples."""
+intersection in polygons_intersect, viewshed NoData NaN poisoning on
+grid-line samples."""
 
 import struct
 
 import numpy as np
 import pytest
 
-from geotrellis_spark.core import geom, mvt, raster_ops
+from geotrellis_spark.core import geom, raster_ops
 from geotrellis_spark.operators import spatial
 
 
@@ -43,32 +43,6 @@ def test_no_intersect_fully_inside_hole():
     b = geom.wkb_write_polygon([tri])
     assert not geom.polygons_intersect(a, b)
     assert not geom.polygons_intersect(b, a)
-
-
-# ------------------------------------------------------- MVT winding
-
-def test_mvt_ring_winding_and_roles():
-    outer = np.array([[0, 0], [10, 0], [10, 10], [0, 10]], dtype=float)
-    hole = np.array([[4, 4], [6, 4], [6, 6], [4, 6]], dtype=float)
-    # Feed both rings in the SAME (ccw world) orientation — encoder must
-    # fix the winding regardless of input orientation.
-    wkb = geom.wkb_write_polygon([outer, hole])
-    data = mvt.encode_mvt("t", [{"wkb": wkb, "id": 1}], (0, 0, 10, 10))
-    feats = mvt.decode_mvt(data)["t"]["features"]
-    assert feats[0]["ring_roles"] == ["exterior", "hole"]
-    parts = feats[0]["parts"]
-    # signed area in grid coords: exterior positive, hole negative
-    assert mvt._signed_area(parts[0]) > 0
-    assert mvt._signed_area(parts[1]) < 0
-
-
-def test_mvt_winding_input_orientation_invariant():
-    outer = np.array([[0, 0], [10, 0], [10, 10], [0, 10]], dtype=float)
-    hole = np.array([[4, 4], [6, 4], [6, 6], [4, 6]], dtype=float)
-    flipped = geom.wkb_write_polygon([outer[::-1].copy(), hole[::-1].copy()])
-    data = mvt.encode_mvt("t", [{"wkb": flipped, "id": 1}], (0, 0, 10, 10))
-    feats = mvt.decode_mvt(data)["t"]["features"]
-    assert feats[0]["ring_roles"] == ["exterior", "hole"]
 
 
 # ---------------------------------------------- viewshed NoData corner
@@ -270,175 +244,6 @@ def test_vector_join_with_holes(spark):
     assert got == [(1, 10)]
 
 
-# ------------------------------------------- cross-tile layer viewshed
-
-def test_layer_viewshed_matches_whole_region_golden(spark):
-    """RV6 at layer level: viewshed over a 3x3-tile DEM equals the
-    single-array whole-region viewshed, bit for bit (including rays
-    crossing tile borders and a NoData pocket)."""
-    import pandas as pd
-    from geotrellis_spark.core import codecs, sfc
-    from geotrellis_spark.operators import iterative
-
-    T = 16
-    rng = np.random.default_rng(9)
-    world = (rng.integers(5, 40, size=(3 * T, 3 * T))).astype(np.uint16)
-    world[10:14, 20:24] = 2000   # a high plateau casting shadows
-    world[30:33, 8:11] = 65535   # NoData pocket (blocks sight)
-    rows = []
-    for kr in range(3):
-        for kc in range(3):
-            tile = world[kr * T : (kr + 1) * T, kc * T : (kc + 1) * T]
-            rows.append({
-                "layer": "dem", "zoom": 2, "key_col": kc, "key_row": kr,
-                "cell_id": int(sfc.zorder(kc, kr)),
-                "tile": codecs.encode_tile(tile, "raw16"),
-                "fmt": "raw16",
-            })
-    dem_df = spark.createDataFrame(pd.DataFrame(rows))
-    vr, vc = 7, 5   # viewpoint in the NW tile; rays cross every border
-    out = iterative.layer_viewshed(
-        dem_df, vr, vc, observer_height=2.0, tile_size=T
-    )
-    got = np.zeros((3 * T, 3 * T), dtype=bool)
-    seen = 0
-    for r in out.collect():
-        v = np.frombuffer(bytes(r["visible"]), dtype=bool).reshape(T, T)
-        got[r["key_row"] * T : (r["key_row"] + 1) * T,
-            r["key_col"] * T : (r["key_col"] + 1) * T] = v
-        seen += 1
-    assert seen == 9
-    want = raster_ops.viewshed(world, vr, vc, observer_height=2.0)
-    np.testing.assert_array_equal(got, want)
-    assert 0 < want.sum() < want.size  # both outcomes exercised
-
-
-def test_layer_viewshed_center_viewpoint(spark):
-    import pandas as pd
-    from geotrellis_spark.core import codecs, sfc
-    from geotrellis_spark.operators import iterative
-
-    T = 16
-    rng = np.random.default_rng(21)
-    world = (rng.integers(50, 60, size=(2 * T, 2 * T))).astype(np.uint16)
-    world[:, 20] = 500  # wall through both tile rows
-    rows = []
-    for kr in range(2):
-        for kc in range(2):
-            tile = world[kr * T : (kr + 1) * T, kc * T : (kc + 1) * T]
-            rows.append({
-                "layer": "dem", "zoom": 1, "key_col": kc, "key_row": kr,
-                "cell_id": int(sfc.zorder(kc, kr)),
-                "tile": codecs.encode_tile(tile, "raw16"),
-                "fmt": "raw16",
-            })
-    dem_df = spark.createDataFrame(pd.DataFrame(rows))
-    vr, vc = 16, 16  # exactly on the 4-tile corner
-    out = iterative.layer_viewshed(dem_df, vr, vc, tile_size=T)
-    got = np.zeros((2 * T, 2 * T), dtype=bool)
-    for r in out.collect():
-        v = np.frombuffer(bytes(r["visible"]), dtype=bool).reshape(T, T)
-        got[r["key_row"] * T : (r["key_row"] + 1) * T,
-            r["key_col"] * T : (r["key_col"] + 1) * T] = v
-    np.testing.assert_array_equal(
-        got, raster_ops.viewshed(world, vr, vc)
-    )
-
-
-# --------------------------------------- cross-tile region dissolve
-
-def _tile_layer_df(spark, world, T, zoom):
-    import pandas as pd
-    from geotrellis_spark.core import codecs, sfc
-
-    rows = []
-    for kr in range(world.shape[0] // T):
-        for kc in range(world.shape[1] // T):
-            tile = world[kr * T : (kr + 1) * T, kc * T : (kc + 1) * T]
-            rows.append({
-                "layer": "l", "zoom": zoom, "key_col": kc, "key_row": kr,
-                "cell_id": int(sfc.zorder(kc, kr)),
-                "tile": codecs.encode_tile(tile, "raw16"),
-                "fmt": "raw16",
-            })
-    return spark.createDataFrame(pd.DataFrame(rows))
-
-
-def test_region_group_layer_matches_whole_array(spark):
-    """RV4 dissolve: region partition over a 2x2-tile layer is
-    label-bijective with whole-array region_group (regions crossing
-    both border orientations, NoData holes, same-value-but-disjoint
-    regions)."""
-    from geotrellis_spark.operators import iterative
-
-    T = 16
-    rng = np.random.default_rng(5)
-    world = rng.choice([1, 1, 2, 3], size=(2 * T, 2 * T)).astype(np.uint16)
-    world[rng.random((2 * T, 2 * T)) < 0.08] = 65535  # NoData holes
-    df = _tile_layer_df(spark, world, T, zoom=1)
-    out = iterative.region_group_layer(df, tile_size=T)
-    got = np.zeros((2 * T, 2 * T), dtype=np.int64)
-    for r in out.collect():
-        lab = np.frombuffer(bytes(r["labels"]), dtype=np.int64).reshape(T, T)
-        got[r["key_row"] * T : (r["key_row"] + 1) * T,
-            r["key_col"] * T : (r["key_col"] + 1) * T] = lab
-    want = raster_ops.region_group(world, 4)
-    # zero masks align exactly
-    np.testing.assert_array_equal(got == 0, want == 0)
-    # label partitions are bijective
-    fwd, bwd = {}, {}
-    for g, w in zip(got.ravel(), want.ravel()):
-        if w == 0:
-            continue
-        assert fwd.setdefault(w, g) == g, (w, g)
-        assert bwd.setdefault(g, w) == w, (g, w)
-    assert len(fwd) == int(want.max())  # same region count
-
-
-def test_vectorize_layer_dissolved_no_tile_seams(spark):
-    """RV3 dissolve: a region spanning all 4 tiles vectorizes to ONE
-    polygon whose even-odd rasterization reproduces the whole-layer
-    mask exactly (no internal tile-border seams)."""
-    from geotrellis_spark.core.layout import (
-        Extent, LayoutDefinition, TileLayout,
-    )
-    from geotrellis_spark.operators import iterative
-
-    T = 16
-    world = np.full((2 * T, 2 * T), 7, dtype=np.uint16)
-    world[0:4, :] = 1          # a second region along the top
-    world[12:20, 12:20] = 1    # a cross-border square of value 1
-    world[14:18, 14:18] = 7    # with a hole filled by the 7-region
-    df = _tile_layer_df(spark, world, T, zoom=1)
-    layout = LayoutDefinition(
-        Extent(0.0, 0.0, 2.0 * T, 2.0 * T), TileLayout(2, 2, T, T)
-    )
-    out = iterative.vectorize_layer_dissolved(df, layout, tile_size=T)
-    rows = out.collect()
-    want_regions = raster_ops.region_group(world, 4)
-    assert len(rows) == int(want_regions.max())  # one polygon per region
-    # even-odd rasterization of each polygon == its region mask
-    yy, xx = np.mgrid[0 : 2 * T, 0 : 2 * T]
-    # cell centers in world coords (layout maps 1 pixel = 1 unit, y-down)
-    px = xx.ravel() + 0.5
-    py = (2 * T - yy.ravel()) - 0.5
-    got = np.zeros((2 * T, 2 * T), dtype=np.int64)
-    for i, r in enumerate(rows, start=1):
-        inside = geom.points_in_polygon(px, py, bytes(r["wkb"]))
-        m = inside.reshape(2 * T, 2 * T)
-        assert not (got[m] != 0).any()  # polygons are disjoint
-        got[m] = i
-        # value is consistent with the mask
-        assert (world[m] == r["value"]).all()
-    np.testing.assert_array_equal(got != 0, want_regions != 0)
-    # partition equivalence against the whole-array region labels
-    fwd = {}
-    for g, w in zip(got.ravel(), want_regions.ravel()):
-        if w == 0:
-            continue
-        assert fwd.setdefault(w, g) == g
-
-
 # ----------------------------------------------- universal kriging RV8
 
 def test_universal_kriging_exact_and_drift():
@@ -529,72 +334,3 @@ def test_geo_kriging_custom_basis():
     )
     gx, gy = np.meshgrid(xs, ys)
     np.testing.assert_allclose(z, surf(gx, gy), atol=1e-8)
-
-
-def test_region_group_layer_8conn(spark):
-    """8-connectivity dissolve: diagonal-only connections across both
-    a shared edge and the exact 4-tile corner junction merge regions."""
-    from geotrellis_spark.operators import iterative
-
-    T = 16
-    world = np.zeros((2 * T, 2 * T), dtype=np.uint16)
-    # region touching the 4-tile corner diagonally: (15,15) and (16,16)
-    world[T - 1, T - 1] = 7
-    world[T, T] = 7
-    # diagonal step across the vertical edge: (3,15) and (4,16)
-    world[3, T - 1] = 9
-    world[4, T] = 9
-    # plus a background region of value 1 everywhere else
-    world[world == 0] = 1
-    df = _tile_layer_df(spark, world, T, zoom=1)
-    for conn in (4, 8):
-        out = iterative.region_group_layer(df, tile_size=T, connectivity=conn)
-        got = np.zeros((2 * T, 2 * T), dtype=np.int64)
-        for r in out.collect():
-            lab = np.frombuffer(bytes(r["labels"]), dtype=np.int64).reshape(T, T)
-            got[r["key_row"] * T : (r["key_row"] + 1) * T,
-                r["key_col"] * T : (r["key_col"] + 1) * T] = lab
-        want = raster_ops.region_group(world, conn)
-        fwd, bwd = {}, {}
-        for g, w in zip(got.ravel(), want.ravel()):
-            assert fwd.setdefault(w, g) == g, (conn, w, g)
-            assert bwd.setdefault(g, w) == w, (conn, g, w)
-    # and the 8-conn merge genuinely happened
-    assert got[T - 1, T - 1] == got[T, T]
-    assert got[3, T - 1] == got[4, T]
-
-
-def test_layer_viewshed_sparse_layer_no_crash(spark):
-    """A layer with an ABSENT tile must not shift the canvas origin
-    (global indices would silently wrap/crash): present tiles still
-    compute, absent terrain blocks sight per NoData semantics."""
-    import pandas as pd
-
-    from geotrellis_spark.core import codecs, sfc
-    from geotrellis_spark.operators import iterative
-
-    T = 16
-    world = np.full((3 * T, 3 * T), 10, dtype=np.uint16)
-    rows = []
-    for kr in range(3):
-        for kc in range(3):
-            if (kc, kr) == (1, 1):
-                continue  # hole in the middle of the layer
-            tile = world[kr * T : (kr + 1) * T, kc * T : (kc + 1) * T]
-            rows.append({
-                "layer": "dem", "zoom": 2, "key_col": kc, "key_row": kr,
-                "cell_id": int(sfc.zorder(kc, kr)),
-                "tile": codecs.encode_tile(tile, "raw16"),
-                "fmt": "raw16",
-            })
-    dem_df = spark.createDataFrame(pd.DataFrame(rows))
-    out = iterative.layer_viewshed(dem_df, 7, 5, observer_height=2.0,
-                                   tile_size=T).collect()
-    assert len(out) == 8  # every present tile produced a plane
-    planes = {(r["key_col"], r["key_row"]):
-              np.frombuffer(bytes(r["visible"]), dtype=bool).reshape(T, T)
-              for r in out}
-    # the eye's own tile sees itself (flat terrain)
-    assert planes[(0, 0)].all()
-    # the far corner's rays pass THROUGH the missing tile -> blocked
-    assert not planes[(2, 2)].any()
