@@ -61,6 +61,7 @@ __all__ = [
     "rasterize_line",
     "rasterize_points",
     "zonal_partials",
+    "min_label_components",
     "NODATA_U16",
 ]
 
@@ -904,6 +905,33 @@ def zonal_partials(
         int(uz[i]): (int(cnt[i]), float(s[i]), float(mins[i]), float(maxs[i]))
         for i in range(uz.shape[0])
     }
+
+
+# ---------------------------------------------------------- components
+
+def min_label_components(
+    a: np.ndarray, b: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Connected components of the undirected graph with edges
+    ``(a[i], b[i])``: the sorted distinct ids, and per id the minimum
+    id of its component. Ids are made dense with ``np.unique`` (so a
+    smaller index is a smaller id); each round pointer-jumps the label
+    forest until every node points at its root, then hooks every root
+    under the smallest root across its edges (``np.minimum.at``). It
+    stops when no root moves."""
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ea, eb = inv[: len(a)], inv[len(a):]
+    lab = np.arange(len(ids))
+    while True:
+        while not np.array_equal(lab[lab], lab):
+            lab = lab[lab]
+        ra, rb = lab[ea], lab[eb]
+        hooked = lab.copy()
+        np.minimum.at(hooked, ra, rb)
+        np.minimum.at(hooked, rb, ra)
+        if np.array_equal(hooked, lab):
+            return ids, ids[lab]
+        lab = hooked
 
 
 # ----------------------------------------------------------- hydrology

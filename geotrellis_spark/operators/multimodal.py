@@ -1,36 +1,24 @@
-"""Multimodal columns: image / audio / video as opaque BINARY payloads
-with typed metadata, processed by Arrow-batched ``mapInPandas`` kernels.
+"""Multimodal image columns: images as opaque BINARY payloads with
+typed metadata, processed by Arrow-batched ``mapInPandas`` kernels.
 
-Not in the GeoTrellis reference (raster-only); first-class engine
-additions for large-scale training-data pipelines. The design contract
-(what matters at 100 TB) is REAL here — schemas, partition-preserving
-narrow maps, batch-shaped numpy kernels, byte-offset slicing that never
-decodes more than asked. Every modality has a REAL lossy codec built
-from scratch in-repo (no external libs needed): image ``dct``
-(JPEG-style 8x8 DCT, core/codecs.py), audio ``adpcm`` (IMA ADPCM 4:1,
-core/av_codecs.py), video ``ddct`` (keyframed delta-DCT with
-byte-offset frame index and keyframe-relative seek, core/av_codecs.py)
-— alongside the lossless raw16/PNG/PCM16/rawstack forms, and a REAL
+Not in the GeoTrellis reference (raster-only); an engine addition for
+training-data pipelines over image+caption tables. The design contract
+is REAL here — schemas, partition-preserving narrow maps, batch-shaped
+numpy kernels. Images use the in-repo codecs: lossless raw16/PNG, the
+lossy ``dct`` (JPEG-style 8x8 DCT, core/codecs.py), and a REAL
 baseline JPEG encoder+decoder, grayscale AND YCbCr 4:2:0/4:4:4 color
 (core/jpeg.py — full marker parse, Annex K Huffman, interleaved MCU
 entropy coding; no libjpeg). Multiband (D2) rows carry a ``bands``
 column; ``decode_image_multiband``/``transcode_image_multiband``
 handle plane-sequential raw16, 3-band color JPEG, and baseline TIFF
 (core/tiff.py — REAL from-scratch TIFF 6.0, 16-bit strips, none/
-PackBits, II and MM byte orders). Only webp/
-MP3/H.264 remain stubbed behind clearly-marked ``NotImplementedError``
-(their bitstream libraries are not in this container); the engine-side
-plumbing is identical either way and fully tested on the in-repo
-codecs.
+PackBits, II and MM byte orders). Only webp remains stubbed behind a
+clearly-marked ``NotImplementedError`` (its bitstream library is not
+in this container).
 
-Row conventions:
-- image: (image_id long, img binary, w int, h int, fmt string)
-  — multiband rows add (bands int); raw16 payloads are then
-  plane-sequential, band-major
-- audio: (audio_id long, pcm binary, sample_rate int, n_samples int,
-  codec string)  — pcm = little-endian int16 mono
-- video: (video_id long, frames binary, n_frames int, w int, h int,
-  codec string) — frames = n_frames concatenated raw16 gray frames
+Row convention: (image_id long, img binary, w int, h int, fmt string)
+— multiband rows add (bands int); raw16 payloads are then
+plane-sequential, band-major.
 """
 
 from __future__ import annotations
@@ -39,13 +27,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..core import codecs, imagery, kernels
 
 EXTERNAL_IMAGE_CODECS = ("webp",)
-EXTERNAL_AUDIO_CODECS = ("mp3", "opus")
-EXTERNAL_VIDEO_CODECS = ("h264", "vp9", "av1")
 
 
 def decode_image(data: bytes, w: int, h: int, fmt: str) -> np.ndarray:
@@ -465,363 +451,3 @@ def image_features(imgs: DataFrame) -> DataFrame:
     return imgs.mapInPandas(
         gen, "image_id long, phash long, mean_milli long, std_milli long"
     )
-
-
-# ------------------------------------------------------------- audio
-
-def synth_audio(
-    spark: SparkSession, n: int, sample_rate: int = 8000,
-    n_samples: int = 16000, partitions: int = 8,
-) -> DataFrame:
-    """Deterministic PCM16 test audio: each row is a pure tone + chirp
-    keyed by the row id (Philox-seeded noise floor), regenerable by any
-    partition independently."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"audio_id": [], "pcm": [], "sample_rate": [],
-                   "n_samples": [], "codec": []}
-            for aid in pdf["id"]:
-                aid = int(aid)
-                t = np.arange(n_samples) / sample_rate
-                freq = 200.0 + (aid % 17) * 50.0
-                sig = 0.6 * np.sin(2 * np.pi * freq * t)
-                sig += 0.2 * np.sin(2 * np.pi * (freq + 7 * aid % 40) * t * t)
-                rng = np.random.Generator(np.random.Philox(key=aid))
-                sig += 0.05 * rng.standard_normal(n_samples)
-                pcm = np.clip(sig * 32767, -32768, 32767).astype("<i2")
-                out["audio_id"].append(aid)
-                out["pcm"].append(pcm.tobytes())
-                out["sample_rate"].append(sample_rate)
-                out["n_samples"].append(n_samples)
-                out["codec"].append("pcm16")
-            yield pd.DataFrame(out)
-
-    return spark.range(n, numPartitions=partitions).mapInPandas(
-        gen,
-        "audio_id long, pcm binary, sample_rate int, n_samples int, "
-        "codec string",
-    )
-
-
-def decode_audio(data: bytes, codec: str) -> np.ndarray:
-    """PCM16, IMA ADPCM (core/av_codecs.py — real 4:1 lossy codec,
-    from scratch) and FLAC (core/flac.py — real lossless fixed-
-    predictor subset, from scratch) are real; mp3/opus remain STUBS
-    (no audio libs in this container)."""
-    if codec == "pcm16":
-        return np.frombuffer(data, dtype="<i2").astype(np.float64) / 32768.0
-    if codec == "adpcm":
-        from ..core import av_codecs
-
-        return av_codecs.adpcm_decode(data).astype(np.float64) / 32768.0
-    if codec == "flac":
-        from ..core import flac
-
-        pcm, _sr = flac.flac_decode(data)
-        return pcm[0].astype(np.float64) / 32768.0
-    if codec in EXTERNAL_AUDIO_CODECS:
-        raise NotImplementedError(
-            f"STUB: {codec} decode needs an external audio library"
-        )
-    raise ValueError(codec)
-
-
-def transcode_audio(audio: DataFrame, to_codec: str = "adpcm") -> DataFrame:
-    """Transcode pcm16 <-> adpcm/flac payloads: one narrow map,
-    partitioning preserved; the sequential predictor loops parallelize
-    across rows (one clip per row) like every other payload kernel.
-    'flac' is LOSSLESS — pcm16 -> flac -> pcm16 is bit-exact."""
-    from ..core import av_codecs, flac
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            blobs, codecs_out = [], []
-            for i in range(len(pdf)):
-                src = pdf["codec"].iloc[i]
-                data = bytes(pdf["pcm"].iloc[i])
-                sr = int(pdf["sample_rate"].iloc[i])
-                if src == to_codec:
-                    blobs.append(data)
-                elif (src, to_codec) == ("pcm16", "adpcm"):
-                    blobs.append(
-                        av_codecs.adpcm_encode(np.frombuffer(data, "<i2"))
-                    )
-                elif (src, to_codec) == ("adpcm", "pcm16"):
-                    blobs.append(
-                        av_codecs.adpcm_decode(data).astype("<i2").tobytes()
-                    )
-                elif (src, to_codec) == ("pcm16", "flac"):
-                    blobs.append(
-                        flac.flac_encode(np.frombuffer(data, "<i2"), sr)
-                    )
-                elif (src, to_codec) == ("flac", "pcm16"):
-                    pcm, _sr = flac.flac_decode(data)
-                    blobs.append(pcm[0].astype("<i2").tobytes())
-                else:
-                    raise ValueError((src, to_codec))
-                codecs_out.append(to_codec)
-            out["pcm"] = blobs
-            out["codec"] = codecs_out
-            yield out
-
-    return audio.mapInPandas(gen, audio.schema)
-
-
-def audio_fingerprints(audio: DataFrame) -> DataFrame:
-    """(audio_id, afp): the 64-bit spectral fingerprint per clip
-    (core/av_codecs.audio_fingerprint64 — log-band-difference bits,
-    amplitude-scale-invariant). One partition-preserving narrow map."""
-    from ..core import av_codecs
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"audio_id": [], "afp": []}
-            for i in range(len(pdf)):
-                pcm = decode_audio(
-                    bytes(pdf["pcm"].iloc[i]), pdf["codec"].iloc[i]
-                )
-                out["audio_id"].append(int(pdf["audio_id"].iloc[i]))
-                out["afp"].append(
-                    av_codecs.audio_fingerprint64(pcm)
-                )
-            yield pd.DataFrame(out)
-
-    return audio.mapInPandas(gen, "audio_id long, afp long")
-
-
-def audio_neardup(
-    audio: DataFrame,
-    max_hamming: int = 2,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Audio near-duplicate pairs — the audio leg of the multimodal
-    dedup family: spectral fingerprints feed EXACTLY the
-    dedup.phash_neardup machinery (4 x 16-bit band equi-join +
-    bit_count refine, optional hot-bucket representative cap), so the
-    audio path inherits its proven scale shape and cap semantics."""
-    from . import dedup
-
-    fps = audio_fingerprints(audio)
-    return dedup.phash_neardup(
-        fps, id_col="audio_id", hash_col="afp",
-        max_hamming=max_hamming, max_bucket=max_bucket,
-    )
-
-
-def audio_features(
-    audio: DataFrame, frame: int = 1024, hop: int = 512,
-) -> DataFrame:
-    """Windowed audio features (RMS + zero-crossing rate per frame),
-    one narrow map; the whole window matrix per row is ONE numpy
-    stride-trick view — no per-sample python. Output: (audio_id,
-    frame_ord, rms_milli, zcr_milli) with exact integer milli-units."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"audio_id": [], "frame_ord": [], "rms_milli": [],
-                   "zcr_milli": []}
-            for i in range(len(pdf)):
-                x = decode_audio(bytes(pdf["pcm"].iloc[i]), pdf["codec"].iloc[i])
-                nfr = max((x.shape[0] - frame) // hop + 1, 0)
-                if nfr == 0:
-                    continue
-                idx = np.arange(frame)[None, :] + hop * np.arange(nfr)[:, None]
-                wins = x[idx]                      # (nfr, frame)
-                rms = np.sqrt((wins * wins).mean(axis=1))
-                zc = (np.diff(np.signbit(wins), axis=1) != 0).mean(axis=1)
-                aid = int(pdf["audio_id"].iloc[i])
-                out["audio_id"] += [aid] * nfr
-                out["frame_ord"] += list(range(nfr))
-                out["rms_milli"] += np.floor(rms * 1000).astype(int).tolist()
-                out["zcr_milli"] += np.floor(zc * 1000).astype(int).tolist()
-            yield pd.DataFrame(out)
-
-    return audio.mapInPandas(
-        gen, "audio_id long, frame_ord long, rms_milli long, zcr_milli long"
-    )
-
-
-# ------------------------------------------------------------- video
-
-def synth_video(
-    spark: SparkSession, n: int, n_frames: int = 24, w: int = 32,
-    h: int = 32, partitions: int = 8,
-) -> DataFrame:
-    """Deterministic raw-frame test video: frame f of video v is the
-    synth image pattern for ordinal v with a brightness ramp over f."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"video_id": [], "frames": [], "n_frames": [], "w": [],
-                   "h": [], "codec": []}
-            for vid in pdf["id"]:
-                vid = int(vid)
-                base = imagery.synth_pixels(vid, w, h).astype(np.float64)
-                stack = np.stack([
-                    np.clip(base * (0.5 + f / n_frames), 0, 65535)
-                    for f in range(n_frames)
-                ]).astype("<u2")
-                out["video_id"].append(vid)
-                out["frames"].append(stack.tobytes())
-                out["n_frames"].append(n_frames)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["codec"].append("rawstack")
-            yield pd.DataFrame(out)
-
-    return spark.range(n, numPartitions=partitions).mapInPandas(
-        gen,
-        "video_id long, frames binary, n_frames int, w int, h int, "
-        "codec string",
-    )
-
-
-def frame_sample(
-    video: DataFrame, every_k: int = 4, with_phash: bool = True,
-) -> DataFrame:
-    """Sample every k-th frame from each video payload by BYTE OFFSET —
-    only the sampled frames are materialized (the contract that matters
-    when a frame stack is GBs: decode cost proportional to frames KEPT,
-    not frames stored). Compressed codecs would seek on keyframe index
-    here; rawstack slices directly. Output: (video_id, frame_ord,
-    frame binary, phash)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..core import av_codecs
-
-        for pdf in batches:
-            out = {"video_id": [], "frame_ord": [], "frame": [], "phash": []}
-            for i in range(len(pdf)):
-                codec = pdf["codec"].iloc[i]
-                if codec not in ("rawstack", "ddct"):
-                    raise NotImplementedError(
-                        f"STUB: {codec} frame seek needs an external "
-                        "video library"
-                    )
-                w = int(pdf["w"].iloc[i])
-                h = int(pdf["h"].iloc[i])
-                nf = int(pdf["n_frames"].iloc[i])
-                blob = pdf["frames"].iloc[i]
-                fbytes = w * h * 2
-                vid = int(pdf["video_id"].iloc[i])
-                blob_b = bytes(blob)  # ONE materialization per row
-                for f in range(0, nf, every_k):
-                    if codec == "ddct":
-                        # keyframe-relative seek: decode cost is
-                        # (f mod keyframe_every)+1 frames, not nf
-                        chunk = av_codecs.ddct_decode_frame(
-                            blob_b, f
-                        ).tobytes()
-                    else:
-                        chunk = blob_b[f * fbytes : (f + 1) * fbytes]
-                    out["video_id"].append(vid)
-                    out["frame_ord"].append(f)
-                    out["frame"].append(chunk)
-                    if with_phash:
-                        px = np.frombuffer(chunk, dtype="<u2").reshape(h, w)
-                        out["phash"].append(int(imagery.phash64(
-                            px.astype(np.float64)
-                        )))
-                    else:
-                        out["phash"].append(None)
-            yield pd.DataFrame(out)
-
-    return video.mapInPandas(
-        gen, "video_id long, frame_ord long, frame binary, phash long"
-    )
-
-
-def video_neardup(
-    video: DataFrame,
-    every_k: int = 4,
-    max_hamming: int = 6,
-    min_matches: int = 2,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Video near-duplicate pairs — the video leg of multimodal dedup,
-    a pure composition of proven pieces: byte-offset frame sampling
-    (frame_sample, cost proportional to frames KEPT) emits per-frame
-    perceptual hashes, frame pairs ride the phash_neardup band
-    machinery restricted to the SAME frame ordinal (temporal
-    alignment), and a video pair survives when >= ``min_matches``
-    sampled frames match within ``max_hamming`` bits — so a lossy
-    re-encode (ddct) pairs with its source while unrelated footage
-    shares no aligned near-identical frames. Output:
-    (video_a, video_b, n_frames_matched)."""
-    from pyspark.sql import functions as F
-
-    from . import dedup
-
-    sampled = frame_sample(video, every_k=every_k)
-    # the composite fid = video_id * 1e6 + frame_ord is only injective
-    # for non-negative video_id and frame_ord < 1e6 (a ~9h 30fps clip);
-    # outside that envelope frame pairs would silently mis-align and
-    # attribute matches to the wrong videos — fail loudly instead
-    # (ANSI raise_error evaluates per row inside the same codegen span)
-    frames = sampled.select(
-        F.when(
-            (F.col("video_id") < 0) | (F.col("frame_ord") >= 1_000_000),
-            F.expr(
-                "raise_error('video_neardup: composite frame key needs "
-                "video_id >= 0 and frame_ord < 1000000')"
-            ).cast("long"),
-        ).otherwise(
-            F.col("video_id") * 1_000_000 + F.col("frame_ord")
-        ).alias("fid"),
-        "phash",
-    )
-    pairs = dedup.phash_neardup(
-        frames, id_col="fid", hash_col="phash",
-        max_hamming=max_hamming, max_bucket=max_bucket,
-    )
-    a, b = pairs.columns[0], pairs.columns[1]
-    aligned = pairs.where(
-        (F.col(a) % 1_000_000) == (F.col(b) % 1_000_000)
-    ).select(
-        F.expr(f"{a} div 1000000").alias("video_a"),
-        F.expr(f"{b} div 1000000").alias("video_b"),
-    )
-    return (
-        aligned.groupBy("video_a", "video_b")
-        .agg(F.count("*").alias("n_frames_matched"))
-        .where(F.col("n_frames_matched") >= int(min_matches))
-    )
-
-
-def transcode_video(video: DataFrame, to_codec: str = "ddct",
-                    quality: int = 95, keyframe_every: int = 8) -> DataFrame:
-    """Transcode rawstack <-> ddct (keyframed delta-DCT,
-    core/av_codecs.py): one narrow map, partitioning preserved."""
-    from ..core import av_codecs
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            blobs, codecs_out = [], []
-            for i in range(len(pdf)):
-                src = pdf["codec"].iloc[i]
-                blob = bytes(pdf["frames"].iloc[i])
-                w = int(pdf["w"].iloc[i])
-                h = int(pdf["h"].iloc[i])
-                nf = int(pdf["n_frames"].iloc[i])
-                if src == to_codec:
-                    blobs.append(blob)
-                elif (src, to_codec) == ("rawstack", "ddct"):
-                    stack = np.frombuffer(blob, "<u2").reshape(nf, h, w)
-                    blobs.append(
-                        av_codecs.ddct_encode(stack, quality, keyframe_every)
-                    )
-                elif (src, to_codec) == ("ddct", "rawstack"):
-                    blobs.append(
-                        av_codecs.ddct_decode(blob).astype("<u2").tobytes()
-                    )
-                else:
-                    raise ValueError((src, to_codec))
-                codecs_out.append(to_codec)
-            out["frames"] = blobs
-            out["codec"] = codecs_out
-            yield out
-
-    return video.mapInPandas(gen, video.schema)

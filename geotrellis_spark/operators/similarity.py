@@ -1259,46 +1259,25 @@ def semdedup(
     # components WITHOUT the distributed label loop: semdedup's pairs
     # exist only WITHIN a cluster (the cent_id equi-join above is the
     # operator's defining bound), so no component can span clusters —
-    # a per-cluster union-find over the tiny above-threshold pair set
+    # one vectorized min-label pass per cluster over the tiny
+    # above-threshold pair set (``kernels.min_label_components``)
     # replaces the O(log diameter) rounds of ``dedup_clusters`` (each
-    # round a full shuffle + job) with ONE grouped Arrow pass. Work
-    # per group is linear in that cluster's pairs, strictly dominated
-    # by the pair enumeration that produced them, so this adds no new
-    # scale hazard; labels are the same exact integers (min reachable
-    # id — union-by-min-root below), bit-identical to the recursive-
-    # closure oracle. The general cross-bucket graphs (minhash/
-    # simhash/phash) keep ``dedup_clusters``.
-    def _uf(pdf):
-        import numpy as _np
+    # round a full shuffle + job) with ONE grouped Arrow pass. Labels
+    # are the same exact integers (min reachable id), bit-identical to
+    # the recursive-closure oracle. The general cross-bucket graphs
+    # (minhash/simhash/phash) keep ``dedup_clusters``.
+    from ..core.kernels import min_label_components
+
+    def _components(pdf):
         import pandas as _pd
 
-        va = pdf["vec_a"].to_numpy(dtype=_np.int64)
-        vb = pdf["vec_b"].to_numpy(dtype=_np.int64)
-        ids = _np.unique(_np.concatenate([va, vb]))
-        idx = {int(v): i for i, v in enumerate(ids)}
-        parent = _np.arange(len(ids))
-
-        def find(i):
-            while parent[i] != i:
-                parent[i] = parent[parent[i]]
-                i = parent[i]
-            return i
-
-        for x, y in zip(va, vb):
-            rx, ry = find(idx[int(x)]), find(idx[int(y)])
-            if rx != ry:
-                # ids are sorted, so the smaller root index IS the
-                # smaller id: attaching the larger root under the
-                # smaller keeps every root at its component's min id
-                if rx < ry:
-                    parent[ry] = rx
-                else:
-                    parent[rx] = ry
-        roots = _np.array([find(i) for i in range(len(ids))])
-        return _pd.DataFrame({id_col: ids, "cluster": ids[roots]})
+        ids, label = min_label_components(
+            pdf["vec_a"].to_numpy("int64"), pdf["vec_b"].to_numpy("int64")
+        )
+        return _pd.DataFrame({id_col: ids, "cluster": label})
 
     clus = pairs.groupBy("cent_id").applyInPandas(
-        _uf, f"{id_col} long, cluster long"
+        _components, f"{id_col} long, cluster long"
     )
     return (
         assign.join(clus, id_col, "left")

@@ -50,6 +50,15 @@ from ..session import local_df
 MAX_BROADCAST_POLYS = 100_000
 MAX_BROADCAST_CELLS = 4_000_000
 
+# knn_join's ring search: rings searched per round (one explode/join)
+# and in total before the brute-force fallback.
+KNN_RINGS_PER_ROUND = 3
+KNN_MAX_RINGS = 5
+# s2_knn_join's cap search: first cap radius (doubling per round) and
+# rounds before the brute-force fallback.
+S2_KNN_R0_DEG = 4.0
+S2_KNN_MAX_ROUNDS = 5
+
 
 def assign_cells(
     df: DataFrame,
@@ -243,8 +252,6 @@ def s2_knn_join(
     queries: DataFrame,
     k: int,
     level: int = 6,
-    r0_deg: float = 1.0,
-    max_rounds: int = 8,
     lon_col: str = "lon",
     lat_col: str = "lat",
     q_id_col: str = "q_id",
@@ -258,18 +265,19 @@ def s2_knn_join(
     makes it correct at the poles and across the antimeridian where
     the planar ``knn_join``'s degree metric and grid rings are wrong.
 
-    Per round the cap radius doubles (r0, 2*r0, ...): every pending
-    query's conservative cap cover at ``level`` is generated by ONE
-    distributed mapInPandas explode, joined to the S2-keyed points in
-    ONE broadcast equi-join on the cell id, and ranked by ONE window.
+    Per round the cap radius doubles (``S2_KNN_R0_DEG``, twice that,
+    ...): every pending query's conservative cap cover at ``level`` is
+    generated by ONE distributed mapInPandas explode, joined to the
+    S2-keyed points in ONE broadcast equi-join on the cell id, and
+    ranked by ONE window.
     Stopping rule: the cover is a SUPERSET of the cap, so once a query
     holds k candidates with kth-distance <= r no point outside the cap
     (all at distance > r) can displace them — exactness is a cover
     property, not a metric approximation. Covers of successive rounds
     overlap, so pending queries are re-covered fresh each round (no
     union of disjoint rings); satisfied queries freeze their top-k and
-    leave the loop. Queries still pending after ``max_rounds`` fall
-    back to one brute-force pass — exactness is unconditional.
+    leave the loop. Queries still pending after ``S2_KNN_MAX_ROUNDS``
+    fall back to one brute-force pass — exactness is unconditional.
 
     The queries side is never collected (driver work per round is one
     count); the cover explode is Python per QUERY row (bounded by the
@@ -326,10 +334,10 @@ def s2_knn_join(
 
     results = None
     n_pending = pending.count()
-    for t in range(max_rounds):
+    for t in range(S2_KNN_MAX_ROUNDS):
         if n_pending == 0:
             break
-        r = r0_deg * (2.0 ** t)
+        r = S2_KNN_R0_DEG * (2.0 ** t)
         cand = points.join(
             F.broadcast(cap_cells(pending, r)),
             points[cell_col] == F.col("cell_id"),
@@ -774,9 +782,7 @@ def knn_join(
     q_id_col: str = "q_id",
     q_lon_col: str = "q_lon",
     q_lat_col: str = "q_lat",
-    max_rings: int = 16,
     point_cols: tuple[str, ...] | None = None,
-    rings_per_round: int = 3,
 ) -> DataFrame:
     """Exact k-nearest-neighbors of each query point (planar degrees
     distance, ties broken by the point's first id column).
@@ -789,11 +795,11 @@ def knn_join(
     ring*tile_height) is ONE distributed aggregate. The queries side is
     never collected; driver work per round is a single count. Lineage
     is truncated by lazy localCheckpoints, so total driver actions are
-    <= 2*max_rings + 2 regardless of query-table size. Queries still
-    unsatisfied at ``max_rings`` fall back to a brute-force pass —
-    exactness is unconditional.
+    <= 2*KNN_MAX_RINGS + 2 regardless of query-table size. Queries
+    still unsatisfied at ``KNN_MAX_RINGS`` fall back to a brute-force
+    pass — exactness is unconditional.
 
-    ``rings_per_round`` rings are searched per round (one explode/join
+    ``KNN_RINGS_PER_ROUND`` rings are searched per round (one explode/join
     covers rings lo..hi; the stopping guarantee uses hi, so exactness
     is unchanged): most queries satisfy within rings 0-2, making the
     TYPICAL driver-action count 2 instead of 2 per ring — on a busy
@@ -837,10 +843,10 @@ def knn_join(
     results = None
     n_pending = pending.count()
     ring = 0
-    while ring < max_rings:
+    while ring < KNN_MAX_RINGS:
         if n_pending == 0:
             break
-        hi = min(ring + max(rings_per_round, 1) - 1, max_rings - 1)
+        hi = min(ring + KNN_RINGS_PER_ROUND - 1, KNN_MAX_RINGS - 1)
         cand = points.join(
             F.broadcast(ring_cells(pending, ring, hi, zoom)), "cell_id"
         )

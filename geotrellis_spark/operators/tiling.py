@@ -47,6 +47,8 @@ from ..functions import exprs
 
 NODATA = kernels.NODATA_U16
 _MAXORD = np.int64(2**62)
+# map_side_combine flushes its partials after this many piece bytes
+COMBINE_FLUSH_BYTES = 64 << 20
 
 # piece payloads are zlib-1-packed for the cut->merge shuffle: the
 # pattern-heavy share of real imagery compresses 2-50x for ~1ms/128KB
@@ -198,13 +200,14 @@ def _combine_cell_pieces(items: list[tuple]) -> tuple:
     return R0, C0, R1 - R0, C1 - C0, canvas.tobytes(), ords.tobytes(), -1
 
 
-def map_side_combine(pieces: DataFrame, flush_bytes: int = 64 << 20) -> DataFrame:
+def map_side_combine(pieces: DataFrame) -> DataFrame:
     """Partition-local combine of same-cell pieces into bbox-cropped
     partials (the reduceByKey map-side-combine role; this is the
     explicit skew kill: a hot cell's thousands of overlapping pieces
     compact to <= one partial per map partition BEFORE the shuffle, so
     the final group size is bounded by the partition count regardless
-    of skew). Buffers at most ``flush_bytes`` of pieces per worker."""
+    of skew). Buffers at most ``COMBINE_FLUSH_BYTES`` of pieces per
+    worker."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc: dict[int, list] = {}
@@ -241,7 +244,7 @@ def map_side_combine(pieces: DataFrame, flush_bytes: int = 64 << 20) -> DataFram
                 meta[cell] = (int(pdf["key_col"].iloc[i]),
                               int(pdf["key_row"].iloc[i]))
                 buffered += len(pb)
-            if buffered >= flush_bytes:
+            if buffered >= COMBINE_FLUSH_BYTES:
                 yield flush()
         if acc:
             yield flush()

@@ -401,7 +401,6 @@ def q_knn(spark, sf_dir) -> DataFrame:
     )
     out = spatial.knn_join(
         pts, queries, k=5, zoom=6, point_cols=("event_id", "lon", "lat"),
-        max_rings=5,
     )
     return out.select("q_id", "event_id", F.col("rank").cast("long").alias("rank"))
 
@@ -442,8 +441,7 @@ def q_s2_knn(spark, sf_dir) -> DataFrame:
         f"{exprs.lat_sql('(n_nationkey + 7) * 59')} as q_lat",
     )
     out = spatial.s2_knn_join(
-        pts, queries, k=5, level=6, r0_deg=4.0, max_rounds=5,
-        point_cols=("event_id", "lon", "lat"),
+        pts, queries, k=5, level=6, point_cols=("event_id", "lon", "lat"),
     )
     return out.select(
         "q_id", "event_id", F.col("rank").cast("long").alias("rank")

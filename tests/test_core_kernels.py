@@ -243,3 +243,45 @@ def test_hydro_fill_pit():
     # non-pit cells untouched
     dem2 = np.arange(9, dtype=float).reshape(3, 3)
     assert np.array_equal(K.hydro_fill(dem2), dem2)
+
+
+def test_min_label_components_matches_bfs():
+    """Vectorized components == a plain BFS labelling each node with
+    the minimum id it reaches: seeded random graphs, a long path (many
+    hook rounds), one dense clique and isolated pairs."""
+
+    def bfs(a, b):
+        adj = {}
+        for x, y in zip(a.tolist(), b.tolist()):
+            adj.setdefault(x, set()).add(y)
+            adj.setdefault(y, set()).add(x)
+        label = {}
+        for start in sorted(adj):
+            if start in label:
+                continue
+            label[start], todo = start, [start]
+            while todo:
+                for nb in adj[todo.pop()]:
+                    if nb not in label:
+                        label[nb] = start
+                        todo.append(nb)
+        return label
+
+    rng = np.random.default_rng(5)
+    graphs = []
+    for n, e in [(2, 1), (30, 12), (200, 150), (500, 900)]:
+        ids = rng.choice(10 ** 9, n, replace=False).astype(np.int64)
+        graphs.append((ids[rng.integers(0, n, e)], ids[rng.integers(0, n, e)]))
+    path = np.arange(1000, dtype=np.int64)
+    graphs.append((path[:-1], path[1:]))
+    perm = rng.permutation(1000).astype(np.int64)
+    graphs.append((perm[:-1], perm[1:]))  # same path, scrambled ids
+    qa, qb = np.triu_indices(40, 1)
+    graphs.append((qa.astype(np.int64) + 7, qb.astype(np.int64) + 7))
+    pairs = np.arange(0, 200, 2, dtype=np.int64)
+    graphs.append((pairs + 1, pairs))
+    for a, b in graphs:
+        ids, label = kernels.min_label_components(a, b)
+        want = bfs(a, b)
+        assert ids.tolist() == sorted(want)
+        assert label.tolist() == [want[i] for i in ids.tolist()]

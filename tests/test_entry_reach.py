@@ -27,13 +27,11 @@ ENTRY_FILES = (
 # Kept without an entry point, on purpose. Rasterize and local map
 # algebra are named GeoTrellis capabilities; kept tests of tiling and
 # zonal stats build their inputs with them. The per-tile raster-op
-# kernels and the shapefile codec are self-contained libraries, each
-# with its own test file; they are the next candidates for removal.
+# kernels are a self-contained library with their own test files; they
+# are the next candidate for removal.
 KEPT_UNREACHED = {
     "geotrellis_spark.operators.algebra",
     "geotrellis_spark.core.raster_ops",
-    "geotrellis_spark.core.shapefile",
-    "geotrellis_spark.sources.shapefile_source",
 }
 
 

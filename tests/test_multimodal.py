@@ -1,6 +1,6 @@
-"""Multimodal pipeline tests: image resize/features, audio windowed
-features, video frame sampling — real Spark plumbing over the
-deterministic in-repo codecs; external codecs stay marked stubs."""
+"""Multimodal pipeline tests: image resize/features, augmentation and
+quality gate — real Spark plumbing over the deterministic in-repo
+codecs; external codecs stay marked stubs."""
 
 import numpy as np
 import pandas as pd
@@ -52,65 +52,6 @@ def test_external_image_codec_is_stub():
         mm.decode_image(b"\xff\xd8\xff", 8, 8, "jpeg")
     with pytest.raises(NotImplementedError, match="STUB"):
         mm.decode_image(b"", 8, 8, "webp")
-    with pytest.raises(NotImplementedError, match="STUB"):
-        mm.decode_audio(b"", "mp3")
-
-
-def test_audio_features_golden(spark):
-    audio = mm.synth_audio(spark, 6, sample_rate=8000, n_samples=4096)
-    rows = mm.audio_features(audio, frame=1024, hop=512).collect()
-    # (4096 - 1024) // 512 + 1 = 7 frames per clip
-    by_id: dict = {}
-    for r in rows:
-        by_id.setdefault(r["audio_id"], []).append(r)
-    assert set(by_id) == set(range(6))
-    assert all(len(v) == 7 for v in by_id.values())
-    # numpy golden for one clip
-    pcm_rows = {r["audio_id"]: r for r in audio.collect()}
-    x = np.frombuffer(bytes(pcm_rows[3]["pcm"]), dtype="<i2") / 32768.0
-    f0 = sorted(by_id[3], key=lambda r: r["frame_ord"])[0]
-    rms0 = np.sqrt((x[:1024] ** 2).mean())
-    assert f0["rms_milli"] == int(np.floor(rms0 * 1000))
-    zcr0 = (np.diff(np.signbit(x[:1024])) != 0).mean()
-    assert f0["zcr_milli"] == int(np.floor(zcr0 * 1000))
-    # a pure tone has RMS ~ 0.6/sqrt(2): sanity-band every frame
-    assert all(300 < r["rms_milli"] < 700 for r in rows)
-
-
-def test_audio_determinism(spark):
-    a = {r["audio_id"]: bytes(r["pcm"])
-         for r in mm.synth_audio(spark, 4, n_samples=2048).collect()}
-    b = {r["audio_id"]: bytes(r["pcm"])
-         for r in mm.synth_audio(spark, 4, n_samples=2048, partitions=2).collect()}
-    assert a == b  # partitioning never changes the payloads
-
-
-def test_frame_sample_byte_exact(spark):
-    vids = mm.synth_video(spark, 3, n_frames=10, w=16, h=16)
-    sampled = mm.frame_sample(vids, every_k=3).collect()
-    blobs = {r["video_id"]: r for r in vids.collect()}
-    # frames 0, 3, 6, 9 per video
-    got = {}
-    for r in sampled:
-        got.setdefault(r["video_id"], []).append(r)
-    fb = 16 * 16 * 2
-    for vid, rows in got.items():
-        assert sorted(r["frame_ord"] for r in rows) == [0, 3, 6, 9]
-        blob = bytes(blobs[vid]["frames"])
-        for r in rows:
-            f = r["frame_ord"]
-            assert bytes(r["frame"]) == blob[f * fb : (f + 1) * fb]
-            px = np.frombuffer(bytes(r["frame"]), dtype="<u2").reshape(16, 16)
-            assert r["phash"] == int(imagery.phash64(px.astype(np.float64)))
-
-
-def test_frame_sample_external_codec_is_stub(spark):
-    import pyspark.sql.functions as F
-
-    vids = mm.synth_video(spark, 1, n_frames=4, w=8, h=8)
-    h264 = vids.withColumn("codec", F.lit("h264"))
-    with pytest.raises(Exception, match="STUB"):
-        mm.frame_sample(h264).collect()
 
 
 def test_augment_pixels_hand_golden():
@@ -219,122 +160,3 @@ def test_image_quality_gate_flags(spark):
     # exact integer stats: flat image has std_milli == 0, mean exact
     assert out[101]["std_milli"] == 0
     assert out[101]["mean_milli"] == 30000 * 1000
-
-
-def _ham64(a: int, b: int) -> int:
-    return bin((a ^ b) & ((1 << 64) - 1)).count("1")
-
-
-def test_audio_fingerprint_contract():
-    """The candidate-generator contract: gain changes leave the
-    fingerprint EXACTLY unchanged (median normalization), ADPCM
-    re-encodes flip at most a few bits (recall on transcodes), and
-    structurally different content (tone / chord / noise) lands far
-    apart. Tonal content sharing a log band can collide — that is a
-    documented resolution limit: collisions are candidate pairs the
-    downstream exact/embedding stages refine away."""
-    from geotrellis_spark.core import av_codecs
-
-    fp = av_codecs.audio_fingerprint64
-    t = np.arange(16000) / 8000.0
-    rng = np.random.default_rng(7)
-    tone = 0.7 * np.sin(2 * np.pi * 440 * t)
-    chord = 0.3 * (np.sin(2 * np.pi * 330 * t)
-                   + np.sin(2 * np.pi * 880 * t)
-                   + np.sin(2 * np.pi * 1760 * t))
-    noise = rng.standard_normal(16000) * 0.3
-    a, b, c = fp(tone), fp(chord), fp(noise)
-    assert _ham64(a, fp(tone * 0.2)) == 0
-    assert _ham64(b, fp(chord * 3.0)) == 0
-    # broadband noise lights ALL bands -> far from any tonal clip;
-    # two sparse tonal clips differ in their (small) peak sets
-    assert _ham64(a, c) >= 30 and _ham64(b, c) >= 30
-    assert _ham64(a, b) >= 4
-    # ADPCM transcode recall across the synth corpus
-    for aid in range(16):
-        pcm16 = _synth_pcm(aid)
-        enc = av_codecs.adpcm_encode(
-            (pcm16.astype(np.int64) + 32768).astype(np.uint16)
-        )
-        dec = av_codecs.adpcm_decode(enc).astype(np.float64) / 32768.0 - 1.0
-        assert _ham64(fp(pcm16 / 32768.0), fp(dec)) <= 2
-
-
-def _synth_pcm(aid: int, n_samples: int = 16000, sr: int = 8000):
-    t = np.arange(n_samples) / sr
-    freq = 200.0 + (aid % 17) * 50.0
-    sig = 0.6 * np.sin(2 * np.pi * freq * t)
-    sig += 0.2 * np.sin(2 * np.pi * (freq + 7 * aid % 40) * t * t)
-    rng = np.random.Generator(np.random.Philox(key=aid))
-    sig += 0.05 * rng.standard_normal(n_samples)
-    return np.clip(sig * 32767, -32768, 32767).astype("<i2")
-
-
-def test_audio_neardup_finds_transcodes(spark):
-    """Planted corpus: structurally-different clips plus an ADPCM
-    transcode of one of them — audio_neardup pairs exactly the
-    transcode with its source."""
-    from geotrellis_spark.core import av_codecs
-
-    t = np.arange(16000) / 8000.0
-    rng = np.random.default_rng(9)
-    clips = {
-        0: 0.7 * np.sin(2 * np.pi * 440 * t),
-        1: 0.3 * (np.sin(2 * np.pi * 330 * t)
-                  + np.sin(2 * np.pi * 880 * t)
-                  + np.sin(2 * np.pi * 1760 * t)),
-        2: rng.standard_normal(16000) * 0.3,
-    }
-    rows = []
-    for aid, sig in clips.items():
-        pcm = np.clip(sig * 32767, -32768, 32767).astype("<i2")
-        rows.append((aid, bytearray(pcm.tobytes()), 8000, 16000, "pcm16"))
-    # id 3 = ADPCM transcode of id 0
-    pcm0 = np.clip(clips[0] * 32767, -32768, 32767).astype("<i2")
-    enc = av_codecs.adpcm_encode(
-        (pcm0.astype(np.int64) + 32768).astype(np.uint16)
-    )
-    rows.append((3, bytearray(bytes(enc)), 8000, 16000, "adpcm"))
-    audio = spark.createDataFrame(
-        rows,
-        "audio_id long, pcm binary, sample_rate int, n_samples int, "
-        "codec string",
-    )
-    out = mm.audio_neardup(audio, max_hamming=2)
-    a_col, b_col = out.columns[0], out.columns[1]
-    pairs = sorted((r[a_col], r[b_col]) for r in out.collect())
-    assert pairs == [(0, 3)]
-
-
-def test_video_neardup_rejects_bad_composite_key(spark):
-    """The composite frame key (video_id * 1e6 + frame_ord) is only
-    injective for video_id >= 0; a negative id must fail loudly
-    instead of silently mis-aligning frame pairs."""
-    import pytest
-
-    vids = mm.synth_video(spark, 1, n_frames=8, w=16, h=16,
-                          partitions=1)
-    bad = vids.selectExpr(
-        "video_id - 5 as video_id", "frames", "n_frames", "w", "h",
-        "codec",
-    )
-    with pytest.raises(Exception, match="composite frame key"):
-        mm.video_neardup(bad, every_k=4).collect()
-
-
-def test_video_neardup_finds_transcode(spark):
-    """Three distinct synth videos plus a lossy ddct re-encode of one:
-    video_neardup pairs exactly the re-encode with its source (aligned
-    frames, >= min_matches near-identical phashes)."""
-    vids = mm.synth_video(spark, 3, n_frames=16, w=32, h=32,
-                          partitions=2)
-    copy = mm.transcode_video(
-        vids.where("video_id = 1"), to_codec="ddct", quality=95
-    ).selectExpr(
-        "video_id + 100 as video_id", "frames", "n_frames", "w", "h",
-        "codec",
-    )
-    corpus = vids.unionByName(copy)
-    out = mm.video_neardup(corpus, every_k=4, min_matches=2).collect()
-    assert [(r["video_a"], r["video_b"]) for r in out] == [(1, 101)]
-    assert out[0]["n_frames_matched"] >= 2

@@ -275,7 +275,7 @@ def test_spark_s2_knn_pole_and_antimeridian(spark):
         queries, "q_id long, q_lon double, q_lat double"
     )
     out = spatial.s2_knn_join(
-        pts, qdf, k=7, level=5, r0_deg=2.0, max_rounds=6,
+        pts, qdf, k=7, level=5,
         point_cols=("pid", "lon", "lat"),
     ).collect()
     got = {}
@@ -290,11 +290,12 @@ def test_spark_s2_knn_pole_and_antimeridian(spark):
     assert any(lon[p] > 0 for p in seam) and any(lon[p] < 0 for p in seam)
 
 
-def test_spark_s2_knn_brute_fallback_path(spark):
-    """max_rounds=0 forces every query through the brute-force
+def test_spark_s2_knn_brute_fallback_path(spark, monkeypatch):
+    """Zero cap rounds force every query through the brute-force
     fallback — same exact answer."""
     from geotrellis_spark.operators import spatial
 
+    monkeypatch.setattr(spatial, "S2_KNN_MAX_ROUNDS", 0)
     rng = np.random.default_rng(22)
     lon = rng.uniform(-180.0, 180.0, 400)
     lat = np.degrees(np.arcsin(rng.uniform(-1.0, 1.0, 400)))
@@ -307,7 +308,7 @@ def test_spark_s2_knn_brute_fallback_path(spark):
         [(0, 10.0, 50.0)], "q_id long, q_lon double, q_lat double"
     )
     out = spatial.s2_knn_join(
-        pts, qdf, k=5, level=5, max_rounds=0,
+        pts, qdf, k=5, level=5,
         point_cols=("pid", "lon", "lat"),
     ).collect()
     want = _brute_knn(10.0, 50.0, lon, lat, ids, 5)

@@ -167,7 +167,7 @@ def test_knn_exact(spark, points_df):
     queries = [(i, -170.0 + i * 40.0, -70.0 + i * 17.0) for i in range(8)]
     qdf = spark.createDataFrame(queries, ["q_id", "q_lon", "q_lat"])
     out = spatial.knn_join(
-        points_df, qdf, k=5, zoom=5, point_cols=("id", "lon", "lat"), max_rings=6
+        points_df, qdf, k=5, zoom=5, point_cols=("id", "lon", "lat")
     )
     got = {(r["q_id"], r["rank"]): r["id"] for r in out.collect()}
     lon, lat = _oracle_lonlat()
@@ -190,7 +190,6 @@ def test_knn_many_queries_bounded_actions(spark, points_df):
     )
     out = spatial.knn_join(
         points_df, qdf, k=3, zoom=5, point_cols=("id", "lon", "lat"),
-        max_rings=4,
     )
     got = {(r["q_id"], r["rank"]): r["id"] for r in out.collect()}
     assert len(got) == qn * 3
