@@ -11,8 +11,6 @@ SURVEY.md §0 for citation provenance) as S2/H3-style int64 cell IDs:
 - ``hilbert_xy2d / d2xy`` — Hilbert curve position (better locality for
   range partitioning; same parent-prefix property).
 - ``z3(col, row, t)``     — 3-D Morton for SpaceTimeKey layers.
-- ``ring_k(col, row, k)`` — H3-style ring-k neighbor set on the key grid
-  (kNN expansion, focal buffering).
 - ``zorder_ranges(...)``  — decompose a key rectangle into contiguous
   Z-index ranges (GeoTrellis ``Z2.zdivide`` + ``MergeQueue`` role): the
   planner turns these into ``cell_id BETWEEN lo AND hi`` predicates that
@@ -34,7 +32,6 @@ __all__ = [
     "hilbert_xy2d",
     "hilbert_d2xy",
     "rowmajor",
-    "ring_k",
     "zorder_ranges",
     "merge_ranges",
     "parent_cell",
@@ -181,31 +178,6 @@ def hilbert_d2xy(order: int, d) -> tuple[np.ndarray, np.ndarray]:
         t //= 4
         s <<= 1
     return x, y
-
-
-# ------------------------------------------------------------- neighbors
-
-def ring_k(col, row, k: int, layout_cols: int, layout_rows: int):
-    """H3-style ring-k neighbor keys around each (col,row), clipped to the
-    layout grid. Returns (idx, ncol, nrow) where idx maps each neighbor
-    back to its input position. k=0 yields the cells themselves.
-    """
-    col = np.atleast_1d(np.asarray(col).astype(np.int64))
-    row = np.atleast_1d(np.asarray(row).astype(np.int64))
-    if k == 0:
-        offs = np.array([[0, 0]], dtype=np.int64)
-    else:
-        d = np.arange(-k, k + 1, dtype=np.int64)
-        dc, dr = np.meshgrid(d, d, indexing="ij")
-        ring = np.maximum(np.abs(dc), np.abs(dr)) == k
-        offs = np.stack([dc[ring], dr[ring]], axis=1)
-    n = col.shape[0]
-    m = offs.shape[0]
-    idx = np.repeat(np.arange(n), m)
-    ncol = col[idx] + np.tile(offs[:, 0], n)
-    nrow = row[idx] + np.tile(offs[:, 1], n)
-    ok = (ncol >= 0) & (ncol < layout_cols) & (nrow >= 0) & (nrow < layout_rows)
-    return idx[ok], ncol[ok], nrow[ok]
 
 
 # ------------------------------------------------- range decomposition

@@ -35,6 +35,9 @@ SIMHASH_BAND_BITS = 16
 # bigint min as an overflow-safe SQL literal (bit 63 of the
 # fingerprint is the sign bit in two's complement — both engines)
 _I64_MIN = "(-9223372036854775807 - 1)"
+# dedup_clusters' label-propagation rounds before it raises; with
+# pointer jumping a path of diameter d needs about log2(d) rounds
+DEDUP_CLUSTERS_MAX_ITERS = 25
 
 
 def hex2int_spark(expr: str) -> str:
@@ -394,8 +397,6 @@ def dedup_clusters(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_iters: int = 25,
-    shortcut: bool = True,
 ) -> DataFrame:
     """Connected components over the near-dup pair graph — the step a
     real dedup pipeline runs AFTER candidate generation: every doc maps
@@ -408,15 +409,14 @@ def dedup_clusters(
     groupBy over the symmetrized, self-looped edge list,
     localCheckpoint-pinned — the self-loop folds the own label into
     the same aggregation).
-    With ``shortcut`` (default) each round also pointer-jumps — every
-    node takes the label OF its current label node — so convergence is
-    O(log diameter) rounds, not O(diameter); the fixpoint (component
-    minimum id) is identical either way, and labels stay monotone
-    decreasing, so the checksum convergence test is unchanged. LSH
-    pair graphs are unions of bucket cliques (diameter 2-4); the jump
-    only matters on long chains. All labels are exact integers —
-    bit-identical to the DuckDB recursive-CTE transitive-closure
-    oracle. Raises if ``max_iters`` rounds don't converge rather than
+    Each round also pointer-jumps — every node takes the label OF its
+    current label node — so convergence is O(log diameter) rounds, not
+    O(diameter); labels stay monotone decreasing, so the checksum
+    convergence test holds. LSH pair graphs are unions of bucket
+    cliques (diameter 2-4); the jump only matters on long chains. All
+    labels are exact integers — bit-identical to the DuckDB
+    recursive-CTE transitive-closure oracle. Raises if
+    ``DEDUP_CLUSTERS_MAX_ITERS`` rounds don't converge rather than
     return a wrong partition."""
     edges = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
     sym = edges.union(
@@ -445,7 +445,7 @@ def dedup_clusters(
     # scalars replaces a full new-vs-old join every round. decimal(38)
     # so the sum cannot overflow at any plausible id x row scale.
     prev_sum = None
-    for _ in range(max_iters):
+    for _ in range(DEDUP_CLUSTERS_MAX_ITERS):
         # min over (self u neighbors) — the self-loop edge carries the
         # node's own label into the same aggregation
         new = (
@@ -457,21 +457,20 @@ def dedup_clusters(
             .agg(F.min("blab").alias("lab"))
             .select(F.col("a").alias("id"), "lab")
         )
-        if shortcut:
-            # pointer jump: lab <- min(lab, lab(lab)). Every label is
-            # some node's id (min over node ids), so the self-join hits.
-            hop = new.select(
-                F.col("id").alias("_hop_id"), F.col("lab").alias("_hop_lab")
+        # pointer jump: lab <- min(lab, lab(lab)). Every label is
+        # some node's id (min over node ids), so the self-join hits.
+        hop = new.select(
+            F.col("id").alias("_hop_id"), F.col("lab").alias("_hop_lab")
+        )
+        new = (
+            new.join(hop, new["lab"] == hop["_hop_id"], "left")
+            .select(
+                "id",
+                F.least(
+                    F.col("lab"), F.coalesce("_hop_lab", F.col("lab"))
+                ).alias("lab"),
             )
-            new = (
-                new.join(hop, new["lab"] == hop["_hop_id"], "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("lab"), F.coalesce("_hop_lab", F.col("lab"))
-                    ).alias("lab"),
-                )
-            )
+        )
         # lazy pin + one action: the convergence checksum's collect is
         # the job that materializes the checkpoint, so each round runs
         # ONE job instead of an eager-materialize job followed by a
@@ -489,7 +488,7 @@ def dedup_clusters(
             )
         prev_sum = cur_sum
     raise RuntimeError(
-        f"dedup_clusters did not converge in {max_iters} rounds"
+        f"dedup_clusters did not converge in {DEDUP_CLUSTERS_MAX_ITERS} rounds"
     )
 
 

@@ -18,9 +18,10 @@ layout, SURVEY.md §0):
   the reference's partition-wise nested loop
   (``spark/.../join/VectorJoin.scala``) with an equi-join Catalyst can
   plan — the engine's flagship improvement.
-- ``knn_join``          — J4 (``KNearestRDD``): H3-style ring expansion
-  on the cell grid with the exact-distance stopping guarantee, window
-  top-k per query; brute-force fallback guarantees exactness.
+- ``knn_join``          — J4 (``KNearestRDD``): one lazy plan whose
+  per-query search rectangle comes from per-cell point counts (a
+  proven distance bound, no rounds), then one cell equi-join and a
+  window top-k per query.
 
 Scale notes: points side is never collected; polygon/query sides are
 broadcast when small (the common case — matches the reference's
@@ -29,6 +30,8 @@ on cell_id otherwise.
 """
 
 from __future__ import annotations
+
+import math
 
 import pandas as pd
 import numpy as np
@@ -50,10 +53,6 @@ from ..session import local_df
 MAX_BROADCAST_POLYS = 100_000
 MAX_BROADCAST_CELLS = 4_000_000
 
-# knn_join's ring search: rings searched per round (one explode/join)
-# and in total before the brute-force fallback.
-KNN_RINGS_PER_ROUND = 3
-KNN_MAX_RINGS = 5
 # s2_knn_join's cap search: first cap radius (doubling per round) and
 # rounds before the brute-force fallback.
 S2_KNN_R0_DEG = 4.0
@@ -392,6 +391,22 @@ def _key_rect(zoom: int, bb) -> tuple[np.ndarray, ...]:
     c0, r1 = exprs.key_np(bb[:, 0], bb[:, 1], zoom)
     c1, r0 = exprs.key_np(bb[:, 2], bb[:, 3], zoom)
     return c0, c1, r0, r1
+
+
+def _rect_cells(df: DataFrame, zoom: int, c0: str, c1: str, r0: str, r1: str) -> DataFrame:
+    """JVM explode of per-row key rectangles (inclusive c0..c1 x r0..r1,
+    SQL expressions over ``df``'s columns, meeting the grid; clipped to
+    it): each row of ``df`` -> one row per cell, with its Z-order id
+    added as ``cell_id``."""
+    hi = (1 << zoom) - 1
+    return df.selectExpr(
+        "*", f"explode(sequence(greatest({c0}, 0), least({c1}, {hi}))) AS _nc"
+    ).selectExpr(
+        "*", f"explode(sequence(greatest({r0}, 0), least({r1}, {hi}))) AS _nr"
+    ).selectExpr(
+        *(f"`{c}`" for c in df.columns),
+        f"{exprs.zorder_sql('_nc', '_nr', zoom)} AS cell_id",
+    )
 
 
 def _cover(zoom: int, bb, max_cells: int | None = None):
@@ -749,29 +764,6 @@ def spacetime_join(
     return ka.join(kb, ["cell_id", "t_ord"])
 
 
-def ring_cells(df: DataFrame, lo: int, hi: int, zoom: int) -> DataFrame:
-    """JVM explode: each (q_id, q_lon, q_lat, qc, qr) row -> its ring
-    lo..hi cells (Chebyshev distance lo..hi from the query's key,
-    clipped to the grid; rings are disjoint, so no duplicates) as
-    (q_id, q_lon, q_lat, cell_id). ``sfc.ring_k`` is the numpy twin."""
-    n = 1 << zoom
-    d = F.sequence(F.lit(-hi), F.lit(hi))
-    offs = df.select(
-        "q_id", "q_lon", "q_lat", "qc", "qr", F.explode(d).alias("dc")
-    ).select("*", F.explode(d).alias("dr"))
-    cells = offs.where(
-        F.greatest(F.abs("dc"), F.abs("dr")).between(lo, hi)
-    ).select(
-        "q_id", "q_lon", "q_lat",
-        (F.col("qc") + F.col("dc")).alias("nc"),
-        (F.col("qr") + F.col("dr")).alias("nr"),
-    ).where(F.col("nc").between(0, n - 1) & F.col("nr").between(0, n - 1))
-    return cells.select(
-        "q_id", "q_lon", "q_lat",
-        F.expr(exprs.zorder_sql("nc", "nr", zoom)).alias("cell_id"),
-    )
-
-
 def knn_join(
     points: DataFrame,
     queries: DataFrame,
@@ -785,106 +777,87 @@ def knn_join(
     point_cols: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """Exact k-nearest-neighbors of each query point (planar degrees
-    distance, ties broken by the point's first id column).
+    distance, ties broken by the point's first id column) as ONE lazy
+    plan (J4 re-expressed): building it runs no Spark job, and each
+    query's search rectangle is fixed from per-cell point counts before
+    any candidate pair exists.
 
-    Strategy (J4 re-expressed, fully batched): per round, ALL pending
-    queries' ring-r candidate cells are generated by ONE distributed
-    JVM explode (``ring_cells``), joined to the points in ONE broadcast
-    equi-join, ranked by ONE window, and the stopping rule (kth
-    candidate distance covered by the searched-radius guarantee
-    ring*tile_height) is ONE distributed aggregate. The queries side is
-    never collected; driver work per round is a single count. Lineage
-    is truncated by lazy localCheckpoints, so total driver actions are
-    <= 2*KNN_MAX_RINGS + 2 regardless of query-table size. Queries
-    still unsatisfied at ``KNN_MAX_RINGS`` fall back to a brute-force
-    pass — exactness is unconditional.
+    - Ring per query: the per-cell counts (at most 4^zoom rows)
+      cross-join the broadcast queries; a cell is in ring
+      r = max(|key_col - qc|, |key_row - qr|) of the query's cell
+      (qc, qr). rk is the smallest r whose running count over rings
+      0..r reaches k (at most queries x min(points, 4^zoom) rows).
+    - Bound: a query lies inside its own cell (cw = 360/2^zoom wide,
+      ch = 180/2^zoom high), so every point of rings 0..rk, hence the
+      k-th nearest, is within D = (rk + 1) * hypot(cw, ch). A point
+      |dc| columns away is at least (|dc| - 1) * cw away (rows: ch), so
+      the key rectangle qc +- (floor(D/cw) + 1) by qr +- (floor(D/ch) +
+      1) holds every point within D. D/cw = (rk + 1) * sqrt(5)/2 and
+      D/ch = (rk + 1) * sqrt(5) are never near an integer, so rounding
+      cannot cross the floor. A query with no rk (fewer than k points)
+      searches the whole grid.
+    - Candidates: the rectangle's cells (``_rect_cells``) join the
+      points in ONE broadcast equi-join on cell_id; one window ranks.
 
-    ``KNN_RINGS_PER_ROUND`` rings are searched per round (one explode/join
-    covers rings lo..hi; the stopping guarantee uses hi, so exactness
-    is unchanged): most queries satisfy within rings 0-2, making the
-    TYPICAL driver-action count 2 instead of 2 per ring — on a busy
-    cluster each action is a scheduled job, and job latency (not data
-    volume) dominates this operator at every scale.
+    Keys clamp at the grid edge, so the bound needs every coordinate
+    inside lon [-180, 180] x lat [-90, 90]; one outside (or null)
+    fails the query when it runs.
 
     Returns: q_id, point columns, dist, rank.
     """
-    from pyspark.sql.window import Window
-
     n = 1 << zoom
-    th = 180.0 / n  # tile height in degrees == min cell dimension
-
-    points = assign_cells(points, lon_col, lat_col, zoom).cache()
+    envelope = (
+        "CASE WHEN `{}` BETWEEN -180 AND 180 AND `{}` BETWEEN -90 AND 90 THEN true"
+        " ELSE raise_error('knn_join: coordinate outside lon [-180, 180] x lat"
+        " [-90, 90]') END"
+    )
+    # read twice (counts, candidates): cache rather than re-key
+    points = assign_cells(
+        points.where(envelope.format(lon_col, lat_col)), lon_col, lat_col, zoom
+    ).cache()
     if point_cols is None:
         point_cols = tuple(
             c for c in points.columns if c not in ("key_col", "key_row", "cell_id")
         )
-    tie_col = point_cols[0]
-
     qk = assign_cells(
         queries.select(
             F.col(q_id_col).alias("q_id"),
             F.col(q_lon_col).alias("q_lon"),
             F.col(q_lat_col).alias("q_lat"),
-        ),
+        ).where(envelope.format("q_lon", "q_lat")),
         "q_lon", "q_lat", zoom,
-    ).select(
-        "q_id", "q_lon", "q_lat",
-        F.col("key_col").alias("qc"), F.col("key_row").alias("qr"),
+    ).selectExpr("q_id", "q_lon", "q_lat", "key_col AS qc", "key_row AS qr")
+    per_ring = (
+        points.groupBy("key_col", "key_row").count()
+        .crossJoin(F.broadcast(qk))
+        .groupBy(*qk.columns, F.expr(
+            "greatest(abs(key_col - qc), abs(key_row - qr))"
+        ).alias("r"))
+        .agg(F.sum("count").alias("m"))
     )
-    pending = qk.localCheckpoint(eager=False)
-
+    rk = (
+        per_ring.withColumn("cum", F.expr("sum(m) OVER (PARTITION BY q_id ORDER BY r)"))
+        .groupBy(*qk.columns)
+        .agg(F.expr(f"min(CASE WHEN cum >= {k} THEN r END)").alias("rk"))
+    )
+    # floor(D/cw) + 1 and floor(D/ch) + 1, D/cw = (rk + 1) * sqrt(5)/2,
+    # D/ch = (rk + 1) * sqrt(5); no rk: the whole grid
+    hc = f"coalesce(floor((rk + 1) * {math.sqrt(5) / 2!r}D) + 1, {n})"
+    hr = f"coalesce(floor((rk + 1) * {math.sqrt(5)!r}D) + 1, {n})"
+    cells = _rect_cells(
+        rk, zoom, f"qc - {hc}", f"qc + {hc}", f"qr - {hr}", f"qr + {hr}"
+    ).select("q_id", "q_lon", "q_lat", "cell_id")
     # plain products, not pow(): x*x is one exactly-rounded multiply in
     # every engine, so the oracle's sqrt(dx*dx + dy*dy) is bit-identical
-    dx = F.col(lon_col) - F.col("q_lon")
-    dy = F.col(lat_col) - F.col("q_lat")
-    dist = F.sqrt(dx * dx + dy * dy)
-    win = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col(tie_col).asc())
-
-    results = None
-    n_pending = pending.count()
-    ring = 0
-    while ring < KNN_MAX_RINGS:
-        if n_pending == 0:
-            break
-        hi = min(ring + KNN_RINGS_PER_ROUND - 1, KNN_MAX_RINGS - 1)
-        cand = points.join(
-            F.broadcast(ring_cells(pending, ring, hi, zoom)), "cell_id"
-        )
-        batch = cand.select(
-            "q_id", "q_lon", "q_lat", *point_cols, dist.alias("dist")
-        )
-        merged = batch if results is None else results.unionByName(batch)
-        results = merged.localCheckpoint(eager=False)
-        guarantee = hi * th
-        ring = hi + 1
-        stats = (
-            results.withColumn("rank", F.row_number().over(win))
-            .where(F.col("rank") <= k)
-            .groupBy("q_id")
-            .agg(F.count("*").alias("cnt"), F.max("dist").alias("kth"))
-        )
-        done = stats.where(
-            (F.col("cnt") >= k) & (F.col("kth") <= guarantee)
-        ).select("q_id")
-        pending = pending.join(done, "q_id", "left_anti").localCheckpoint(
-            eager=False
-        )
-        n_pending = pending.count()
-
-    if n_pending > 0:
-        # brute-force fallback for queries the rings didn't satisfy
-        batch = points.crossJoin(
-            F.broadcast(pending.select("q_id", "q_lon", "q_lat"))
-        ).select("q_id", "q_lon", "q_lat", *point_cols, dist.alias("dist"))
-        results = batch if results is None else results.unionByName(batch)
-
-    out = (
-        results.dropDuplicates(["q_id", tie_col])
-        .withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
-        .drop("q_lon", "q_lat")
+    dx, dy = f"(`{lon_col}` - q_lon)", f"(`{lat_col}` - q_lat)"
+    return (
+        points.join(F.broadcast(cells), "cell_id")
+        .select("q_id", *point_cols, F.expr(f"sqrt({dx} * {dx} + {dy} * {dy})").alias("dist"))
+        .withColumn("rank", F.expr(
+            f"row_number() OVER (PARTITION BY q_id ORDER BY dist, `{point_cols[0]}`)"
+        ))
+        .where(f"rank <= {k}")
     )
-    return out
 
 
 # --------------------------------------------- persisted vector index

@@ -8,10 +8,9 @@ layout, SURVEY.md §0 / §3.E1):
   layout tiles it overlaps inside ``mapInPandas`` (Arrow batches, numpy
   slicing — no per-row Python).
 - ``merge_tiles``  — T7 ``Tile.merge`` first-non-NoData-wins, made
-  associative for two-phase (salted) aggregation by carrying a
-  per-cell winner-ordinal plane: lower source ordinal wins where both
-  have data. Phase 1 groups by (cell_id, salt) — explicit skew
-  handling per north_rule — phase 2 by cell_id.
+  order-independent by a per-cell winner-ordinal plane: lower source
+  ordinal wins where both have data. One shuffle groups each cell's
+  pieces.
 - ``pyramid_up``   — T6 ``Pyramid.up`` (``spark/.../pyramid/
   Pyramid.scala``): parent key (c/2, r/2), child quadrant (c%2, r%2),
   NN 2x decimation; one shuffle per level.
@@ -46,9 +45,6 @@ from ..core import codecs, grouped, kernels, sfc
 from ..functions import exprs
 
 NODATA = kernels.NODATA_U16
-_MAXORD = np.int64(2**62)
-# map_side_combine flushes its partials after this many piece bytes
-COMBINE_FLUSH_BYTES = 64 << 20
 
 # piece payloads are zlib-1-packed for the cut->merge shuffle: the
 # pattern-heavy share of real imagery compresses 2-50x for ~1ms/128KB
@@ -77,21 +73,6 @@ PIECE_SCHEMA = StructType(
         StructField("ph", IntegerType()),
         StructField("pw", IntegerType()),
         StructField("piece", BinaryType()),
-    ]
-)
-
-PARTIAL_SCHEMA = StructType(
-    [
-        StructField("cell_id", LongType()),
-        StructField("key_col", LongType()),
-        StructField("key_row", LongType()),
-        StructField("r0", IntegerType()),
-        StructField("c0", IntegerType()),
-        StructField("ph", IntegerType()),
-        StructField("pw", IntegerType()),
-        StructField("pixels", BinaryType()),   # uint16 bbox canvas
-        StructField("ords", BinaryType()),     # uint32 winner plane, or null
-        StructField("src_ord", LongType()),    # uniform ordinal when ords null
     ]
 )
 
@@ -177,117 +158,31 @@ def cut_images(
     return images.mapInPandas(gen, PIECE_SCHEMA)
 
 
-def _combine_cell_pieces(items: list[tuple]) -> tuple:
-    """Merge same-cell pieces into one bbox-cropped partial.
-    items: (r0, c0, ph, pw, packed_piece_bytes, src_ord). Returns
-    (r0, c0, ph, pw, pixels_bytes, ords_bytes|None, src_ord)."""
-    if len(items) == 1:
-        r0, c0, ph, pw, pb, o = items[0]
-        return r0, c0, ph, pw, pb, None, o
-    R0 = min(it[0] for it in items)
-    C0 = min(it[1] for it in items)
-    R1 = max(it[0] + it[2] for it in items)
-    C1 = max(it[1] + it[3] for it in items)
-    canvas = np.full((R1 - R0, C1 - C0), NODATA, dtype=np.uint16)
-    ords = np.full((R1 - R0, C1 - C0), _ORD_SENTINEL, dtype=np.uint32)
-    for r0, c0, ph, pw, pb, o in items:
-        piece = _unpack_piece(pb, ph, pw)
-        vc = canvas[r0 - R0 : r0 - R0 + ph, c0 - C0 : c0 - C0 + pw]
-        vo = ords[r0 - R0 : r0 - R0 + ph, c0 - C0 : c0 - C0 + pw]
-        win = (piece != NODATA) & (np.uint32(o) < vo)
-        vc[win] = piece[win]
-        vo[win] = np.uint32(o)
-    return R0, C0, R1 - R0, C1 - C0, canvas.tobytes(), ords.tobytes(), -1
-
-
-def map_side_combine(pieces: DataFrame) -> DataFrame:
-    """Partition-local combine of same-cell pieces into bbox-cropped
-    partials (the reduceByKey map-side-combine role; this is the
-    explicit skew kill: a hot cell's thousands of overlapping pieces
-    compact to <= one partial per map partition BEFORE the shuffle, so
-    the final group size is bounded by the partition count regardless
-    of skew). Buffers at most ``COMBINE_FLUSH_BYTES`` of pieces per
-    worker."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[int, list] = {}
-        meta: dict[int, tuple[int, int]] = {}
-        buffered = 0
-
-        def flush() -> pd.DataFrame:
-            nonlocal acc, meta, buffered
-            out = {f.name: [] for f in PARTIAL_SCHEMA.fields}
-            for cell, items in acc.items():
-                r0, c0, ph, pw, px, od, o = _combine_cell_pieces(items)
-                out["cell_id"].append(cell)
-                out["key_col"].append(meta[cell][0])
-                out["key_row"].append(meta[cell][1])
-                out["r0"].append(r0)
-                out["c0"].append(c0)
-                out["ph"].append(ph)
-                out["pw"].append(pw)
-                out["pixels"].append(px)
-                out["ords"].append(od)
-                out["src_ord"].append(o)
-            acc, meta, buffered = {}, {}, 0
-            return pd.DataFrame(out)
-
-        for pdf in batches:
-            for i in range(len(pdf)):
-                cell = int(pdf["cell_id"].iloc[i])
-                pb = bytes(pdf["piece"].iloc[i])
-                acc.setdefault(cell, []).append(
-                    (int(pdf["r0"].iloc[i]), int(pdf["c0"].iloc[i]),
-                     int(pdf["ph"].iloc[i]), int(pdf["pw"].iloc[i]),
-                     pb, int(pdf["src_ord"].iloc[i]))
-                )
-                meta[cell] = (int(pdf["key_col"].iloc[i]),
-                              int(pdf["key_row"].iloc[i]))
-                buffered += len(pb)
-            if buffered >= COMBINE_FLUSH_BYTES:
-                yield flush()
-        if acc:
-            yield flush()
-
-    return pieces.mapInPandas(gen, PARTIAL_SCHEMA)
-
-
 def merge_tiles(
     pieces: DataFrame,
     zoom: int,
     tile_size: int = 256,
     layer: str = "images",
     fmt: str = "raw16",
-    two_phase: bool = False,
 ) -> DataFrame:
-    """T7 merge: assemble pieces into tiles.
-
-    Default path: ONE shuffle groupBy(cell_id) -> merge. A hot cell's
-    group is bounded by (pieces_per_cell x piece_size); measured on the
-    10%-hot-spot fixture this is tens of MB — one long task, which AQE
-    schedules alongside the small ones.
-
-    ``two_phase=True`` inserts :func:`map_side_combine` before the
-    shuffle. Use it when pieces-per-hot-cell >> map partitions AND
-    same-cell pieces co-occur in partitions (e.g. re-tiling an
-    SFC-sorted layer); on hash-scattered ingest it combines nothing and
-    adds an Arrow round-trip — measured 2.5x slower at local[32] — so
-    it is opt-in, not default."""
+    """T7 merge: assemble pieces into tiles with ONE shuffle
+    (repartition by cell_id, sorted within partitions). Where pieces
+    overlap, the lower source ordinal wins, so the tile does not depend
+    on piece order. A hot cell's group is bounded by
+    (pieces_per_cell x piece_size); measured on the 10%-hot-spot
+    fixture this is tens of MB — one long task, which AQE schedules
+    alongside the small ones."""
     T = tile_size
 
     def merge_group(cell: int, kc: int, kr: int, items: list[tuple]) -> dict:
-        """items: (r0, c0, ph, pw, pixels, ords|None, src_ord)."""
+        """items: (r0, c0, ph, pw, packed piece, src_ord)."""
         canvas = np.full((T, T), NODATA, dtype=np.uint16)
         ords = np.full((T, T), _ORD_SENTINEL, dtype=np.uint32)
-        for r0, c0, ph, pw, pb, ob, so in items:
-            if ob is None:  # single-source partial: still zlib-packed
-                px = _unpack_piece(pb, ph, pw)
-                od = np.where(px != NODATA, np.uint32(so), _ORD_SENTINEL).astype(
-                    np.uint32
-                )
-            else:  # locally-combined partial: raw canvas + ord plane
-                px = np.frombuffer(pb, dtype="<u2").reshape(ph, pw)
-                od = np.frombuffer(ob, dtype=np.uint32).reshape(ph, pw)
+        for r0, c0, ph, pw, pb, so in items:
+            px = _unpack_piece(pb, ph, pw)
+            od = np.where(px != NODATA, np.uint32(so), _ORD_SENTINEL).astype(
+                np.uint32
+            )
             vc = canvas[r0 : r0 + ph, c0 : c0 + pw]
             vo = ords[r0 : r0 + ph, c0 : c0 + pw]
             win = od < vo
@@ -299,21 +194,13 @@ def merge_tiles(
             "fmt": fmt, "w": T, "h": T, "cell_type": "uint16ud0",
         }
 
-    if two_phase:
-        partials = map_side_combine(pieces)
-    else:
-        # raw pieces as single-source partials (no local combine)
-        partials = pieces.selectExpr(
-            "cell_id", "key_col", "key_row", "r0", "c0", "ph", "pw",
-            "piece as pixels", "cast(null as binary) as ords", "src_ord",
-        )
     # Manual grouped-map: repartition+sort co-locates each cell's rows
     # contiguously, then ONE mapInPandas processes many groups per Arrow
     # batch. applyInPandas costs ~20ms of pandas/Arrow overhead PER
     # GROUP (measured: it dominated the whole pipeline at ~30k tiny
     # groups); this amortizes that to per-batch.
     cols = ["cell_id", "key_col", "key_row", "r0", "c0", "ph", "pw",
-            "pixels", "ords", "src_ord"]
+            "piece", "src_ord"]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tail_cell = None
@@ -335,8 +222,7 @@ def merge_tiles(
             c0s = pdf["c0"].to_numpy(np.int64)
             phs = pdf["ph"].to_numpy(np.int64)
             pws = pdf["pw"].to_numpy(np.int64)
-            pxs = pdf["pixels"].to_numpy()
-            obs = pdf["ords"].to_numpy()
+            pbs = pdf["piece"].to_numpy()
             sos = pdf["src_ord"].to_numpy(np.int64)
             for i in range(len(pdf)):
                 cell = int(cells[i])
@@ -345,11 +231,9 @@ def merge_tiles(
                     tail_cell = cell
                     tail_meta = (int(kcs[i]), int(krs[i]))
                     tail_items = []
-                ob = obs[i]
                 tail_items.append(
                     (int(r0s[i]), int(c0s[i]), int(phs[i]), int(pws[i]),
-                     bytes(pxs[i]), None if ob is None else bytes(ob),
-                     int(sos[i]))
+                     bytes(pbs[i]), int(sos[i]))
                 )
             if len(out) >= 64:
                 yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA.fields])
@@ -362,7 +246,7 @@ def merge_tiles(
         pieces.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
     arranged = (
-        partials.select(cols)
+        pieces.select(cols)
         .repartition(n_part, "cell_id")
         .sortWithinPartitions("cell_id")
     )
@@ -376,7 +260,6 @@ def tile_images(
     salt_buckets: int = 8,
     layer: str = "images",
     fmt: str = "raw16",
-    two_phase: bool = False,
 ) -> DataFrame:
     """E1 ingest spine: cut -> single-shuffle grouped merge.
 
@@ -384,7 +267,7 @@ def tile_images(
     production choice (3-5x smaller payloads through the sink and any
     downstream shuffle, at parallel CPU cost)."""
     pieces = cut_images(images, zoom, tile_size, salt_buckets)
-    return merge_tiles(pieces, zoom, tile_size, layer, fmt, two_phase)
+    return merge_tiles(pieces, zoom, tile_size, layer, fmt)
 
 
 def pyramid_up(tiles: DataFrame, from_zoom: int, tile_size: int = 256) -> DataFrame:

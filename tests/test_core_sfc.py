@@ -80,17 +80,6 @@ def test_rowmajor():
     assert int(sfc.rowmajor(3, 2, 10)) == 23
 
 
-def test_ring_k():
-    idx, c, r = sfc.ring_k([5], [5], 1, 100, 100)
-    assert len(c) == 8
-    assert set(zip(c.tolist(), r.tolist())) == {
-        (4, 4), (5, 4), (6, 4), (4, 5), (6, 5), (4, 6), (5, 6), (6, 6)
-    }
-    # clipping at the grid edge
-    idx, c, r = sfc.ring_k([0], [0], 1, 100, 100)
-    assert len(c) == 3
-
-
 def test_zorder_ranges_exact_cover():
     # 3x3 KeyBounds starting at (1,1): ranges must cover exactly those cells
     lo_c, hi_c, lo_r, hi_r = 1, 3, 1, 3

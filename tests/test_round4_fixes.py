@@ -4,6 +4,9 @@
 def test_dedup_clusters_shortcut_fixpoint_on_chain(spark):
     """Pointer jumping: a 40-node path graph (diameter 40) converges
     well inside 25 rounds and every node maps to the chain minimum."""
+    import numpy as np
+
+    from geotrellis_spark.core import kernels
     from geotrellis_spark.operators.dedup import dedup_clusters
 
     pairs = spark.createDataFrame(
@@ -13,9 +16,8 @@ def test_dedup_clusters_shortcut_fixpoint_on_chain(spark):
     assert len(out) == 41
     assert set(out.values()) == {100}
 
-    # shortcut off: same fixpoint (sanity that the knob is semantic-free)
-    out2 = {
-        r["doc_id"]: r["cluster"]
-        for r in dedup_clusters(pairs, max_iters=60, shortcut=False).collect()
-    }
-    assert out == out2
+    # same fixpoint as the numpy min-label kernel (checked against a BFS)
+    ids, lab = kernels.min_label_components(
+        np.arange(100, 140), np.arange(101, 141)
+    )
+    assert out == dict(zip(ids.tolist(), lab.tolist()))

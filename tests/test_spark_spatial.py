@@ -63,25 +63,29 @@ def test_cell_range_filter_equals_rectangle(spark, points_df, tmp_path):
         assert sorted(r["id"] for r in pruned.collect()) == want, name
 
 
-@pytest.mark.parametrize("lo,hi", [(0, 0), (0, 2), (3, 5)])
-def test_ring_cells_equal_ring_k_union(spark, lo, hi):
+@pytest.mark.parametrize("hc,hr", [(0, 0), (1, 2), (5, 3), (9, 9)])
+def test_rect_cells_equal_numpy_enumeration(spark, hc, hr):
     # n=8 grid; queries at a corner, on an edge and in the interior
     zoom, n = 3, 8
     qc = np.array([0, 7, 3], dtype=np.int64)
     qr = np.array([0, 4, 5], dtype=np.int64)
     df = local_df(
         spark,
-        [(i, 0.0, 0.0, int(c), int(r)) for i, (c, r) in enumerate(zip(qc, qr))],
-        "q_id bigint, q_lon double, q_lat double, qc bigint, qr bigint",
+        [(i, int(c), int(r)) for i, (c, r) in enumerate(zip(qc, qr))],
+        "q_id bigint, qc bigint, qr bigint",
     )
     got = [
         (r["q_id"], r["cell_id"])
-        for r in spatial.ring_cells(df, lo, hi, zoom).collect()
+        for r in spatial._rect_cells(
+            df, zoom, f"qc - {hc}", f"qc + {hc}", f"qr - {hr}", f"qr + {hr}"
+        ).collect()
     ]
     want = []
-    for ring in range(lo, hi + 1):
-        idx, nc, nr = sfc.ring_k(qc, qr, ring, n, n)
-        want += zip(idx.tolist(), sfc.zorder(nc, nr).tolist())
+    for i, (c, r) in enumerate(zip(qc, qr)):
+        cols = np.arange(max(c - hc, 0), min(c + hc, n - 1) + 1)
+        rows = np.arange(max(r - hr, 0), min(r + hr, n - 1) + 1)
+        cc, rr = np.meshgrid(cols, rows)
+        want += [(i, int(z)) for z in sfc.zorder(cc.ravel(), rr.ravel())]
     assert sorted(got) == sorted(want)
 
 
@@ -117,10 +121,8 @@ def sf_tiny(tmp_path_factory):
     "tile_assign", "cell_agg", "cell_extent", "spacetime_cell",
 ])
 def test_read_path_queries_run_without_python_nodes(spark, sf_tiny, name):
-    """Every plan a query executes (including the lazy local
-    checkpoints knn's rounds run as separate SQL executions) is
-    JVM-only: a Python node costs a fixed ~0.2 CPU s per task even
-    when no rows reach it."""
+    """Every plan a query executes is JVM-only: a Python node costs a
+    fixed ~0.2 CPU s per task even when no rows reach it."""
     from geotrellis_spark.plans import driver_queries as dq
 
     store = spark._jsparkSession.sharedState().statusStore()
@@ -180,8 +182,8 @@ def test_knn_exact(spark, points_df):
 
 
 def test_knn_many_queries_bounded_actions(spark, points_df):
-    """Batched ring search: a 400-query table completes exactly with
-    driver work independent of query count (the J4 scale contract)."""
+    """A 400-query table completes exactly in the same one plan (the
+    J4 scale contract: no per-query actions)."""
     qn = 400
     qdf = spark.range(qn).selectExpr(
         "id as q_id",
@@ -200,6 +202,104 @@ def test_knn_many_queries_bounded_actions(spark, points_df):
         order = np.lexsort((np.arange(N_POINTS), d))[:3]
         for rank, pid in enumerate(order, start=1):
             assert got[(qid, rank)] == int(pid), (qid, rank)
+
+
+def _knn_fixture(name):
+    """(points (id, lon, lat), queries (q_id, q_lon, q_lat), k) at
+    zoom 3, where a cell is 45 x 22.5 degrees."""
+    rng = np.random.default_rng(9)
+    corners = [(-180.0, -90.0), (180.0, 90.0), (-180.0, 90.0), (180.0, -90.0)]
+    if name == "one_cell":  # every point in cell (4, 2); queries far away
+        pts = np.column_stack([rng.uniform(1, 44, 60), rng.uniform(23, 44, 60)])
+        return pts, corners + [(-100.0, -50.0)], 5
+    if name == "sparse":  # one point in every other cell: k > any count
+        c, r = np.meshgrid(np.arange(0, 8, 2), np.arange(8))
+        lon = -180 + 45 * (c.ravel() + rng.uniform(0.05, 0.95, c.size))
+        lat = 90 - 22.5 * (r.ravel() + rng.uniform(0.05, 0.95, r.size))
+        return np.column_stack([lon, lat]), corners + [(3.0, 4.0)], 6
+    if name == "k_over_n":  # fewer points than k: each query gets all
+        pts = np.array([[10.0, 10.0], [-120.0, 60.0], [170.0, -80.0]])
+        return pts, [(0.0, 0.0), (-180.0, 90.0)], 7
+    if name == "ties":  # each location three times: distances tie
+        base = np.column_stack([rng.uniform(-60, 60, 10), rng.uniform(-40, 40, 10)])
+        return np.repeat(base, 3, axis=0), [(0.0, 0.0), (45.0, 22.5)], 8
+    if name == "bound":  # nearest points 2 columns / 3 rows away
+        # query at the NE corner of cell (4, 4); the k points of its own
+        # cell sit at the SW corner, farther than points in cells
+        # (6, 4) and (4, 1) just past the search rectangle's inner part
+        pts = np.array([[0.5, -22.0]] * 3 + [[90.1, -0.5], [44.5, 45.1]])
+        return pts, [(44.5, -0.5)], 3
+    # "edges": points and queries exactly on cell edges and grid corners
+    lon, lat = np.meshgrid(np.arange(-180.0, 181.0, 45.0), np.arange(-90.0, 91.0, 22.5))
+    pts = np.column_stack([lon.ravel(), lat.ravel()])
+    return pts, corners + [(0.0, 0.0), (45.0, 22.5), (-135.0, -67.5)], 4
+
+
+@pytest.mark.parametrize(
+    "fixture", ["one_cell", "sparse", "k_over_n", "ties", "edges", "bound"]
+)
+def test_knn_matches_brute_force(spark, fixture):
+    """Exact against a numpy brute force (ties broken by id) where the
+    count-sized search rectangle is stressed: all points in one cell
+    with far queries, k above every cell's count, k above the point
+    count, tied distances, coordinates on cell edges, and neighbours
+    that only the bound's full width reaches."""
+    pts, queries, k = _knn_fixture(fixture)
+    pdf = local_df(
+        spark, [(i, float(x), float(y)) for i, (x, y) in enumerate(pts)],
+        "id bigint, lon double, lat double",
+    )
+    qdf = local_df(
+        spark, [(i, x, y) for i, (x, y) in enumerate(queries)],
+        "q_id bigint, q_lon double, q_lat double",
+    )
+    out = spatial.knn_join(pdf, qdf, k=k, zoom=3, point_cols=("id", "lon", "lat"))
+    got = sorted((r["q_id"], r["rank"], r["id"], r["dist"]) for r in out.collect())
+    want = []
+    for qid, (qx, qy) in enumerate(queries):
+        dx, dy = pts[:, 0] - qx, pts[:, 1] - qy
+        d = np.sqrt(dx * dx + dy * dy)
+        order = np.lexsort((np.arange(len(pts)), d))[:k]
+        want += [(qid, rank, int(i), float(d[i]))
+                 for rank, i in enumerate(order, start=1)]
+    assert got == sorted(want)
+
+
+def test_knn_join_builds_without_a_job(spark, points_df):
+    """knn_join only builds a plan: no count, collect or checkpoint
+    runs until the caller's action."""
+    qdf = spark.range(30).selectExpr(
+        "id as q_id",
+        f"{exprs.lon_sql('(id + 3) * 41')} as q_lon",
+        f"{exprs.lat_sql('(id + 7) * 59')} as q_lat",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("knn_build", "knn_join build")
+    try:
+        out = spatial.knn_join(
+            points_df, qdf, k=3, zoom=5, point_cols=("id", "lon", "lat"),
+        )
+        built = list(sc.statusTracker().getJobIdsForGroup("knn_build"))
+        assert out.count() == 30 * 3
+        ran = list(sc.statusTracker().getJobIdsForGroup("knn_build"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert built == []
+    assert ran  # the tracker does see this group's jobs
+
+
+@pytest.mark.parametrize("bad", ["point", "query"])
+def test_knn_join_rejects_coordinates_outside_the_envelope(spark, bad):
+    """Keys clamp at the grid edge, where the search bound would not
+    hold: a coordinate outside lon/lat range fails the query loudly."""
+    lon = 200.0 if bad == "point" else 10.0
+    pdf = local_df(spark, [(0, lon, 0.0), (1, 5.0, 5.0)],
+                   "id bigint, lon double, lat double")
+    q_lat = -95.0 if bad == "query" else 0.0
+    qdf = local_df(spark, [(0, 0.0, q_lat)], "q_id bigint, q_lon double, q_lat double")
+    with pytest.raises(Exception, match="outside lon"):
+        spatial.knn_join(pdf, qdf, k=1, zoom=3).collect()
 
 
 def test_cover_cells_clipped(spark):

@@ -73,20 +73,6 @@ def test_tile_cell_ids(tiles_df):
         assert r["cell_id"] == int(sfc.zorder(r["key_col"], r["key_row"]))
 
 
-def test_two_phase_equals_direct(spark):
-    images = synth.synth_images(spark, 60, partitions=3)
-    pieces = tiling.cut_images(images, ZOOM, T, salt_buckets=4)
-    two = {
-        (r["key_col"], r["key_row"]): bytes(r["tile"])
-        for r in tiling.merge_tiles(pieces, ZOOM, T, two_phase=True).collect()
-    }
-    one = {
-        (r["key_col"], r["key_row"]): bytes(r["tile"])
-        for r in tiling.merge_tiles(pieces, ZOOM, T, two_phase=False).collect()
-    }
-    assert two == one
-
-
 def test_pyramid_level(tiles_df, oracle):
     up = tiling.pyramid_up(tiles_df, ZOOM, T)
     got = {

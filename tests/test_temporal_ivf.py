@@ -265,17 +265,18 @@ def test_dedup_clusters_components(spark):
                    10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
-def test_dedup_clusters_raises_without_convergence(spark):
+def test_dedup_clusters_raises_without_convergence(spark, monkeypatch):
     import pytest as _pt
 
     from geotrellis_spark.operators import dedup
 
-    # a 6-path needs ~5 rounds; max_iters=1 must raise, not mislabel
+    # a 6-path needs several rounds; one round must raise, not mislabel
+    monkeypatch.setattr(dedup, "DEDUP_CLUSTERS_MAX_ITERS", 1)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 6)], "doc_a long, doc_b long"
     )
     with _pt.raises(RuntimeError):
-        dedup.dedup_clusters(pairs, max_iters=1)
+        dedup.dedup_clusters(pairs)
 
 
 # ---------------------------------------------- deterministic sampling
