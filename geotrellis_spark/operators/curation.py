@@ -115,8 +115,9 @@ def curate(spark, docs, per_stratum: int, salt: int = 42,
     exact = gated.join(keep_exact, "doc_id").localCheckpoint()
     metric("exact_dedup", "kept", exact.count())
 
-    # 3. near-dup collapse: production (capped) candidate pairs ->
-    # connected components -> drop everything but cluster minima
+    # 3. near-dup collapse: MinHash-LSH star edges (each bucket member
+    # -> its bucket's min id) -> connected components -> drop
+    # everything but cluster minima
     pairs = dedup.minhash_dedup(exact)
     clusters = dedup.dedup_clusters(pairs)
     drop = clusters.where("doc_id <> cluster").select("doc_id")

@@ -11,8 +11,11 @@ the driver's oracle check is bit-exact.
 Scale notes:
 - exact dedup: one hash-shuffle on md5(text) — the canonical pattern.
 - MinHash-LSH: shingle explode is a narrow map; signatures are one
-  hash-agg by doc_id; banding self-join shuffles on (band, value) —
-  candidate pairs only, never the O(n^2) cross join.
+  hash-agg by doc_id. Pair-level output (``minhash_candidates``, the
+  oracle path) is a salted banding self-join on (band, value), never
+  the O(n^2) cross join; callers that need only clusters take star
+  edges (``minhash_dedup``: member -> bucket min), linear in bucket
+  size, and ``dedup_clusters`` runs components in one Arrow task.
 - SimHash: one explode + one hash-agg; fingerprint comparison is a
   band-bucket join like MinHash (here: exact-fingerprint buckets).
 """
@@ -38,6 +41,14 @@ _I64_MIN = "(-9223372036854775807 - 1)"
 # dedup_clusters' label-propagation rounds before it raises; with
 # pointer jumping a path of diameter d needs about log2(d) rounds
 DEDUP_CLUSTERS_MAX_ITERS = 25
+# dedup_clusters runs components in ONE task up to this many edges.
+# The Arrow input is 16 B per edge (two int64 endpoints), and
+# min_label_components adds about 130 B per edge at peak (tracemalloc
+# over 1M random edges): the endpoint concatenation and np.unique's
+# sort order, sorted copy and inverse over it (2 ids per edge, 8 B
+# each), then up to 2 labels per edge in the label, hook and lookup
+# arrays. 2M edges is then under 300 MB in one Python worker.
+COMPONENTS_TASK_EDGES = 2_000_000
 
 
 def hex2int_spark(expr: str) -> str:
@@ -67,14 +78,30 @@ def shingle_hashes(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = SHINGLE_K
 ) -> DataFrame:
     """Character k-shingles -> 60-bit md5 hashes mod PRIME. Narrow op
-    (explode of an in-row sequence; no shuffle)."""
+    (explode of an in-row sequence; no shuffle).
+
+    A string ``substring`` walks the UTF-8 bytes from the start of the
+    text to find its character position, so hashing every shingle that
+    way costs O(L^2) per document. Single-byte text
+    (``octet_length = length``) has one byte per character: there the
+    shingle at ``pos`` is the same bytes as the binary substring at
+    ``pos``, read in O(k), and md5 hashes the same bytes. Other text
+    keeps the string substring, so the hashes are bit-identical for
+    every text. (``regexp_extract_all(text, '(?s)(?=(.{8}))', 1)`` is as
+    fast but not exact: Java regex walks UTF-16 units and emits an extra
+    shingle that starts at the low surrogate of a non-BMP character.)"""
     return docs.selectExpr(
         id_col,
         f"explode(sequence(1, greatest(length({text_col}) - {k - 1}, 1))) as pos",
-        f"{text_col} as _t",
+        f"case when octet_length({text_col}) = length({text_col}) "
+        f"then cast({text_col} as binary) end as _b",
+        f"case when octet_length({text_col}) <> length({text_col}) "
+        f"then {text_col} end as _t",
     ).selectExpr(
         id_col,
-        f"{hex2int_spark(f'substring(_t, pos, {k})')} % {PRIME} as h",
+        f"case when _b is not null "
+        f"then {hex2int_spark(f'substring(_b, pos, {k})')} "
+        f"else {hex2int_spark(f'substring(_t, pos, {k})')} end % {PRIME} as h",
     )
 
 
@@ -187,16 +214,26 @@ MAX_BUCKET_DEFAULT = 256
 
 def minhash_dedup(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    bands: int = 4, max_bucket: int | None = MAX_BUCKET_DEFAULT,
+    bands: int = 4,
 ) -> DataFrame:
-    """PRODUCTION MinHash-LSH entry point: ``max_bucket`` defaults ON
-    (256 ids per (band, bval) bucket), so a degenerate hot bucket —
-    boilerplate text collapsing to one band value — cannot produce a
-    quadratic pair blowup at 100 TB. Every kept doc still pairs with
-    the bucket's smallest-id representative, preserving duplicate
-    CLUSTERS. The exact enumeration (``minhash_candidates`` with
-    max_bucket=None) stays the oracle-checked path."""
-    return minhash_candidates(docs, id_col, text_col, bands, max_bucket)
+    """PRODUCTION MinHash-LSH entry point for callers that need
+    CLUSTERS, not pairs: star edges (doc_a, doc_b), one per member of
+    each (band, bval) bucket to the bucket's minimum id (doc_a < doc_b).
+
+    A bucket of c docs gives c - 1 edges instead of the c(c-1)/2 pairs
+    of ``minhash_candidates``, so a hot bucket costs linear work
+    without a cap. Every star edge is an exact candidate pair, and a
+    bucket's star connects the same docs as its clique, so connected
+    components (``dedup_clusters``) equal those of the exact pair list.
+    The same pair may appear once per band it shares. One window min
+    over (band, bval): a single shuffle, no self-join."""
+    from pyspark.sql.window import Window
+
+    banded = band_rows(minhash_signatures(docs, id_col, text_col), id_col, bands)
+    rep = F.min(id_col).over(Window.partitionBy("band", "bval"))
+    return banded.select(
+        rep.alias("doc_a"), F.col(id_col).alias("doc_b")
+    ).where("doc_a < doc_b")
 
 
 def _fp_bit_expr_spark(i: int) -> str:
@@ -393,6 +430,29 @@ def ngram_jaccard_sql(source_sql: str = "documents") -> str:
     """
 
 
+def _components_arrow(batches):
+    """mapInArrow body of ``dedup_clusters``' one-task path: every
+    (a, b) edge batch of the partition -> (doc_id, cluster) by the
+    numpy min-label kernel, in one pass."""
+    import numpy as np
+    import pyarrow as pa
+
+    from ..core.kernels import min_label_components
+
+    a, b, id_type = [], [], None
+    for rb in batches:
+        id_type = rb.schema.field("a").type
+        a.append(rb.column("a").to_numpy(zero_copy_only=False))
+        b.append(rb.column("b").to_numpy(zero_copy_only=False))
+    if id_type is None:
+        return
+    ids, label = min_label_components(np.concatenate(a), np.concatenate(b))
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(ids, id_type), pa.array(label, id_type)],
+        ["doc_id", "cluster"],
+    )
+
+
 def dedup_clusters(
     pairs: DataFrame,
     a_col: str = "doc_a",
@@ -402,35 +462,50 @@ def dedup_clusters(
     real dedup pipeline runs AFTER candidate generation: every doc maps
     to its component's minimum doc id (the canonical representative to
     keep). Returns (doc_id, cluster) for every doc that appears in a
-    pair.
+    pair. All labels are exact integers — bit-identical to the DuckDB
+    recursive-CTE transitive-closure oracle.
 
-    Distributed min-label propagation: each round every node takes the
-    min of its own label and its neighbors' labels (one equi-join + one
-    groupBy over the symmetrized, self-looped edge list,
-    localCheckpoint-pinned — the self-loop folds the own label into
-    the same aggregation).
-    Each round also pointer-jumps — every node takes the label OF its
-    current label node — so convergence is O(log diameter) rounds, not
-    O(diameter); labels stay monotone decreasing, so the checksum
-    convergence test holds. LSH pair graphs are unions of bucket
-    cliques (diameter 2-4); the jump only matters on long chains. All
-    labels are exact integers — bit-identical to the DuckDB
-    recursive-CTE transitive-closure oracle. Raises if
+    The edge list is checkpointed once (one evaluation of the caller's
+    pair plan), and its size is observed on that same job. Up to
+    ``COMPONENTS_TASK_EDGES`` edges, one task runs
+    ``kernels.min_label_components`` over all of them
+    (``coalesce(1).mapInArrow``): no driver loop, no collect, and the
+    result stays lazy. The observed count is an accumulator, which a
+    retried task can over-count; it only picks between two exact paths,
+    so a wrong count cannot change the result.
+
+    Over the budget, distributed min-label propagation: each round every
+    node takes the min of its own label and its neighbors' labels (one
+    equi-join + one groupBy over the symmetrized, self-looped edge
+    list, localCheckpoint-pinned — the self-loop folds the own label
+    into the same aggregation). Each round also pointer-jumps — every
+    node takes the label OF its current label node — so convergence is
+    O(log diameter) rounds, not O(diameter); labels stay monotone
+    decreasing, so the checksum convergence test holds. Raises if
     ``DEDUP_CLUSTERS_MAX_ITERS`` rounds don't converge rather than
     return a wrong partition."""
-    edges = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-    sym = edges.union(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    # self-loops (a, a): the per-round neighbor-min then already
-    # includes the node's OWN label, so the round is ONE join + ONE
-    # groupBy — the separate labels-left-join that previously folded
-    # the own label back in is gone (one fewer shuffle-join per round;
-    # measured ~35% off the per-round wall time on a 1k-node label
-    # table, bit-identical labels every round since
-    # min(own u neighbors) == least(own, min(neighbors)))
+    from pyspark.sql import Observation
+
+    seen = Observation()
     edges = (
-        sym.union(sym.select("a", F.col("a").alias("b")))
+        pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
+        .observe(seen, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    if seen.get["n"] <= COMPONENTS_TASK_EDGES:
+        t = edges.schema["a"].dataType.simpleString()
+        return edges.coalesce(1).mapInArrow(
+            _components_arrow, f"doc_id {t}, cluster {t}"
+        )
+    # both directions plus a self-loop per endpoint, from one pass: the
+    # per-round neighbor-min then already includes the node's OWN
+    # label, so the round is ONE join + ONE groupBy
+    edges = (
+        edges.selectExpr(
+            "inline(array(named_struct('a', a, 'b', b), "
+            "named_struct('a', b, 'b', a), named_struct('a', a, 'b', a), "
+            "named_struct('a', b, 'b', b)))"
+        )
         .distinct()
         .localCheckpoint()
     )
@@ -474,9 +549,7 @@ def dedup_clusters(
         # lazy pin + one action: the convergence checksum's collect is
         # the job that materializes the checkpoint, so each round runs
         # ONE job instead of an eager-materialize job followed by a
-        # separate sum job (the loop is job-latency-bound on small
-        # label tables — semdedup's components phase was ~7s of mostly
-        # per-round overhead at sf1.0)
+        # separate sum job
         new = new.localCheckpoint(eager=False)
         cur_sum = new.agg(
             F.sum(F.col("lab").cast("decimal(38,0)"))
@@ -704,35 +777,30 @@ def crossmodal_dedup(
     """Cross-modal near-duplicate clustering over image+caption pairs
     (the LAION-style curation op): a pair is a candidate duplicate if
     EITHER its captions near-dup (MinHash-LSH over the text) OR its
-    images near-dup (phash band LSH) — the two pair sources union into
+    images near-dup (phash band LSH) — the two edge sources union into
     one graph and connected components pick each cluster's minimum id
     as the representative to keep.
 
     Input must carry (ordinal-bearing id, caption, phash); ids are the
-    numeric image ordinals. Every stage is an equi-join / hash-agg
-    (the minhash + phash + min-label machinery above); nothing here
-    adds a shuffle beyond the pair union. Returns (doc_id, cluster)."""
+    numeric image ordinals. The caption side is ``minhash_dedup``'s
+    star edges (same components as the exact pairs, linear in bucket
+    size); the image side stays pairs, because every pair needs its
+    own Hamming refine, and ``max_bucket`` caps its hot buckets (see
+    ``_fingerprint_band_pairs``; None = exact enumeration). Returns
+    (doc_id, cluster)."""
     base = images.selectExpr(
         f"cast(substring({id_col}, 4) as bigint) as doc_id",
         f"{caption_col} as text",
         f"{hash_col} as phash",
     )
-    # PRODUCTION defaults: both pair generators run hot-bucket-capped
-    # (max_bucket=256). The output is CLUSTERS, and the cap preserves
-    # bucket connectivity through the representative, so at oracle
-    # scale (where no bucket overflows) the result equals the exact
-    # enumeration the DuckDB twin computes.
-    cap_pairs = minhash_candidates(base, max_bucket=max_bucket)
+    text_edges = minhash_dedup(base)
     img_pairs = phash_neardup(
         base.selectExpr("doc_id as image_id", "phash"),
         max_hamming=max_hamming,
         max_bucket=max_bucket,
     ).selectExpr("img_a as doc_a", "img_b as doc_b")
-    # no pre-distinct: dedup_clusters symmetrizes + distincts the
-    # edge list itself, so a distinct here is a redundant extra
-    # shuffle over the full pair set
-    pairs = cap_pairs.unionByName(img_pairs)
-    return dedup_clusters(pairs)
+    # no pre-distinct: components ignore repeated edges
+    return dedup_clusters(text_edges.unionByName(img_pairs))
 
 
 def crossmodal_dedup_sql(

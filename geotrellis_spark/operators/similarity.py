@@ -1260,9 +1260,8 @@ def semdedup(
     # exist only WITHIN a cluster (the cent_id equi-join above is the
     # operator's defining bound), so no component can span clusters —
     # one vectorized min-label pass per cluster over the tiny
-    # above-threshold pair set (``kernels.min_label_components``)
-    # replaces the O(log diameter) rounds of ``dedup_clusters`` (each
-    # round a full shuffle + job) with ONE grouped Arrow pass. Labels
+    # above-threshold pair set (``kernels.min_label_components``), all
+    # in ONE grouped Arrow pass with no global edge checkpoint. Labels
     # are the same exact integers (min reachable id), bit-identical to
     # the recursive-closure oracle. The general cross-bucket graphs
     # (minhash/simhash/phash) keep ``dedup_clusters``.

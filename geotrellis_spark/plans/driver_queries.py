@@ -1818,14 +1818,13 @@ def sql_kernel_density() -> str:
 
 
 def q_dedup_cluster(spark, sf_dir) -> DataFrame:
-    """Connected-components dedup clustering: MinHash-LSH candidate
-    pairs -> per-doc canonical cluster representative (min id in the
-    component), via distributed min-label propagation. Oracle = DuckDB
-    recursive-CTE transitive closure — a genuinely different
-    algorithm."""
+    """Connected-components dedup clustering: MinHash-LSH star edges
+    -> per-doc canonical cluster representative (min id in the
+    component), via ``dedup_clusters``. Oracle = DuckDB recursive-CTE
+    transitive closure over the exact candidate pairs — a genuinely
+    different algorithm, and the same components."""
     docs = _t(spark, sf_dir, "documents", spread=True)
-    pairs = dedup.minhash_candidates(docs)
-    return dedup.dedup_clusters(pairs)
+    return dedup.dedup_clusters(dedup.minhash_dedup(docs))
 
 
 def sql_dedup_cluster() -> str:
@@ -2156,8 +2155,8 @@ def q_crossmodal_dedup(spark, sf_dir) -> DataFrame:
     """Cross-modal near-dup clustering over image+caption pairs: a
     pair duplicates if EITHER its captions MinHash-near-dup OR its
     images phash-near-dup; the union graph dissolves by connected
-    components (min-id representative). All equi-joins + the
-    min-label propagation loop — the LAION-style curation op at the
+    components (min-id representative): caption star edges, phash
+    pairs and ``dedup_clusters`` — the LAION-style curation op at the
     100 TB shape."""
     from ..operators import dedup
 

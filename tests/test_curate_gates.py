@@ -140,3 +140,29 @@ def test_curate_domain_share_stage(spark):
     assert s_cap["neardup.kept"] == s_plain["neardup.kept"]
     assert s_cap["domain_cap.kept"] < s_cap["neardup.kept"]
     assert s_cap["sample.kept"] == s_cap["domain_cap.kept"]
+
+
+def test_curate_neardup_step_runs_few_jobs(spark):
+    """Curate's step 3 (MinHash-LSH star edges -> dedup_clusters ->
+    the ids to drop) runs a handful of Spark jobs: the edge plan is
+    evaluated once, its size rides the checkpoint job, and components
+    run in one task. The round loop it replaces ran one or more jobs
+    per round on top of a four-copy pair plan."""
+    from geotrellis_spark.operators import dedup
+
+    docs = _docs(spark)
+    gated = docs.join(gate_ids(docs), "doc_id").localCheckpoint()
+    keep = dedup.exact_dedup(gated).selectExpr("min_doc as doc_id")
+    exact = gated.join(keep, "doc_id").localCheckpoint()
+    sc = spark.sparkContext
+    sc.setJobGroup("neardup_step", "curate near-dup step")
+    try:
+        clusters = dedup.dedup_clusters(dedup.minhash_dedup(exact))
+        drop = clusters.where("doc_id <> cluster").select("doc_id")
+        dropped = drop.collect()
+        jobs = list(sc.statusTracker().getJobIdsForGroup("neardup_step"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert dropped  # the fixture corpus has near-duplicates
+    assert 0 < len(jobs) <= 6

@@ -274,11 +274,13 @@ def test_universal_kriging_exact_and_drift():
     np.testing.assert_allclose(zc, zo2, atol=1e-10)
 
 
-# ------------------------------------ minhash cap + multi-probe recall
+# ----------------------------- minhash star edges + multi-probe recall
 
-def test_minhash_dedup_cap_preserves_clusters(spark):
-    """The production entry caps hot buckets but every kept doc still
-    pairs with the bucket representative: duplicate clusters survive."""
+def test_minhash_dedup_star_edges_on_hot_bucket(spark):
+    """The production entry emits star edges: on a 30-copy hot bucket
+    every edge is an exact candidate pair, there are sum(c - 1) of
+    them over the (band, bval) buckets instead of the quadratic pair
+    list, and the clusters equal those of the exact pairs."""
     import pandas as pd
     from geotrellis_spark.operators import dedup
 
@@ -288,17 +290,20 @@ def test_minhash_dedup_cap_preserves_clusters(spark):
                 + [f"unique document number {i} with its own words" for i in range(10)],
     })
     df = spark.createDataFrame(docs)
-    capped = dedup.minhash_dedup(df, max_bucket=5)
-    pairs = {(r["doc_a"], r["doc_b"]) for r in capped.collect()}
-    exact = {(r["doc_a"], r["doc_b"])
-             for r in dedup.minhash_candidates(df).collect()}
-    assert pairs <= exact
-    # far fewer pairs than the quadratic exact enumeration...
-    assert len(pairs) < len(exact)
-    # ...but every duplicate doc is still reachable from doc 0 (the
-    # bucket representative): cluster connectivity preserved
-    linked = {b for a, b in pairs if a == 0} | {0}
-    assert linked >= set(range(1, 5))  # at least the kept bucket members
+    star = dedup.minhash_dedup(df)
+    exact = dedup.minhash_candidates(df)
+    edges = [(r["doc_a"], r["doc_b"]) for r in star.collect()]
+    pairs = {(r["doc_a"], r["doc_b"]) for r in exact.collect()}
+    assert set(edges) <= pairs
+    sizes = dedup.band_rows(dedup.minhash_signatures(df)).groupBy(
+        "band", "bval"
+    ).count()
+    assert len(edges) == sum(r["count"] - 1 for r in sizes.collect())
+    assert len(edges) < len(pairs)
+    assert {b for a, b in edges if a == 0} >= set(range(1, 30))
+    got = sorted(tuple(r) for r in dedup.dedup_clusters(star).collect())
+    want = sorted(tuple(r) for r in dedup.dedup_clusters(exact).collect())
+    assert got == want
 
 
 def test_multiprobe_recall_not_below_bucketed(spark):

@@ -271,6 +271,8 @@ def test_dedup_clusters_raises_without_convergence(spark, monkeypatch):
     from geotrellis_spark.operators import dedup
 
     # a 6-path needs several rounds; one round must raise, not mislabel
+    # (a budget of 0 edges forces the label-propagation loop)
+    monkeypatch.setattr(dedup, "COMPONENTS_TASK_EDGES", 0)
     monkeypatch.setattr(dedup, "DEDUP_CLUSTERS_MAX_ITERS", 1)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 6)], "doc_a long, doc_b long"
