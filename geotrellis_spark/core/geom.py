@@ -15,7 +15,10 @@ geotrellis/vector/{Geometry,Extent}.scala``, ``io/wkb/WKB.scala``,
   matching the floor((90-lat)/180*n) key-row convention).
 - ``clip_polygon_to_rect`` — Sutherland–Hodgman rectangle clip
   (ClipToGrid's per-cell clip, ``spark/.../clip/ClipToGrid.scala``).
-- bbox / shoelace area / centroid / point-segment distance.
+- bbox / shoelace area, polygon-pair intersection tests, and WKT /
+  GeoJSON text I/O.
+- Douglas–Peucker simplification, affine transform and convex hull,
+  which no entry point calls yet.
 """
 
 from __future__ import annotations
@@ -34,8 +37,6 @@ __all__ = [
     "clip_polygon_to_rect",
     "polygon_bbox",
     "shoelace_area",
-    "polygon_centroid",
-    "point_segment_distance",
     "polygons_intersect",
     "polygons_intersect_batch",
     "clip_ring_to_rects_batch",
@@ -302,21 +303,6 @@ def shoelace_area(ring: np.ndarray) -> float:
     x, y = r[:-1, 0], r[:-1, 1]
     x1, y1 = r[1:, 0], r[1:, 1]
     return float(0.5 * np.sum(x * y1 - x1 * y))
-
-
-def polygon_centroid(ring: np.ndarray) -> tuple[float, float]:
-    r = np.asarray(ring, dtype=np.float64)
-    if not np.array_equal(r[0], r[-1]):
-        r = np.vstack([r, r[:1]])
-    x, y = r[:-1, 0], r[:-1, 1]
-    x1, y1 = r[1:, 0], r[1:, 1]
-    cross = x * y1 - x1 * y
-    a = 0.5 * np.sum(cross)
-    if abs(a) < 1e-300:
-        return float(x.mean()), float(y.mean())
-    cx = np.sum((x + x1) * cross) / (6.0 * a)
-    cy = np.sum((y + y1) * cross) / (6.0 * a)
-    return float(cx), float(cy)
 
 
 def _edges(ring: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -779,12 +765,6 @@ def convex_hull(pts: np.ndarray) -> np.ndarray:
     upper = half(p[::-1])
     hull = np.asarray(lower[:-1] + upper[:-1])
     return np.vstack([hull, hull[:1]])
-
-
-def linestring_length(pts: np.ndarray) -> float:
-    """RV9 length of a polyline."""
-    p = np.asarray(pts, dtype=np.float64)
-    return float(np.hypot(np.diff(p[:, 0]), np.diff(p[:, 1])).sum())
 
 
 def point_segment_distance(px, py, ax, ay, bx, by) -> np.ndarray:

@@ -9,14 +9,15 @@ Reference semantics reimplemented (upstream 3.x layout, SURVEY.md §0):
 - focal ops:  ``raster/.../mapalgebra/focal/*.scala`` — Square(r)
   neighborhood stencils over buffered tiles; NoData cells excluded from
   the neighborhood statistic (GeoTrellis skips non-data cells).
-- slope/aspect/hillshade: Horn's 3x3 method (GDAL-compatible), as in
-  ``raster/.../mapalgebra/focal/{Slope,Aspect,Hillshade}.scala``.
-- resample:   ``raster/.../resample/`` — NearestNeighbor + Bilinear +
-  2x block decimation (pyramid downsample).
+- resample:   ``raster/.../resample/`` — NearestNeighbor, 2x block
+  decimation (pyramid downsample), and nearest/bilinear point sampling
+  for reprojection.
 - rasterize:  ``raster/.../rasterize/polygon/PolygonRasterizer.scala`` —
   scanline even-odd fill over cell centers.
 - zonal:      ``raster/.../mapalgebra/zonal/`` — per-zone partials via
   bincount (map-side partial aggregation; Spark's hash-agg finishes).
+- hydrology:  ``raster/.../hydrology/FlowDirection.scala`` — D8 flow
+  direction.
 
 NoData convention (D3): float tiles use NaN; integer tiles use an
 explicit sentinel (default 0 for uint16 image payloads).
@@ -44,22 +45,10 @@ __all__ = [
     "focal_std",
     "focal_mode",
     "convolve",
-    "morans_i_global",
-    "morans_i_local",
-    "conway",
-    "slope",
-    "aspect",
-    "hillshade",
     "resample_nearest",
-    "resample_bilinear",
-    "resample_cubic",
-    "resample_average",
-    "resample_mode",
     "decimate2",
     "euclidean_distance",
     "rasterize_polygon",
-    "rasterize_line",
-    "rasterize_points",
     "zonal_partials",
     "min_label_components",
     "NODATA_U16",
@@ -152,14 +141,6 @@ def local_unary(op: str, a: np.ndarray, nodata=NODATA_U16) -> np.ndarray:
     with np.errstate(divide="ignore", invalid="ignore"):
         r = _UNARY[op](fa)
     return _from_float(np.where(np.isnan(fa), np.nan, r), a.dtype, nodata)
-
-
-def if_cell(tile: np.ndarray, cond, value: float, nodata=NODATA_U16) -> np.ndarray:
-    """local/IfCell.scala: where ``cond(cell)`` holds, replace the cell
-    with ``value``; NoData cells stay NoData."""
-    f = _to_float(tile, nodata)
-    r = np.where(cond(f), float(value), f)
-    return _from_float(np.where(np.isnan(f), np.nan, r), tile.dtype, nodata)
 
 
 def local_stack_stats(stack: np.ndarray, stat: str, nodata=NODATA_U16) -> np.ndarray:
@@ -384,113 +365,6 @@ def convolve(
     return _apply_target(res, f, target)
 
 
-def morans_i_global(tile: np.ndarray, nodata=NODATA_U16) -> float:
-    """Global Moran's I spatial autocorrelation scalar
-    (``focal/ScalarMoransICalculation`` role): queen-contiguity binary
-    weights (8 neighbors), NoData excluded. I = (n/SumW) *
-    sum_ij w_ij z_i z_j / sum_i z_i^2 over deviations z = v - mean."""
-    f = _to_float(tile, nodata)
-    ok = ~np.isnan(f)
-    n = int(ok.sum())
-    if n < 2:
-        return float("nan")
-    z = np.where(ok, f - f[ok].mean(), 0.0)
-    # sum over the 8 queen directions of z_i * z_j, and the weight count
-    num = 0.0
-    sw = 0.0
-    h, w_ = f.shape
-    for dy in (-1, 0, 1):
-        for dx in (-1, 0, 1):
-            if dx == 0 and dy == 0:
-                continue
-            ys = slice(max(0, dy), h + min(0, dy))
-            xs = slice(max(0, dx), w_ + min(0, dx))
-            ys2 = slice(max(0, -dy), h + min(0, -dy))
-            xs2 = slice(max(0, -dx), w_ + min(0, -dx))
-            pair_ok = ok[ys, xs] & ok[ys2, xs2]
-            num += float((z[ys, xs] * z[ys2, xs2])[pair_ok].sum())
-            sw += float(pair_ok.sum())
-    den = float((z[ok] ** 2).sum())
-    if sw == 0 or den == 0:
-        return float("nan")
-    return (n / sw) * (num / den)
-
-
-def morans_i_local(tile: np.ndarray, nodata=NODATA_U16) -> np.ndarray:
-    """Local Moran's I per cell (``focal/TileMoransICalculation`` role):
-    I_i = z_i * sum_j(w_ij z_j) / (sum z^2 / n), queen weights."""
-    f = _to_float(tile, nodata)
-    ok = ~np.isnan(f)
-    n = int(ok.sum())
-    if n < 2:
-        return np.full(f.shape, np.nan)
-    z = f - f[ok].mean()
-    zf = np.where(ok, z, np.nan)
-    padded = np.pad(zf, 1, constant_values=np.nan)
-    w = _windows(padded, 1).reshape(f.shape + (-1,))
-    w = np.delete(w, 4, axis=-1)  # drop the center from the 3x3 window
-    with np.errstate(invalid="ignore"):
-        lag = np.nansum(w, axis=-1)
-    m2 = float((z[ok] ** 2).sum()) / n
-    return np.where(ok, z * lag / m2, np.nan)
-
-
-def conway(tile: np.ndarray) -> np.ndarray:
-    """Game of life (reference test favorite ``focal/Conway.scala``):
-    live cell = 1. Standard B3/S23 rules."""
-    alive = (tile > 0).astype(np.int64)
-    padded = np.pad(alive, 1)
-    n = _windows(padded, 1).reshape(alive.shape + (-1,)).sum(axis=-1) - alive
-    return (((alive == 1) & ((n == 2) | (n == 3))) | ((alive == 0) & (n == 3))).astype(
-        tile.dtype
-    )
-
-
-def _horn_gradients(dem: np.ndarray, cw: float, ch: float, z_factor: float = 1.0):
-    p = np.pad(dem.astype(np.float64), 1, mode="edge")
-    a = p[:-2, :-2]; b = p[:-2, 1:-1]; c = p[:-2, 2:]
-    d = p[1:-1, :-2]; f = p[1:-1, 2:]
-    g = p[2:, :-2]; h_ = p[2:, 1:-1]; i = p[2:, 2:]
-    dzdx = ((c + 2 * f + i) - (a + 2 * d + g)) / (8.0 * cw) * z_factor
-    dzdy = ((g + 2 * h_ + i) - (a + 2 * b + c)) / (8.0 * ch) * z_factor
-    return dzdx, dzdy
-
-
-def slope(dem: np.ndarray, cw: float = 1.0, ch: float = 1.0, z_factor: float = 1.0):
-    """Slope in degrees, Horn's method (GDAL-compatible)."""
-    dzdx, dzdy = _horn_gradients(dem, cw, ch, z_factor)
-    return np.degrees(np.arctan(np.hypot(dzdx, dzdy)))
-
-
-def aspect(dem: np.ndarray, cw: float = 1.0, ch: float = 1.0):
-    """Aspect in degrees clockwise from north; flat cells -> 0."""
-    dzdx, dzdy = _horn_gradients(dem, cw, ch)
-    asp = np.degrees(np.arctan2(dzdy, -dzdx))
-    asp = np.where(asp < 0, 90.0 - asp, np.where(asp > 90.0, 360.0 - asp + 90.0, 90.0 - asp))
-    flat = (dzdx == 0) & (dzdy == 0)
-    return np.where(flat, 0.0, asp % 360.0)
-
-
-def hillshade(
-    dem: np.ndarray,
-    cw: float = 1.0,
-    ch: float = 1.0,
-    azimuth: float = 315.0,
-    altitude: float = 45.0,
-    z_factor: float = 1.0,
-):
-    """Hillshade 0..255, Horn gradients + standard illumination formula."""
-    dzdx, dzdy = _horn_gradients(dem, cw, ch, z_factor)
-    slope_r = np.arctan(np.hypot(dzdx, dzdy))
-    aspect_r = np.arctan2(dzdy, -dzdx)
-    az = np.radians(360.0 - azimuth + 90.0)
-    alt = np.radians(altitude)
-    shaded = np.sin(alt) * np.cos(slope_r) + np.cos(alt) * np.sin(slope_r) * np.cos(
-        az - aspect_r
-    )
-    return np.clip(255.0 * np.maximum(shaded, 0.0), 0, 255).astype(np.uint8)
-
-
 # ------------------------------------------------------------- resample
 
 def resample_nearest(tile: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
@@ -498,25 +372,6 @@ def resample_nearest(tile: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     rows = np.minimum(((np.arange(out_h) + 0.5) * h / out_h).astype(np.int64), h - 1)
     cols = np.minimum(((np.arange(out_w) + 0.5) * w / out_w).astype(np.int64), w - 1)
     return tile[np.ix_(rows, cols)]
-
-
-def resample_bilinear(
-    tile: np.ndarray, out_h: int, out_w: int, nodata=NODATA_U16
-) -> np.ndarray:
-    f = _to_float(tile, nodata)
-    h, w = f.shape
-    ry = (np.arange(out_h) + 0.5) * h / out_h - 0.5
-    rx = (np.arange(out_w) + 0.5) * w / out_w - 0.5
-    y0 = np.clip(np.floor(ry).astype(np.int64), 0, h - 1)
-    x0 = np.clip(np.floor(rx).astype(np.int64), 0, w - 1)
-    y1 = np.minimum(y0 + 1, h - 1)
-    x1 = np.minimum(x0 + 1, w - 1)
-    wy = np.clip(ry - y0, 0.0, 1.0)[:, None]
-    wx = np.clip(rx - x0, 0.0, 1.0)[None, :]
-    tl = f[np.ix_(y0, x0)]; tr = f[np.ix_(y0, x1)]
-    bl = f[np.ix_(y1, x0)]; br = f[np.ix_(y1, x1)]
-    out = tl * (1 - wy) * (1 - wx) + tr * (1 - wy) * wx + bl * wy * (1 - wx) + br * wy * wx
-    return _from_float(out, tile.dtype, nodata)
 
 
 def bilinear_sample(
@@ -561,177 +416,6 @@ def nearest_sample(
     y = np.clip(np.rint(v[ok]).astype(np.int64), 0, h - 1)
     out[ok] = f[y, x]
     return out
-
-
-def _resample_separable(
-    tile: np.ndarray, out_h: int, out_w: int, kfn, support: int,
-    nodata=NODATA_U16,
-) -> np.ndarray:
-    """Generic separable kernel resampler: taps in
-    [-support+1, support]; weights from kfn(offset); per-axis weight
-    normalization (so truncated edge windows stay unbiased). Windows
-    containing NoData propagate NaN -> NoData (the reference marks
-    them NoData)."""
-    f = _to_float(tile, nodata)
-    h, w = f.shape
-    ry = (np.arange(out_h) + 0.5) * h / out_h - 0.5
-    rx = (np.arange(out_w) + 0.5) * w / out_w - 0.5
-    y0 = np.floor(ry).astype(np.int64)
-    x0 = np.floor(rx).astype(np.int64)
-    fy = ry - y0
-    fx = rx - x0
-    out = np.zeros((out_h, out_w))
-    wy_sum = np.zeros(out_h)
-    wx_sum = np.zeros(out_w)
-    taps = range(-support + 1, support + 1)
-    for j in taps:
-        wy_sum += kfn(j - fy)
-    for i in taps:
-        wx_sum += kfn(i - fx)
-    for j in taps:
-        wy = (kfn(j - fy) / wy_sum)[:, None]
-        yy = np.clip(y0 + j, 0, h - 1)
-        row_acc = np.zeros((out_h, out_w))
-        for i in taps:
-            wx = (kfn(i - fx) / wx_sum)[None, :]
-            xx = np.clip(x0 + i, 0, w - 1)
-            row_acc += f[np.ix_(yy, xx)] * wx
-        out += row_acc * wy
-    return _from_float(out, tile.dtype, nodata)
-
-
-def _keys_kernel(a: float):
-    def _k(t: np.ndarray) -> np.ndarray:
-        at = np.abs(t)
-        return np.where(
-            at <= 1,
-            (a + 2) * at**3 - (a + 3) * at**2 + 1,
-            np.where(at < 2, a * at**3 - 5 * a * at**2 + 8 * a * at - 4 * a, 0.0),
-        )
-    return _k
-
-
-def resample_cubic(
-    tile: np.ndarray, out_h: int, out_w: int, nodata=NODATA_U16, a: float = -0.5
-) -> np.ndarray:
-    """Cubic-convolution resample (Keys 1981, the GDAL/GeoTrellis
-    CubicConvolution default a=-0.5; ``resample/CubicConvolution
-    Resample.scala`` role). Separable 4-tap kernel."""
-    return _resample_separable(tile, out_h, out_w, _keys_kernel(a), 2, nodata)
-
-
-def resample_cubic_spline(
-    tile: np.ndarray, out_h: int, out_w: int, nodata=NODATA_U16
-) -> np.ndarray:
-    """Cubic B-spline resample (``resample/CubicSplineResample.scala``
-    role): smoothing 4-tap B-spline kernel (not interpolating — the
-    reference's convention)."""
-
-    def _k(t: np.ndarray) -> np.ndarray:
-        at = np.abs(t)
-        return np.where(
-            at <= 1,
-            (4 - 6 * at**2 + 3 * at**3) / 6.0,
-            np.where(at < 2, (2 - at) ** 3 / 6.0, 0.0),
-        )
-
-    return _resample_separable(tile, out_h, out_w, _k, 2, nodata)
-
-
-def resample_lanczos(
-    tile: np.ndarray, out_h: int, out_w: int, nodata=NODATA_U16, a: int = 3
-) -> np.ndarray:
-    """Lanczos-windowed sinc resample (``resample/LanczosResample.scala``
-    role), a=3 (6 taps per axis), per-axis weight normalization."""
-
-    def _k(t: np.ndarray) -> np.ndarray:
-        t = np.asarray(t, dtype=np.float64)
-        return np.where(
-            np.abs(t) < 1e-12,
-            1.0,
-            np.where(
-                np.abs(t) < a,
-                a * np.sin(np.pi * t) * np.sin(np.pi * t / a)
-                / (np.pi * np.pi * t * t),
-                0.0,
-            ),
-        )
-
-    return _resample_separable(tile, out_h, out_w, _k, a, nodata)
-
-
-def _resample_block(tile, out_h, out_w, reducer, nodata):
-    h, w = tile.shape
-    by, bx = h // out_h, w // out_w
-    if by * out_h != h or bx * out_w != w:
-        raise ValueError("aggregate resample needs integer block ratios")
-    f = _to_float(tile, nodata).reshape(out_h, by, out_w, bx)
-    with np.errstate(invalid="ignore"), np.testing.suppress_warnings() as sup:
-        sup.filter(RuntimeWarning)
-        return _from_float(reducer(f), tile.dtype, nodata)
-
-
-def resample_max(tile, out_h, out_w, nodata=NODATA_U16):
-    """Aggregate Max downsample (``resample/MaxResample.scala`` role)."""
-    return _resample_block(tile, out_h, out_w,
-                           lambda f: np.nanmax(f, axis=(1, 3)), nodata)
-
-
-def resample_min(tile, out_h, out_w, nodata=NODATA_U16):
-    """Aggregate Min downsample (``resample/MinResample.scala`` role)."""
-    return _resample_block(tile, out_h, out_w,
-                           lambda f: np.nanmin(f, axis=(1, 3)), nodata)
-
-
-def resample_median(tile, out_h, out_w, nodata=NODATA_U16):
-    """Aggregate Median downsample (``resample/MedianResample.scala``)."""
-    return _resample_block(tile, out_h, out_w,
-                           lambda f: np.nanmedian(f, axis=(1, 3)), nodata)
-
-
-def resample_sum(tile, out_h, out_w, nodata=NODATA_U16):
-    """Aggregate Sum downsample (``resample/SumResample.scala`` role);
-    all-NoData blocks stay NoData."""
-
-    def red(f):
-        s = np.nansum(f, axis=(1, 3))
-        return np.where(np.isnan(f).all(axis=(1, 3)), np.nan, s)
-
-    return _resample_block(tile, out_h, out_w, red, nodata)
-
-
-def resample_average(
-    tile: np.ndarray, out_h: int, out_w: int, nodata=NODATA_U16
-) -> np.ndarray:
-    """Aggregate downsample: mean of each source block (NoData-aware;
-    ``resample/AverageResample.scala`` role). Requires integer block
-    ratios (the pyramid case: 2x)."""
-    h, w = tile.shape
-    by, bx = h // out_h, w // out_w
-    if by * out_h != h or bx * out_w != w:
-        raise ValueError("resample_average needs integer block ratios")
-    f = _to_float(tile, nodata).reshape(out_h, by, out_w, bx)
-    with np.errstate(invalid="ignore"), np.testing.suppress_warnings() as sup:
-        sup.filter(RuntimeWarning)
-        return _from_float(
-            np.nanmean(f, axis=(1, 3)), tile.dtype, nodata
-        )
-
-
-def resample_mode(
-    tile: np.ndarray, out_h: int, out_w: int, nodata=NODATA_U16
-) -> np.ndarray:
-    """Aggregate downsample: mode of each source block (NoData-aware,
-    smallest value wins ties; ``resample/ModeResample.scala`` role)."""
-    h, w = tile.shape
-    by, bx = h // out_h, w // out_w
-    if by * out_h != h or bx * out_w != w:
-        raise ValueError("resample_mode needs integer block ratios")
-    f = _to_float(tile, nodata).reshape(out_h, by, out_w, bx)
-    blocks = f.transpose(0, 2, 1, 3).reshape(out_h, out_w, by * bx)
-    return _from_float(
-        _window_mode(blocks, (out_h, out_w)), tile.dtype, nodata
-    )
 
 
 def euclidean_distance(mask: np.ndarray, cw: float = 1.0, ch: float = 1.0) -> np.ndarray:
@@ -839,48 +523,6 @@ def rasterize_polygon(
     return mask
 
 
-def rasterize_points(
-    pxs: np.ndarray, pys: np.ndarray, xs: np.ndarray, ys: np.ndarray
-) -> np.ndarray:
-    """Burn points into the cell grid (RV1 point branch): a point marks
-    the cell whose extent contains it (floor math on the cell lattice;
-    xs ascending cell-center x, ys descending cell-center y)."""
-    cols = xs.shape[0]
-    rows = ys.shape[0]
-    cw = xs[1] - xs[0] if cols > 1 else 1.0
-    ch = ys[0] - ys[1] if rows > 1 else 1.0
-    x0 = xs[0] - cw / 2.0
-    y1 = ys[0] + ch / 2.0  # top edge
-    c = np.floor((np.asarray(pxs, dtype=np.float64) - x0) / cw).astype(np.int64)
-    r = np.floor((y1 - np.asarray(pys, dtype=np.float64)) / ch).astype(np.int64)
-    ok = (c >= 0) & (c < cols) & (r >= 0) & (r < rows)
-    mask = np.zeros((rows, cols), dtype=bool)
-    mask[r[ok], c[ok]] = True
-    return mask
-
-
-def rasterize_line(
-    pts: np.ndarray, xs: np.ndarray, ys: np.ndarray
-) -> np.ndarray:
-    """Burn a polyline into the cell grid (RV1 line branch): dense
-    sampling at sub-cell steps marks every cell the line passes through
-    (the DDA role, vectorized — each segment sampled at ~2 samples per
-    cell-width)."""
-    cols = xs.shape[0]
-    rows = ys.shape[0]
-    cw = xs[1] - xs[0] if cols > 1 else 1.0
-    ch = ys[0] - ys[1] if rows > 1 else 1.0
-    step = min(cw, ch) / 2.0
-    mask = np.zeros((rows, cols), dtype=bool)
-    p = np.asarray(pts, dtype=np.float64)
-    for i in range(p.shape[0] - 1):
-        (ax, ay), (bx, by) = p[i], p[i + 1]
-        n = max(int(np.hypot(bx - ax, by - ay) / step) + 1, 2)
-        t = np.linspace(0.0, 1.0, n)
-        mask |= rasterize_points(ax + t * (bx - ax), ay + t * (by - ay), xs, ys)
-    return mask
-
-
 # ---------------------------------------------------------------- zonal
 
 def zonal_partials(
@@ -936,29 +578,14 @@ def min_label_components(
 
 # ----------------------------------------------------------- hydrology
 # Reference role: raster/src/main/scala/geotrellis/raster/hydrology/
-# {Fill,FlowDirection,Accumulation}.scala (upstream layout; mount
-# empty) — reimplemented from the published D8 algorithms.
+# FlowDirection.scala (upstream layout; mount empty) — reimplemented
+# from the published D8 algorithm.
 
 _D8_OFF = (  # (dr, dc, esri_code, distance)
     (0, 1, 1, 1.0), (1, 1, 2, 2 ** 0.5), (1, 0, 4, 1.0),
     (1, -1, 8, 2 ** 0.5), (0, -1, 16, 1.0), (-1, -1, 32, 2 ** 0.5),
     (-1, 0, 64, 1.0), (-1, 1, 128, 2 ** 0.5),
 )
-
-
-def hydro_fill(dem: np.ndarray, threshold: float = 0.0) -> np.ndarray:
-    """Fill single-cell pits: a cell strictly lower than ALL 8
-    neighbors by more than ``threshold`` is raised to its lowest
-    neighbor. One vectorized pass (the reference Fill's semantics —
-    repeated application converges for multi-pass filling)."""
-    z = dem.astype(np.float64)
-    p = np.pad(z, 1, mode="edge")
-    nmin = np.full_like(z, np.inf)
-    for dr, dc, _code, _d in _D8_OFF:
-        nmin = np.minimum(nmin, p[1 + dr : 1 + dr + z.shape[0],
-                                  1 + dc : 1 + dc + z.shape[1]])
-    pit = z < nmin - threshold
-    return np.where(pit, nmin, z)
 
 
 def flow_direction(dem: np.ndarray, cw: float = 1.0, ch: float = 1.0) -> np.ndarray:
@@ -981,47 +608,3 @@ def flow_direction(dem: np.ndarray, cw: float = 1.0, ch: float = 1.0) -> np.ndar
         best = np.where(better, drop, best)
         code = np.where(better, c, code)
     return code
-
-
-def flow_accumulation(
-    fdir: np.ndarray,
-    weights: np.ndarray | None = None,
-    max_iters: int | None = None,
-) -> np.ndarray:
-    """Upstream-unit count per cell from a D8 direction grid
-    (Accumulation's semantics: a cell's value = units generated by
-    cells whose flow path passes through it, NOT counting its own).
-    ``weights``: units each cell generates (default 1 — plain upstream
-    cell count; the layer op injects cross-tile inflow here).
-    Vectorized fixed-point: each round pushes every cell's
-    (weight + acc) to its receiver; converges in longest-flow-path
-    rounds. Cycles (possible only on synthetic dir grids) are cut by
-    the iteration cap."""
-    h, w = fdir.shape
-    if max_iters is None:
-        max_iters = h * w  # longest possible path
-    wt = (
-        np.ones((h, w), dtype=np.int64)
-        if weights is None
-        else weights.astype(np.int64)
-    )
-    acc = np.zeros((h, w), dtype=np.int64)
-    rows, cols = np.indices((h, w))
-    rcv_r = np.full((h, w), -1)
-    rcv_c = np.full((h, w), -1)
-    for dr, dc, c, _d in _D8_OFF:
-        m = fdir == c
-        rcv_r = np.where(m, rows + dr, rcv_r)
-        rcv_c = np.where(m, cols + dc, rcv_c)
-    inside = (
-        (rcv_r >= 0) & (rcv_r < h) & (rcv_c >= 0) & (rcv_c < w)
-    )
-    src = inside.nonzero()
-    tgt = (rcv_r[src], rcv_c[src])
-    for _ in range(max_iters):
-        new = np.zeros_like(acc)
-        np.add.at(new, tgt, wt[src] + acc[src])
-        if np.array_equal(new, acc):
-            break
-        acc = new
-    return acc

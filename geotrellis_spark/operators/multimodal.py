@@ -29,7 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..core import codecs, imagery, kernels
+from ..core import codecs, imagery
 
 EXTERNAL_IMAGE_CODECS = ("webp",)
 
@@ -227,35 +227,6 @@ def transcode_image(
                 fmts.append(to_fmt)
             out["img"] = payloads
             out["fmt"] = fmts
-            yield out
-
-    return imgs.mapInPandas(gen, imgs.schema)
-
-
-def image_resize(
-    imgs: DataFrame, out_w: int, out_h: int, method: str = "bilinear",
-) -> DataFrame:
-    """Batch image resize: decode -> G2 resample kernel -> re-encode,
-    one narrow map (no shuffle; partitioning preserved). Output keeps
-    the input schema with w/h/img updated."""
-    fn = getattr(kernels, f"resample_{method}")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            payloads = []
-            for i in range(len(pdf)):
-                px = decode_image(
-                    bytes(pdf["img"].iloc[i]), int(pdf["w"].iloc[i]),
-                    int(pdf["h"].iloc[i]), pdf["fmt"].iloc[i],
-                )
-                rs = np.nan_to_num(  # NoData cells resample back to 0
-                    fn(px, out_h, out_w), nan=0.0
-                ).astype(np.uint16)
-                payloads.append(codecs.encode_tile(rs, pdf["fmt"].iloc[i]))
-            out["img"] = payloads
-            out["w"] = out_w
-            out["h"] = out_h
             yield out
 
     return imgs.mapInPandas(gen, imgs.schema)

@@ -520,15 +520,6 @@ def ivf_topk_sql(
     """
 
 
-def _d2_sql(a: str, b: str) -> str:
-    """Squared L2 distance via the dot-product expansion — the only
-    form both engines compute with IDENTICAL float op sequences:
-    d2 = <a,a> - 2<a,b> + <b,b> (each dot a sequential left fold)."""
-    return (
-        f"({_dot_sql(a, a)} - 2.0 * {_dot_sql(a, b)} + {_dot_sql(b, b)})"
-    )
-
-
 _MILLI = "transform({v}, x -> cast(floor(cast(x as double) * 1000.0 + 0.5) as double))"
 
 
@@ -1204,7 +1195,10 @@ def semdedup(
         dim = len(row[0]) if row is not None else DIM
     cents = kmeans_milli(emb, stride, iters, id_col, vec_col, dim=dim)
     # qq (self-dot) once per vector; the Arrow assignment pass replays
-    # the exact (qq - 2*dot) + cc fold/op sequence of _d2_sql.
+    # the exact (qq - 2*dot) + cc fold/op sequence of the squared L2
+    # distance's dot-product expansion d2 = <a,a> - 2<a,b> + <b,b>, each
+    # dot a sequential left fold: the only form in which both engines
+    # run identical float op sequences.
     # qn = sqrt(qq): the pair stage's per-side norm, computed once
     # per vector instead of once per within-cluster pair
     q = _spread(emb).select(

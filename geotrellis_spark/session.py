@@ -15,8 +15,7 @@ Scale notes (100 TB design, local[32] testing):
   ``importlib.invalidate_caches()`` from re-reading ``pyspark.zip`` and
   the spark-core jar: a Python task's fixed cost falls from ~0.3 to
   ~0.05 worker CPU s. ``spark.python.daemon.module`` is a static conf,
-  so a session not built here (see ``pin_session``) still pays the old
-  cost.
+  so a session not built here still pays the old cost.
 """
 
 from __future__ import annotations
@@ -116,19 +115,6 @@ def get_spark(
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return spark
-
-
-def pin_session(spark: SparkSession) -> SparkSession:
-    """Runtime confs the engine relies on, applied to a session we did
-    not create (e.g. the verify driver's).
-
-    Static confs cannot be set here: such a session keeps the stock
-    Python daemon, so each Python task still pays PySpark's per-task
-    zip-importer re-read (~0.3 worker CPU s, against ~0.05 under
-    ``get_spark``'s ``geotrellis_spark.pydaemon``)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     return spark
 
 

@@ -82,8 +82,6 @@ def test_clip_polygon_to_rect():
 def test_area_centroid():
     ring = np.array([[0, 0], [4, 0], [4, 2], [0, 2]], dtype=float)
     assert geom.shoelace_area(ring) == pytest.approx(8.0)
-    assert geom.polygon_centroid(ring) == pytest.approx((2.0, 1.0))
-
 
 def test_point_segment_distance():
     d = geom.point_segment_distance(
@@ -145,6 +143,7 @@ def test_synth_holes_have_nodata():
     assert (img == 0).sum() > 0
     img = imagery.synth_pixels(3, 64, 64)  # 'noise' avoids sentinel
     assert (img == 0).sum() == 0
+
 
 
 # ------------------------------------------------- Douglas-Peucker

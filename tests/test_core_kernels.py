@@ -93,43 +93,12 @@ def test_focal_mode():
     assert kernels.focal_mode(t, 1)[1, 1] == 1.0
 
 
-def test_conway_blinker():
-    t = np.zeros((5, 5), dtype=np.uint8)
-    t[2, 1:4] = 1  # horizontal blinker
-    nxt = kernels.conway(t)
-    expect = np.zeros((5, 5), dtype=np.uint8)
-    expect[1:4, 2] = 1  # vertical
-    np.testing.assert_array_equal(nxt, expect)
-
-
-def test_slope_aspect_hillshade_ramp():
-    # plane z = x  (cellsize 1): slope = 45 deg everywhere (interior)
-    xs = np.arange(8, dtype=np.float64)
-    dem = np.tile(xs, (8, 1))
-    s = kernels.slope(dem, 1.0, 1.0)
-    np.testing.assert_allclose(s[2:-2, 2:-2], 45.0, atol=1e-9)
-    # surface increases eastward -> downslope faces west (270 deg)
-    a = kernels.aspect(dem, 1.0, 1.0)
-    np.testing.assert_allclose(a[2:-2, 2:-2], 270.0, atol=1e-9)
-    hs = kernels.hillshade(dem, 1.0, 1.0, azimuth=315.0, altitude=45.0)
-    assert hs.dtype == np.uint8
-    # flat surface golden: sin(45 deg)*255 ~ 180
-    flat = kernels.hillshade(np.zeros((4, 4)), 1.0, 1.0)
-    assert int(flat[1, 1]) == int(round(255 * np.sin(np.radians(45.0))))
-
-
 def test_resample_nearest_and_decimate():
     t = np.arange(16, dtype=np.uint16).reshape(4, 4)
     up = kernels.resample_nearest(t, 8, 8)
     assert up.shape == (8, 8)
     assert up[0, 0] == t[0, 0] and up[7, 7] == t[3, 3]
     np.testing.assert_array_equal(kernels.decimate2(t), [[0, 2], [8, 10]])
-
-
-def test_resample_bilinear_constant_preserved():
-    t = np.full((4, 4), 7.0)
-    out = kernels.resample_bilinear(t, 8, 8)
-    np.testing.assert_allclose(out, 7.0)
 
 
 def test_pyramid_quadrant_golden():
@@ -199,50 +168,6 @@ def test_flow_direction_inclined_plane():
     assert (fd[:, :-1] == 1).all()
     # east edge has no downslope neighbor (edge-padded): pit code 0
     assert (fd[:, -1] == 0).all()
-
-
-def test_flow_accumulation_line():
-    import numpy as np
-
-    from geotrellis_spark.core import kernels as K
-
-    # single row flowing east: acc = 0,1,2,...  (upstream cell count)
-    dem = np.arange(6, 0, -1, dtype=float)[None, :]
-    fd = K.flow_direction(dem)
-    acc = K.flow_accumulation(fd)
-    assert acc[0].tolist() == [0, 1, 2, 3, 4, 5]
-
-
-def test_flow_accumulation_valley():
-    import numpy as np
-
-    from geotrellis_spark.core import kernels as K
-
-    # V-valley draining south along the center column
-    x = np.abs(np.arange(5) - 2).astype(float)   # 2 1 0 1 2
-    dem = x[None, :] + np.arange(5, 0, -1, dtype=float)[:, None]
-    fd = K.flow_direction(dem)
-    acc = K.flow_accumulation(fd)
-    # center column accumulates everything above it; the outlet
-    # (last row, center) drains the rest of the grid
-    assert acc[-1, 2] == dem.size - 1
-    col = acc[:, 2]
-    assert all(col[i] < col[i + 1] for i in range(4))
-
-
-def test_hydro_fill_pit():
-    import numpy as np
-
-    from geotrellis_spark.core import kernels as K
-
-    dem = np.full((3, 3), 5.0)
-    dem[1, 1] = 1.0          # single-cell pit
-    out = K.hydro_fill(dem)
-    assert out[1, 1] == 5.0  # raised to lowest neighbor
-    assert (out == 5.0).all()
-    # non-pit cells untouched
-    dem2 = np.arange(9, dtype=float).reshape(3, 3)
-    assert np.array_equal(K.hydro_fill(dem2), dem2)
 
 
 def test_min_label_components_matches_bfs():

@@ -1,4 +1,4 @@
-"""Multimodal pipeline tests: image resize/features, augmentation and
+"""Multimodal pipeline tests: image features, augmentation and
 quality gate — real Spark plumbing over the deterministic in-repo
 codecs; external codecs stay marked stubs."""
 
@@ -6,7 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from geotrellis_spark.core import codecs, imagery, kernels
+from geotrellis_spark.core import codecs, imagery
 from geotrellis_spark.operators import multimodal as mm
 
 
@@ -20,21 +20,6 @@ def images_df(spark):
             "w": 32, "h": 24, "fmt": "png",
         })
     return spark.createDataFrame(pd.DataFrame(rows)).cache()
-
-
-def test_image_resize_matches_kernel(spark, images_df):
-    out = {r["image_id"]: r for r in
-           mm.image_resize(images_df, 16, 12).collect()}
-    assert len(out) == 12
-    for i in range(12):
-        r = out[i]
-        assert (r["w"], r["h"]) == (16, 12)
-        got = codecs.decode_tile(bytes(r["img"]), 16, 12, "png")
-        want = np.nan_to_num(
-            kernels.resample_bilinear(imagery.synth_pixels(i, 32, 24), 12, 16),
-            nan=0.0,
-        ).astype(np.uint16)
-        np.testing.assert_array_equal(got, want)
 
 
 def test_image_features_phash_invariant(spark, images_df):

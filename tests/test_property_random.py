@@ -1,7 +1,8 @@
 """Randomized-oracle tests: the Spark temporal joins vs a pandas
 brute force on adversarial random inputs (duplicate timestamps, NULL
 snapshot values, bucket-straddling intervals), and hypothesis
-properties for the pure-numpy Douglas-Peucker kernel."""
+properties for the DCT codec, group percentiles and the pure-numpy
+Douglas-Peucker kernel."""
 
 import datetime as dt
 

@@ -1,17 +1,14 @@
 """Round-2 operator oracles: Convolve/neighborhoods/TargetCell, Regrid,
-Euclidean distance, vector x vector join, Moran's I, kriging,
-cubic/average/mode resample, line/point rasterize, CollectNeighbors,
-temporal stack stats, WKT/GeoJSON IO (reference spec roles:
+Euclidean distance, vector x vector join, CollectNeighbors, temporal
+stack stats, WKT/GeoJSON IO (reference spec roles:
 ``focal/ConvolveSpec``, ``regrid/RegridSpec``, ``distance/
-EuclideanDistanceTileSpec``, ``join/VectorJoinSpec``,
-``interpolation/KrigingSpec`` — SURVEY.md §5)."""
+EuclideanDistanceTileSpec``, ``join/VectorJoinSpec`` — SURVEY.md §5)."""
 
 import numpy as np
 import pytest
 
 from geotrellis_spark.core import geom as G
 from geotrellis_spark.core import kernels as K
-from geotrellis_spark.core import raster_ops as R
 
 
 # ----------------------------------------------------------- kernels
@@ -56,34 +53,6 @@ def test_target_cell():
     assert res2[0, 1] == 8.0  # NoData center gets the focal result
 
 
-def test_morans_i_signs():
-    rng = np.random.default_rng(5)
-    smooth = np.cumsum(np.cumsum(np.ones((12, 12)), 0), 1).astype(np.uint16)
-    rough = rng.permutation(smooth.ravel()).reshape(12, 12)
-    assert K.morans_i_global(smooth) > 0.5
-    assert K.morans_i_global(smooth) > K.morans_i_global(rough)
-    loc = K.morans_i_local(smooth)
-    assert np.nanmean(loc) > 0
-
-
-def test_resample_cubic_matches_bilinear_on_linear_ramp():
-    # cubic convolution reproduces any linear function exactly (interior)
-    gy, gx = np.mgrid[0:16, 0:16]
-    ramp = (100 + 3 * gy + 5 * gx).astype(np.uint16)
-    up = K.resample_cubic(ramp, 32, 32)
-    gy2, gx2 = np.mgrid[0:32, 0:32]
-    want = 100 + 3 * ((gy2 + 0.5) / 2 - 0.5) + 5 * ((gx2 + 0.5) / 2 - 0.5)
-    assert np.allclose(up[4:-4, 4:-4], np.rint(want)[4:-4, 4:-4], atol=1)
-
-
-def test_resample_average_mode_nodata_aware():
-    t = np.array([[0, 8], [8, 8]], dtype=np.uint16)  # one NoData in block
-    assert K.resample_average(t, 1, 1)[0, 0] == 8
-    assert K.resample_mode(t, 1, 1)[0, 0] == 8
-    allnod = np.zeros((2, 2), dtype=np.uint16)
-    assert K.resample_average(allnod, 1, 1)[0, 0] == 0  # stays NoData
-
-
 def test_euclidean_distance_exact_vs_brute():
     rng = np.random.default_rng(9)
     mask = rng.random((20, 23)) < 0.05
@@ -97,35 +66,6 @@ def test_euclidean_distance_exact_vs_brute():
     assert np.allclose(d, brute)
 
 
-def test_rasterize_line_connected():
-    xs = np.arange(16) + 0.5
-    ys = (15 - np.arange(16)) + 0.5
-    m = K.rasterize_line(np.array([[0.5, 0.5], [15.5, 7.5]]), xs, ys)
-    assert m.sum() >= 16  # a thin connected path
-    lab = R.region_group(m.astype(np.uint16), connectivity=8)
-    assert lab.max() == 1  # single 8-connected component
-
-
-def test_region_group_vectorized_semantics():
-    t = np.array(
-        [
-            [1, 1, 0, 2, 2],
-            [1, 0, 0, 2, 0],
-            [3, 3, 0, 0, 2],
-            [0, 3, 3, 0, 2],
-        ],
-        dtype=np.uint16,
-    )
-    lab = R.region_group(t, connectivity=4)
-    assert lab[0, 0] == lab[0, 1] == lab[1, 0] == 1
-    assert lab[0, 3] == lab[1, 3] == 2
-    assert lab[2, 0] == lab[2, 1] == lab[3, 1] == lab[3, 2] == 3
-    assert lab[2, 4] == lab[3, 4] == 4  # 4-conn: disconnected from (0,3)
-    assert (lab[t == 0] == 0).all()
-    lab8 = R.region_group(t, connectivity=8)
-    assert lab8[2, 4] == lab8[0, 3]  # 8-conn joins the diagonal
-
-
 def test_stack_majority_minority_vectorized():
     a = np.array([[1, 2]], dtype=np.uint16)
     b = np.array([[1, 3]], dtype=np.uint16)
@@ -135,21 +75,6 @@ def test_stack_majority_minority_vectorized():
     mino = K.local_stack_stats(stack, "minority")
     assert maj[0, 0] == 1 and maj[0, 1] == 3
     assert mino[0, 0] == 4 and mino[0, 1] == 2
-
-
-def test_ordinary_kriging_exact_interpolation():
-    # samples placed exactly on cell centers: kriging must reproduce them
-    px = np.array([2.5, 8.5, 5.5, 1.5])
-    py = np.array([2.5, 3.5, 8.5, 7.5])
-    pv = np.array([10.0, 20.0, 30.0, 40.0])
-    xs = np.arange(10) + 0.5
-    ys = (9 - np.arange(10)) + 0.5
-    z = R.ordinary_kriging(px, py, pv, xs, ys, rng=20.0, sill=2.0)
-    for x, y, v in zip(px, py, pv):
-        c = int(x - 0.5)
-        r = int(9.5 - y)
-        assert z[r, c] == pytest.approx(v, abs=1e-6)
-    assert z.min() >= 9.0 and z.max() <= 41.0  # bounded by samples here
 
 
 def test_wkt_geojson_roundtrip():
@@ -309,34 +234,6 @@ def test_vector_join_spark(spark):
     assert got == [(1, 10), (2, 12)]
 
 
-def test_vectorize_tile_roundtrip_random():
-    """RV3 property (the reference's own invariant): even-odd
-    rasterization of the traced polygons reproduces each region mask."""
-    for seed in range(6):
-        rng = np.random.default_rng(seed)
-        t = rng.integers(0, 3, size=(13, 16)).astype(np.uint16)
-        labels = R.region_group(t, 4)
-        xs = np.arange(16) + 0.5
-        ys = np.arange(13) + 0.5
-        rebuilt = np.zeros_like(labels)
-        for k, (val, rings) in enumerate(R.vectorize_tile(t, 4), start=1):
-            flipped = [np.column_stack([r[:, 0], -r[:, 1]]) for r in rings]
-            mask = K.rasterize_polygon(flipped, xs, -ys)
-            rebuilt[mask] = k
-        np.testing.assert_array_equal(rebuilt, labels)
-
-
-def test_viewshed_wall_shadow():
-    flat = np.full((12, 12), 100, dtype=np.uint16)
-    assert R.viewshed(flat, 5, 5).all()
-    dem = np.full((9, 15), 10, dtype=np.uint16)
-    dem[:, 7] = 200  # a wall
-    v = R.viewshed(dem, 4, 2)
-    assert v[4, 7] and v[4, 5] and v[4, 0]   # wall + foreground visible
-    assert not v[4, 10] and not v[4, 14]     # shadow behind the wall
-    assert R.viewshed(dem, 4, 2, observer_height=5000.0)[4, 14]
-
-
 def test_bitwise_and_if_cell():
     a = np.array([[6, 0], [5, 12]], dtype=np.uint16)
     b = np.array([[3, 3], [1, 10]], dtype=np.uint16)
@@ -345,32 +242,6 @@ def test_bitwise_and_if_cell():
     assert r[0, 1] == 0  # NoData propagates
     assert K.local_binary("xor", a, b)[1, 1] == 6
     assert K.local_binary("or", a, b)[0, 0] == 7
-    ic = K.if_cell(a, lambda v: v > 5, 99)
-    assert ic[0, 0] == 99 and ic[1, 0] == 5 and ic[0, 1] == 0
-
-
-def test_resample_kernels_constant_invariance():
-    cst = np.full((16, 16), 1234, dtype=np.uint16)
-    for fn in (K.resample_cubic, K.resample_cubic_spline, K.resample_lanczos):
-        out = fn(cst, 24, 24)
-        assert (out == 1234).all(), fn.__name__
-    t = np.arange(1, 17, dtype=np.uint16).reshape(4, 4)
-    assert K.resample_max(t, 2, 2)[0, 0] == 6
-    assert K.resample_min(t, 2, 2)[1, 1] == 11
-    assert K.resample_sum(t, 2, 2)[0, 1] == 3 + 4 + 7 + 8
-    # integer celltype rounds the 3.5 median to 4
-    assert K.resample_median(t, 2, 2)[0, 0] == 4
-
-
-def test_split_normalize_rescale():
-    t = np.arange(1, 25, dtype=np.uint16).reshape(4, 6)
-    subs = R.split(t, 2, 4)
-    assert len(subs) == 4  # ragged 2x(4+2) grid
-    assert subs[0][2].shape == (2, 4) and subs[1][2].shape == (2, 2)
-    n = R.normalize(t, 1, 24, 0, 230)
-    assert n[0, 0] == 0 and n[3, 5] == 230
-    rs = R.rescale(t, 10, 20)
-    assert rs.min() == 10 and rs.max() == 20
 
 
 def test_convex_hull():
@@ -447,21 +318,6 @@ def test_time_series_polygonal(spark):
     assert len(out) == 3
     for t in range(3):
         assert out[(7, t)] == pytest.approx(10 * (t + 1))  # west tiles kc=0
-
-
-def test_simple_kriging_exact_and_mean_reverting():
-    px = np.array([2.5, 8.5])
-    py = np.array([2.5, 7.5])
-    pv = np.array([10.0, 30.0])
-    xs = np.arange(10) + 0.5
-    ys = (9 - np.arange(10)) + 0.5
-    z = R.simple_kriging(px, py, pv, xs, ys, mean=20.0, rng=6.0, sill=2.0)
-    assert z[7, 2] == pytest.approx(10.0, abs=1e-9)  # exact at samples
-    assert z[2, 8] == pytest.approx(30.0, abs=1e-9)
-    # beyond the variogram range, prediction reverts to the known mean
-    assert z[0, 0] != 20.0 or True
-    far = z[9, 9]  # corner far from both samples
-    assert abs(far - 20.0) < abs(np.mean(pv) - 20.0) + 5.0
 
 
 def test_minhash_bucket_cap(spark):

@@ -1,13 +1,12 @@
 """Round-3 regression tests for the ADVICE findings: hole-ring
-intersection in polygons_intersect, viewshed NoData NaN poisoning on
-grid-line samples."""
+intersection in polygons_intersect."""
 
 import struct
 
 import numpy as np
 import pytest
 
-from geotrellis_spark.core import geom, raster_ops
+from geotrellis_spark.core import geom
 from geotrellis_spark.operators import spatial
 
 
@@ -43,35 +42,6 @@ def test_no_intersect_fully_inside_hole():
     b = geom.wkb_write_polygon([tri])
     assert not geom.polygons_intersect(a, b)
     assert not geom.polygons_intersect(b, a)
-
-
-# ---------------------------------------------- viewshed NoData corner
-
-def test_viewshed_nodata_zero_weight_no_nan_poison():
-    # Rays along the viewpoint's own row sample exactly ON the row-2
-    # grid line (fy == 0), so the row-3 bilinear corners get weight 0.
-    # A NoData cell at (3,4) therefore contributes inf * 0 — which the
-    # old weighted sum turned into NaN, silencing the genuine finite
-    # wall at (2,4) in the SAME window and wrongly marking cells past
-    # it visible. Per-corner masking must keep the wall blocking.
-    nodata = 65535
-    dem = np.zeros((5, 9), dtype=np.uint16) + 10
-    dem[3, 4] = nodata          # zero-weight NoData corner
-    dem[2, 4] = 1000            # finite wall in the same window
-    vs = raster_ops.viewshed(dem, 2, 0, observer_height=1.0, nodata=nodata)
-    assert vs[2, 0] and vs[2, 3]        # viewpoint + cells before wall
-    assert not vs[2, 6] and not vs[2, 8]  # wall still blocks past col 4
-
-
-def test_viewshed_zero_weight_nodata_does_not_block():
-    # Same geometry but NO wall: the zero-weight NoData corner alone
-    # must not block (it never participates in the interpolation).
-    nodata = 65535
-    dem = np.zeros((5, 9), dtype=np.uint16) + 10
-    dem[3, 4] = nodata
-    vs = raster_ops.viewshed(dem, 2, 0, observer_height=1.0, nodata=nodata)
-    assert vs[2, :].all()
-    assert not vs[3, 4]                 # the NoData cell itself
 
 
 # ------------------------------------------- batched geometry kernels
@@ -244,36 +214,6 @@ def test_vector_join_with_holes(spark):
     assert got == [(1, 10)]
 
 
-# ----------------------------------------------- universal kriging RV8
-
-def test_universal_kriging_exact_and_drift():
-    px = np.array([2.0, 8.0, 5.0])
-    py = np.array([2.0, 3.0, 8.0])
-    xs = np.arange(10) + 0.5
-    ys = (9 - np.arange(10)) + 0.5
-    gx, gy = np.meshgrid(xs, ys)
-    # (1) exact interpolator: evaluate on a lattice that contains the
-    # sample locations and read the prediction at each sample
-    pv = np.array([10.0, 30.0, 17.0])
-    zs = raster_ops.universal_kriging(px, py, pv, px, py, rng=6.0, sill=2.0)
-    # the (i, i) lattice cell is sample i's own (x, y)
-    np.testing.assert_allclose(np.diag(zs), pv, atol=1e-9)
-    # (2) a pure linear trend is reproduced EXACTLY everywhere (the
-    # property ordinary kriging lacks — it reverts to the mean)
-    trend = lambda x, y: 3.0 + 2.0 * x - 1.5 * y  # noqa: E731
-    pvt = trend(px, py)
-    zt = raster_ops.universal_kriging(px, py, pvt, xs, ys, rng=6.0, sill=2.0)
-    np.testing.assert_allclose(zt, trend(gx, gy), atol=1e-8)
-    zo = raster_ops.ordinary_kriging(px, py, pvt, xs, ys, rng=6.0, sill=2.0)
-    assert np.abs(zo - trend(gx, gy)).max() > 1.0  # OK genuinely differs far away
-    # (3) drift='constant' degenerates to ordinary kriging
-    zc = raster_ops.universal_kriging(
-        px, py, pv, xs, ys, rng=6.0, sill=2.0, drift="constant"
-    )
-    zo2 = raster_ops.ordinary_kriging(px, py, pv, xs, ys, rng=6.0, sill=2.0)
-    np.testing.assert_allclose(zc, zo2, atol=1e-10)
-
-
 # ----------------------------- minhash star edges + multi-probe recall
 
 def test_minhash_dedup_star_edges_on_hot_bucket(spark):
@@ -321,21 +261,3 @@ def test_multiprobe_recall_not_below_bucketed(spark):
     rec_single = len(single & exact) / len(exact)
     rec_multi = len(multi & exact) / len(exact)
     assert rec_multi >= rec_single
-
-
-def test_geo_kriging_custom_basis():
-    """GeoKriging role: a caller-supplied drift basis reproduces a
-    surface built from those covariates exactly, everywhere."""
-    px = np.array([1.0, 6.0, 3.0, 8.0])
-    py = np.array([2.0, 1.0, 7.0, 8.0])
-    surf = lambda x, y: 5.0 + 2.0 * np.sin(0.3 * x) - 0.7 * y  # noqa: E731
-    basis = lambda x, y: np.stack(  # noqa: E731
-        [np.ones_like(x), np.sin(0.3 * x), y], axis=-1
-    )
-    xs = np.arange(10) + 0.5
-    ys = (9 - np.arange(10)) + 0.5
-    z = raster_ops.universal_kriging(
-        px, py, surf(px, py), xs, ys, rng=4.0, sill=1.5, basis_fn=basis
-    )
-    gx, gy = np.meshgrid(xs, ys)
-    np.testing.assert_allclose(z, surf(gx, gy), atol=1e-8)
