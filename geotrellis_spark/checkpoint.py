@@ -18,10 +18,13 @@ Storage is plain Parquet tables under a base dir (Iceberg-shaped: the
 same writes become Iceberg ``MERGE``/appends on a cluster with the
 runtime jar — see sources/iceberg_shape.py).
 
-Every row of these tables is built on the driver with
-``session.local_df`` (an Arrow table shipped to the JVM), never
-``createDataFrame(list)``, which starts Python workers on every
-default partition for each few-row write.
+Every row of these tables is written from the driver as one Parquet
+file (``session.append_local_parquet``): no Spark job for a few-row
+write, and Spark reads the file back with the table's schema. A
+stage's per-bucket row counts come from the footers of the files its
+data write just made (``session.parquet_footers``), not from a scan
+of them. Both are local-path operations; on a cluster filesystem they
+would go through ``pyarrow.fs``.
 
 Design for scale: the checkpoint unit is a *bucket of the output key
 space* (e.g. ``cell_id % n_buckets``), not a Spark partition id —
@@ -40,7 +43,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .session import local_df
+from .session import append_local_parquet, parquet_footers
 
 CHECKPOINTS = (
     "job_id string, stage string, part_key int, status string, "
@@ -64,9 +67,16 @@ def _hadoop_path(spark: SparkSession, path: str):
 
 
 def _append(spark: SparkSession, base: str, name: str, rows: list, schema: str):
-    local_df(spark, rows, schema).coalesce(1).write.mode("append").parquet(
-        _table_path(base, name)
-    )
+    append_local_parquet(_table_path(base, name), rows, schema)
+
+
+def _rows_per_part(output_path: str) -> dict[int, int]:
+    """Row count per ``part=`` bucket of a stage's output, summed from
+    its files' footers."""
+    out: dict[int, int] = {}
+    for keys, meta in parquet_footers(output_path, "part int"):
+        out[keys["part"]] = out.get(keys["part"], 0) + meta.num_rows
+    return out
 
 
 def _read(
@@ -179,11 +189,9 @@ def checkpointed_stage(
         t0 = time.time()
         df.write.mode("append").partitionBy("part").parquet(output_path)
         wall = time.time() - t0
-        out = spark.read.parquet(output_path)
-        per_part = {
-            r["part"]: r["n"]
-            for r in out.groupBy("part").agg(F.count("*").alias("n")).collect()
-        }
+        # the unmarked buckets were purged above, so the part= files of
+        # the buckets in todo are this write's own
+        per_part = _rows_per_part(output_path)
         now = time.strftime("%Y-%m-%dT%H:%M:%S")
         _append(
             spark, base, "checkpoints",

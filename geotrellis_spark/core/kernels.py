@@ -581,10 +581,9 @@ def min_label_components(
 # FlowDirection.scala (upstream layout; mount empty) — reimplemented
 # from the published D8 algorithm.
 
-_D8_OFF = (  # (dr, dc, esri_code, distance)
-    (0, 1, 1, 1.0), (1, 1, 2, 2 ** 0.5), (1, 0, 4, 1.0),
-    (1, -1, 8, 2 ** 0.5), (0, -1, 16, 1.0), (-1, -1, 32, 2 ** 0.5),
-    (-1, 0, 64, 1.0), (-1, 1, 128, 2 ** 0.5),
+_D8_OFF = (  # (dr, dc, esri_code)
+    (0, 1, 1), (1, 1, 2), (1, 0, 4), (1, -1, 8),
+    (0, -1, 16), (-1, -1, 32), (-1, 0, 64), (-1, 1, 128),
 )
 
 
@@ -600,7 +599,7 @@ def flow_direction(dem: np.ndarray, cw: float = 1.0, ch: float = 1.0) -> np.ndar
     p = np.pad(z, 1, mode="edge")
     best = np.zeros_like(z)
     code = np.zeros(z.shape, dtype=np.int32)
-    for dr, dc, c, _dist in _D8_OFF:
+    for dr, dc, c in _D8_OFF:
         d = float(np.hypot(dc * cw, dr * ch))
         drop = (z - p[1 + dr : 1 + dr + z.shape[0],
                       1 + dc : 1 + dc + z.shape[1]]) / d

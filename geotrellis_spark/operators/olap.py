@@ -231,8 +231,6 @@ def hll_sketch(
       enters the comparison), plus the exact distinct for reference.
     """
     m, cap = HLL_M, HLL_RHO_CAP
-    import re as _re
-
     from .dedup import hex2int_spark
 
     h = hex2int_spark(key_expr)

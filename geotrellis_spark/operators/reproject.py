@@ -35,11 +35,7 @@ from pyspark.sql.types import (
 )
 
 from ..core import codecs, grouped, kernels, sfc
-from ..core.layout import (
-    ZoomedLayoutScheme,
-    lonlat_to_webmercator,
-    webmercator_to_lonlat,
-)
+from ..core.layout import ZoomedLayoutScheme
 from .tiling import TILE_SCHEMA
 
 _SRC_SCHEMA = StructType(

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from ..functions.exprs import LAT_MULT, LON_MULT, M32
+from ..functions.exprs import LON_MULT, M32
 from ..session import local_df
 
 DIM = 64
@@ -552,6 +552,33 @@ def _score_d2_np(qm, qq, C, cc):
     return (qq[:, None] - 2.0 * acc) + cc[None, :]
 
 
+# (vector, centroid) d2 cells per block of _nearest_np
+_SCORE_BLOCK = 1 << 20
+
+
+def _nearest_np(qv, qq, C, cc):
+    """Index of each row's nearest centroid (d2 asc, then centroid
+    order), scored in row blocks of about ``_SCORE_BLOCK`` cells."""
+    import numpy as np
+
+    step = max(1, _SCORE_BLOCK // max(len(C), 1))
+    return np.concatenate([
+        _score_d2_np(qv[i:i + step], qq[i:i + step], C, cc).argmin(axis=1)
+        for i in range(0, len(qv), step)
+    ])
+
+
+def _lloyd_update(C, cnt, sums):
+    """One Lloyd centroid update from per-cluster counts and exact
+    integer sums: each non-empty cluster moves to sum / count, an
+    empty one keeps its previous centroid (so k never shrinks).
+    Returns the new centroids and their self-dots."""
+    upd = cnt > 0
+    C = C.copy()
+    C[upd] = sums[upd] / cnt[upd, None]
+    return C, _fold_dot_np(C, C)
+
+
 def _cent_matrix(cents: DataFrame):
     """Collect the k-row centroid table to driver numpy arrays sorted
     by cent_id. Same driver residency as the F.broadcast(cents) it
@@ -605,7 +632,7 @@ def _nearest_assign_arrow(
             qq = b.column(
                 b.schema.get_field_index("qq")
             ).to_numpy(zero_copy_only=False)
-            best = _score_d2_np(qm, qq, C_, cc_).argmin(axis=1)
+            best = _nearest_np(qm, qq, C_, cc_)
             yield pa.RecordBatch.from_arrays(
                 [
                     b.column(b.schema.get_field_index(id_col)),
@@ -766,7 +793,7 @@ def kmeans_milli(
                 qq = b.column(
                     b.schema.get_field_index("qq")
                 ).to_numpy(zero_copy_only=False)
-                best = _score_d2_np(qm, qq, C_, cc_).argmin(axis=1)
+                best = _nearest_np(qm, qq, C_, cc_)
                 _np.add.at(sums, best, qm)
                 cnt += _np.bincount(best, minlength=_k)
             nz = _np.nonzero(cnt)[0]
@@ -787,10 +814,7 @@ def kmeans_milli(
             sums, ci,
             pdf[[f"_s{i}" for i in range(dim)]].to_numpy(dtype=np.float64),
         )
-        upd = cnt > 0  # empty clusters keep their previous centroid
-        C = C.copy()
-        C[upd] = sums[upd] / cnt[upd, None]
-        cc = _fold_dot_np(C, C)
+        C, cc = _lloyd_update(C, cnt, sums)
     out = [
         (int(ids[j]), [float(x) for x in C[j]], float(cc[j]))
         for j in range(len(ids))
@@ -1157,6 +1181,122 @@ def ivf_query_index(
 
 # ----------------------------------------------------------- SemDeDup
 
+# semdedup runs in ONE Arrow task up to this many vectors. Memory is
+# not what bounds it: tracemalloc puts the task's numpy peak at about
+# 3 KB per 64-dim vector (30 MiB at 10k vectors, 37 MiB at 20k), the
+# scoring and pair blocks being fixed-size. CPU is: k grows with
+# n (k = n / stride), so the single task's scoring grows as n^2 —
+# 0.08 CPU s at 2k vectors, 1.2 s at 10k and 4.6 s at 20k (stride 61,
+# one core). On a 4-core session the one task still wins at 20k
+# (6.0 s against the distributed plan's 7.9 s wall, warm), but with
+# n^2 growth the margin closes soon after; 10k keeps it wide (2.0 s
+# against 5.0 s) and leaves the one task ~1 s of CPU.
+SEMDEDUP_TASK_ROWS = 10_000
+# within-cluster pairs scored per block in the one-task path
+_PAIR_BLOCK = 1 << 18
+
+
+def _cluster_pairs(cent, limit):
+    """Within-cluster pairs (i, j), i < j, of row positions sorted by
+    (cent, id), in blocks of about ``_PAIR_BLOCK`` pairs. With
+    ``limit``, only the first ``limit`` rows of a cluster pair with
+    each other, and every later row pairs with the cluster's first
+    (``semdedup``'s ``max_cluster``)."""
+    import numpy as np
+
+    n = len(cent)
+    start = np.r_[0, np.flatnonzero(cent[1:] != cent[:-1]) + 1]
+    grp = np.repeat(np.arange(len(start)), np.diff(np.r_[start, n]))
+    first = start[grp]
+    end = np.r_[start[1:], n][grp]
+    pos = np.arange(n)
+    if limit is not None:
+        end = np.minimum(end, first + limit)
+        tail = np.flatnonzero(pos >= end)
+        yield first[tail], tail
+    counts = np.maximum(end - pos - 1, 0)
+    cum = np.cumsum(counts)
+    r0 = 0
+    while r0 < n:
+        base = cum[r0 - 1] if r0 else 0
+        r1 = max(int(np.searchsorted(cum, base + _PAIR_BLOCK, "right")), r0 + 1)
+        c = counts[r0:r1]
+        a = np.repeat(np.arange(r0, r1), c)
+        yield a, a + 1 + np.arange(len(a)) - np.repeat(np.cumsum(c) - c, c)
+        r0 = r1
+
+
+def _semdedup_np(ids, emb, stride, iters, threshold_milli, max_cluster):
+    """``semdedup`` over numpy arrays, replaying the distributed
+    path's exact operations: the milli quantisation
+    ``floor(x * 1000 + 0.5)`` in float64, ``qq`` and every dot as the
+    left fold of ``_fold_dot_np``, the ``id % stride = 0`` init, the
+    Lloyd rounds (exact integer sums, ``_score_d2_np`` argmin over
+    cent_id-sorted centroids), the final assignment, then
+    ``floor(fold_dot / (sqrt(qq_a) * sqrt(qq_b)) * 1000)`` over
+    within-cluster pairs and ``min_label_components`` over the pairs
+    at or above the threshold. Returns (cent_id, rep) per row."""
+    import numpy as np
+
+    from ..core.kernels import min_label_components
+
+    qv = np.floor(emb.astype(np.float64) * 1000.0 + 0.5)
+    qq = _fold_dot_np(qv, qv)
+    init = np.flatnonzero(ids % stride == 0)
+    init = init[np.argsort(ids[init], kind="stable")]
+    cids, C, cc = ids[init], qv[init], qq[init]
+    for _ in range(iters):
+        best = _nearest_np(qv, qq, C, cc)
+        cnt = np.bincount(best, minlength=len(C))
+        sums = np.zeros_like(C)
+        np.add.at(sums, best, qv)
+        C, cc = _lloyd_update(C, cnt, sums)
+    cent = cids[_nearest_np(qv, qq, C, cc)]
+
+    o = np.lexsort((ids, cent))
+    sid, qT, qn = ids[o], np.ascontiguousarray(qv[o].T), np.sqrt(qq[o])
+    ea, eb = [], []
+    for a, b in _cluster_pairs(cent[o], max_cluster):
+        dot = np.zeros(len(a))
+        for col in qT:
+            dot += col[a] * col[b]
+        cos_milli = np.floor(dot / (qn[a] * qn[b]) * 1000.0)
+        hit = (cos_milli >= threshold_milli) & (sid[a] < sid[b])
+        ea.append(sid[a[hit]])
+        eb.append(sid[b[hit]])
+    rep = ids.copy()
+    lab_ids, lab = min_label_components(np.concatenate(ea), np.concatenate(eb))
+    if len(lab_ids):
+        at = np.minimum(np.searchsorted(lab_ids, ids), len(lab_ids) - 1)
+        found = lab_ids[at] == ids
+        rep[found] = lab[at[found]]
+    return cent, rep
+
+
+def _semdedup_task(batches, *, id_col, vec_col, **params):
+    """mapInArrow body of ``semdedup``'s one-task path: every vector
+    of the (single) partition -> (id, cent_id, rep, keep)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    batches = list(batches)
+    tbl = pa.Table.from_batches(batches) if batches else None
+    if tbl is None or tbl.num_rows == 0:
+        return
+    ids = tbl.column(id_col).to_numpy().astype(np.int64)
+    vec = tbl.column(vec_col).combine_chunks()
+    lens = pc.list_value_length(vec).to_numpy(zero_copy_only=False)
+    if vec.null_count or (lens != lens[0]).any():
+        raise ValueError(f"semdedup: {vec_col} vectors must all have one length")
+    emb = vec.flatten().to_numpy(zero_copy_only=False).reshape(-1, int(lens[0]))
+    cent, rep = _semdedup_np(ids, emb, **params)
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(ids), pa.array(cent), pa.array(rep), pa.array(rep == ids)],
+        [id_col, "cent_id", "rep", "keep"],
+    )
+
+
 def semdedup(
     emb: DataFrame,
     threshold_milli: int = 950,
@@ -1178,18 +1318,48 @@ def semdedup(
     This is the scale answer to embedding near-dup at 100 TB: the
     quadratic pair space shrinks from O(n^2) to sum of cluster^2,
     and cluster size tracks ``stride`` by construction (k = n/stride
-    centroids). The cluster pass reuses ``kmeans_milli`` (bit-exact
-    deterministic Lloyd) so the whole op is oracle-checkable.
+    centroids). The cluster pass is ``kmeans_milli``'s bit-exact
+    deterministic Lloyd (replayed in numpy on the one-task path), so
+    the whole op is oracle-checkable.
 
-    100 TB shape: broadcast k-row centroid table -> one map-side
-    ``max_by`` hash-agg argmin (no window, no sort — the
-    ivf_build_index pattern), one equi-join on cent_id for pairs
+    One driver aggregate counts the vectors and the init centroids
+    (ids divisible by ``stride``); a non-empty corpus without a
+    centroid raises ``ValueError`` there. Up to ``SEMDEDUP_TASK_ROWS``
+    vectors, the whole operator then runs in ONE Arrow task
+    (``coalesce(1).mapInArrow``, ``_semdedup_np``): the same numpy
+    kernels as the distributed path, in the same order, so the result
+    is bit-identical, and the plan stays lazy. A small corpus thus
+    costs one job for the count and one for the caller's action,
+    instead of a job per Lloyd round and per shuffle.
+
+    Over the budget, the 100 TB shape: centroids from
+    ``kmeans_milli`` broadcast to one Arrow argmin pass over the
+    corpus (no window, no sort), one equi-join on cent_id for pairs
     (bounded by cluster size; ``max_cluster`` caps degenerate
     clusters via rank-1 representative pairing like the band-LSH
     caps), then per-cluster components in ONE grouped pass — pairs
     cannot span clusters, so no distributed label loop is needed.
-    No driver state.
+    Both paths return (id, cent_id, rep, keep) with the same schema.
     """
+    n, n_cent = emb.agg(
+        F.count(F.lit(1)), F.count_if(F.col(id_col) % stride == 0)
+    ).first()
+    if n and not n_cent:
+        raise ValueError(
+            f"semdedup: no {id_col} is a multiple of stride={stride}, "
+            "so the init sample has no centroid"
+        )
+    if n <= SEMDEDUP_TASK_ROWS:
+        from functools import partial
+
+        return emb.select(id_col, vec_col).coalesce(1).mapInArrow(
+            partial(
+                _semdedup_task, id_col=id_col, vec_col=vec_col, stride=stride,
+                iters=iters, threshold_milli=threshold_milli,
+                max_cluster=max_cluster,
+            ),
+            f"{id_col} long, cent_id long, rep long, keep boolean",
+        )
     if dim is None:
         row = emb.select(vec_col).head()
         dim = len(row[0]) if row is not None else DIM

@@ -765,9 +765,12 @@ def q_semdedup(spark, sf_dir) -> DataFrame:
     """Semantic dedup (similarity.semdedup; SemDeDup, Abbas et al.
     2023): deterministic Lloyd k-means clusters the embedding space,
     cosine pairs run ONLY within clusters, above-threshold groups
-    keep their min id. 100 TB shape: broadcast k-row centroids ->
-    map-side max_by argmin (no window) -> cent_id equi-join bounded
-    by cluster size -> distributed min-label components."""
+    keep their min id. The registry's corpora (500-2,000 vectors) fit
+    semdedup's row budget, so the whole operator runs in one Arrow
+    task. Over the budget, the 100 TB shape: broadcast k-row
+    centroids -> Arrow argmin pass (no window) -> cent_id equi-join
+    bounded by cluster size -> per-cluster min-label components in
+    one grouped pass."""
     from ..operators import similarity
 
     return similarity.semdedup(

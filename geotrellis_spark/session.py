@@ -118,16 +118,9 @@ def get_spark(
     return spark
 
 
-def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """A DataFrame of driver-side ``rows`` (tuples in the column order
-    of the DDL ``schema``), shipped to the JVM as an Arrow table.
-
-    ``spark.createDataFrame(list, schema)`` goes through
-    ``sc.parallelize`` and an identity ``map``, so even one row starts
-    Python-worker tasks on every default partition (~1 CPU s per call
-    on local[4]). The Arrow-table path is JVM-only whatever
-    ``spark.sql.execution.arrow.pyspark.enabled`` says; rows and schema
-    come out the same as the list path's."""
+def _arrow_table(rows, schema: str):
+    """(Arrow table, Spark struct) of driver-side ``rows`` (tuples in
+    the column order of the DDL ``schema``)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import DataType
@@ -138,4 +131,72 @@ def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     table = pa.Table.from_arrays(
         [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
     )
+    return table, struct
+
+
+def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in the column order
+    of the DDL ``schema``), shipped to the JVM as an Arrow table.
+
+    ``spark.createDataFrame(list, schema)`` goes through
+    ``sc.parallelize`` and an identity ``map``, so even one row starts
+    Python-worker tasks on every default partition (~1 CPU s per call
+    on local[4]). The Arrow-table path is JVM-only whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says; rows and schema
+    come out the same as the list path's."""
+    table, struct = _arrow_table(rows, schema)
     return spark.createDataFrame(table, struct)
+
+
+def _require_local(path: str) -> None:
+    if "://" in path:
+        raise ValueError(
+            f"{path}: driver-side Parquet I/O takes local paths only"
+        )
+
+
+def append_local_parquet(path: str, rows, schema: str) -> None:
+    """Append driver-side ``rows`` to the Parquet table directory
+    ``path`` as one new file, written from the driver: no Spark job.
+
+    The rows build the same Arrow table as ``local_df``'s, so
+    ``spark.read.parquet(path)`` reads them back with the DDL
+    ``schema``'s types. The file is written under a name starting with
+    ``.``, which Spark and ``pyarrow.dataset`` skip, then renamed to
+    ``part-<uuid>.parquet``: a reader never sees a half-written file.
+    Local paths only; a cluster filesystem (S3, HDFS) would write
+    through a ``pyarrow.fs`` filesystem instead of ``os``."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    _require_local(path)
+    table, _ = _arrow_table(rows, schema)
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, name))
+
+
+def parquet_footers(path: str, partitions: str):
+    """(partition values, footer) of every data file of the
+    hive-partitioned Parquet table under the local directory ``path``,
+    read from the files' footers: no Spark job, no data page read.
+
+    ``partitions`` is the DDL of the partition columns (e.g.
+    ``"part int"``); their values are decoded from the directory names
+    as Spark escapes them (``layer=a%3Ab`` is ``a:b``). Names starting
+    with ``.`` or ``_`` are skipped, as Spark skips them. The footer is
+    a ``pyarrow.parquet.FileMetaData``: row counts and per-row-group
+    column statistics."""
+    import pyarrow.dataset as ds
+
+    _require_local(path)
+    schema = _arrow_table([], partitions)[0].schema
+    tbl = ds.dataset(
+        path, format="parquet",
+        partitioning=ds.partitioning(schema, flavor="hive"),
+    )
+    for frag in tbl.get_fragments():
+        yield ds.get_partition_keys(frag.partition_expression), frag.metadata

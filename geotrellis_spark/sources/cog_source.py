@@ -34,7 +34,6 @@ from pyspark.sql.types import (
     BinaryType,
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,

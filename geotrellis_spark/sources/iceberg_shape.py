@@ -9,10 +9,18 @@ the engine realizes an Iceberg-*shaped* layout over plain Parquet:
   (co-located storage => cell-equi-joins shuffle less; zoom partition
   pruning == COG overview selection, SURVEY.md §4);
 - self-maintained ``snapshots`` / ``manifests`` metadata tables (one
-  snapshot row per commit; manifest rows carry per-file row counts and
-  cell_id min/max — the stats Iceberg uses for scan pruning);
+  snapshot row per commit; one manifest row per ``layer/zoom/bucket``
+  partition with its row count and cell_id min/max — the stats
+  Iceberg uses for scan pruning). As an Iceberg writer does, the
+  manifest takes them from the data files' own Parquet footers
+  (row-group statistics), not from a scan of the table;
 - ``layer_metadata`` — the TileLayerMetadata catalog (D13/D17:
   ``store/.../AttributeStore.scala`` role).
+
+The metadata rows are written from the driver
+(``session.append_local_parquet``) and the footers are read there
+too: neither runs a Spark job. Both work on local paths; on a
+cluster filesystem they would go through ``pyarrow.fs``.
 
 Swap-in for real Iceberg on a cluster with the jar (documented,
 3 lines): ``df.writeTo(tbl).partitionedBy(col('layer'), col('zoom'),
@@ -29,9 +37,15 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..session import local_df
+from ..session import append_local_parquet, parquet_footers
 
 N_CELL_BUCKETS = 16
+MANIFESTS = (
+    "layer string, zoom int, bucket int, n_rows bigint, "
+    "cell_id_min bigint, cell_id_max bigint, snapshot_id string, "
+    "table_name string"
+)
+SNAPSHOTS = "snapshot_id string, table_name string, committed_at string, path string"
 
 
 class ParquetCatalog:
@@ -52,6 +66,13 @@ class ParquetCatalog:
 
     (with Iceberg's own snapshots/manifests replacing the ``_meta``
     tables — callers that only write/read keep working unchanged).
+
+    Two more calls serve the metadata tables, so that they cost no
+    Spark job: ``append_rows`` appends driver-side rows to a table
+    (one Parquet file, written from the driver), and ``manifest_rows``
+    returns the manifest of a tile table from its data files' Parquet
+    footers. Both take local paths; a cluster filesystem would reach
+    the same files through ``pyarrow.fs``.
     """
 
     def __init__(self, base: str):
@@ -65,6 +86,36 @@ class ParquetCatalog:
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.parquet(self.location(table))
+
+    def append_rows(self, table: str, rows: list, schema: str) -> None:
+        append_local_parquet(self.location(table), rows, schema)
+
+    def manifest_rows(self, table: str) -> list[tuple]:
+        """(layer, zoom, bucket, n_rows, cell_id_min, cell_id_max) per
+        partition of a tile table: Σ ``num_rows`` and the min/max of
+        ``cell_id`` over the row-group statistics of every data file.
+        A row group without cell_id statistics raises: the manifest
+        must not understate a file's range."""
+        acc: dict[tuple, list[int]] = {}
+        for keys, meta in parquet_footers(
+            self.location(table), "layer string, zoom int, bucket int"
+        ):
+            idx = meta.schema.names.index("cell_id")
+            for g in range(meta.num_row_groups):
+                rg = meta.row_group(g)
+                if rg.num_rows == 0:
+                    continue
+                st = rg.column(idx).statistics
+                if st is None or not st.has_min_max:
+                    raise ValueError(
+                        f"{self.location(table)}: a row group has no "
+                        "cell_id min/max statistics"
+                    )
+                key = (keys["layer"], keys["zoom"], keys["bucket"])
+                a = acc.setdefault(key, [0, st.min, st.max])
+                a[0] += rg.num_rows
+                a[1], a[2] = min(a[1], st.min), max(a[2], st.max)
+        return [(*k, *v) for k, v in sorted(acc.items())]
 
     def location(self, table: str) -> str:
         """Physical address recorded in snapshot metadata; a real
@@ -96,27 +147,17 @@ def write_tiles(
 def _write_snapshot(
     spark: SparkSession, cat, table: str, snap_id: str
 ) -> None:
-    df = cat.read(spark, table)
-    manifest = (
-        df.groupBy("layer", "zoom", "bucket")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.min("cell_id").alias("cell_id_min"),
-            F.max("cell_id").alias("cell_id_max"),
-        )
-        .withColumn("snapshot_id", F.lit(snap_id))
-        .withColumn("table_name", F.lit(table))
+    cat.append_rows(
+        os.path.join("_meta", "manifests"),
+        [(*r, snap_id, table) for r in cat.manifest_rows(table)],
+        MANIFESTS,
     )
-    cat.write(manifest.coalesce(1), os.path.join("_meta", "manifests"),
-              (), "append")
     loc = cat.location(table) if hasattr(cat, "location") else table
-    snap = local_df(
-        spark,
+    cat.append_rows(
+        os.path.join("_meta", "snapshots"),
         [(snap_id, table, time.strftime("%Y-%m-%dT%H:%M:%S"), loc)],
-        "snapshot_id string, table_name string, committed_at string, path string",
+        SNAPSHOTS,
     )
-    cat.write(snap.coalesce(1), os.path.join("_meta", "snapshots"),
-              (), "append")
 
 
 def read_tiles(
@@ -141,8 +182,8 @@ def write_layer_metadata(
     crs: str = "latlng", extra: dict | None = None,
 ) -> None:
     """D13 TileLayerMetadata row (one per layer@zoom)."""
-    local_df(
-        spark,
+    append_local_parquet(
+        os.path.join(base, "_meta", "layer_metadata"),
         [(
             layer, zoom, cell_type, crs, tile_cols, tile_rows,
             layout_cols, layout_rows,
@@ -156,8 +197,6 @@ def write_layer_metadata(
         "extent_xmin double, extent_ymin double, extent_xmax double, extent_ymax double, "
         "kb_col_min bigint, kb_row_min bigint, kb_col_max bigint, kb_row_max bigint, "
         "props_json string",
-    ).coalesce(1).write.mode("append").parquet(
-        os.path.join(base, "_meta", "layer_metadata")
     )
 
 

@@ -5,9 +5,11 @@ E1 pipeline (SURVEY.md §3): scan -> metadata pass -> cut+merge (salted)
 -> pyramid levels -> layer write + catalog row, every stage wrapped in
 checkpoint/lineage/metrics so a killed run resumes without recompute.
 
-Cluster usage:
+Cluster usage (the warehouse must be a path the driver can write:
+the checkpoint and catalog rows are written from the driver, local
+paths only):
   spark-submit --py-files geotrellis_spark.zip jobs/ingest.py \
-      --images-path <iceberg/parquet table> --zoom 12 --warehouse s3://...
+      --images-path <iceberg/parquet table> --zoom 12 --warehouse /mnt/wh
 Sandbox usage (synthetic input):
   python jobs/ingest.py --synth 5000 --zoom 8 --warehouse /tmp/wh
 """

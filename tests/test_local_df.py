@@ -116,3 +116,15 @@ def test_no_list_create_dataframe_in_package():
     assert {(rel, fn) for rel, fn, _ in calls} >= allowed
     bad = [c for c in calls if c[:2] not in allowed]
     assert not bad, f"build driver rows with session.local_df: {bad}"
+
+
+def test_driver_parquet_io_takes_local_paths_only(tmp_path):
+    """The driver-side writer and footer reader refuse a URI rather
+    than write a local directory named after it."""
+    from geotrellis_spark.session import append_local_parquet, parquet_footers
+
+    with pytest.raises(ValueError, match="local paths only"):
+        append_local_parquet("s3://bucket/metrics", [], checkpoint.METRICS)
+    with pytest.raises(ValueError, match="local paths only"):
+        list(parquet_footers("s3://bucket/tiles", "part int"))
+    assert not os.path.exists("s3:")

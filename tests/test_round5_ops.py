@@ -121,6 +121,14 @@ def test_semdedup_max_cluster_cap_preserves_groups(spark):
     assert sum(r["keep"] for r in capped) == 1
 
 
+def test_semdedup_fixtures_on_the_distributed_path(spark, monkeypatch):
+    """The two fixtures above run semdedup's one-task path; with the
+    row budget at 0 they hold on the distributed path too."""
+    monkeypatch.setattr(similarity, "SEMDEDUP_TASK_ROWS", 0)
+    test_semdedup_collapses_duplicate_groups(spark)
+    test_semdedup_max_cluster_cap_preserves_groups(spark)
+
+
 def test_mix_sample_budget_semantics(spark):
     """Per source: kept docs are a PREFIX of the salted-hash order,
     every kept doc starts inside the budget, the first excluded doc

@@ -9,7 +9,15 @@ duplicate groups WITHIN one cluster, and group labels at the min id.
 
 from __future__ import annotations
 
+import duckdb
+import pytest
+
 from geotrellis_spark.operators import similarity
+
+SF = "/root/testdata/sf0.001"
+# semdedup's row budget: the default takes the one-task path on these
+# fixtures, 0 forces the distributed plan
+BUDGETS = {"one_task": similarity.SEMDEDUP_TASK_ROWS, "distributed": 0}
 
 
 def test_semdedup_components_per_cluster_groups(spark):
@@ -51,3 +59,61 @@ def test_semdedup_components_per_cluster_groups(spark):
         assert keeps == [base, base + 3]
     # clusters are distinct across groups (components never span them)
     assert len({out[g * 5]["cent_id"] for g in range(4)}) == 4
+
+
+def test_semdedup_components_on_the_distributed_path(spark, monkeypatch):
+    """The same fixture with the row budget at 0: the grouped
+    per-cluster components pass gives the same groups."""
+    monkeypatch.setattr(similarity, "SEMDEDUP_TASK_ROWS", 0)
+    test_semdedup_components_per_cluster_groups(spark)
+
+
+def _plan_nodes(df) -> list[str]:
+    def walk(p):
+        kids = p.children()
+        return [p.nodeName()] + [
+            n for i in range(kids.size()) for n in walk(kids.apply(i))
+        ]
+
+    return walk(df._jdf.queryExecution().sparkPlan())
+
+
+@pytest.mark.parametrize("path", BUDGETS)
+def test_semdedup_paths_match_duckdb(spark, monkeypatch, path):
+    """Both paths give the DuckDB twin's rows on the sf0.001
+    embeddings, and the one-task path's plan is one MapInArrow with no
+    grouped pandas pass."""
+    monkeypatch.setattr(similarity, "SEMDEDUP_TASK_ROWS", BUDGETS[path])
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    df = similarity.semdedup(emb, threshold_milli=350, dim=similarity.DIM)
+    nodes = _plan_nodes(df)
+    if path == "one_task":
+        assert nodes.count("MapInArrow") == 1, nodes
+        assert "FlatMapGroupsInPandas" not in nodes, nodes
+    else:
+        assert "FlatMapGroupsInPandas" in nodes, nodes
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{SF}/embeddings.parquet')"
+    )
+    want = con.execute(similarity.semdedup_sql(threshold_milli=350)).df()
+    got = df.toPandas()
+    assert list(got.columns) == list(want.columns)
+    key = ["vec_id"]
+    got = got.sort_values(key).reset_index(drop=True)
+    want = want.sort_values(key).reset_index(drop=True)
+    assert (got.values == want.values).all()
+    assert (~got["keep"]).sum() > 0  # the fixture does hold duplicates
+
+
+@pytest.mark.parametrize("path", BUDGETS)
+def test_semdedup_no_centroid_raises_on_both_paths(spark, monkeypatch, path):
+    monkeypatch.setattr(similarity, "SEMDEDUP_TASK_ROWS", BUDGETS[path])
+    emb = spark.range(1, 61).selectExpr(
+        "id as vec_id", "array(cast(id as float), 1.0f) as embedding"
+    )
+    with pytest.raises(ValueError, match=r"vec_id.*stride=61"):
+        similarity.semdedup(emb, threshold_milli=990, stride=61, dim=2)
+    # an empty corpus has no centroid either, and that is fine
+    empty = emb.where("false")
+    assert similarity.semdedup(empty, threshold_milli=990, dim=2).count() == 0
