@@ -43,7 +43,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .session import append_local_parquet, parquet_footers
+from .session import append_local_parquet, parquet_footers, read_parquet
 
 CHECKPOINTS = (
     "job_id string, stage string, part_key int, status string, "
@@ -165,7 +165,9 @@ def checkpointed_stage(
     computed and appended to ``output_path`` (dir-partitioned by
     ``part=``), then checkpointed. A killed run re-invokes this with
     the same job_id and only the missing buckets run. Returns the full
-    stage output (read back from parquet — deterministic).
+    stage output, read back from parquet (deterministic) with its schema
+    from one data file's footer and ``part int``: the read-back runs no
+    Spark job until the caller's action.
     """
     params = params or {}
     done = completed_buckets(spark, base, job_id, stage)
@@ -215,4 +217,4 @@ def checkpointed_stage(
         write_metrics(spark, base, job_id, stage, metrics)
     else:
         write_metric(spark, base, job_id, stage, "buckets_run", 0)
-    return spark.read.parquet(output_path)
+    return read_parquet(spark, output_path, "part int")

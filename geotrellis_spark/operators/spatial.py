@@ -288,8 +288,10 @@ def s2_knn_join(
 
     from ..core import s2cell
 
+    # pinned for the rounds; not .cache(), which a later plan over the
+    # same (rewritten) path would hit (see knn_join)
     points = s2_assign(points, lon_col, lat_col, level,
-                       out_col=cell_col).cache()
+                       out_col=cell_col).localCheckpoint(eager=False)
     if point_cols is None:
         point_cols = tuple(
             c for c in points.columns if c != cell_col
@@ -811,10 +813,13 @@ def knn_join(
         " ELSE raise_error('knn_join: coordinate outside lon [-180, 180] x lat"
         " [-90, 90]') END"
     )
-    # read twice (counts, candidates): cache rather than re-key
+    # read twice (counts, candidates): pin rather than re-key. A lazy
+    # local checkpoint belongs to this plan only; .cache() would register
+    # the plan with the session's cache manager, and a later call over a
+    # rewritten file at the same path would read the stale rows
     points = assign_cells(
         points.where(envelope.format(lon_col, lat_col)), lon_col, lat_col, zoom
-    ).cache()
+    ).localCheckpoint(eager=False)
     if point_cols is None:
         point_cols = tuple(
             c for c in points.columns if c not in ("key_col", "key_row", "cell_id")

@@ -32,29 +32,29 @@ from ..operators import (
     dedup, similarity, spatial, temporal, text, tiling, tokenize,
 )
 from .. import synth
-from ..session import local_df
+from ..session import local_df, parquet_footer, read_parquet
 
 CENTS = "cast(floor(value * 100 + 0.5) as bigint)"
-
-
-# row-group counts per parquet path, memoized (pure file METADATA — a
-# property of the input layout, never query results)
-_RG_CACHE: dict[str, int] = {}
 
 
 def _t(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
-    """Read a test table; ``spread=True`` adds the scan-parallelism
-    guard (guide §2.5 input skew / §6 split sizing): parquet cannot
-    split below row-group granularity, and these single-file tables
-    hold 1-2 row groups, so every scan — and every downstream narrow op
-    — otherwise runs 1-2 tasks regardless of core count (measured: the
-    whole ann family ran ~50x under the box's parallelism; sf1.0
-    ann_topk 98.8s -> 1.8s once spread). Round-robin repartition to the
-    session's core count when the file's row groups can't feed it; at
-    100 TB a table has orders of magnitude more row groups than cores,
-    so the guard is a no-op there — scale-adaptive by construction.
+    """Read a test table with its schema from the file's footer
+    (``session.read_parquet``): building the read runs no Spark job,
+    where schema inference would run one per call.
+
+    ``spread=True`` adds the scan-parallelism guard (guide §2.5 input
+    skew / §6 split sizing): parquet cannot split below row-group
+    granularity, and these single-file tables hold 1-2 row groups, so
+    every scan — and every downstream narrow op — otherwise runs 1-2
+    tasks regardless of core count (measured: the whole ann family ran
+    ~50x under the box's parallelism; sf1.0 ann_topk 98.8s -> 1.8s once
+    spread). Round-robin repartition to the session's core count when
+    the file's row groups (counted in the same footer) can't feed it;
+    at 100 TB a table has orders of magnitude more row groups than
+    cores, so the guard is a no-op there — scale-adaptive by
+    construction.
 
     OPT-IN per query, not blanket: the repartition is itself one extra
     pass-shuffle of the table (~0.5-1.5s on the 1M-row events table),
@@ -65,18 +65,12 @@ def _t(
     3.1 with blanket spreading — hence opt-in)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
+    footer = parquet_footer(path)
+    df = read_parquet(spark, path, footer=footer)
     if not spread:
         return df
-    if path not in _RG_CACHE:
-        try:
-            import pyarrow.parquet as _pq
-
-            _RG_CACHE[path] = _pq.ParquetFile(path).metadata.num_row_groups
-        except Exception:
-            _RG_CACHE[path] = 1 << 30  # unreadable: assume wide enough
     p = spark.sparkContext.defaultParallelism
-    if _RG_CACHE[path] < p:
+    if footer.num_row_groups < p:
         df = df.repartition(p)
     return df
 
@@ -501,20 +495,22 @@ def sql_zonal_stats() -> str:
 
 
 def q_layer_join(spark, sf_dir) -> DataFrame:
-    ev = spatial.assign_cells(
-        _events_pts(spark, sf_dir, spread=True), "lon", "lat", 6
-    )
-    orders = _t(spark, sf_dir, "orders", spread=True).selectExpr(
-        "o_orderkey",
+    # A cell's pairs number count_events(cell) x count_orders(cell), so
+    # the pair join is never built: each side aggregates to at most 4^6
+    # per-cell counts first (eager aggregation) and the counts join.
+    # The pair stream grows with the square of a hot cell's size; the
+    # counts do not. With no per-row work left after the scan's partial
+    # aggregate, neither side is spread.
+    ev = spatial.assign_cells(_events_pts(spark, sf_dir), "lon", "lat", 6)
+    orders = _t(spark, sf_dir, "orders").selectExpr(
         f"{exprs.lon_sql('o_orderkey * 17')} as lon",
         f"{exprs.lat_sql('o_orderkey * 23')} as lat",
     )
     od = spatial.assign_cells(orders, "lon", "lat", 6)
     return (
-        ev.select("event_id", "cell_id")
-        .join(od.select("o_orderkey", "cell_id"), "cell_id")
-        .groupBy("cell_id")
-        .agg(F.count("*").alias("n_pairs"))
+        ev.groupBy("cell_id").agg(F.count("*").alias("n_e"))
+        .join(od.groupBy("cell_id").agg(F.count("*").alias("n_o")), "cell_id")
+        .select("cell_id", (F.col("n_e") * F.col("n_o")).cast("bigint").alias("n_pairs"))
     )
 
 

@@ -16,6 +16,16 @@ Scale notes (100 TB design, local[32] testing):
   the spark-core jar: a Python task's fixed cost falls from ~0.3 to
   ~0.05 worker CPU s. ``spark.python.daemon.module`` is a static conf,
   so a session not built here still pays the old cost.
+- Spark's code-generation cache (``spark.sql.codegen.cache.maxEntries``,
+  static, 100 entries by default) is sized to hold every class one
+  session compiles. The spatial queries' warm-up alone compiles more
+  than 100, so at the default the timed queries found their classes
+  evicted and compiled them again on every call.
+- Parquet tables the engine reads take their schema from one data
+  file's footer, read on the driver (``read_parquet``). A schema-less
+  ``spark.read.parquet`` runs a Spark job to read that footer, 75-150
+  ms of CPU per read on local[4] against 9-15 ms with the schema given.
+  Reads of caller-given paths keep Spark's inference.
 """
 
 from __future__ import annotations
@@ -23,6 +33,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Spark's code-generation cache size (spark.sql.codegen.cache.maxEntries,
+# default 100). Sized from a count with an unbounded cache (local[4]):
+# two passes over the query registry at sf0.01 compile 990 distinct
+# classes, a batch run 140 and a spatial_query run 108, so one session
+# doing all three compiles at most ~1,240; 2,000 leaves headroom.
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def default_cores() -> int:
@@ -110,6 +127,10 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "geotrellis_spark.pydaemon")
+        # the spatial_query warm-up alone compiles over 100 classes, so
+        # at Spark's default the timed queries recompiled theirs on
+        # every call. Static conf: sessions not built here keep 100.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
@@ -200,3 +221,86 @@ def parquet_footers(path: str, partitions: str):
     )
     for frag in tbl.get_fragments():
         yield ds.get_partition_keys(frag.partition_expression), frag.metadata
+
+
+# the footer key under which Spark stores the schema it wrote, as JSON
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _skipped(name: str) -> bool:
+    # Spark's listing skips these (``_`` unless it names a partition)
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def parquet_footer(path: str):
+    """Footer (``pyarrow.parquet.FileMetaData``) of the first data file
+    of the local Parquet table ``path`` — a file, or a directory tree
+    walked in sorted order, skipping names as Spark's listing does —
+    or None if it has no data file."""
+    import pyarrow.parquet as pq
+
+    _require_local(path)
+    if os.path.isfile(path):
+        return pq.read_metadata(path)
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not _skipped(d))
+        for f in sorted(files):
+            if not _skipped(f):
+                return pq.read_metadata(os.path.join(root, f))
+    return None
+
+
+def _footer_schema(spark: SparkSession, footer):
+    """The Spark schema that schema inference gives for a Parquet file
+    with this footer, or None where the Arrow mapping could differ
+    from Spark's reading (INT96 and nanosecond timestamps, types that
+    have no Spark type)."""
+    import json
+
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
+
+    kv = footer.metadata or {}
+    if _SPARK_SCHEMA_KEY in kv:
+        return StructType.fromJson(json.loads(kv[_SPARK_SCHEMA_KEY]))
+    for c in footer.schema:
+        if c.physical_type == "INT96" or "nanoseconds" in str(c.logical_type):
+            return None
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
+    try:
+        return from_arrow_schema(
+            footer.schema.to_arrow_schema(),
+            prefer_timestamp_ntz=ntz.lower() == "true",
+        )
+    except TypeError:
+        return None
+
+
+def read_parquet(
+    spark: SparkSession, path: str, partitions: str | None = None,
+    footer=None,
+) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema taken from one data
+    file's footer on the driver, so building the read runs no Spark
+    job (schema inference runs one to read that same footer).
+
+    As Spark without ``mergeSchema`` does, one file gives the schema:
+    the schema Spark wrote into the footer if the file is Spark's,
+    else the footer's Arrow schema mapped as Spark maps Parquet types.
+    ``partitions`` is the DDL of the hive partition columns (e.g.
+    ``"part int"``), appended after the data columns as Spark appends
+    them; ``footer`` is ``parquet_footer(path)`` when the caller has
+    read it already. A table with no data file, or with a type the
+    Arrow mapping could get wrong, goes to Spark's inference, which
+    raises its own error for a missing or empty table. Local paths
+    only."""
+    from pyspark.sql.types import DataType, StructType
+
+    if footer is None:
+        footer = parquet_footer(path)
+    schema = None if footer is None else _footer_schema(spark, footer)
+    if schema is None:
+        return spark.read.parquet(path)
+    if partitions:
+        schema = StructType(schema.fields + DataType.fromDDL(partitions).fields)
+    return spark.read.schema(schema).parquet(path)

@@ -37,9 +37,11 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..session import append_local_parquet, parquet_footers
+from ..session import append_local_parquet, parquet_footers, read_parquet
 
 N_CELL_BUCKETS = 16
+# the hive partition columns of a tile table, as its directories name them
+TILE_PARTITIONS = "layer string, zoom int, bucket int"
 MANIFESTS = (
     "layer string, zoom int, bucket int, n_rows bigint, "
     "cell_id_min bigint, cell_id_max bigint, snapshot_id string, "
@@ -85,7 +87,9 @@ class ParquetCatalog:
         w.parquet(self.location(table))
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self.location(table))
+        """The tile table, its schema from one data file's footer and
+        ``TILE_PARTITIONS``: building the read runs no Spark job."""
+        return read_parquet(spark, self.location(table), TILE_PARTITIONS)
 
     def append_rows(self, table: str, rows: list, schema: str) -> None:
         append_local_parquet(self.location(table), rows, schema)
@@ -97,9 +101,7 @@ class ParquetCatalog:
         A row group without cell_id statistics raises: the manifest
         must not understate a file's range."""
         acc: dict[tuple, list[int]] = {}
-        for keys, meta in parquet_footers(
-            self.location(table), "layer string, zoom int, bucket int"
-        ):
+        for keys, meta in parquet_footers(self.location(table), TILE_PARTITIONS):
             idx = meta.schema.names.index("cell_id")
             for g in range(meta.num_row_groups):
                 rg = meta.row_group(g)
@@ -134,14 +136,31 @@ def write_tiles(
     the LayerWriter/ZCurveKeyIndexMethod role, SURVEY.md §2.S3)."""
     cat = catalog or ParquetCatalog(base)
     snap_id = uuid.uuid4().hex[:16]
+    parts = ("layer", "zoom", "bucket")
     out = (
         tiles.withColumn("bucket", F.pmod(F.col("cell_id"), F.lit(n_buckets)).cast("int"))
-        .repartition("layer", "zoom", "bucket")
-        .sortWithinPartitions("cell_id")
+        .repartition(*parts)
     )
-    cat.write(out, table, ("layer", "zoom", "bucket"), mode)
+    out = out.sortWithinPartitions(*_write_ordering(out, parts), "cell_id")
+    cat.write(out, table, parts, mode)
     _write_snapshot(tiles.sparkSession, cat, table, snap_id)
     return snap_id
+
+
+def _write_ordering(df: DataFrame, parts) -> list[str]:
+    """The partition columns a partitioned write of ``df`` sorts on.
+
+    Spark's planned write sorts its input by the partition columns
+    unless the input's order already starts with them, and that sort
+    replaces an inner ``sortWithinPartitions`` (and its cell_id order).
+    It first drops the columns that fold to a constant — a layer or
+    zoom set by a literal — so no one fixed key list matches both a
+    literal and a column layer. This asks Spark's own rule which
+    columns remain (analysis only, no job)."""
+    plan = df.sortWithinPartitions(*parts)._jdf.queryExecution().analyzed()
+    utils = df.sparkSession._jvm.org.apache.spark.sql.execution.datasources.V1WritesUtils
+    kept = utils.eliminateFoldableOrdering(plan.order(), plan.child()).outputOrdering()
+    return [kept.apply(i).child().name() for i in range(kept.length())]
 
 
 def _write_snapshot(
@@ -201,7 +220,7 @@ def write_layer_metadata(
 
 
 def read_layer_metadata(spark: SparkSession, base: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(base, "_meta", "layer_metadata"))
+    return read_parquet(spark, os.path.join(base, "_meta", "layer_metadata"))
 
 
 def collect_metadata(tiles: DataFrame) -> dict:

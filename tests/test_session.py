@@ -143,3 +143,7 @@ def test_get_spark_cores_default_and_daemon(monkeypatch, cores, env, want):
     session.get_spark(cores=cores)
     assert builder.conf["master"] == want
     assert builder.conf["spark.python.daemon.module"] == "geotrellis_spark.pydaemon"
+    assert builder.conf["spark.sql.codegen.cache.maxEntries"] == str(
+        session.CODEGEN_CACHE_ENTRIES
+    )
+    assert session.CODEGEN_CACHE_ENTRIES > 100  # Spark's default

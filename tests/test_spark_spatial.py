@@ -289,6 +289,39 @@ def test_knn_join_builds_without_a_job(spark, points_df):
     assert ran  # the tracker does see this group's jobs
 
 
+def test_knn_join_reads_a_rewritten_file(spark, tmp_path):
+    """A second knn_join over a Parquet file that was rewritten (outside
+    Spark, which would have refreshed its cache) with other points
+    returns the new file's neighbours, not rows a session cache kept
+    from the first call."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "pts.parquet")
+    queries = [(10.0, 20.0), (-70.0, -15.0), (120.0, 40.0)]
+    qdf = local_df(
+        spark, [(i, x, y) for i, (x, y) in enumerate(queries)],
+        "q_id bigint, q_lon double, q_lat double",
+    )
+    rng = np.random.default_rng(5)
+    for _ in range(2):
+        pts = np.column_stack([rng.uniform(-180, 180, 500), rng.uniform(-90, 90, 500)])
+        pq.write_table(pa.table({
+            "id": np.arange(len(pts)), "lon": pts[:, 0], "lat": pts[:, 1],
+        }), path)
+        out = spatial.knn_join(
+            spark.read.parquet(path), qdf, k=3, zoom=3,
+            point_cols=("id", "lon", "lat"),
+        )
+        got = sorted((r["q_id"], r["rank"], r["id"]) for r in out.collect())
+        want = []
+        for qid, (qx, qy) in enumerate(queries):
+            d = np.hypot(pts[:, 0] - qx, pts[:, 1] - qy)
+            order = np.lexsort((np.arange(len(pts)), d))[:3]
+            want += [(qid, rank, int(i)) for rank, i in enumerate(order, start=1)]
+        assert got == sorted(want)
+
+
 @pytest.mark.parametrize("bad", ["point", "query"])
 def test_knn_join_rejects_coordinates_outside_the_envelope(spark, bad):
     """Keys clamp at the grid edge, where the search bound would not
