@@ -151,97 +151,106 @@ def s2_parent(cell, level: int, delta: int = 1) -> np.ndarray:
     return np.asarray(cell, dtype=np.int64) >> (2 * delta)
 
 
-def _cell_lonlat_box(cell: int, level: int, samples: int = 9):
-    """Conservative lon/lat bounding box of one cell: its ij-perimeter
-    sampled ``samples`` points per edge, dilated by the largest gap
-    between adjacent samples (the smooth boundary cannot wander further
-    between samples than their spacing at these curvatures).  A cell
-    whose samples reach a pole gets the full longitude range."""
+def _cell_lonlat_boxes(cells, level: int, samples: int = 9):
+    """Conservative lon/lat bounding boxes (x0, y0, x1, y1 arrays) of
+    the cells at ``level``: each ij-perimeter sampled ``samples`` points
+    per edge, dilated by the largest gap between adjacent samples (the
+    smooth boundary cannot wander further between samples than their
+    spacing at these curvatures).  A cell whose samples reach a pole
+    gets the full longitude range; a cell crossing the antimeridian
+    gets its lons in [0, 360) (the callers' +/-360 shifts match)."""
     n = 1 << level
-    fa, ia, ja = s2_decode(np.array([cell], dtype=np.int64), level)
-    face, i, j = int(fa[0]), int(ia[0]), int(ja[0])
+    face, i, j = s2_decode(cells, level)
+    i, j = (a.astype(np.float64)[:, None] for a in (i, j))
     t = np.linspace(0.0, 1.0, samples)
-    per = np.concatenate([
-        np.stack([i + t, np.full_like(t, float(j))], 1),
-        np.stack([np.full_like(t, i + 1.0), j + t], 1),
-        np.stack([i + 1.0 - t, np.full_like(t, j + 1.0)], 1),
-        np.stack([np.full_like(t, float(i)), j + 1.0 - t], 1),
-    ])
-    u = _s_to_u(per[:, 0] / n)
-    v = _s_to_u(per[:, 1] / n)
-    x, y, z = _uv_from_face(np.full(len(per), face, np.int64), u, v)
+    shape = (len(face), samples)
+    per_i = np.concatenate([
+        i + t, np.broadcast_to(i + 1.0, shape),
+        (i + 1.0) - t, np.broadcast_to(i, shape),
+    ], 1)
+    per_j = np.concatenate([
+        np.broadcast_to(j, shape), j + t,
+        np.broadcast_to(j + 1.0, shape), (j + 1.0) - t,
+    ], 1)
+    x, y, z = _uv_from_face(
+        np.broadcast_to(face[:, None], per_i.shape),
+        _s_to_u(per_i / n), _s_to_u(per_j / n),
+    )
     lon = np.degrees(np.arctan2(y, x))
     lat = np.degrees(np.arctan2(z, np.hypot(x, y)))
     # dilation: max angular step between neighboring samples
-    dlat = np.abs(np.diff(lat)).max()
-    dlon = np.abs((np.diff(lon) + 180.0) % 360.0 - 180.0).max()
-    pad = float(max(dlat, dlon))
+    dlat = np.abs(np.diff(lat, axis=1)).max(1)
+    dlon = np.abs((np.diff(lon, axis=1) + 180.0) % 360.0 - 180.0).max(1)
+    pad = np.maximum(dlat, dlon)
+    wrap = np.abs(np.diff(lon, axis=1)).max(1) > 180.0
+    lon = np.where(wrap[:, None] & (lon < 0.0), lon + 360.0, lon)
+    x0, x1 = lon.min(1) - pad, lon.max(1) + pad
+    y0, y1 = lat.min(1) - pad, lat.max(1) + pad
     # a cell containing a pole (the (s,t)=(0.5,0.5) point of face 2 or
     # 5) spans every longitude; its boundary lats bound the other edge
-    if face in (2, 5) and i <= n / 2 <= i + 1 and j <= n / 2 <= j + 1:
-        if face == 2:
-            return -180.0, float(lat.min()) - pad, 180.0, 90.0
-        return -180.0, -90.0, 180.0, float(lat.max()) + pad
-    if np.abs(np.diff(lon)).max() > 180.0:  # crosses the antimeridian:
-        # express lons in [0, 360) — the caller's +/-360 shifts match
-        lonw = np.where(lon < 0.0, lon + 360.0, lon)
-        return (
-            float(lonw.min()) - pad, float(lat.min()) - pad,
-            float(lonw.max()) + pad, float(lat.max()) + pad,
-        )
+    c, i, j = n / 2, i[:, 0], j[:, 0]
+    pole = (i <= c) & (c <= i + 1) & (j <= c) & (c <= j + 1)
+    north, south = pole & (face == 2), pole & (face == 5)
     return (
-        float(lon.min()) - pad, float(lat.min()) - pad,
-        float(lon.max()) + pad, float(lat.max()) + pad,
+        np.where(north | south, -180.0, x0), np.where(south, -90.0, y0),
+        np.where(north | south, 180.0, x1), np.where(north, 90.0, y1),
     )
+
+
+# the +-360 lon shifts a box is tried at, as a column: x0 + _SHIFTS is
+# (3, cells)
+_SHIFTS = np.array([-360.0, 0.0, 360.0])[:, None]
+
+
+def _refine(level: int, keep) -> np.ndarray:
+    """The level-by-level frontier every cover shares: from the six
+    faces, keep the cells whose dilated boxes pass ``keep(x0, y0, x1,
+    y1)`` (one numpy pass per level), then step to their four children.
+    Children of sorted parents are consecutive, so the cover comes out
+    sorted."""
+    cells = np.arange(6, dtype=np.int64)
+    for lvl in range(level + 1):
+        cells = cells[keep(*_cell_lonlat_boxes(cells, lvl))]
+        if lvl < level:
+            cells = (cells[:, None] * 4 + np.arange(4)).ravel()
+    return cells
 
 
 def s2_cover(
     bbox: tuple[float, float, float, float], level: int
 ) -> np.ndarray:
     """Cells at ``level`` conservatively covering a lon/lat box
-    (lon0, lat0, lon1, lat1), found by recursive refinement from the
-    six faces with a dilated-bbox intersection test — the CellUnion
-    role: feed :func:`s2_range`/``merge_ranges`` for a prune-then-
-    refine scan (T13's MergeQueue on the sphere).  Conservative
-    (superset) by construction; the pytest gate proves empirically
-    that every point inside the box lands in a cover cell.  No
-    antimeridian-wrapping query boxes (split the box first)."""
+    (lon0, lat0, lon1, lat1), found by a level-by-level frontier from
+    the six faces with a dilated-bbox intersection test (tried at the
+    three +-360 lon shifts) — the CellUnion role: feed
+    :func:`s2_range`/``merge_ranges`` for a prune-then-refine scan
+    (T13's MergeQueue on the sphere).  Conservative (superset) by
+    construction; the pytest gate proves empirically that every point
+    inside the box lands in a cover cell.  No antimeridian-wrapping
+    query boxes (split the box first)."""
     lon0, lat0, lon1, lat1 = (float(v) for v in bbox)
     if lon0 > lon1:
         raise ValueError("antimeridian-wrapping bbox: split it first")
-    out: list[int] = []
-    stack: list[tuple[int, int]] = [(f, 0) for f in range(6)]
-    while stack:
-        cell, lvl = stack.pop()
-        cx0, cy0, cx1, cy1 = _cell_lonlat_box(cell, lvl)
-        # lon overlap with 360-wrap candidates
-        lon_hit = any(
-            cx0 + s <= lon1 and cx1 + s >= lon0
-            for s in (-360.0, 0.0, 360.0)
-        )
-        if not (lon_hit and cy0 <= lat1 and cy1 >= lat0):
-            continue
-        if lvl == level:
-            out.append(int(cell))
-        else:
-            stack.extend(
-                (cell * 4 + k, lvl + 1) for k in range(4)
-            )
-    return np.array(sorted(out), dtype=np.int64)
+
+    def keep(x0, y0, x1, y1):
+        lon_hit = ((x0 + _SHIFTS <= lon1) & (x1 + _SHIFTS >= lon0)).any(0)
+        return lon_hit & (y0 <= lat1) & (y1 >= lat0)
+
+    return _refine(level, keep)
 
 
 def s2_cover_polygon(ring, level: int) -> np.ndarray:
     """Cells at ``level`` conservatively covering a simple lon/lat
     polygon (exterior ring, (n,2) array) — the polygon twin of
-    :func:`s2_cover`/:func:`s2_cover_cap`. Refinement keeps a cell
-    when its dilated lon/lat box EXACTLY intersects the polygon
-    (core.geom.polygons_intersect on the box rectangle, tried at the
-    three +-360 lon shifts): the dilated box is a superset of the true
-    cell region, so the cover is a superset of the truly-intersecting
-    cells — refine downstream pays for the slack. Holes never widen a
-    polygon, so covering the exterior ring is conservative for any
-    polygon-with-holes. No antimeridian-wrapping rings (split first,
-    like s2_cover)."""
+    :func:`s2_cover`/:func:`s2_cover_cap`. Each frontier level keeps a
+    cell when its dilated lon/lat box EXACTLY intersects the polygon
+    (the box rectangle at the three +-360 lon shifts, bbox-prefiltered,
+    then core.geom.polygons_intersect_batch): the dilated box is a
+    superset of the true cell region, so the cover is a superset of
+    the truly-intersecting cells — refine downstream pays for the
+    slack. Holes never widen a polygon, so covering the exterior ring
+    is conservative for any polygon-with-holes. No antimeridian-
+    wrapping rings (split first, like s2_cover)."""
     from . import geom as G
 
     ext = np.asarray(ring, dtype=np.float64)
@@ -250,31 +259,20 @@ def s2_cover_polygon(ring, level: int) -> np.ndarray:
     poly_wkb = G.wkb_write_polygon([ext])
     px0, py0 = ext.min(axis=0)
     px1, py1 = ext.max(axis=0)
-    out: list[int] = []
-    stack: list[tuple[int, int]] = [(f, 0) for f in range(6)]
-    while stack:
-        cell, lvl = stack.pop()
-        cx0, cy0, cx1, cy1 = _cell_lonlat_box(cell, lvl)
-        hit = False
-        for s in (-360.0, 0.0, 360.0):
-            if cx0 + s > px1 or cx1 + s < px0 or cy0 > py1 or cy1 < py0:
-                continue
-            box = np.array([
-                [cx0 + s, cy0], [cx1 + s, cy0],
-                [cx1 + s, cy1], [cx0 + s, cy1], [cx0 + s, cy0],
-            ])
-            if G.polygons_intersect(
-                G.wkb_write_polygon([box]), poly_wkb
-            ):
-                hit = True
-                break
-        if not hit:
-            continue
-        if lvl == level:
-            out.append(int(cell))
-        else:
-            stack.extend((cell * 4 + k, lvl + 1) for k in range(4))
-    return np.array(sorted(out), dtype=np.int64)
+
+    def keep(x0, y0, x1, y1):
+        a, b = x0 + _SHIFTS, x1 + _SHIFTS
+        s, k = np.nonzero(~((a > px1) | (b < px0) | (y0 > py1) | (y1 < py0)))
+        a, b, c, d = a[s, k], b[s, k], y0[k], y1[k]
+        rings = np.stack([np.stack([a, b, b, a, a], 1),
+                          np.stack([c, c, d, d, c], 1)], 2)
+        hit = np.zeros(len(x0), dtype=bool)
+        np.logical_or.at(hit, k, G.polygons_intersect_batch(
+            [G.wkb_write_polygon([r]) for r in rings], [poly_wkb] * len(k),
+        ))
+        return hit
+
+    return _refine(level, keep)
 
 
 def angular_distance(lon1, lat1, lon2, lat2):
@@ -299,36 +297,26 @@ def s2_cover_cap(
 ) -> np.ndarray:
     """Cells at ``level`` conservatively covering the spherical cap of
     angular radius ``radius_deg`` around (lon, lat) — the circle twin
-    of :func:`s2_cover` (radius queries, geofences, kNN seeds).
+    of :func:`s2_cover` (radius queries, geofences, kNN seeds), on the
+    same level-by-level frontier.
 
     Conservative inclusion: a cell is kept when the haversine distance
-    from the cap center to its dilated lon/lat box's clamped point is
-    <= radius + the box's degree-diagonal.  Any point of an
-    intersecting cell is within diag of the clamped point, so
-    intersecting cells can never be excluded (plain-degree diagonal
-    over-estimates the angular diagonal — safe); the cost is one ring
-    of extra cells, and the exact refine downstream pays for it."""
+    from the cap center to its dilated lon/lat box's clamped point
+    (nearest over the three +-360 lon shifts) is <= radius + the box's
+    degree-diagonal.  Any point of an intersecting cell is within diag
+    of the clamped point, so intersecting cells can never be excluded
+    (plain-degree diagonal over-estimates the angular diagonal — safe);
+    the cost is one ring of extra cells, and the exact refine
+    downstream pays for it."""
     lon, lat = float(lon), float(lat)
-    out: list[int] = []
-    stack: list[tuple[int, int]] = [(f, 0) for f in range(6)]
-    while stack:
-        cell, lvl = stack.pop()
-        cx0, cy0, cx1, cy1 = _cell_lonlat_box(cell, lvl)
-        # clamp with the +-360 lon candidates (boxes may be in [0,360))
-        best = None
-        for s in (-360.0, 0.0, 360.0):
-            cl = min(max(lon, cx0 + s), cx1 + s)
-            cp = min(max(lat, cy0), cy1)
-            d = float(angular_distance(lon, lat, cl, cp))
-            best = d if best is None else min(best, d)
-        diag = float(np.hypot(cx1 - cx0, cy1 - cy0))
-        if best > radius_deg + diag:
-            continue
-        if lvl == level:
-            out.append(int(cell))
-        else:
-            stack.extend((cell * 4 + k, lvl + 1) for k in range(4))
-    return np.array(sorted(out), dtype=np.int64)
+
+    def keep(x0, y0, x1, y1):
+        cp = np.minimum(np.maximum(lat, y0), y1)
+        cl = np.minimum(np.maximum(lon, x0 + _SHIFTS), x1 + _SHIFTS)
+        best = angular_distance(lon, lat, cl, cp).min(0)
+        return best <= radius_deg + np.hypot(x1 - x0, y1 - y0)
+
+    return _refine(level, keep)
 
 
 def s2_range(cell, level: int, to_level: int):

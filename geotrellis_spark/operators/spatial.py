@@ -174,15 +174,16 @@ def s2_radius_filter(
 
 def _cell_ranges_pred(cover, cell_col: str):
     """Merged contiguous [lo, hi) id ranges of a cell cover as one
-    codegen'd OR-of-BETWEEN Column (shared by every S2 prune path).
-    An empty cover yields literal false — nothing can match — rather
-    than a None predicate."""
+    codegen'd OR-of-BETWEEN Column (shared by every S2 prune path),
+    built as one SQL expression: one parse instead of a Column-API
+    round trip per range. An empty cover yields literal false —
+    nothing can match — rather than a None predicate."""
     ranges = sfc.merge_ranges([(int(c), int(c) + 1) for c in cover])
-    pred = None
-    for lo, hi in ranges:
-        p = (F.col(cell_col) >= lo) & (F.col(cell_col) < hi)
-        pred = p if pred is None else (pred | p)
-    return F.lit(False) if pred is None else pred
+    if not ranges:
+        return F.lit(False)
+    return F.expr(" OR ".join(
+        f"({cell_col} >= {lo}L AND {cell_col} < {hi}L)" for lo, hi in ranges
+    ))
 
 
 def s2_convex_region_filter(
@@ -280,8 +281,9 @@ def s2_knn_join(
 
     The queries side is never collected (driver work per round is one
     count); the cover explode is Python per QUERY row (bounded by the
-    small queries side), never per point. ``points`` must not already
-    carry a ``cell_id`` column (the cover join binds that name).
+    small queries side), never per point; each row's cover is one short
+    numpy pass per level (s2cell's frontier). ``points`` must not
+    already carry a ``cell_id`` column (the cover join binds that name).
     Returns: q_id, point columns, dist (degrees), rank.
     """
     from pyspark.sql.window import Window

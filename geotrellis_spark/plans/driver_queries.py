@@ -1261,7 +1261,7 @@ def q_s2_prune(spark, sf_dir) -> DataFrame:
     missing rows and a red hash."""
     from ..operators import spatial
 
-    pts = _events_pts(spark, sf_dir, spread=True)
+    pts = _events_pts(spark, sf_dir)
     keyed = spatial.s2_assign(pts, "lon", "lat", 8)
     out = spatial.s2_range_filter(keyed, 8, *_S2P_BOX)
     return out.select("event_id", "lon", "lat")
@@ -1291,7 +1291,7 @@ def q_s2_radius(spark, sf_dir) -> DataFrame:
     min|d - r| = 0.018 deg >> cross-engine trig ulp noise."""
     from ..operators import spatial
 
-    pts = _events_pts(spark, sf_dir, spread=True)
+    pts = _events_pts(spark, sf_dir)
     keyed = spatial.s2_assign(pts, "lon", "lat", 6)
     out = spatial.s2_radius_filter(keyed, 6, *_S2R_CAP)
     return out.select("event_id", "lon", "lat")
@@ -1319,7 +1319,8 @@ _S2REG_RING = [
 
 def q_s2_region(spark, sf_dir) -> DataFrame:
     """Q1 convex-region variant on the sphere: polygon cell cover
-    (s2_cover_polygon, exact box-vs-polygon refinement test) -> merged
+    (s2_cover_polygon: each level's cell boxes tested exactly against
+    the ring by geom.polygons_intersect_batch) -> merged
     range prune -> half-plane refine in pure IEEE multiply/subtract
     (codegen; bit-identical in DuckDB — no float margin needed, unlike
     trig refines). Cover under-coverage surfaces as missing rows."""

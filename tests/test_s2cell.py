@@ -426,3 +426,163 @@ def test_spark_s2_convex_region_equals_brute(spark):
             np.array([(0.0, 0.0), (10.0, 0.0), (5.0, 4.0),
                       (10.0, 10.0), (0.0, 10.0)]),
         )
+
+
+# ------------------------------------------------ frozen cover reference
+# The per-cell stack walks the level-by-level frontier replaced, kept
+# verbatim (module helpers qualified with ``s2.``) so the frontier is
+# checked against an independent copy of the old arithmetic, not
+# against its own box kernel.
+
+def _ref_cell_lonlat_box(cell: int, level: int, samples: int = 9):
+    n = 1 << level
+    fa, ia, ja = s2.s2_decode(np.array([cell], dtype=np.int64), level)
+    face, i, j = int(fa[0]), int(ia[0]), int(ja[0])
+    t = np.linspace(0.0, 1.0, samples)
+    per = np.concatenate([
+        np.stack([i + t, np.full_like(t, float(j))], 1),
+        np.stack([np.full_like(t, i + 1.0), j + t], 1),
+        np.stack([i + 1.0 - t, np.full_like(t, j + 1.0)], 1),
+        np.stack([np.full_like(t, float(i)), j + 1.0 - t], 1),
+    ])
+    u = s2._s_to_u(per[:, 0] / n)
+    v = s2._s_to_u(per[:, 1] / n)
+    x, y, z = s2._uv_from_face(np.full(len(per), face, np.int64), u, v)
+    lon = np.degrees(np.arctan2(y, x))
+    lat = np.degrees(np.arctan2(z, np.hypot(x, y)))
+    # dilation: max angular step between neighboring samples
+    dlat = np.abs(np.diff(lat)).max()
+    dlon = np.abs((np.diff(lon) + 180.0) % 360.0 - 180.0).max()
+    pad = float(max(dlat, dlon))
+    # a cell containing a pole (the (s,t)=(0.5,0.5) point of face 2 or
+    # 5) spans every longitude; its boundary lats bound the other edge
+    if face in (2, 5) and i <= n / 2 <= i + 1 and j <= n / 2 <= j + 1:
+        if face == 2:
+            return -180.0, float(lat.min()) - pad, 180.0, 90.0
+        return -180.0, -90.0, 180.0, float(lat.max()) + pad
+    if np.abs(np.diff(lon)).max() > 180.0:  # crosses the antimeridian:
+        # express lons in [0, 360) — the caller's +/-360 shifts match
+        lonw = np.where(lon < 0.0, lon + 360.0, lon)
+        return (
+            float(lonw.min()) - pad, float(lat.min()) - pad,
+            float(lonw.max()) + pad, float(lat.max()) + pad,
+        )
+    return (
+        float(lon.min()) - pad, float(lat.min()) - pad,
+        float(lon.max()) + pad, float(lat.max()) + pad,
+    )
+
+
+def _ref_s2_cover(bbox, level):
+    lon0, lat0, lon1, lat1 = (float(v) for v in bbox)
+    if lon0 > lon1:
+        raise ValueError("antimeridian-wrapping bbox: split it first")
+    out: list[int] = []
+    stack: list[tuple[int, int]] = [(f, 0) for f in range(6)]
+    while stack:
+        cell, lvl = stack.pop()
+        cx0, cy0, cx1, cy1 = _ref_cell_lonlat_box(cell, lvl)
+        # lon overlap with 360-wrap candidates
+        lon_hit = any(
+            cx0 + s <= lon1 and cx1 + s >= lon0
+            for s in (-360.0, 0.0, 360.0)
+        )
+        if not (lon_hit and cy0 <= lat1 and cy1 >= lat0):
+            continue
+        if lvl == level:
+            out.append(int(cell))
+        else:
+            stack.extend(
+                (cell * 4 + k, lvl + 1) for k in range(4)
+            )
+    return np.array(sorted(out), dtype=np.int64)
+
+
+def _ref_s2_cover_polygon(ring, level):
+    from geotrellis_spark.core import geom as G
+
+    ext = np.asarray(ring, dtype=np.float64)
+    if not np.array_equal(ext[0], ext[-1]):
+        ext = np.vstack([ext, ext[:1]])
+    poly_wkb = G.wkb_write_polygon([ext])
+    px0, py0 = ext.min(axis=0)
+    px1, py1 = ext.max(axis=0)
+    out: list[int] = []
+    stack: list[tuple[int, int]] = [(f, 0) for f in range(6)]
+    while stack:
+        cell, lvl = stack.pop()
+        cx0, cy0, cx1, cy1 = _ref_cell_lonlat_box(cell, lvl)
+        hit = False
+        for s in (-360.0, 0.0, 360.0):
+            if cx0 + s > px1 or cx1 + s < px0 or cy0 > py1 or cy1 < py0:
+                continue
+            box = np.array([
+                [cx0 + s, cy0], [cx1 + s, cy0],
+                [cx1 + s, cy1], [cx0 + s, cy1], [cx0 + s, cy0],
+            ])
+            if G.polygons_intersect(
+                G.wkb_write_polygon([box]), poly_wkb
+            ):
+                hit = True
+                break
+        if not hit:
+            continue
+        if lvl == level:
+            out.append(int(cell))
+        else:
+            stack.extend((cell * 4 + k, lvl + 1) for k in range(4))
+    return np.array(sorted(out), dtype=np.int64)
+
+
+def _ref_s2_cover_cap(lon, lat, radius_deg, level):
+    lon, lat = float(lon), float(lat)
+    out: list[int] = []
+    stack: list[tuple[int, int]] = [(f, 0) for f in range(6)]
+    while stack:
+        cell, lvl = stack.pop()
+        cx0, cy0, cx1, cy1 = _ref_cell_lonlat_box(cell, lvl)
+        # clamp with the +-360 lon candidates (boxes may be in [0,360))
+        best = None
+        for s in (-360.0, 0.0, 360.0):
+            cl = min(max(lon, cx0 + s), cx1 + s)
+            cp = min(max(lat, cy0), cy1)
+            d = float(s2.angular_distance(lon, lat, cl, cp))
+            best = d if best is None else min(best, d)
+        diag = float(np.hypot(cx1 - cx0, cy1 - cy0))
+        if best > radius_deg + diag:
+            continue
+        if lvl == level:
+            out.append(int(cell))
+        else:
+            stack.extend((cell * 4 + k, lvl + 1) for k in range(4))
+    return np.array(sorted(out), dtype=np.int64)
+
+
+_NEAR_AM_QUAD = [(172.0, -8.0), (179.5, -6.0), (179.0, 4.0), (170.0, 2.0)]
+
+
+@pytest.mark.parametrize("kind,args,level", [
+    ("box", ((-10.0, 40.0, 25.0, 60.0),), 8),        # s2_prune's box
+    ("box", ((-179.0, -85.0, 179.0, 85.0),), 4),     # near-global
+    ("box", ((-70.0, -50.0, -40.0, -20.0),), 7),     # southern
+    ("box", ((-180.0, 85.0, 180.0, 90.0),), 9),      # north pole
+    ("box", ((-120.0, -89.9, -60.0, -80.0),), 8),    # south polar
+    ("cap", (-170.0, 10.0, 25.0), 6),                # s2_radius's cap
+    ("cap", (0.0, 89.5, 2.0), 8),                    # contains the pole
+    ("cap", (-60.0, 0.0, 40.0), 5),                  # 40-degree cap
+    ("cap", (100.0, -30.0, 4.0), 6),                 # s2_knn first round
+    ("cap", (100.0, -30.0, 64.0), 6),                # s2_knn last round
+    ("polygon", (_hexring(),), 7),                   # s2_region's ring
+    ("polygon", (_hexring(),), 4),
+    ("polygon", (np.array(_NEAR_AM_QUAD),), 6),      # near-antimeridian
+])
+def test_frontier_cover_equals_stack_walk_reference(kind, args, level):
+    """The level-by-level frontier returns exactly the cells (same ids,
+    same sorted order) of the per-cell stack walk it replaced."""
+    new, ref = {
+        "box": (s2.s2_cover, _ref_s2_cover),
+        "cap": (s2.s2_cover_cap, _ref_s2_cover_cap),
+        "polygon": (s2.s2_cover_polygon, _ref_s2_cover_polygon),
+    }[kind]
+    got, want = new(*args, level), ref(*args, level)
+    assert len(want) and np.array_equal(got, want)
