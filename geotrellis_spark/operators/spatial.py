@@ -53,11 +53,6 @@ from ..session import local_df
 MAX_BROADCAST_POLYS = 100_000
 MAX_BROADCAST_CELLS = 4_000_000
 
-# s2_knn_join's cap search: first cap radius (doubling per round) and
-# rounds before the brute-force fallback.
-S2_KNN_R0_DEG = 4.0
-S2_KNN_MAX_ROUNDS = 5
-
 
 def assign_cells(
     df: DataFrame,
@@ -173,16 +168,17 @@ def s2_radius_filter(
 
 
 def _cell_ranges_pred(cover, cell_col: str):
-    """Merged contiguous [lo, hi) id ranges of a cell cover as one
+    """Merged contiguous [lo, hi] id ranges of a cell cover as one
     codegen'd OR-of-BETWEEN Column (shared by every S2 prune path),
     built as one SQL expression: one parse instead of a Column-API
-    round trip per range. An empty cover yields literal false —
-    nothing can match — rather than a None predicate."""
-    ranges = sfc.merge_ranges([(int(c), int(c) + 1) for c in cover])
+    round trip per range. The ranges admit exactly the cover's ids. An
+    empty cover yields literal false — nothing can match — rather than
+    a None predicate."""
+    ranges = sfc.merge_ranges([(int(c), int(c)) for c in cover])
     if not ranges:
         return F.lit(False)
     return F.expr(" OR ".join(
-        f"({cell_col} >= {lo}L AND {cell_col} < {hi}L)" for lo, hi in ranges
+        f"{cell_col} BETWEEN {lo}L AND {hi}L" for lo, hi in ranges
     ))
 
 
@@ -261,130 +257,92 @@ def s2_knn_join(
     cell_col: str = "s2_cell",
 ) -> DataFrame:
     """Exact k-nearest-neighbors ON THE SPHERE (haversine angular
-    distance) — the J4 operator re-expressed with S2 cap covers, which
-    makes it correct at the poles and across the antimeridian where
-    the planar ``knn_join``'s degree metric and grid rings are wrong.
+    distance, ties broken by the point's first id column) as ONE lazy
+    plan: the J4 operator on S2 cells, correct at the poles and across
+    the antimeridian where the planar ``knn_join``'s degree metric and
+    grid rings are wrong. Building it runs no Spark job.
 
-    Per round the cap radius doubles (``S2_KNN_R0_DEG``, twice that,
-    ...): every pending query's conservative cap cover at ``level`` is
-    generated by ONE distributed mapInPandas explode, joined to the
-    S2-keyed points in ONE broadcast equi-join on the cell id, and
-    ranked by ONE window.
-    Stopping rule: the cover is a SUPERSET of the cap, so once a query
-    holds k candidates with kth-distance <= r no point outside the cap
-    (all at distance > r) can displace them — exactness is a cover
-    property, not a metric approximation. Covers of successive rounds
-    overlap, so pending queries are re-covered fresh each round (no
-    union of disjoint rings); satisfied queries freeze their top-k and
-    leave the loop. Queries still pending after ``S2_KNN_MAX_ROUNDS``
-    fall back to one brute-force pass — exactness is unconditional.
+    - Boxes: points and queries become unit vectors (x, y, z), in SQL.
+      One groupBy on the S2 cell gives each non-empty cell its point
+      count and the R^3 bounding box of its own points.
+    - Bound per query q: dmin = sqrt(sum greatest(lo - q, 0, q - hi)^2)
+      is the chord from q to a cell's box, dmax = sqrt(sum
+      greatest(|q - lo|, |q - hi|)^2) the chord to its farthest corner.
+      R is the smallest dmax at which the running count over cells in
+      dmax order reaches k. Those cells hold k points within chord R
+      of q, so the k-th nearest is within R; a point within R lies in a
+      box with dmin <= R. Chord length grows with angle, so the cells
+      with dmin <= R hold the k haversine-nearest points and every tie
+      at the k-th distance. A query with no R (fewer than k points)
+      takes every cell.
+    - Candidates: those cells join the points in ONE broadcast
+      equi-join on the cell column; one window ranks.
 
-    The queries side is never collected (driver work per round is one
-    count); the cover explode is Python per QUERY row (bounded by the
-    small queries side), never per point; each row's cover is one short
-    numpy pass per level (s2cell's frontier). ``points`` must not
-    already carry a ``cell_id`` column (the cover join binds that name).
+    The one size bound is the box-by-query table: queries x non-empty
+    cells (at most 6 * 4^level) rows. The only Python is s2_assign's
+    cell id over the points.
     Returns: q_id, point columns, dist (degrees), rank.
     """
-    from pyspark.sql.window import Window
-
-    from ..core import s2cell
-
-    # pinned for the rounds; not .cache(), which a later plan over the
-    # same (rewritten) path would hit (see knn_join)
+    # read twice (boxes, candidates): pinned, not .cache() (see knn_join)
     points = s2_assign(points, lon_col, lat_col, level,
                        out_col=cell_col).localCheckpoint(eager=False)
     if point_cols is None:
         point_cols = tuple(
             c for c in points.columns if c != cell_col
         )
-    tie_col = point_cols[0]
 
-    qk = queries.select(
-        F.col(q_id_col).alias("q_id"),
-        F.col(q_lon_col).alias("q_lon"),
-        F.col(q_lat_col).alias("q_lat"),
-    )
-    qid_type = qk.schema["q_id"].dataType.simpleString()
-    cov_schema = (
-        f"q_id {qid_type}, q_lon double, q_lat double, cell_id long"
-    )
-    pending = qk.localCheckpoint(eager=False)
+    def xyz(lon: str, lat: str) -> dict[str, str]:
+        clat = f"cos(radians(`{lat}`))"
+        return {
+            "x": f"{clat} * cos(radians(`{lon}`))",
+            "y": f"{clat} * sin(radians(`{lon}`))",
+            "z": f"sin(radians(`{lat}`))",
+        }
 
+    boxes = points.groupBy(cell_col).agg(F.expr("count(*) AS n"), *(
+        F.expr(f"{agg}({e}) AS {side}_{a}")
+        for a, e in xyz(lon_col, lat_col).items()
+        for agg, side in (("min", "lo"), ("max", "hi"))
+    ))
+    qk = queries.selectExpr(
+        f"`{q_id_col}` AS q_id", f"`{q_lon_col}` AS q_lon",
+        f"`{q_lat_col}` AS q_lat",
+        *(f"{e} AS q_{a}" for a, e in xyz(q_lon_col, q_lat_col).items()),
+    )
+    gap = " + ".join(
+        f"pow(greatest(lo_{a} - q_{a}, 0D, q_{a} - hi_{a}), 2)" for a in "xyz"
+    )
+    far = " + ".join(
+        f"pow(greatest(abs(q_{a} - lo_{a}), abs(q_{a} - hi_{a})), 2)"
+        for a in "xyz"
+    )
+    cells = (
+        boxes.crossJoin(F.broadcast(qk))
+        .selectExpr("q_id", "q_lon", "q_lat", cell_col, "n",
+                    f"sqrt({gap}) AS dmin", f"sqrt({far}) AS dmax")
+        .withColumn("cum", F.expr(
+            "sum(n) OVER (PARTITION BY q_id ORDER BY dmax)"
+        ))
+        .withColumn("r", F.expr(
+            f"min(CASE WHEN cum >= {k} THEN dmax END) OVER (PARTITION BY q_id)"
+        ))
+        # slack: boxes, chords and haversines each round off by a few
+        # ulps (~1e-16 on a unit chord), so a point the ranking puts at
+        # or before the k-th lies at most ~1e-15 past r; 1e-12 covers it
+        .where("r IS NULL OR dmin <= r + 1e-12")
+        .select("q_id", "q_lon", "q_lat", cell_col)
+    )
     dist = haversine_deg(
         F.col("q_lon"), F.col("q_lat"), F.col(lon_col), F.col(lat_col)
     )
-    win = Window.partitionBy("q_id").orderBy(
-        F.col("dist").asc(), F.col(tie_col).asc()
+    return (
+        points.join(F.broadcast(cells), cell_col)
+        .select("q_id", *point_cols, dist.alias("dist"))
+        .withColumn("rank", F.expr(
+            f"row_number() OVER (PARTITION BY q_id ORDER BY dist, `{point_cols[0]}`)"
+        ))
+        .where(f"rank <= {k}")
     )
-
-    def cap_cells(df: DataFrame, radius: float) -> DataFrame:
-        def gen(batches):
-            for pdf in batches:
-                for i in range(len(pdf)):
-                    cells = s2cell.s2_cover_cap(
-                        float(pdf["q_lon"].iloc[i]),
-                        float(pdf["q_lat"].iloc[i]),
-                        radius, level,
-                    )
-                    out = pdf.iloc[[i] * len(cells)].reset_index(
-                        drop=True
-                    )[["q_id", "q_lon", "q_lat"]]
-                    out["cell_id"] = cells
-                    yield out
-
-        return df.mapInPandas(gen, cov_schema)
-
-    results = None
-    n_pending = pending.count()
-    for t in range(S2_KNN_MAX_ROUNDS):
-        if n_pending == 0:
-            break
-        r = S2_KNN_R0_DEG * (2.0 ** t)
-        cand = points.join(
-            F.broadcast(cap_cells(pending, r)),
-            points[cell_col] == F.col("cell_id"),
-        )
-        ranked = (
-            cand.select("q_id", *point_cols, dist.alias("dist"))
-            .withColumn("rank", F.row_number().over(win))
-            .where(F.col("rank") <= k)
-            .localCheckpoint(eager=False)
-        )
-        stats = ranked.groupBy("q_id").agg(
-            F.count("*").alias("cnt"), F.max("dist").alias("kth")
-        )
-        done = stats.where(
-            (F.col("cnt") >= k) & (F.col("kth") <= r)
-        ).select("q_id")
-        frozen = ranked.join(done, "q_id")
-        results = (
-            frozen if results is None else results.unionByName(frozen)
-        ).localCheckpoint(eager=False)
-        pending = pending.join(done, "q_id", "left_anti").localCheckpoint(
-            eager=False
-        )
-        n_pending = pending.count()
-
-    if n_pending > 0:
-        brute = (
-            points.crossJoin(F.broadcast(pending))
-            .select("q_id", *point_cols, dist.alias("dist"))
-            .withColumn("rank", F.row_number().over(win))
-            .where(F.col("rank") <= k)
-        )
-        results = (
-            brute if results is None else results.unionByName(brute)
-        )
-    if results is None:  # empty queries side
-        spark = points.sparkSession
-        types = {f.name: f.dataType.simpleString()
-                 for f in points.schema.fields}
-        fields = ", ".join(f"`{c}` {types[c]}" for c in point_cols)
-        return local_df(
-            spark, [], f"q_id {qid_type}, {fields}, dist double, rank int"
-        )
-    return results.select("q_id", *point_cols, "dist", "rank")
 
 
 def _key_rect(zoom: int, bb) -> tuple[np.ndarray, ...]:

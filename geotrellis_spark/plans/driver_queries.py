@@ -422,9 +422,10 @@ def sql_knn() -> str:
 
 
 def q_s2_knn(spark, sf_dir) -> DataFrame:
-    """J4 on the sphere: exact haversine kNN via doubling S2 cap
-    covers (spatial.s2_knn_join) — correct at poles and across the
-    antimeridian where the planar grid-ring kNN is not. Oracle: the
+    """J4 on the sphere: exact haversine kNN whose candidate S2 cells
+    come from per-cell xyz boxes and counts (spatial.s2_knn_join) —
+    correct at poles and across the antimeridian where the planar
+    grid-ring kNN is not. Oracle: the
     brute-force haversine top-k window. sf0.01 margin: the minimum
     consecutive-rank distance gap is 4.8e-3 deg, so cross-engine trig
     ulp noise cannot flip a rank."""
@@ -2288,7 +2289,7 @@ QUERIES = {
     # group_percentiles/funnel/hll_sketch share retention/
     # countmin's cohort/sketch agg shapes; poly_stats' WKB path is
     # exercised by vector_join; simhash_neardup's band machinery by
-    # phash_neardup/crossmodal_dedup; s2_knn's doubling-cover rounds
+    # phash_neardup/crossmodal_dedup; s2_knn's count-bounded cell plan
     # by knn (planar twin) + pytest; rolling_window by sessionize's
     # window chain; bpe_pair_stats/rep_filter/unigram_surprisal/
     # pii_scrub/contamination/lang_id/quality_score are narrow text

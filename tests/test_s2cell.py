@@ -189,6 +189,18 @@ def test_spark_s2_range_filter_prune_equals_brute(spark):
         keyed.unpersist()
 
 
+def test_cell_ranges_pred_admits_exactly_the_cover(spark):
+    """The merged ranges of s2_prune's level-8 box cover admit the
+    cover's ids and no other: every level-8 id goes through the
+    predicate."""
+    from geotrellis_spark.operators import spatial
+
+    cover = s2.s2_cover((-10.0, 40.0, 25.0, 60.0), 8)
+    ids = spark.range(6 * 4 ** 8).withColumnRenamed("id", "s2_cell")
+    got = ids.where(spatial._cell_ranges_pred(cover, "s2_cell"))
+    assert sorted(r[0] for r in got.collect()) == cover.tolist()
+
+
 @pytest.mark.parametrize("cap", [
     (10.0, 50.0, 3.0),      # mid-latitude small cap
     (0.0, 89.5, 2.0),       # cap containing the north pole
@@ -251,9 +263,10 @@ def _brute_knn(qlon, qlat, lon, lat, ids, k):
 
 
 def test_spark_s2_knn_pole_and_antimeridian(spark):
-    """s2_knn_join is exact where the planar metric breaks: query at
-    the north pole (every direction is 'south') and on the
-    antimeridian (nearest neighbors straddle the lon=+-180 seam)."""
+    """s2_knn_join is exact where the planar metric breaks: queries at
+    both poles (every direction is 'south', or 'north') and on the
+    antimeridian (nearest neighbors straddle the lon=+-180 seam), and a
+    query on a point with exact duplicates (ties broken by pid)."""
     from geotrellis_spark.operators import spatial
 
     rng = np.random.default_rng(21)
@@ -265,12 +278,16 @@ def test_spark_s2_knn_pole_and_antimeridian(spark):
     lon[20:40] = rng.uniform(-180.0, -179.0, 20)
     lat[20:40] = rng.uniform(-25.0, -15.0, 20)
     lat[40:60] = rng.uniform(88.0, 90.0, 20)
+    lat[60:80] = rng.uniform(-90.0, -88.0, 20)
+    # 12 copies of one point, more than k: the k-set is a pid tie-break
+    lon[80:92], lat[80:92] = 33.3, 44.4
     ids = np.arange(3000)
     pts = spark.createDataFrame(
         [(int(i), float(lon[i]), float(lat[i])) for i in ids],
         "pid long, lon double, lat double",
     )
-    queries = [(0, 179.9, -20.0), (1, 0.0, 90.0), (2, -179.95, -20.5)]
+    queries = [(0, 179.9, -20.0), (1, 0.0, 90.0), (2, -179.95, -20.5),
+               (3, 10.0, -90.0), (4, 33.3, 44.4)]
     qdf = spark.createDataFrame(
         queries, "q_id long, q_lon double, q_lat double"
     )
@@ -284,35 +301,48 @@ def test_spark_s2_knn_pole_and_antimeridian(spark):
     for qid, qlon, qlat in queries:
         want = _brute_knn(qlon, qlat, lon, lat, ids, 7)
         assert [p for _, p in sorted(got[qid])] == want
+    assert [p for _, p in sorted(got[4])] == list(range(80, 87))
     # the antimeridian query's k-set must straddle the seam: both
     # lon signs present (this is exactly what planar rings miss)
     seam = [p for _, p in sorted(got[0])]
     assert any(lon[p] > 0 for p in seam) and any(lon[p] < 0 for p in seam)
 
 
-def test_spark_s2_knn_brute_fallback_path(spark, monkeypatch):
-    """Zero cap rounds force every query through the brute-force
-    fallback — same exact answer."""
+def test_spark_s2_knn_k_over_n_and_empty_queries(spark):
+    """k above the point count makes every cell a candidate: each query
+    gets every point, in haversine order. An empty queries side gives
+    zero rows with the usual schema."""
     from geotrellis_spark.operators import spatial
 
-    monkeypatch.setattr(spatial, "S2_KNN_MAX_ROUNDS", 0)
     rng = np.random.default_rng(22)
-    lon = rng.uniform(-180.0, 180.0, 400)
-    lat = np.degrees(np.arcsin(rng.uniform(-1.0, 1.0, 400)))
-    ids = np.arange(400)
+    lon = rng.uniform(-180.0, 180.0, 40)
+    lat = np.degrees(np.arcsin(rng.uniform(-1.0, 1.0, 40)))
+    ids = np.arange(40)
     pts = spark.createDataFrame(
         [(int(i), float(lon[i]), float(lat[i])) for i in ids],
         "pid long, lon double, lat double",
     )
+    queries = [(0, 10.0, 50.0), (1, -170.0, -60.0)]
     qdf = spark.createDataFrame(
-        [(0, 10.0, 50.0)], "q_id long, q_lon double, q_lat double"
+        queries, "q_id long, q_lon double, q_lat double"
     )
     out = spatial.s2_knn_join(
-        pts, qdf, k=5, level=5,
-        point_cols=("pid", "lon", "lat"),
-    ).collect()
-    want = _brute_knn(10.0, 50.0, lon, lat, ids, 5)
-    assert [r["pid"] for r in sorted(out, key=lambda r: r["rank"])] == want
+        pts, qdf, k=60, level=5, point_cols=("pid", "lon", "lat"),
+    )
+    rows = out.collect()
+    for qid, qlon, qlat in queries:
+        got = [r["pid"] for r in sorted(
+            (r for r in rows if r["q_id"] == qid), key=lambda r: r["rank"]
+        )]
+        assert got == _brute_knn(qlon, qlat, lon, lat, ids, 60)
+        assert len(got) == 40
+
+    empty = spatial.s2_knn_join(
+        pts, qdf.limit(0), k=5, level=5, point_cols=("pid", "lon", "lat"),
+    )
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == out.schema.simpleString()
+    assert empty.columns == ["q_id", "pid", "lon", "lat", "dist", "rank"]
 
 
 def test_s2_store_prune_layers_and_equality(spark, tmp_path):
@@ -570,8 +600,8 @@ _NEAR_AM_QUAD = [(172.0, -8.0), (179.5, -6.0), (179.0, 4.0), (170.0, 2.0)]
     ("cap", (-170.0, 10.0, 25.0), 6),                # s2_radius's cap
     ("cap", (0.0, 89.5, 2.0), 8),                    # contains the pole
     ("cap", (-60.0, 0.0, 40.0), 5),                  # 40-degree cap
-    ("cap", (100.0, -30.0, 4.0), 6),                 # s2_knn first round
-    ("cap", (100.0, -30.0, 64.0), 6),                # s2_knn last round
+    ("cap", (100.0, -30.0, 4.0), 6),                 # small cap
+    ("cap", (100.0, -30.0, 64.0), 6),                # 64-degree cap
     ("polygon", (_hexring(),), 7),                   # s2_region's ring
     ("polygon", (_hexring(),), 4),
     ("polygon", (np.array(_NEAR_AM_QUAD),), 6),      # near-antimeridian

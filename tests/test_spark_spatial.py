@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 
 from geotrellis_spark.core import geom as G
+from geotrellis_spark.core import s2cell
 from geotrellis_spark.core import sfc
 from geotrellis_spark.functions import exprs
 from geotrellis_spark.operators import spatial
@@ -265,23 +266,34 @@ def test_knn_matches_brute_force(spark, fixture):
     assert got == sorted(want)
 
 
-def test_knn_join_builds_without_a_job(spark, points_df):
-    """knn_join only builds a plan: no count, collect or checkpoint
-    runs until the caller's action."""
+# (operator, its cell-level keyword, the metric it ranks by)
+KNN_OPERATORS = {
+    "knn_join": (spatial.knn_join, "zoom",
+                 lambda qx, qy, lon, lat: np.hypot(lon - qx, lat - qy)),
+    "s2_knn_join": (spatial.s2_knn_join, "level", s2cell.angular_distance),
+}
+
+
+@pytest.mark.parametrize("op", sorted(KNN_OPERATORS))
+def test_knn_join_builds_without_a_job(spark, points_df, op):
+    """The kNN operators only build a plan: no count, collect or
+    checkpoint runs until the caller's action."""
+    fn, level_kw, _ = KNN_OPERATORS[op]
     qdf = spark.range(30).selectExpr(
         "id as q_id",
         f"{exprs.lon_sql('(id + 3) * 41')} as q_lon",
         f"{exprs.lat_sql('(id + 7) * 59')} as q_lat",
     )
     sc = spark.sparkContext
-    sc.setJobGroup("knn_build", "knn_join build")
+    group = f"{op}_build"  # the tracker keeps a group's jobs: one per op
+    sc.setJobGroup(group, f"{op} build")
     try:
-        out = spatial.knn_join(
-            points_df, qdf, k=3, zoom=5, point_cols=("id", "lon", "lat"),
+        out = fn(
+            points_df, qdf, k=3, point_cols=("id", "lon", "lat"), **{level_kw: 5},
         )
-        built = list(sc.statusTracker().getJobIdsForGroup("knn_build"))
+        built = list(sc.statusTracker().getJobIdsForGroup(group))
         assert out.count() == 30 * 3
-        ran = list(sc.statusTracker().getJobIdsForGroup("knn_build"))
+        ran = list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -289,14 +301,16 @@ def test_knn_join_builds_without_a_job(spark, points_df):
     assert ran  # the tracker does see this group's jobs
 
 
-def test_knn_join_reads_a_rewritten_file(spark, tmp_path):
-    """A second knn_join over a Parquet file that was rewritten (outside
+@pytest.mark.parametrize("op", sorted(KNN_OPERATORS))
+def test_knn_join_reads_a_rewritten_file(spark, tmp_path, op):
+    """A second kNN join over a Parquet file that was rewritten (outside
     Spark, which would have refreshed its cache) with other points
     returns the new file's neighbours, not rows a session cache kept
     from the first call."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    fn, level_kw, metric = KNN_OPERATORS[op]
     path = str(tmp_path / "pts.parquet")
     queries = [(10.0, 20.0), (-70.0, -15.0), (120.0, 40.0)]
     qdf = local_df(
@@ -309,14 +323,14 @@ def test_knn_join_reads_a_rewritten_file(spark, tmp_path):
         pq.write_table(pa.table({
             "id": np.arange(len(pts)), "lon": pts[:, 0], "lat": pts[:, 1],
         }), path)
-        out = spatial.knn_join(
-            spark.read.parquet(path), qdf, k=3, zoom=3,
-            point_cols=("id", "lon", "lat"),
+        out = fn(
+            spark.read.parquet(path), qdf, k=3,
+            point_cols=("id", "lon", "lat"), **{level_kw: 3},
         )
         got = sorted((r["q_id"], r["rank"], r["id"]) for r in out.collect())
         want = []
         for qid, (qx, qy) in enumerate(queries):
-            d = np.hypot(pts[:, 0] - qx, pts[:, 1] - qy)
+            d = metric(qx, qy, pts[:, 0], pts[:, 1])
             order = np.lexsort((np.arange(len(pts)), d))[:3]
             want += [(qid, rank, int(i)) for rank, i in enumerate(order, start=1)]
         assert got == sorted(want)
