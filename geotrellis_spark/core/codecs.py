@@ -38,6 +38,8 @@ __all__ = [
 ]
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
+# zlib level of the PNG encoders' IDAT stream
+PNG_ZLIB_LEVEL = 6
 
 
 def _chunk(tag: bytes, data: bytes) -> bytes:
@@ -49,7 +51,7 @@ def _chunk(tag: bytes, data: bytes) -> bytes:
     )
 
 
-def png_encode_gray(arr: np.ndarray, level: int = 6) -> bytes:
+def png_encode_gray(arr: np.ndarray) -> bytes:
     """Encode a 2-D uint8/uint16 array as grayscale PNG (filter 0)."""
     arr = np.asarray(arr)
     if arr.ndim != 2:
@@ -70,12 +72,12 @@ def png_encode_gray(arr: np.ndarray, level: int = 6) -> bytes:
     return (
         _PNG_SIG
         + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(scanlines, level))
+        + _chunk(b"IDAT", zlib.compress(scanlines, PNG_ZLIB_LEVEL))
         + _chunk(b"IEND", b"")
     )
 
 
-def png_encode_rgba(arr: np.ndarray, level: int = 6) -> bytes:
+def png_encode_rgba(arr: np.ndarray) -> bytes:
     """Encode an (h, w, 4) uint8 array as 8-bit RGBA PNG (color type 6,
     filter 0) — the render sink's output format (renderPng role)."""
     arr = np.asarray(arr)
@@ -91,7 +93,7 @@ def png_encode_rgba(arr: np.ndarray, level: int = 6) -> bytes:
     return (
         _PNG_SIG
         + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(scanlines, level))
+        + _chunk(b"IDAT", zlib.compress(scanlines, PNG_ZLIB_LEVEL))
         + _chunk(b"IEND", b"")
     )
 

@@ -5,20 +5,16 @@ Covers the subset of GeoTrellis's vector surface the engine needs
 geotrellis/vector/{Geometry,Extent}.scala``, ``io/wkb/WKB.scala``,
 ``methods/`` predicate sugar; the heavy lifting upstream is JTS):
 
-- WKB read/write for Point / LineString / Polygon / MultiPolygon
-  (little-endian, the public OGC spec).
+- WKB polygon write, and WKB read of Point / LineString / Polygon /
+  MultiPoint / MultiLineString / MultiPolygon (little-endian, the
+  public OGC spec).
 - ``points_in_polygon`` — vectorized even-odd ray casting of a point
   batch against one polygon (with holes). Edge convention matches the
   classic crossing rule GeoTrellis inherits from JTS for cell-center
   tests: a point exactly on a horizontal edge is handled by the
   half-open (ymin, ymax] crossing test (boundary points fall SOUTH,
   matching the floor((90-lat)/180*n) key-row convention).
-- ``clip_polygon_to_rect`` — Sutherland–Hodgman rectangle clip
-  (ClipToGrid's per-cell clip, ``spark/.../clip/ClipToGrid.scala``).
-- bbox / shoelace area, polygon-pair intersection tests, and WKT /
-  GeoJSON text I/O.
-- Douglas–Peucker simplification, affine transform and convex hull,
-  which no entry point calls yet.
+- bbox and polygon-pair intersection tests.
 """
 
 from __future__ import annotations
@@ -29,21 +25,13 @@ import numpy as np
 
 __all__ = [
     "wkb_write_polygon",
-    "wkb_write_point",
     "wkb_read",
     "points_in_polygon",
     "points_in_coded_polygons",
     "points_in_rings",
-    "clip_polygon_to_rect",
     "polygon_bbox",
-    "shoelace_area",
     "polygons_intersect",
     "polygons_intersect_batch",
-    "clip_ring_to_rects_batch",
-    "wkt_read",
-    "wkt_write",
-    "geojson_read",
-    "geojson_write",
 ]
 
 _GEOM_POINT = 1
@@ -52,10 +40,6 @@ _GEOM_POLYGON = 3
 _GEOM_MULTIPOINT = 4
 _GEOM_MULTILINESTRING = 5
 _GEOM_MULTIPOLYGON = 6
-
-
-def wkb_write_point(x: float, y: float) -> bytes:
-    return struct.pack("<BIdd", 1, _GEOM_POINT, x, y)
 
 
 def wkb_write_polygon(rings: list[np.ndarray]) -> bytes:
@@ -229,51 +213,6 @@ def _points_in_parsed(px, py, kind: str, payload) -> np.ndarray:
     raise ValueError(f"PIP needs polygonal geometry, got {kind}")
 
 
-def clip_polygon_to_rect(
-    ring: np.ndarray, xmin: float, ymin: float, xmax: float, ymax: float
-) -> np.ndarray | None:
-    """Sutherland–Hodgman clip of one (convex or concave) ring against an
-    axis-aligned rectangle. Returns the clipped ring (closed) or None."""
-    pts = np.asarray(ring, dtype=np.float64)
-    if np.array_equal(pts[0], pts[-1]):
-        pts = pts[:-1]
-
-    def clip_edge(poly: list, inside_fn, intersect_fn) -> list:
-        out = []
-        n = len(poly)
-        for i in range(n):
-            cur, nxt = poly[i], poly[(i + 1) % n]
-            cin, nin = inside_fn(cur), inside_fn(nxt)
-            if cin:
-                out.append(cur)
-                if not nin:
-                    out.append(intersect_fn(cur, nxt))
-            elif nin:
-                out.append(intersect_fn(cur, nxt))
-        return out
-
-    def ix(p, q, x):
-        t = (x - p[0]) / (q[0] - p[0])
-        return (x, p[1] + t * (q[1] - p[1]))
-
-    def iy(p, q, y):
-        t = (y - p[1]) / (q[1] - p[1])
-        return (p[0] + t * (q[0] - p[0]), y)
-
-    poly = [tuple(p) for p in pts]
-    for inside_fn, intersect_fn in (
-        (lambda p: p[0] >= xmin, lambda p, q: ix(p, q, xmin)),
-        (lambda p: p[0] <= xmax, lambda p, q: ix(p, q, xmax)),
-        (lambda p: p[1] >= ymin, lambda p, q: iy(p, q, ymin)),
-        (lambda p: p[1] <= ymax, lambda p, q: iy(p, q, ymax)),
-    ):
-        poly = clip_edge(poly, inside_fn, intersect_fn)
-        if not poly:
-            return None
-    arr = np.asarray(poly, dtype=np.float64)
-    return np.vstack([arr, arr[:1]])
-
-
 def polygon_bbox(wkb: bytes) -> tuple[float, float, float, float]:
     kind, payload = wkb_read(wkb)
     if kind == "polygon":
@@ -293,16 +232,6 @@ def polygon_bbox(wkb: bytes) -> tuple[float, float, float, float]:
         float(ext[:, 0].max()),
         float(ext[:, 1].max()),
     )
-
-
-def shoelace_area(ring: np.ndarray) -> float:
-    """Signed area (positive = counter-clockwise)."""
-    r = np.asarray(ring, dtype=np.float64)
-    if not np.array_equal(r[0], r[-1]):
-        r = np.vstack([r, r[:1]])
-    x, y = r[:-1, 0], r[:-1, 1]
-    x1, y1 = r[1:, 0], r[1:, 1]
-    return float(0.5 * np.sum(x * y1 - x1 * y))
 
 
 def _edges(ring: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -477,14 +406,11 @@ def polygons_intersect_batch(wa: list[bytes], wb: list[bytes]) -> np.ndarray:
         | (A[:, 3] < B[:, 1]) | (B[:, 3] < A[:, 1])
     )
 
-    def closed(r: np.ndarray) -> np.ndarray:
-        return r if np.array_equal(r[0], r[-1]) else np.vstack([r, r[:1]])
-
     simple_a = [
-        closed(p[0][0]) if len(p) == 1 and len(p[0]) == 1 else None for p in pa
+        _close(p[0][0]) if len(p) == 1 and len(p[0]) == 1 else None for p in pa
     ]
     simple_b = [
-        closed(p[0][0]) if len(p) == 1 and len(p[0]) == 1 else None for p in pb
+        _close(p[0][0]) if len(p) == 1 and len(p[0]) == 1 else None for p in pb
     ]
     classes: dict[tuple[int, int], list[int]] = {}
     scalar_rows: list[int] = []
@@ -535,338 +461,6 @@ def _factorize_bytes(ws: list[bytes]) -> tuple[np.ndarray, list[bytes]]:
     return codes, uniq
 
 
-def clip_ring_to_rects_batch(
-    ring: np.ndarray,
-    xmin: np.ndarray,
-    ymin: np.ndarray,
-    xmax: np.ndarray,
-    ymax: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Sutherland–Hodgman clip of ONE ring against k axis-aligned
-    rectangles in one vectorized pass (ClipToGrid's per-cell clip,
-    batched over the polygon's cover-cell list). Returns
-    ``(pts (k, maxv, 2), cnt (k,))`` — open rings; ``cnt == 0`` means
-    the ring vanished in that rect. Emission order matches the scalar
-    ``clip_polygon_to_rect`` exactly (cur, then crossing, per edge)."""
-    pts = np.asarray(ring, dtype=np.float64)
-    if np.array_equal(pts[0], pts[-1]):
-        pts = pts[:-1]
-    k = xmin.shape[0]
-    cur = np.broadcast_to(pts[None, :, :], (k, pts.shape[0], 2)).copy()
-    cnt = np.full(k, pts.shape[0], dtype=np.int64)
-    for bound, axis, keep_ge in (
-        (np.asarray(xmin, dtype=np.float64), 0, True),
-        (np.asarray(xmax, dtype=np.float64), 0, False),
-        (np.asarray(ymin, dtype=np.float64), 1, True),
-        (np.asarray(ymax, dtype=np.float64), 1, False),
-    ):
-        cur, cnt = _clip_halfplane_batch(cur, cnt, bound, axis, keep_ge)
-        if cur.shape[1] == 0:
-            break
-    return cur, cnt
-
-
-def _clip_halfplane_batch(pts, cnt, bound, axis, keep_ge):
-    k, mv, _ = pts.shape
-    ar = np.arange(mv)
-    valid = ar[None, :] < cnt[:, None]
-    nxt_idx = np.where(ar[None, :] + 1 < cnt[:, None], ar[None, :] + 1, 0)
-    nxt = np.take_along_axis(pts, nxt_idx[:, :, None], axis=1)
-    b = bound[:, None]
-    if keep_ge:
-        cin = pts[:, :, axis] >= b
-        nin = nxt[:, :, axis] >= b
-    else:
-        cin = pts[:, :, axis] <= b
-        nin = nxt[:, :, axis] <= b
-    denom = nxt[:, :, axis] - pts[:, :, axis]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = (b - pts[:, :, axis]) / np.where(denom != 0, denom, 1.0)
-    other = 1 - axis
-    ixpt = np.empty_like(pts)
-    ixpt[:, :, axis] = b
-    ixpt[:, :, other] = pts[:, :, other] + t * (
-        nxt[:, :, other] - pts[:, :, other]
-    )
-    emit0 = cin & valid                 # emit cur when inside
-    emit1 = (cin != nin) & valid        # emit crossing when sides differ
-    cand = np.stack([pts, ixpt], axis=2).reshape(k, 2 * mv, 2)
-    emit = np.stack([emit0, emit1], axis=2).reshape(k, 2 * mv)
-    new_cnt = emit.sum(axis=1)
-    out_m = int(new_cnt.max()) if k else 0
-    out = np.zeros((k, out_m, 2), dtype=np.float64)
-    rows, cols = np.nonzero(emit)
-    pos = np.cumsum(emit, axis=1) - 1
-    out[rows, pos[rows, cols]] = cand[rows, cols]
-    return out, new_cnt
-
-
-# ------------------------------------------------------- WKT / GeoJSON
-
-def wkt_write(wkb: bytes, prec: int = 12) -> str:
-    """WKB -> WKT (S8 vector interchange, ``vector/.../io/wkt`` role)."""
-    kind, payload = wkb_read(wkb)
-
-    def ring_s(r):
-        return "(" + ", ".join(f"{x:.{prec}g} {y:.{prec}g}" for x, y in r) + ")"
-
-    if kind == "point":
-        x, y = payload
-        return f"POINT ({x:.{prec}g} {y:.{prec}g})"
-    if kind == "linestring":
-        return "LINESTRING " + ring_s(payload)
-    if kind == "polygon":
-        return "POLYGON (" + ", ".join(ring_s(_close(r)) for r in payload) + ")"
-    if kind == "multipolygon":
-        return "MULTIPOLYGON (" + ", ".join(
-            "(" + ", ".join(ring_s(_close(r)) for r in rings) + ")"
-            for rings in payload
-        ) + ")"
-    raise ValueError(kind)
-
-
 def _close(r: np.ndarray) -> np.ndarray:
     r = np.asarray(r, dtype=np.float64)
     return r if np.array_equal(r[0], r[-1]) else np.vstack([r, r[:1]])
-
-
-def wkt_read(wkt: str) -> bytes:
-    """WKT -> WKB for POINT / LINESTRING / POLYGON / MULTIPOLYGON."""
-    s = wkt.strip()
-    head = s.split("(", 1)[0].strip().upper()
-
-    def parse_ring(txt: str) -> np.ndarray:
-        pts = [
-            [float(v) for v in pair.split()]
-            for pair in txt.strip().split(",")
-        ]
-        return np.asarray(pts, dtype=np.float64)
-
-    body = s[s.index("(") :]
-    if head == "POINT":
-        x, y = (float(v) for v in body.strip("() \t").split())
-        return wkb_write_point(x, y)
-    if head == "LINESTRING":
-        return wkb_write_linestring(parse_ring(body.strip("()")))
-    if head == "POLYGON":
-        rings = _split_groups(body)
-        return wkb_write_polygon([parse_ring(r) for r in rings])
-    if head == "MULTIPOLYGON":
-        import struct as _st
-
-        polys = [
-            [parse_ring(r) for r in _split_groups(f"({g})")]
-            for g in _split_groups(body)
-        ]
-        out = [_st.pack("<BII", 1, _GEOM_MULTIPOLYGON, len(polys))]
-        for rings in polys:
-            out.append(wkb_write_polygon(rings))
-        return b"".join(out)
-    raise ValueError(f"unsupported WKT type {head}")
-
-
-def _split_groups(txt: str) -> list[str]:
-    """Split '(a), (b), ...' (one nesting level) into ['a', 'b', ...]."""
-    txt = txt.strip()
-    assert txt[0] == "(" and txt[-1] == ")"
-    txt = txt[1:-1]
-    groups, depth, start = [], 0, None
-    for i, ch in enumerate(txt):
-        if ch == "(":
-            if depth == 0:
-                start = i + 1
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                groups.append(txt[start:i])
-    return groups if groups else [txt]
-
-
-def wkb_write_linestring(pts: np.ndarray) -> bytes:
-    pts = np.asarray(pts, dtype=np.float64)
-    return (
-        struct.pack("<BII", 1, _GEOM_LINESTRING, pts.shape[0])
-        + pts.astype("<f8").tobytes()
-    )
-
-
-def geojson_write(wkb: bytes) -> str:
-    """WKB -> GeoJSON geometry string (S8; RFC 7946 coordinate order)."""
-    import json
-
-    kind, payload = wkb_read(wkb)
-    if kind == "point":
-        return json.dumps({"type": "Point", "coordinates": list(payload)})
-    if kind == "linestring":
-        return json.dumps(
-            {"type": "LineString", "coordinates": payload.tolist()}
-        )
-    if kind == "polygon":
-        return json.dumps(
-            {"type": "Polygon",
-             "coordinates": [_close(r).tolist() for r in payload]}
-        )
-    if kind == "multipolygon":
-        return json.dumps(
-            {"type": "MultiPolygon",
-             "coordinates": [[_close(r).tolist() for r in rings]
-                             for rings in payload]}
-        )
-    raise ValueError(kind)
-
-
-def geojson_read(txt: str) -> bytes:
-    """GeoJSON geometry (or Feature) -> WKB."""
-    import json
-
-    obj = json.loads(txt)
-    if obj.get("type") == "Feature":
-        obj = obj["geometry"]
-    t = obj["type"]
-    c = obj["coordinates"]
-    if t == "Point":
-        return wkb_write_point(float(c[0]), float(c[1]))
-    if t == "LineString":
-        return wkb_write_linestring(np.asarray(c, dtype=np.float64))
-    if t == "Polygon":
-        return wkb_write_polygon([np.asarray(r, dtype=np.float64) for r in c])
-    if t == "MultiPolygon":
-        out = [struct.pack("<BII", 1, _GEOM_MULTIPOLYGON, len(c))]
-        for rings in c:
-            out.append(
-                wkb_write_polygon([np.asarray(r, dtype=np.float64) for r in rings])
-            )
-        return b"".join(out)
-    raise ValueError(f"unsupported GeoJSON type {t}")
-
-
-def convex_hull(pts: np.ndarray) -> np.ndarray:
-    """RV9 convexHull: Andrew's monotone chain (textbook public-domain
-    formulation). Input (n,2); returns the hull ring CCW, closed."""
-    p = np.unique(np.asarray(pts, dtype=np.float64), axis=0)
-    if p.shape[0] <= 2:
-        return np.vstack([p, p[:1]]) if p.shape[0] else p
-    order = np.lexsort((p[:, 1], p[:, 0]))
-    p = p[order]
-
-    def half(points):
-        h: list[np.ndarray] = []
-        for q in points:
-            while len(h) >= 2 and (
-                (h[-1][0] - h[-2][0]) * (q[1] - h[-2][1])
-                - (h[-1][1] - h[-2][1]) * (q[0] - h[-2][0])
-            ) <= 0:
-                h.pop()
-            h.append(q)
-        return h
-
-    lower = half(p)
-    upper = half(p[::-1])
-    hull = np.asarray(lower[:-1] + upper[:-1])
-    return np.vstack([hull, hull[:1]])
-
-
-def point_segment_distance(px, py, ax, ay, bx, by) -> np.ndarray:
-    """Distance from point batch to one segment."""
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    dx, dy = bx - ax, by - ay
-    L2 = dx * dx + dy * dy
-    if L2 == 0:
-        return np.hypot(px - ax, py - ay)
-    t = np.clip(((px - ax) * dx + (py - ay) * dy) / L2, 0.0, 1.0)
-    return np.hypot(px - (ax + t * dx), py - (ay + t * dy))
-
-
-def simplify_line(pts: np.ndarray, tol: float) -> np.ndarray:
-    """Douglas–Peucker polyline simplification (reference role:
-    geotrellis.vector Simplify via JTS DouglasPeuckerSimplifier —
-    upstream layout; reimplemented from the published algorithm).
-    Keeps endpoints; drops interior vertices whose max deviation from
-    the current chord is <= ``tol``. Iterative stack, numpy distance
-    batch per segment — no recursion-depth limit."""
-    pts = np.asarray(pts, dtype=np.float64)
-    n = len(pts)
-    if n <= 2:
-        return pts.copy()
-    keep = np.zeros(n, dtype=bool)
-    keep[0] = keep[n - 1] = True
-    stack = [(0, n - 1)]
-    while stack:
-        i, j = stack.pop()
-        if j - i < 2:
-            continue
-        seg = pts[i + 1 : j]
-        d = point_segment_distance(
-            seg[:, 0], seg[:, 1], pts[i, 0], pts[i, 1], pts[j, 0], pts[j, 1]
-        )
-        kmax = int(np.argmax(d))
-        if d[kmax] > tol:
-            split = i + 1 + kmax
-            keep[split] = True
-            stack.append((i, split))
-            stack.append((split, j))
-    return pts[keep]
-
-
-def simplify_ring(ring: np.ndarray, tol: float) -> np.ndarray:
-    """Douglas–Peucker for a polygon ring (open vertex list): anchor
-    the chord at vertex 0 and the farthest vertex from it (a stable
-    diameter-ish split), simplify both halves, re-join. Degenerate
-    results (< 3 vertices) return the original ring unchanged."""
-    ring = np.asarray(ring, dtype=np.float64)
-    if len(ring) <= 3:
-        return ring.copy()
-    far = int(
-        np.argmax((ring[:, 0] - ring[0, 0]) ** 2 + (ring[:, 1] - ring[0, 1]) ** 2)
-    )
-    if far == 0:  # all points coincident
-        return ring.copy()
-    a = simplify_line(ring[: far + 1], tol)
-    b = simplify_line(np.vstack([ring[far:], ring[:1]]), tol)
-    out = np.vstack([a[:-1], b[:-1]])
-    return out if len(out) >= 3 else ring.copy()
-
-
-def simplify_wkb(wkb: bytes, tol: float) -> bytes:
-    """Simplify every ring of a WKB polygon/multipolygon with
-    Douglas–Peucker."""
-    import struct as _st
-
-    geoms = _poly_list(wkb)
-    if len(geoms) == 1:
-        return wkb_write_polygon([simplify_ring(r, tol) for r in geoms[0]])
-    out = [_st.pack("<BII", 1, _GEOM_MULTIPOLYGON, len(geoms))]
-    for rings in geoms:
-        out.append(
-            wkb_write_polygon([simplify_ring(r, tol) for r in rings])
-        )
-    return b"".join(out)
-
-
-def affine_wkb(
-    wkb: bytes, a: float = 1.0, b: float = 0.0, d: float = 0.0,
-    e: float = 1.0, xoff: float = 0.0, yoff: float = 0.0,
-) -> bytes:
-    """Affine transformation of a WKB polygon/multipolygon (reference
-    role: geotrellis.vector affine methods over JTS
-    AffineTransformation): x' = a*x + b*y + xoff; y' = d*x + e*y +
-    yoff. Compose translate/scale/rotate/shear by choosing the
-    coefficients."""
-    import struct as _st
-
-    geoms = _poly_list(wkb)
-
-    def tx(r: np.ndarray) -> np.ndarray:
-        out = np.empty_like(r)
-        out[:, 0] = a * r[:, 0] + b * r[:, 1] + xoff
-        out[:, 1] = d * r[:, 0] + e * r[:, 1] + yoff
-        return out
-
-    if len(geoms) == 1:
-        return wkb_write_polygon([tx(r) for r in geoms[0]])
-    out = [_st.pack("<BII", 1, _GEOM_MULTIPOLYGON, len(geoms))]
-    for rings in geoms:
-        out.append(wkb_write_polygon([tx(r) for r in rings]))
-    return b"".join(out)

@@ -24,22 +24,24 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+# output rows gathered before ``grouped_rows`` yields an Arrow batch
+YIELD_EVERY = 64
+
 
 def grouped_rows(
     df: DataFrame,
     key: str,
     row_fn: Callable[[int, pd.DataFrame], dict | None],
     schema,
-    yield_every: int = 64,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Apply ``row_fn(key_value, group_pdf) -> row dict | None`` to every
     group of ``key`` (int64 column), one output row per group.
 
     Equivalent to groupBy(key).applyInPandas for one-row-per-group
-    kernels, minus the per-group Arrow overhead.
+    kernels, minus the per-group Arrow overhead. The shuffle has
+    ``spark.sql.shuffle.partitions`` partitions.
     """
-    n_part = n_partitions or int(
+    n_part = int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
     cols = [f.name for f in schema.fields]
@@ -69,7 +71,7 @@ def grouped_rows(
                 continue
             carry = pdf.iloc[first_of_last:]
             run(pdf.iloc[:first_of_last])
-            if len(out) >= yield_every:
+            if len(out) >= YIELD_EVERY:
                 yield pd.DataFrame(out, columns=cols)
                 out = []
         if carry is not None and len(carry):

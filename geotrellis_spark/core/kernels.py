@@ -3,19 +3,15 @@ UDFs by the Spark operators (never per-row Python; north_rule).
 
 Reference semantics reimplemented (upstream 3.x layout, SURVEY.md §0):
 
-- merge:      ``raster/.../merge/`` — first-non-NoData-wins cell union.
 - local ops:  ``raster/.../mapalgebra/local/*.scala`` — elementwise,
   NoData-propagating (any NoData operand => NoData result).
 - focal ops:  ``raster/.../mapalgebra/focal/*.scala`` — Square(r)
   neighborhood stencils over buffered tiles; NoData cells excluded from
   the neighborhood statistic (GeoTrellis skips non-data cells).
-- resample:   ``raster/.../resample/`` — NearestNeighbor, 2x block
-  decimation (pyramid downsample), and nearest/bilinear point sampling
-  for reprojection.
+- resample:   ``raster/.../resample/`` — 2x block decimation (pyramid
+  downsample) and nearest/bilinear point sampling for reprojection.
 - rasterize:  ``raster/.../rasterize/polygon/PolygonRasterizer.scala`` —
   scanline even-odd fill over cell centers.
-- zonal:      ``raster/.../mapalgebra/zonal/`` — per-zone partials via
-  bincount (map-side partial aggregation; Spark's hash-agg finishes).
 - hydrology:  ``raster/.../hydrology/FlowDirection.scala`` — D8 flow
   direction.
 
@@ -30,8 +26,6 @@ import numpy as np
 NODATA_U16 = 0  # uint16 sentinel (UserDefinedNoData(0))
 
 __all__ = [
-    "is_nodata",
-    "merge_first_wins",
     "local_binary",
     "local_unary",
     "local_stack_stats",
@@ -45,25 +39,12 @@ __all__ = [
     "focal_std",
     "focal_mode",
     "convolve",
-    "resample_nearest",
     "decimate2",
     "euclidean_distance",
     "rasterize_polygon",
-    "zonal_partials",
     "min_label_components",
     "NODATA_U16",
 ]
-
-
-def is_nodata(a: np.ndarray, nodata=NODATA_U16) -> np.ndarray:
-    if np.issubdtype(a.dtype, np.floating):
-        return np.isnan(a)
-    return a == nodata
-
-
-def merge_first_wins(a: np.ndarray, b: np.ndarray, nodata=NODATA_U16) -> np.ndarray:
-    """Tile.merge: keep a where a has data; fill NoData cells from b."""
-    return np.where(is_nodata(a, nodata), b, a)
 
 
 def _to_float(a: np.ndarray, nodata) -> np.ndarray:
@@ -367,13 +348,6 @@ def convolve(
 
 # ------------------------------------------------------------- resample
 
-def resample_nearest(tile: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    h, w = tile.shape
-    rows = np.minimum(((np.arange(out_h) + 0.5) * h / out_h).astype(np.int64), h - 1)
-    cols = np.minimum(((np.arange(out_w) + 0.5) * w / out_w).astype(np.int64), w - 1)
-    return tile[np.ix_(rows, cols)]
-
-
 def bilinear_sample(
     tile: np.ndarray, u: np.ndarray, v: np.ndarray, nodata=NODATA_U16
 ) -> np.ndarray:
@@ -521,32 +495,6 @@ def rasterize_polygon(
         cross = active[:, None, :] & (xs[None, :, None] < xc[:, None, :])
         mask ^= (cross.sum(axis=2) % 2).astype(bool)
     return mask
-
-
-# ---------------------------------------------------------------- zonal
-
-def zonal_partials(
-    values: np.ndarray, zones: np.ndarray, nodata=NODATA_U16
-) -> dict[int, tuple[int, float, float, float]]:
-    """Per-zone (count, sum, min, max) partials for one tile via bincount
-    — the map-side half of Spark's partial+final hash aggregation."""
-    v = _to_float(values, nodata).ravel()
-    z = zones.astype(np.int64).ravel()
-    ok = ~np.isnan(v)
-    v, z = v[ok], z[ok]
-    if v.size == 0:
-        return {}
-    uz, inv = np.unique(z, return_inverse=True)
-    cnt = np.bincount(inv)
-    s = np.bincount(inv, weights=v)
-    mins = np.full(uz.shape, np.inf)
-    maxs = np.full(uz.shape, -np.inf)
-    np.minimum.at(mins, inv, v)
-    np.maximum.at(maxs, inv, v)
-    return {
-        int(uz[i]): (int(cnt[i]), float(s[i]), float(mins[i]), float(maxs[i]))
-        for i in range(uz.shape[0])
-    }
 
 
 # ---------------------------------------------------------- components

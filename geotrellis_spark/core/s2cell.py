@@ -151,19 +151,24 @@ def s2_parent(cell, level: int, delta: int = 1) -> np.ndarray:
     return np.asarray(cell, dtype=np.int64) >> (2 * delta)
 
 
-def _cell_lonlat_boxes(cells, level: int, samples: int = 9):
+# points sampled per cell edge by _cell_lonlat_boxes
+_BOX_SAMPLES = 9
+
+
+def _cell_lonlat_boxes(cells, level: int):
     """Conservative lon/lat bounding boxes (x0, y0, x1, y1 arrays) of
-    the cells at ``level``: each ij-perimeter sampled ``samples`` points
-    per edge, dilated by the largest gap between adjacent samples (the
-    smooth boundary cannot wander further between samples than their
-    spacing at these curvatures).  A cell whose samples reach a pole
-    gets the full longitude range; a cell crossing the antimeridian
-    gets its lons in [0, 360) (the callers' +/-360 shifts match)."""
+    the cells at ``level``: each ij-perimeter sampled ``_BOX_SAMPLES``
+    points per edge, dilated by the largest gap between adjacent
+    samples (the smooth boundary cannot wander further between samples
+    than their spacing at these curvatures).  A cell whose samples
+    reach a pole gets the full longitude range; a cell crossing the
+    antimeridian gets its lons in [0, 360) (the callers' +/-360 shifts
+    match)."""
     n = 1 << level
     face, i, j = s2_decode(cells, level)
     i, j = (a.astype(np.float64)[:, None] for a in (i, j))
-    t = np.linspace(0.0, 1.0, samples)
-    shape = (len(face), samples)
+    t = np.linspace(0.0, 1.0, _BOX_SAMPLES)
+    shape = (len(face), _BOX_SAMPLES)
     per_i = np.concatenate([
         i + t, np.broadcast_to(i + 1.0, shape),
         (i + 1.0) - t, np.broadcast_to(i, shape),

@@ -34,7 +34,6 @@ __all__ = [
     "rowmajor",
     "zorder_ranges",
     "merge_ranges",
-    "parent_cell",
     "children_cells",
 ]
 
@@ -255,11 +254,6 @@ def merge_ranges(ranges: list[tuple[int, int]]) -> list[tuple[int, int]]:
         else:
             out.append((lo, hi))
     return out
-
-
-def parent_cell(cell, delta_z: int = 1) -> np.ndarray:
-    """S2-style parent: quad-tree prefix (works for zorder and hilbert)."""
-    return (np.asarray(cell).astype(np.int64)) >> (2 * delta_z)
 
 
 def children_cells(cell, delta_z: int = 1) -> np.ndarray:

@@ -10,15 +10,16 @@ Reference re-expressions (upstream 3.x layout, SURVEY.md §0):
 - ``local_stats_layers`` — multi-layer Mean/Variance/Variety/Majority/
   Minority: n-way union + groupBy(cell_id) stack kernel.
 - ``rasterize_features`` — RV2 ``spark/.../rasterize/RasterizeRDD.scala``:
-  features explode to covering cells (ClipToGrid), groupBy cell, burn
-  in z-index priority order (higher zindex wins overlaps).
+  features explode to their bbox cover cells (``spatial.cover_cells``),
+  groupBy cell, burn in z-index priority order (higher zindex wins
+  overlaps).
 - ``band_math``, ``euclidean_distance_layer``, ``temporal_stack_stats``
   — per-tile numpy kernels over one or more layers.
 
 No entry point (query registry, jobs, benchmark) runs this module; it
 is kept as the named GeoTrellis map-algebra and rasterize capability,
-and kept tests build tile layers with it (``tests/test_entry_reach.py``
-lists the modules kept without an entry point).
+with its own tests (``tests/test_entry_reach.py`` lists the modules
+kept without an entry point).
 """
 
 from __future__ import annotations

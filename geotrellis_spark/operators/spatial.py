@@ -11,10 +11,11 @@ layout, SURVEY.md §0):
   ``LayerQuery``): extent -> exact Z-range list -> ``cell_id BETWEEN``
   predicates that Parquet/Iceberg min-max stats prune on (stored
   layers), plus ``key_rect_filter``, the exact key-rectangle refine.
-- ``pip_join``          — J3/J5 (``ClipToGrid`` + per-cell predicate,
-  ``VectorJoin``): cover-cell explode (``_cover``, one numpy
-  enumeration for every path) + broadcast equi-join + vectorized
-  ray-cast refine (``core.geom.points_in_coded_polygons``). Replaces
+- ``pip_join``          — J3 (``ClipToGrid``'s cell enumeration +
+  per-cell predicate, ``VectorJoin``): bbox cover-cell explode
+  (``_cover``, one numpy enumeration for every path; no per-cell clip)
+  + broadcast equi-join + vectorized ray-cast refine against the whole
+  polygon (``core.geom.points_in_coded_polygons``). Replaces
   the reference's partition-wise nested loop
   (``spark/.../join/VectorJoin.scala``) with an equi-join Catalyst can
   plan — the engine's flagship improvement.
@@ -445,22 +446,16 @@ def cover_cells(
     polys: DataFrame,
     zoom: int,
     wkb_col: str = "wkb",
-    clip: bool = False,
     bbox: bool = False,
 ) -> DataFrame:
     """Explode polygons to their covering cells at ``zoom`` (bbox cover;
-    ClipToGrid's cell enumeration). Output: input columns + key_col/
-    key_row/cell_id, one row per (polygon, covering cell). Fully
-    vectorized explode (numpy repeat/cumsum — no per-row python in the
-    hot path; only the bbox header parse is per polygon).
-
-    ``clip=True`` additionally emits ``clipped_wkb`` — each ring
-    Sutherland–Hodgman-clipped to the cell extent (ClipToGrid's per-cell
-    clip, the J5 ``vector_cells`` contract): downstream refine work is
-    then proportional to the geometry INSIDE the cell, not the whole
-    polygon. NULL where the exterior ring vanishes (bbox-cover false
-    positive)."""
-    n = 1 << zoom
+    ClipToGrid's cell enumeration, without its per-cell clip: every
+    refine tests the whole geometry). Output: input columns + key_col/
+    key_row/cell_id, one row per (polygon, covering cell), and with
+    ``bbox=True`` the polygon's bbox as bbox_xmin/ymin/xmax/ymax for a
+    JVM-side prefilter. Fully vectorized explode (numpy repeat/cumsum
+    — no per-row python in the hot path; only the bbox header parse is
+    per polygon)."""
     extra = [
         StructField("key_col", LongType()),
         StructField("key_row", LongType()),
@@ -475,10 +470,6 @@ def cover_cells(
             StructField("bbox_xmax", DoubleType()),
             StructField("bbox_ymax", DoubleType()),
         ]
-    if clip:
-        from pyspark.sql.types import BinaryType
-
-        extra.append(StructField("clipped_wkb", BinaryType()))
     schema = StructType(polys.schema.fields + extra)
 
     def gen(batches):
@@ -497,42 +488,6 @@ def cover_cells(
                 out["bbox_ymin"] = bb[idx, 1]
                 out["bbox_xmax"] = bb[idx, 2]
                 out["bbox_ymax"] = bb[idx, 3]
-            if clip:
-                # Batched per POLYGON, not per (polygon, cell): each of
-                # the polygon's rings is Sutherland–Hodgman-clipped
-                # against ALL its cover cells in one vectorized pass
-                # (core.geom.clip_ring_to_rects_batch); only the WKB
-                # serialization of surviving rings remains per cell.
-                xmin_a = -180.0 + cols * 360.0 / n
-                xmax_a = -180.0 + (cols + 1) * 360.0 / n
-                ymax_a = 90.0 - rows * 180.0 / n
-                ymin_a = 90.0 - (rows + 1) * 180.0 / n
-                clipped: list = [None] * idx.size
-                bounds = np.searchsorted(idx, np.arange(len(pdf) + 1))
-                for ri in range(len(pdf)):
-                    lo, hi = int(bounds[ri]), int(bounds[ri + 1])
-                    if hi == lo:
-                        continue
-                    kind, payload = G.wkb_read(wkbs[ri])
-                    rings_in = (
-                        payload if kind == "polygon"
-                        else [r for poly in payload for r in poly]
-                    )
-                    per_cell: list[list] = [[] for _ in range(hi - lo)]
-                    for rg in rings_in:
-                        pts, cnts = G.clip_ring_to_rects_batch(
-                            rg, xmin_a[lo:hi], ymin_a[lo:hi],
-                            xmax_a[lo:hi], ymax_a[lo:hi],
-                        )
-                        for j in np.nonzero(cnts > 0)[0]:
-                            ring = pts[j, : cnts[j]]
-                            per_cell[j].append(
-                                np.vstack([ring, ring[:1]])
-                            )
-                    for j, rings in enumerate(per_cell):
-                        if rings:
-                            clipped[lo + j] = G.wkb_write_polygon(rings)
-                out["clipped_wkb"] = clipped
             yield out
 
     return polys.mapInPandas(gen, schema)
@@ -825,7 +780,7 @@ def knn_join(
     )
 
 
-# --------------------------------------------- persisted vector index
+# ------------------------------------------------- persisted S2 store
 
 def write_s2_store(
     df: DataFrame,
@@ -893,78 +848,6 @@ def read_s2_store(
     )
     return s2_range_filter(
         df, level, *bbox, lon_col=lon_col, lat_col=lat_col
-    )
-
-
-def write_vector_index(
-    polys: DataFrame,
-    base: str,
-    zoom: int,
-    wkb_col: str = "wkb",
-    n_buckets: int = 32,
-) -> None:
-    """Persist the J5 vector_cells table as a query-many PIP index:
-    cover cells (with bbox prefilter columns and the geometry) written
-    hive-partitioned by bucket(cell_id) and SFC-sorted within files —
-    the vector-side twin of the tile LayerWriter (S3). Repeated point
-    batches then skip the cover-cell explode entirely and join against
-    a co-bucketed store; with a region filter the scan prunes to the
-    region's buckets/row-groups (min-max on the sorted cell_id).
-    Index metadata (zoom, n_buckets) rides along so queries cannot
-    desync from the write layout."""
-    cells = cover_cells(polys, zoom, wkb_col, bbox=True).drop(
-        "key_col", "key_row"
-    )
-    (
-        cells.withColumn(
-            "cbucket", F.pmod(F.col("cell_id"), F.lit(n_buckets)).cast("int")
-        )
-        .repartition("cbucket")
-        # cbucket FIRST: the dynamic-partition writer requires the
-        # partition column leading the sort order — sorting by cell_id
-        # alone makes the writer insert its own re-sort on cbucket,
-        # silently destroying the SFC file order (measured)
-        .sortWithinPartitions("cbucket", "cell_id")
-        .write.mode("overwrite")
-        .partitionBy("cbucket")
-        .parquet(f"{base}/cells")
-    )
-    local_df(
-        polys.sparkSession, [(zoom, n_buckets)], "zoom int, n_buckets int"
-    ).write.mode("overwrite").parquet(f"{base}/_index_meta")
-
-
-def pip_join_indexed(
-    spark,
-    base: str,
-    points: DataFrame,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    wkb_col: str = "wkb",
-) -> DataFrame:
-    """PIP join against a persisted vector index — the broadcast-free,
-    explode-free scale path for HUGE polygon sets: points key to cells
-    (codegen), equi-join the stored cover-cell table on
-    (cbucket, cell_id), pushed bbox prefilter, exact vectorized
-    ray-cast refine. Same results as ``pip_join`` on the indexed
-    polygons (tested); no geometry ever visits the driver."""
-    meta = spark.read.parquet(f"{base}/_index_meta").collect()[0]
-    zoom, n_buckets = int(meta["zoom"]), int(meta["n_buckets"])
-    keyed = assign_cells(points, lon_col, lat_col, zoom).drop(
-        "key_col", "key_row"
-    ).withColumn(
-        "cbucket", F.pmod(F.col("cell_id"), F.lit(n_buckets)).cast("int")
-    )
-    idx = spark.read.parquet(f"{base}/cells")
-    joined = keyed.join(idx, ["cbucket", "cell_id"], "inner").where(
-        F.col(lon_col).between(F.col("bbox_xmin"), F.col("bbox_xmax"))
-        & F.col(lat_col).between(F.col("bbox_ymin"), F.col("bbox_ymax"))
-    )
-    refined = joined.where(
-        _pip_udf(F.col(lon_col), F.col(lat_col), F.col(wkb_col))
-    )
-    return refined.drop(
-        wkb_col, "bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax", "cbucket"
     )
 
 

@@ -304,7 +304,6 @@ def pyramid_up(tiles: DataFrame, from_zoom: int, tile_size: int = 256) -> DataFr
             "cell_type": pdf["cell_type"].iloc[0],
         }
 
-    parent = sfc.parent_cell  # noqa: F841 (documented relation)
     withp = tiles.withColumn("parent_cell", F.shiftright(F.col("cell_id"), 2))
     return grouped.grouped_rows(withp, "parent_cell", assemble, TILE_SCHEMA)
 
@@ -321,204 +320,8 @@ def build_pyramid(
     return levels
 
 
-def stitch(tiles: DataFrame, tile_size: int = 256) -> np.ndarray:
-    """T8 Stitch (``spark/.../stitch/StitchRDDMethods.scala`` role):
-    assemble a (filtered, SMALL) tile layer into one numpy raster in
-    key order. Deliberately driver-side — a debug/export utility, not
-    a distributed op; filter the layer first."""
-    rows = tiles.select("key_col", "key_row", "tile", "fmt", "w", "h").collect()
-    if not rows:
-        return np.zeros((0, 0), dtype=np.uint16)
-    c0 = min(r["key_col"] for r in rows)
-    r0 = min(r["key_row"] for r in rows)
-    c1 = max(r["key_col"] for r in rows)
-    r1 = max(r["key_row"] for r in rows)
-    T = tile_size
-    out = np.full(((r1 - r0 + 1) * T, (c1 - c0 + 1) * T), NODATA, dtype=np.uint16)
-    for r in rows:
-        t = codecs.decode_tile(bytes(r["tile"]), r["w"], r["h"], r["fmt"])
-        rr, cc = (r["key_row"] - r0) * T, (r["key_col"] - c0) * T
-        out[rr : rr + r["h"], cc : cc + r["w"]] = t
-    return out
-
-
-def merge_layers(
-    a: DataFrame, b: DataFrame, zoom: int, tile_size: int = 256,
-    layer: str = "merged", fmt: str = "raw16",
-) -> DataFrame:
-    """Q4 layer union (``spark/.../merge/`` role): same-key tiles merged
-    with T7 first-non-NoData-wins, layer ``a`` taking priority.
-    Implemented by re-expressing whole tiles as priority-carrying
-    pieces and reusing the grouped merge (one shuffle)."""
-    def as_pieces(df: DataFrame, prio: int) -> DataFrame:
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out = {f.name: [] for f in PIECE_SCHEMA.fields}
-                for i in range(len(pdf)):
-                    t = codecs.decode_tile(
-                        bytes(pdf["tile"].iloc[i]), int(pdf["w"].iloc[i]),
-                        int(pdf["h"].iloc[i]), pdf["fmt"].iloc[i],
-                    )
-                    out["cell_id"].append(int(pdf["cell_id"].iloc[i]))
-                    out["key_col"].append(int(pdf["key_col"].iloc[i]))
-                    out["key_row"].append(int(pdf["key_row"].iloc[i]))
-                    out["salt"].append(0)
-                    out["src_ord"].append(prio)
-                    out["r0"].append(0)
-                    out["c0"].append(0)
-                    out["ph"].append(int(pdf["h"].iloc[i]))
-                    out["pw"].append(int(pdf["w"].iloc[i]))
-                    out["piece"].append(_pack_piece(t))
-                yield pd.DataFrame(out)
-
-        return df.mapInPandas(gen, PIECE_SCHEMA)
-
-    pieces = as_pieces(a, 0).unionByName(as_pieces(b, 1))
-    return merge_tiles(pieces, zoom, tile_size, layer, fmt)
-
-
-def zoom_resample(
-    tiles: DataFrame, from_zoom: int, to_zoom: int, tile_size: int = 256
-) -> DataFrame:
-    """G4 ZoomResample (``spark/.../resample/ZoomResample.scala`` role):
-    zoom IN on a layer without new data — each tile at z yields
-    4^dz children at to_zoom, each an NN-upsampled quadrant crop.
-    Narrow op per child batch (one flatMap, no shuffle)."""
-    dz = to_zoom - from_zoom
-    if dz <= 0:
-        raise ValueError("zoom_resample zooms IN: to_zoom > from_zoom")
-    k = 1 << dz
-    T = tile_size
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in TILE_SCHEMA.fields}
-            for i in range(len(pdf)):
-                t = codecs.decode_tile(bytes(pdf["tile"].iloc[i]), T, T,
-                                       pdf["fmt"].iloc[i])
-                kc, kr = int(pdf["key_col"].iloc[i]), int(pdf["key_row"].iloc[i])
-                sub = T // k
-                for qc in range(k):
-                    for qr in range(k):
-                        crop = t[qr * sub : (qr + 1) * sub, qc * sub : (qc + 1) * sub]
-                        child = kernels.resample_nearest(crop, T, T)
-                        cc, cr = kc * k + qc, kr * k + qr
-                        out["layer"].append(pdf["layer"].iloc[i])
-                        out["zoom"].append(to_zoom)
-                        out["key_col"].append(cc)
-                        out["key_row"].append(cr)
-                        out["cell_id"].append(int(sfc.zorder(cc, cr)))
-                        out["tile"].append(
-                            codecs.encode_tile(child, pdf["fmt"].iloc[i])
-                        )
-                        out["fmt"].append(pdf["fmt"].iloc[i])
-                        out["w"].append(T)
-                        out["h"].append(T)
-                        out["cell_type"].append(pdf["cell_type"].iloc[i])
-            yield pd.DataFrame(out)
-
-    return tiles.mapInPandas(gen, TILE_SCHEMA)
-
-
-def regrid(
-    tiles: DataFrame,
-    zoom: int,
-    from_size: int,
-    to_size: int,
-    layer: str = "regridded",
-    fmt: str = "raw16",
-) -> DataFrame:
-    """T9 Regrid (``spark/.../regrid/Regrid.scala`` role): re-slice a
-    layer to a different tile size on the SAME zoom pixel lattice
-    (256 -> 512 and back). Each tile slices itself into pieces aligned
-    to the target grid (narrow flatMap), then the standard single-
-    shuffle grouped merge reassembles target tiles."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in PIECE_SCHEMA.fields}
-            for i in range(len(pdf)):
-                t = codecs.decode_tile(
-                    bytes(pdf["tile"].iloc[i]), from_size, from_size,
-                    pdf["fmt"].iloc[i],
-                )
-                gx = int(pdf["key_col"].iloc[i]) * from_size
-                gy = int(pdf["key_row"].iloc[i]) * from_size
-                t0c, t1c = gx // to_size, (gx + from_size - 1) // to_size
-                t0r, t1r = gy // to_size, (gy + from_size - 1) // to_size
-                for tc in range(t0c, t1c + 1):
-                    for tr in range(t0r, t1r + 1):
-                        x0 = max(gx, tc * to_size)
-                        x1 = min(gx + from_size, (tc + 1) * to_size)
-                        y0 = max(gy, tr * to_size)
-                        y1 = min(gy + from_size, (tr + 1) * to_size)
-                        piece = t[y0 - gy : y1 - gy, x0 - gx : x1 - gx]
-                        out["cell_id"].append(int(sfc.zorder(tc, tr)))
-                        out["key_col"].append(tc)
-                        out["key_row"].append(tr)
-                        out["salt"].append(0)
-                        out["src_ord"].append(0)
-                        out["r0"].append(y0 - tr * to_size)
-                        out["c0"].append(x0 - tc * to_size)
-                        out["ph"].append(y1 - y0)
-                        out["pw"].append(x1 - x0)
-                        out["piece"].append(_pack_piece(piece))
-            yield pd.DataFrame(out)
-
-    pieces = tiles.mapInPandas(gen, PIECE_SCHEMA)
-    return merge_tiles(pieces, zoom, to_size, layer, fmt)
-
-
 _DIRS = [(-1, -1), (0, -1), (1, -1), (-1, 0), (1, 0), (-1, 1), (0, 1), (1, 1)]
 
-
-NEIGHBOR_SCHEMA = StructType(
-    [
-        StructField("cell_id", LongType()),
-        StructField("key_col", LongType()),
-        StructField("key_row", LongType()),
-        StructField("dx", IntegerType()),
-        StructField("dy", IntegerType()),
-        StructField("tile", BinaryType()),
-        StructField("fmt", StringType()),
-        StructField("w", IntegerType()),
-        StructField("h", IntegerType()),
-    ]
-)
-
-
-def collect_neighbors(tiles: DataFrame) -> DataFrame:
-    """T11 CollectNeighbors (``spark/.../mapalgebra/focal/
-    CollectNeighbors.scala`` role): annotate every tile key with its 8
-    neighbors' full payloads. Each tile emits itself to its own key
-    (dx=dy=0) and to each in-bounds neighbor key with the offset it
-    occupies relative to that neighbor; ONE shuffle groups them —
-    downstream groupBy(cell_id) sees (center + up to 8 neighbors)."""
-
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in NEIGHBOR_SCHEMA.fields}
-            for i in range(len(pdf)):
-                kc = int(pdf["key_col"].iloc[i])
-                kr = int(pdf["key_row"].iloc[i])
-                n = 1 << int(pdf["zoom"].iloc[i])
-                tb = bytes(pdf["tile"].iloc[i])
-                for dx, dy in [(0, 0)] + _DIRS:
-                    tc, tr = kc + dx, kr + dy
-                    if not (0 <= tc < n and 0 <= tr < n):
-                        continue
-                    out["cell_id"].append(int(sfc.zorder(tc, tr)))
-                    out["key_col"].append(tc)
-                    out["key_row"].append(tr)
-                    out["dx"].append(-dx)  # this tile's offset seen from
-                    out["dy"].append(-dy)  # the receiving key
-                    out["tile"].append(tb)
-                    out["fmt"].append(pdf["fmt"].iloc[i])
-                    out["w"].append(int(pdf["w"].iloc[i]))
-                    out["h"].append(int(pdf["h"].iloc[i]))
-            yield pd.DataFrame(out)
-
-    return tiles.mapInPandas(explode, NEIGHBOR_SCHEMA)
 
 
 def focal_tiles(

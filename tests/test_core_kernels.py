@@ -9,19 +9,6 @@ from geotrellis_spark.core import geom, kernels
 from geotrellis_spark.core.layout import Extent, TileLayout, LayoutDefinition
 
 
-def test_merge_first_wins_uint16():
-    a = np.array([[1, 0], [0, 4]], dtype=np.uint16)
-    b = np.array([[9, 9], [0, 9]], dtype=np.uint16)
-    out = kernels.merge_first_wins(a, b)
-    np.testing.assert_array_equal(out, [[1, 9], [0, 4]])
-
-
-def test_merge_first_wins_float_nan():
-    a = np.array([[1.0, np.nan]])
-    b = np.array([[5.0, 7.0]])
-    np.testing.assert_array_equal(kernels.merge_first_wins(a, b), [[1.0, 7.0]])
-
-
 def test_local_binary_nodata_propagates():
     a = np.array([[2, 0], [3, 4]], dtype=np.uint16)
     b = np.array([[5, 5], [0, 1]], dtype=np.uint16)
@@ -93,14 +80,6 @@ def test_focal_mode():
     assert kernels.focal_mode(t, 1)[1, 1] == 1.0
 
 
-def test_resample_nearest_and_decimate():
-    t = np.arange(16, dtype=np.uint16).reshape(4, 4)
-    up = kernels.resample_nearest(t, 8, 8)
-    assert up.shape == (8, 8)
-    assert up[0, 0] == t[0, 0] and up[7, 7] == t[3, 3]
-    np.testing.assert_array_equal(kernels.decimate2(t), [[0, 2], [8, 10]])
-
-
 def test_pyramid_quadrant_golden():
     # FIXTURES §F4: 4 children 4x4 @z=2 -> parent 4x4 @z=1 via NN decimate
     children = {
@@ -116,6 +95,9 @@ def test_pyramid_quadrant_golden():
     np.testing.assert_array_equal(
         parent, [[1, 1, 2, 2], [1, 1, 2, 2], [3, 3, 4, 4], [3, 3, 4, 4]]
     )
+    # decimation keeps the top-left pixel of each 2x2 block
+    t = np.arange(16, dtype=np.uint16).reshape(4, 4)
+    np.testing.assert_array_equal(kernels.decimate2(t), [[0, 2], [8, 10]])
 
 
 def test_rasterize_triangle_8x8_golden():
@@ -145,14 +127,6 @@ def test_rasterize_concave_equals_pip():
     gx, gy = np.meshgrid(xs, ys)
     pip = geom.points_in_rings(gx.ravel(), gy.ravel(), [ring]).reshape(8, 8)
     np.testing.assert_array_equal(mask, pip)
-
-
-def test_zonal_partials():
-    vals = np.array([[1, 2], [3, 0]], dtype=np.uint16)  # 0 = NoData
-    zones = np.array([[10, 10], [20, 20]])
-    p = kernels.zonal_partials(vals, zones)
-    assert p[10] == (2, 3.0, 1.0, 2.0)
-    assert p[20] == (1, 3.0, 3.0, 3.0)
 
 
 # ------------------------------------------------------------ hydrology

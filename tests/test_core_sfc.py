@@ -27,8 +27,11 @@ def test_zorder_roundtrip_random():
 
 
 def test_zorder_parent_is_prefix():
-    c, r = np.array([13, 200]), np.array([7, 31])
-    assert (sfc.parent_cell(sfc.zorder(c, r)) == sfc.zorder(c // 2, r // 2)).all()
+    # pyramid_up groups a level's tiles by ``cell_id >> 2``: the parent key
+    rng = np.random.default_rng(2)
+    c = np.concatenate([[0, 1, 13, 200], rng.integers(0, 2**30, 500)])
+    r = np.concatenate([[0, 1, 7, 31], rng.integers(0, 2**30, 500)])
+    assert (sfc.zorder(c, r) >> 2 == sfc.zorder(c // 2, r // 2)).all()
 
 
 def test_z3_roundtrip():

@@ -19,7 +19,9 @@ benchmark harness, ``bench.py``, ``bench_extra.py`` and ``tools/``.
   flags code that runs.
 
 A def no entry point reaches is code only tests run. The test names each
-one, so such code cannot grow back unnoticed.
+one, so such code cannot grow back unnoticed. Two more checks catch what
+a deletion leaves behind: a ``KEPT_UNREACHED`` def that no test names
+any more, and a module-level import that nothing in its module uses.
 """
 
 from __future__ import annotations
@@ -52,13 +54,10 @@ _METRIC = "fidelity measure that live codecs' tests assert on"
 _NEXT = "next batch"
 KEPT_UNREACHED: dict[str, str] = {
     "geotrellis_spark.operators.algebra": (
-        "rasterize and local map algebra, a named GeoTrellis capability; "
-        "kept tiling and zonal tests build their inputs with it"
+        "rasterize and local map algebra, a named GeoTrellis capability "
+        "with its own tests"
     ),
     "geotrellis_spark.core.geom.points_in_polygon": _REF,
-    "geotrellis_spark.core.geom.clip_polygon_to_rect": _REF,
-    "geotrellis_spark.core.geom.shoelace_area": _REF,
-    "geotrellis_spark.core.geom.simplify_wkb": _NEXT,
     "geotrellis_spark.core.jpeg.jpeg_encode": _INPUTS,
     "geotrellis_spark.core.jpeg.jpeg_encode_gray": _INPUTS,
     "geotrellis_spark.core.jpeg.jpeg_encode_rgb": _INPUTS,
@@ -69,12 +68,6 @@ KEPT_UNREACHED: dict[str, str] = {
     "geotrellis_spark.core.s2cell.s2_parent": _INVERSE,
     "geotrellis_spark.core.s2cell.s2_range": _INVERSE,
     "geotrellis_spark.core.imagery.psnr": _METRIC,
-    "geotrellis_spark.core.geom.affine_wkb": _NEXT,
-    "geotrellis_spark.core.geom.convex_hull": _NEXT,
-    "geotrellis_spark.core.geom.geojson_read": _NEXT,
-    "geotrellis_spark.core.geom.geojson_write": _NEXT,
-    "geotrellis_spark.core.geom.wkt_read": _NEXT,
-    "geotrellis_spark.core.geom.wkt_write": _NEXT,
     "geotrellis_spark.core.imagery.hamming64": _NEXT,
     "geotrellis_spark.core.kernels.focal_max": _NEXT,
     "geotrellis_spark.core.kernels.focal_mean": _NEXT,
@@ -83,7 +76,6 @@ KEPT_UNREACHED: dict[str, str] = {
     "geotrellis_spark.core.kernels.focal_mode": _NEXT,
     "geotrellis_spark.core.kernels.focal_std": _NEXT,
     "geotrellis_spark.core.kernels.focal_sum": _NEXT,
-    "geotrellis_spark.core.kernels.merge_first_wins": _NEXT,
     "geotrellis_spark.core.layout.lonlat_to_slippy_key": _NEXT,
     "geotrellis_spark.core.proj.utm_zone": _NEXT,
     "geotrellis_spark.core.sfc.children_cells": _NEXT,
@@ -98,18 +90,8 @@ KEPT_UNREACHED: dict[str, str] = {
     "geotrellis_spark.operators.reproject.reproject_layer_utm": _NEXT,
     "geotrellis_spark.operators.similarity.ivf_build_index": _NEXT,
     "geotrellis_spark.operators.similarity.ivf_query_index": _NEXT,
-    "geotrellis_spark.operators.spatial.pip_join_indexed": _NEXT,
-    "geotrellis_spark.operators.spatial.write_vector_index": _NEXT,
-    "geotrellis_spark.operators.tiling.collect_neighbors": _NEXT,
-    "geotrellis_spark.operators.tiling.merge_layers": _NEXT,
-    "geotrellis_spark.operators.tiling.regrid": _NEXT,
-    "geotrellis_spark.operators.tiling.stitch": _NEXT,
-    "geotrellis_spark.operators.tiling.zoom_resample": _NEXT,
     "geotrellis_spark.operators.tokenize.bpe_encode": _NEXT,
     "geotrellis_spark.operators.tokenize.bpe_train": _NEXT,
-    "geotrellis_spark.operators.zonal.polygonal_summary": _NEXT,
-    "geotrellis_spark.operators.zonal.time_series_polygonal": _NEXT,
-    "geotrellis_spark.operators.zonal.zonal_stats_tiles": _NEXT,
     "geotrellis_spark.sources.iceberg_shape.read_layer_metadata": _NEXT,
 }
 
@@ -253,3 +235,42 @@ def test_every_package_module_is_reached_from_an_entry_point():
         if not any(_kept(key, q) for q in defs) or any(_kept(key, q) for q in live)
     )
     assert not stale, f"stale KEPT_UNREACHED entries: {stale}"
+
+
+def test_kept_defs_are_named_by_a_test():
+    """A def kept for tests of live code (as their reference, inputs,
+    inverse or metric) is kept for nothing once no test names it: the
+    entry and the def must go."""
+    g = _Graph()
+    named: set[str] = set()
+    for p in (ROOT / "tests").glob("*.py"):
+        if p.name != Path(__file__).name:
+            tree = ast.parse(p.read_text(), filename=str(p))
+            named |= _uses([tree], _modname(p), False)[0]
+    unnamed = sorted(
+        key for key in KEPT_UNREACHED
+        if key not in g.top and KEPT_UNREACHED[key] != _NEXT
+        and key.rpartition(".")[2] not in named
+    )
+    assert not unnamed, f"KEPT_UNREACHED defs no test names: {unnamed}"
+
+
+def test_package_modules_use_their_imports():
+    """No package module keeps a module-level import it never uses: the
+    walk above counts an imported name as a use, so a stale import
+    could keep a dead def out of its report."""
+    unused = []
+    for p in sorted((ROOT / PKG).rglob("*.py")):
+        tree = ast.parse(p.read_text(), filename=str(p))
+        loaded = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if isinstance(node, ast.Import):
+                bound = [a.asname or a.name.split(".")[0] for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+                bound = [a.asname or a.name for a in node.names]
+            else:
+                continue
+            unused += [
+                f"{_modname(p)}: {name}" for name in bound if name not in loaded
+            ]
+    assert not unused, "unused module-level imports:\n  " + "\n  ".join(unused)

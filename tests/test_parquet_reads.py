@@ -193,8 +193,6 @@ SCHEMA_INFERENCE_ALLOWED = {
     ("operators/spatial.py", "read_s2_store"):
         "a store at a user's path; s2_part's type is inferred from its "
         "directory names",
-    ("operators/spatial.py", "pip_join_indexed"):
-        "an index at a user's path, partitioned by cbucket",
     ("operators/similarity.py", "ivf_query_index"):
         "an IVF store at a user's path; cent_id takes the type of the "
         "user's id column",

@@ -98,36 +98,6 @@ def test_interval_join_random_vs_bruteforce(spark):
     assert got_set == want
 
 
-@settings(max_examples=60, deadline=None)
-@given(
-    pts=st.lists(
-        st.tuples(
-            st.floats(-100, 100, allow_nan=False),
-            st.floats(-100, 100, allow_nan=False),
-        ),
-        min_size=2, max_size=40,
-    ),
-    tol=st.floats(0.0, 10.0, allow_nan=False),
-)
-def test_simplify_line_properties(pts, tol):
-    from geotrellis_spark.core import geom
-
-    line = np.asarray(pts, dtype=np.float64)
-    out = geom.simplify_line(line, tol)
-    # endpoints preserved; output is a subsequence of the input
-    assert (out[0] == line[0]).all() and (out[-1] == line[-1]).all()
-    assert len(out) <= len(line)
-    # every original point lies within tol of SOME simplified segment
-    if len(out) >= 2:
-        dmin = np.full(len(line), np.inf)
-        for a, b in zip(out[:-1], out[1:]):
-            d = geom.point_segment_distance(
-                line[:, 0], line[:, 1], a[0], a[1], b[0], b[1]
-            )
-            dmin = np.minimum(dmin, d)
-        assert (dmin <= tol + 1e-9).all()
-
-
 @settings(max_examples=30, deadline=None)
 @given(
     st.integers(0, 2**32 - 1),

@@ -1,7 +1,6 @@
-"""Round-2 operator oracles: Convolve/neighborhoods/TargetCell, Regrid,
-Euclidean distance, vector x vector join, CollectNeighbors, temporal
-stack stats, WKT/GeoJSON IO (reference spec roles:
-``focal/ConvolveSpec``, ``regrid/RegridSpec``, ``distance/
+"""Round-2 operator oracles: Convolve/neighborhoods/TargetCell,
+Euclidean distance, vector x vector join, temporal stack stats
+(reference spec roles: ``focal/ConvolveSpec``, ``distance/
 EuclideanDistanceTileSpec``, ``join/VectorJoinSpec`` — SURVEY.md §5)."""
 
 import numpy as np
@@ -77,24 +76,6 @@ def test_stack_majority_minority_vectorized():
     assert mino[0, 0] == 4 and mino[0, 1] == 2
 
 
-def test_wkt_geojson_roundtrip():
-    ring = np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 3.0], [0.0, 3.0]])
-    hole = np.array([[1.0, 1.0], [2.0, 1.0], [2.0, 2.0], [1.0, 2.0]])
-    wkb = G.wkb_write_polygon([ring, hole])
-    for codec_w, codec_r in ((G.wkt_write, G.wkt_read),
-                             (G.geojson_write, G.geojson_read)):
-        txt = codec_w(wkb)
-        back = codec_r(txt)
-        k1, p1 = G.wkb_read(wkb)
-        k2, p2 = G.wkb_read(back)
-        assert k1 == k2 == "polygon"
-        for r1, r2 in zip(p1, p2):
-            np.testing.assert_allclose(G._close(r1), G._close(r2))
-    pt = G.wkb_write_point(1.5, -2.5)
-    assert G.wkt_read(G.wkt_write(pt)) == pt
-    assert G.geojson_read(G.geojson_write(pt)) == pt
-
-
 def test_polygons_intersect_cases():
     sq = lambda x0, y0, s: G.wkb_write_polygon(
         [np.array([[x0, y0], [x0 + s, y0], [x0 + s, y0 + s], [x0, y0 + s]])]
@@ -125,28 +106,6 @@ def small_layer(spark):
     return tiling.tile_images(images, 5, 256).cache()
 
 
-def test_regrid_roundtrip_pixels(spark, small_layer):
-    from geotrellis_spark.operators import tiling
-
-    from geotrellis_spark.core import codecs
-
-    up = tiling.regrid(small_layer, 5, 256, 512)
-    assert up.count() > 0
-    # pixel-exact roundtrip per tile key: 256 -> 512 -> 256
-    back = tiling.regrid(up, 5, 512, 256)
-    orig = {r["cell_id"]: (bytes(r["tile"]), r["fmt"])
-            for r in small_layer.collect()}
-    got = {r["cell_id"]: (bytes(r["tile"]), r["fmt"]) for r in back.collect()}
-    assert set(orig) <= set(got)
-    for cell, (tb, fmt) in got.items():
-        t = codecs.decode_tile(tb, 256, 256, fmt)
-        if cell in orig:
-            o = codecs.decode_tile(orig[cell][0], 256, 256, orig[cell][1])
-            np.testing.assert_array_equal(t, o)
-        else:  # a 512-tile slice that held no original tile: all NoData
-            assert (t == 0).all()
-
-
 def test_focal_convolve_layer(spark, small_layer):
     from geotrellis_spark.core import codecs
     from geotrellis_spark.operators import tiling
@@ -165,19 +124,6 @@ def test_focal_convolve_layer(spark, small_layer):
         interior_equal = (m[1:-1, 1:-1] == c[1:-1, 1:-1])
         assert interior_equal.mean() > 0.5  # most windows are all-data
         break
-
-
-def test_collect_neighbors(spark, small_layer):
-    from geotrellis_spark.operators import tiling
-
-    nb = tiling.collect_neighbors(small_layer)
-    counts = {r["cell_id"]: r["n"] for r in nb.groupBy("cell_id").count()
-              .withColumnRenamed("count", "n").collect()}
-    centers = {r["cell_id"] for r in small_layer.select("cell_id").collect()}
-    # every center key received itself; group sizes within 1..9
-    for cell, n in counts.items():
-        assert 1 <= n <= 9
-    assert centers <= set(counts)
 
 
 def test_euclidean_distance_layer(spark, small_layer):
@@ -244,24 +190,6 @@ def test_bitwise_and_if_cell():
     assert K.local_binary("or", a, b)[0, 0] == 7
 
 
-def test_convex_hull():
-    rng = np.random.default_rng(4)
-    pts = rng.random((200, 2)) * 10
-    hull = G.convex_hull(pts)
-    # all points inside or on the hull; hull area >= bbox of any subset
-    inside = G.points_in_rings(pts[:, 0], pts[:, 1], [hull])
-    # boundary points may fall "outside" under the half-open rule; check
-    # via area containment instead: hull of hull == hull
-    h2 = G.convex_hull(hull[:-1])
-    assert abs(G.shoelace_area(hull)) == pytest.approx(
-        abs(G.shoelace_area(h2)), rel=1e-12
-    )
-    assert inside.mean() > 0.9
-    assert abs(G.shoelace_area(hull)) > 0.5 * 100 * (
-        0.0 + 0.6
-    )  # hull of 200 uniform points covers most of the square
-
-
 def test_band_math_ndvi(spark):
     from geotrellis_spark.core import codecs
     from geotrellis_spark.operators import algebra
@@ -284,40 +212,6 @@ def test_band_math_ndvi(spark):
     assert len(out) == 1
     t = codecs.decode_tile(bytes(out[0]["tile"]), 8, 8, out[0]["fmt"])
     assert (t == 500).all()
-
-
-def test_time_series_polygonal(spark):
-    from geotrellis_spark.core import codecs
-    from geotrellis_spark.core.layout import Extent, LayoutDefinition, TileLayout
-    from geotrellis_spark.operators import zonal
-    from geotrellis_spark.core import sfc
-    import pandas as pd
-
-    ld = LayoutDefinition(Extent(-180, -90, 180, 90), TileLayout(2, 2, 8, 8))
-
-    def row(kc, kr, t_ord, value):
-        px = np.full((8, 8), value, dtype=np.uint16)
-        return {
-            "layer": "ts", "zoom": 1, "key_col": kc, "key_row": kr,
-            "cell_id": int(sfc.zorder(kc, kr)),
-            "tile": codecs.encode_tile(px, "raw16"),
-            "fmt": "raw16", "w": 8, "h": 8, "cell_type": "uint16ud0",
-            "t_ord": t_ord,
-        }
-
-    rows = [row(kc, kr, t, 10 * (t + 1) + kc)
-            for kc in range(2) for kr in range(2) for t in range(3)]
-    tiles = spark.createDataFrame(pd.DataFrame(rows))
-    # polygon covering the west hemisphere interior
-    ring = np.array([[-170.0, -80.0], [-10.0, -80.0], [-10.0, 80.0], [-170.0, 80.0]])
-    polys = spark.createDataFrame(
-        [(7, bytearray(G.wkb_write_polygon([ring])))], "geom_id long, wkb binary"
-    )
-    out = {(r["geom_id"], r["t_ord"]): r["mean"]
-           for r in zonal.time_series_polygonal(tiles, polys, ld, 1).collect()}
-    assert len(out) == 3
-    for t in range(3):
-        assert out[(7, t)] == pytest.approx(10 * (t + 1))  # west tiles kc=0
 
 
 def test_minhash_bucket_cap(spark):

@@ -76,29 +76,6 @@ def test_polygons_intersect_batch_matches_scalar():
     assert 0 < scalar.sum() < len(scalar)  # both outcomes exercised
 
 
-def test_clip_ring_to_rects_batch_matches_scalar():
-    rng = np.random.default_rng(3)
-    for _ in range(50):
-        nv = int(rng.integers(3, 10))
-        ang = np.sort(rng.uniform(0, 2 * np.pi, nv))
-        rad = rng.uniform(1, 5, nv)
-        ring = np.column_stack([rad * np.cos(ang), rad * np.sin(ang)])
-        k = 20
-        xmin = rng.uniform(-6, 4, k)
-        ymin = rng.uniform(-6, 4, k)
-        xmax = xmin + rng.uniform(0.5, 4, k)
-        ymax = ymin + rng.uniform(0.5, 4, k)
-        pts, cnt = geom.clip_ring_to_rects_batch(ring, xmin, ymin, xmax, ymax)
-        for j in range(k):
-            want = geom.clip_polygon_to_rect(
-                ring, xmin[j], ymin[j], xmax[j], ymax[j]
-            )
-            if want is None:
-                assert cnt[j] == 0
-            else:
-                np.testing.assert_array_equal(pts[j, : cnt[j]], want[:-1])
-
-
 # -------------------------------------- pip_join broadcast size guard
 
 def test_pip_join_world_polygon_falls_back(spark, monkeypatch):
@@ -147,9 +124,16 @@ def _open_ring_wkb(ring):
     )
 
 
-@pytest.mark.parametrize("path", ["broadcast", "distributed", "indexed"])
-def test_pip_mixed_geometries_every_refine_path(spark, monkeypatch,
-                                                tmp_path, path):
+def _multipolygon_wkb(polys):
+    """MultiPolygon WKB (type 6) of the given polygons' ring lists."""
+    return struct.pack("<BII", 1, 6, len(polys)) + b"".join(
+        geom.wkb_write_polygon([np.array(r, dtype=float) for r in rings])
+        for rings in polys
+    )
+
+
+@pytest.mark.parametrize("path", ["broadcast", "distributed"])
+def test_pip_mixed_geometries_every_refine_path(spark, monkeypatch, path):
     """Closed and unclosed single rings of different vertex counts, a
     concave hole and a two-part multipolygon, through every PIP refine
     entry point: each must equal points_in_polygon per polygon."""
@@ -161,11 +145,11 @@ def test_pip_mixed_geometries_every_refine_path(spark, monkeypatch,
             [[-10.0, 0.0], [-2.0, 1.0], [-1.0, 8.0], [-6.0, 11.0], [-9.5, 6.0]]
         )),
         (3, _c_hole()),
-        (4, geom.wkt_read(
-            "MULTIPOLYGON (((0 -12, 9 -12, 4 -3, 0 -12)), "
-            "((14 -12, 26 -12, 26 -2, 14 -2, 14 -12), "
-            "(17 -9, 23 -9, 23 -5, 17 -5, 17 -9)))"
-        )),
+        (4, _multipolygon_wkb([
+            [[[0, -12], [9, -12], [4, -3], [0, -12]]],
+            [[[14, -12], [26, -12], [26, -2], [14, -2], [14, -12]],
+             [[17, -9], [23, -9], [23, -5], [17, -5], [17, -9]]],
+        ])),
     ]
     gx, gy = np.meshgrid(np.arange(-12.0, 32.0, 0.25),
                          np.arange(-14.0, 13.0, 0.25))
@@ -177,16 +161,11 @@ def test_pip_mixed_geometries_every_refine_path(spark, monkeypatch,
     polys_df = spark.createDataFrame(
         [(g, bytearray(w)) for g, w in polys], "geom_id long, wkb binary"
     )
-    if path == "indexed":
-        base = str(tmp_path / "vindex")
-        spatial.write_vector_index(polys_df, base, zoom=6)
-        out = spatial.pip_join_indexed(spark, base, pts)
-    else:
-        if path == "distributed":
-            monkeypatch.setattr(spatial, "MAX_BROADCAST_CELLS", 0)
-        out = spatial.pip_join(pts, polys_df, zoom=6)
-        plan = out._jdf.queryExecution().optimizedPlan().toString()
-        assert ("MapInPandas" in plan) == (path == "distributed")
+    if path == "distributed":
+        monkeypatch.setattr(spatial, "MAX_BROADCAST_CELLS", 0)
+    out = spatial.pip_join(pts, polys_df, zoom=6)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert ("MapInPandas" in plan) == (path == "distributed")
     got = sorted((r["id"], r["geom_id"]) for r in out.collect())
     want = sorted(
         (int(i), g) for g, w in polys

@@ -349,39 +349,6 @@ def test_knn_join_rejects_coordinates_outside_the_envelope(spark, bad):
         spatial.knn_join(pdf, qdf, k=1, zoom=3).collect()
 
 
-def test_cover_cells_clipped(spark):
-    """J5 vector_cells contract: per-cell clipped geometry is exact —
-    clipped areas sum to the polygon area, and PIP against the clipped
-    ring equals PIP against the original for points inside the cell."""
-    zoom = 3
-    n = 1 << zoom
-    ring = np.array(
-        [[-100.0, -30.0], [40.0, -50.0], [60.0, 40.0], [-70.0, 55.0]]
-    )
-    wkb = G.wkb_write_polygon([ring])
-    polys_df = spark.createDataFrame([(1, bytearray(wkb))], "geom_id long, wkb binary")
-    rows = spatial.cover_cells(polys_df, zoom, clip=True).collect()
-    assert len(rows) > 4
-    area = 0.0
-    rng = np.random.default_rng(11)
-    for r in rows:
-        if r["clipped_wkb"] is None:
-            continue
-        kind, rings = G.wkb_read(bytes(r["clipped_wkb"]))
-        assert kind == "polygon"
-        area += sum(abs(G.shoelace_area(rg)) for rg in rings)
-        # random points strictly inside this cell
-        xmin = -180.0 + r["key_col"] * 360.0 / n
-        ymax = 90.0 - r["key_row"] * 180.0 / n
-        px = xmin + rng.uniform(0.01, 0.99, 50) * (360.0 / n)
-        py = ymax - rng.uniform(0.01, 0.99, 50) * (180.0 / n)
-        np.testing.assert_array_equal(
-            G.points_in_polygon(px, py, bytes(r["clipped_wkb"])),
-            G.points_in_polygon(px, py, wkb),
-        )
-    assert area == pytest.approx(abs(G.shoelace_area(ring)), rel=1e-9)
-
-
 def test_assign_cells_equals_numpy_kernel(spark):
     # the JVM keys must be bit-identical to the numpy kernels
     # (exprs.key_np + sfc.zorder), clamp edges included
@@ -406,44 +373,3 @@ def test_assign_cells_equals_numpy_kernel(spark):
     assert got == want
 
 
-def test_pip_join_indexed_matches_pip_join(spark, sf_tiny, tmp_path):
-    """Persisted vector index (write once, query many, broadcast-free):
-    pip_join_indexed over the stored cover-cell table must equal
-    pip_join on the same polygons and points."""
-    from geotrellis_spark.operators import spatial
-    from geotrellis_spark.plans import driver_queries as dq
-
-    pts = dq._events_pts(spark, sf_tiny)
-    polys = dq._grid_polys(spark)
-    base = str(tmp_path / "vindex")
-    spatial.write_vector_index(polys, base, zoom=5)
-
-    got = spatial.pip_join_indexed(spark, base, pts)
-    want = spatial.pip_join(pts, polys, zoom=5)
-    key_cols = ["event_id"] + [
-        c for c in want.columns if c not in pts.columns and c in got.columns
-    ]
-    g = {tuple(r) for r in got.select(*key_cols).collect()}
-    w = {tuple(r) for r in want.select(*key_cols).collect()}
-    assert g == w and g
-    # layout really is hive-partitioned by cbucket
-    import glob
-    assert glob.glob(f"{base}/cells/cbucket=*")
-
-
-def test_vector_index_files_actually_sfc_sorted(spark, tmp_path):
-    """The writer's dynamic-partition re-sort must not destroy the
-    cell_id order inside files (the min-max pruning contract)."""
-    import glob
-    import pyarrow.parquet as pq
-
-    from geotrellis_spark.operators import spatial
-    from geotrellis_spark.plans import driver_queries as dq
-
-    base = str(tmp_path / "vindex")
-    spatial.write_vector_index(dq._grid_polys(spark), base, zoom=5)
-    files = glob.glob(f"{base}/cells/cbucket=*/part-*.parquet")
-    assert files
-    for f in files:
-        cells = pq.read_table(f, columns=["cell_id"])["cell_id"].to_pylist()
-        assert cells == sorted(cells), f

@@ -1,6 +1,6 @@
-"""Zonal/polygonal summaries + layer map algebra + rasterize e2e vs
-numpy oracles (reference spec roles: zonal/polygonal summary specs,
-``LocalTileRDDMethods`` specs, ``RasterizeRDDSpec`` — SURVEY.md §5)."""
+"""Layer map algebra + rasterize e2e vs numpy oracles (reference spec
+roles: ``LocalTileRDDMethods`` specs, ``RasterizeRDDSpec`` — SURVEY.md
+§5)."""
 
 import numpy as np
 import pytest
@@ -8,7 +8,7 @@ import pytest
 from geotrellis_spark import synth
 from geotrellis_spark.core import codecs, geom as G, kernels
 from geotrellis_spark.core.layout import ZoomedLayoutScheme
-from geotrellis_spark.operators import algebra, tiling, zonal
+from geotrellis_spark.operators import algebra, tiling
 from tests.test_spark_tiling import oracle_tiles
 
 ZOOM = 3
@@ -49,6 +49,13 @@ def test_local_scalar_and_binary(spark, tiles_df, oracle):
         assert set(np.unique(tile[data])) <= {10}
         assert (tile[canvas == 0] == 0).all()
 
+    # unary: "defined" is 1 where the layer has data, else 0 (NoData)
+    defined = algebra.local_unary_layer(tiles_df, "defined")
+    for r in defined.collect():
+        tile = codecs.decode_tile(bytes(r["tile"]), T, T, r["fmt"])
+        canvas = oracle[(r["key_col"], r["key_row"])]
+        np.testing.assert_array_equal(tile, (canvas != 0).astype(np.uint16))
+
 
 def test_local_stats_layers(spark, tiles_df):
     doubled = algebra.local_scalar_layer(tiles_df, "multiply", 2)
@@ -65,41 +72,6 @@ def test_local_stats_layers(spark, tiles_df):
     np.testing.assert_array_equal(
         got[ok], np.rint(base[ok].astype(np.float64) * 1.5).astype(np.uint16)
     )
-
-
-def test_polygonal_summary(spark, tiles_df, oracle):
-    # polygon = exactly tile (4,3) extent at ZOOM (aligned rectangle)
-    xmin, ymin, xmax, ymax = LAYOUT.key_to_extent(4, 3)
-    ring = np.array(
-        [[xmin, ymin], [xmax, ymin], [xmax, ymax], [xmin, ymax]], dtype=float
-    )
-    polys = spark.createDataFrame(
-        [(1, bytearray(G.wkb_write_polygon([ring])))], "geom_id long, wkb binary"
-    )
-    out = zonal.polygonal_summary(tiles_df, polys, LAYOUT, ZOOM).collect()
-    canvas = oracle.get((4, 3))
-    if canvas is None or (canvas == 0).all():
-        assert out == []
-        return
-    vals = canvas[canvas != 0].astype(np.float64)
-    row = {r["geom_id"]: r for r in out}[1]
-    assert row["count"] == vals.size
-    assert row["sum"] == pytest.approx(vals.sum())
-    assert row["min"] == vals.min() and row["max"] == vals.max()
-    assert row["mean"] == pytest.approx(vals.mean())
-
-
-def test_zonal_stats_tiles(spark, tiles_df, oracle):
-    # zone layer: constant zone = key parity (derived from the values
-    # layer itself so layouts match)
-    zones = algebra.local_unary_layer(tiles_df, "defined")  # 1 where data
-    out = zonal.zonal_stats_tiles(tiles_df, zones).collect()
-    stats = {r["zone"]: r for r in out}
-    all_vals = np.concatenate(
-        [c[c != 0].astype(np.float64) for c in oracle.values()]
-    )
-    assert stats[1]["count"] == all_vals.size
-    assert stats[1]["sum"] == pytest.approx(all_vals.sum())
 
 
 def test_rasterize_features(spark):
